@@ -19,7 +19,12 @@ import graft.spark.{ExtractJob, Schemas, Synth}
   */
 object Bench {
 
-  private def newSession(cpus: Int): SparkSession = {
+  /** Where a Bench run leaves its materialized pages table; graft.Probe's
+    * `resume` and `turn-steps` read the same table from here.
+    */
+  private[graft] val pagesPath = "/root/repo/target/bench_pages"
+
+  private[graft] def newSession(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")
@@ -39,7 +44,7 @@ object Bench {
   /** Materialize `mult` copies of the documents corpus as a pages parquet
     * table (the Common-Crawl-style input relation). Done once, outside timing.
     */
-  private def materializePages(spark: SparkSession, sfDir: String, mult: Int,
+  private[graft] def materializePages(spark: SparkSession, sfDir: String, mult: Int,
       docRep: Int, path: String): Unit = {
     import spark.implicits._
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -221,7 +226,6 @@ object Bench {
     val scale4N = scaleN * 4
     val mult = sys.env.getOrElse("SPARK_GRAFT_BENCH_MULT", "40").toInt
     val docRep = sys.env.getOrElse("SPARK_GRAFT_BENCH_REP", "40").toInt
-    val pagesPath = "/root/repo/target/bench_pages"
 
     // headline queries at high parallelism
     val headline = Seq(

@@ -27,9 +27,9 @@ object SparkEntry {
     SearchJob.matches(extracted, SearchParams(any = Some("data")))
   }
 
-  /** ONE recursive delete for the package's dev mains (Bench, TurnProbe,
-    * PlanAudit, this entry) — three divergent copies is how a symlink or
-    * IO-policy fix lands in one and not the others (round-6 review).
+  /** ONE recursive delete for the package's local scratch dirs (Bench, the
+    * `graft.Probe` scenarios' temp dirs, this entry) — divergent copies are
+    * how a symlink or IO-policy fix lands in one and not the others.
     * Symlinks are unlinked, never followed: `isDirectory` alone would
     * recurse THROUGH a dir link (e.g. one planted in a world-writable tmp
     * dir) and delete the target's contents.

@@ -2,14 +2,13 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.kernel.Extract
 
 /** §3.1 — the flagship extract pipeline, Spark-native:
   *
   * {{{
   * read pages snapshot -> left_anti(done urls)            [resume, C2]
   *   -> bucket col = pmod(xxhash64(url), B)               [no shuffle]
-  *   -> typed mapPartitions(extract kernel E1-E8)         [map-side; task = reference batch]
+  *   -> GraftExtract(extract kernel E1-E8)                [map-side; task = reference batch]
   *   -> repartition(B, bucket)                            [the one wide exchange,
   *                                                          carries extracted text only]
   *   -> write data files; success-ratio gate (A1, via observe — no second scan)
@@ -39,19 +38,24 @@ object ExtractJob {
     s"extraction success ratio ${if (total == 0) 0.0 else ok.toDouble / total} < $SuccessRatio ($ok/$total)")
 
   /** Pure transform: pages -> extracted rows (no table/commit side effects).
-    * The single relational seam around the kernel.
+    * The single relational seam around the kernel, for batch and streaming
+    * plans alike.
     *
     * Deliberately NARROW: the kernel runs map-side on the scan partitions, so
     * raw html payloads are never shuffled — at 100 TB that exchange would be
     * the whole job's cost. The bucket is just a column here; the (much
     * smaller) extracted rows get co-located by bucket at write time in run().
     *
-    * Runs through the custom Catalyst operator (plans.ExtractPlan): same
-    * kernel and same narrow shape as [[extractDFTyped]], but InternalRow in /
-    * UnsafeRow out — no Dataset-encoder round trip per row. Measured 1.8x
-    * faster at local[32] on the bench corpus (4.7 s -> 2.4 s for 200k docs);
-    * the encoder path's allocation rate also destabilized GC at high core
-    * counts. Equality with the typed path is asserted in PipelineSpec.
+    * Runs through the custom Catalyst operator (plans.ExtractPlan):
+    * InternalRow in, UnsafeRow out — no Dataset-encoder round trip per row.
+    * Measured 1.8x faster than a typed mapPartitions at local[32] on the
+    * bench corpus (4.7 s -> 2.4 s for 200k docs); the encoder path's
+    * allocation rate also destabilized GC at high core counts. Streaming
+    * queries plan the operator too: Spark 4.1's IncrementalExecution planner
+    * runs the session planner's strategies, `experimental.extraStrategies`
+    * included. A typed mapPartitions twin lives in the tests
+    * (ExtractOracle), as the independent implementation this one is checked
+    * against.
     */
   def extractDF(pages: Dataset[Schemas.Page], numBuckets: Int): DataFrame = {
     val spark = pages.sparkSession
@@ -60,41 +64,18 @@ object ExtractJob {
       .withColumn("checksum", xxhash64(col("url"), col("text")))
   }
 
-  /** The typed-Dataset reference implementation of [[extractDF]] (encoder
-    * round trip per row). Kept as (a) the independent implementation the
-    * custom operator is equality-tested against, and (b) the path for
-    * Structured Streaming, where injected planner strategies are not part of
-    * the incremental planner contract.
-    */
-  def extractDFTyped(pages: Dataset[Schemas.Page], numBuckets: Int): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages
-      .withColumn("bucket", pmod(xxhash64(col("url")), lit(numBuckets)).cast("int"))
-      .as[(String, java.sql.Timestamp, Array[Byte], String, String, Int)]
-      .mapPartitions { it =>
-        it.map { case (url, _, html, text, _, bucket) =>
-          val r = Extract.extract(html, text)
-          Schemas.ExtractedRaw(
-            url = url, bucket = bucket, kind = r.kind, pages = r.pages,
-            text = r.text, n_bytes = if (html == null) 0L else html.length.toLong,
-            ok = r.ok)
-        }
-      }
-      .toDF()
-      .withColumn("checksum", xxhash64(col("url"), col("text")))
-  }
-
   /** Full job against a snapshot-logged table: resume, extract pending, gate,
     * commit, lineage. Returns the committed snapshot id (None = nothing pending).
     *
-    * CONTRACT: `pages` must be DETERMINISTIC — a committed-file scan or any
-    * plan whose re-evaluation yields the same rows. The bloom resume regime
+    * `pages` should be DETERMINISTIC — a committed-file scan or any plan
+    * whose re-evaluation yields the same rows. The bloom resume regime
     * (round 7) evaluates it once per union branch; a row that flips sides
-    * between evaluations (sampling, a fresh nondeterministic shuffle,
-    * rand()-derived columns) would be extracted twice or never. Round 6's
-    * single anti-join merely re-planned such inputs; since round 7 they are
-    * a correctness error. (Same contract as [[Pipelines.appendDeduped]].)
+    * between evaluations (sampling, rand()-derived columns) would be
+    * extracted twice or never, so [[pendingPages]] sends a plan Catalyst
+    * marks nondeterministic to the single-evaluation sort-merge regime
+    * instead. A source that is nondeterministic without saying so (a fresh
+    * shuffle's order) is not caught. (Same contract as
+    * [[Pipelines.appendDeduped]].)
     *
     * `force = true` is the reference's `extractDocuments=true` re-extract mode
     * (claim.py:34: unconditionally re-runs extraction over ALL files,
@@ -141,8 +122,8 @@ object ExtractJob {
     // exchange shrinks from O(pages) to O(pages ∩ done). The cost is a
     // second pages scan (one branch each), the §8 trade: scans are local
     // columnar reads, the shuffle is the network. `pages` must be
-    // deterministic between the two branch evaluations — every caller hands
-    // a committed-file scan.
+    // deterministic between the two branch evaluations; a plan Catalyst
+    // knows to be nondeterministic falls through to the sort-merge regime.
     //
     // Above the bloom budget (a 100 TB resume against billions of done
     // urls) the sort-merge anti-join IS the correct plan — at that overlap
@@ -207,7 +188,10 @@ object ExtractJob {
     if (doneRows <= budget)
       (pages.join(broadcast(done), Seq("url"), "left_anti").as[Schemas.Page],
         "broadcast")
-    else if (doneRows <= bloomBudget) {
+    // the bloom split evaluates `pages` twice, once per branch: a plan that
+    // may yield different rows each time takes the one-evaluation join
+    else if (doneRows <= bloomBudget &&
+        pages.queryExecution.analyzed.deterministic) {
       val fpp = spark.conf.get("graft.extract.bloomFpp", "0.01").toDouble
       val bf = buildUrlBloom(spark, log, meta, doneRows, fpp)
       val bfB = spark.sparkContext.broadcast(bf)

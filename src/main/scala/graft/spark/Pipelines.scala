@@ -352,9 +352,9 @@ object Pipelines {
       broadcastable: Boolean, attach: (DataFrame, Boolean) => DataFrame)
 
   /** Audit surface: the per-turn survivors DataFrame for `fresh` against the
-    * CURRENT deduped snapshot, without committing — what PlanAudit dumps to
-    * PLANS.md so the no-corpus-exchange claim is inspectable, not just
-    * test-asserted. Returns (survivors, persisted reps handle — unpersist it
+    * CURRENT deduped snapshot, without committing — what `graft.Probe plans`
+    * dumps to PLANS.md so the no-corpus-exchange claim is inspectable, not
+    * just test-asserted. Returns (survivors, persisted reps handle — unpersist it
     * once the plan/result is consumed). Multiplicity caveat: since round 7
     * the frame keeps every row of a surviving digest (the min-url winner
     * pick moved to the clustered write), so its row count upper-bounds — and

@@ -775,7 +775,7 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * move once, file-group-local (rows keep their bucket column; only
     * file-level alignment of one bucket per file is given up). A single file
     * larger than the bin target keeps its own bin — file granularity is the
-    * floor. Skew evidence: CompactProbe.
+    * floor. Skew evidence: `graft.Probe compact`.
     *
     * Crash-safe like any commit: the rewrite is staged under a UNIQUE
     * `.compact-<uuid>` temp directory (never a predictable snapshot id —

@@ -11,8 +11,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * continuously).
   *
   * Same kernel, same narrow plan: `readStream` over the pages directory ->
-  * map-side mapPartitions extraction -> parquet sink with exactly-once file
-  * tracking via the checkpoint (the streaming analog of the snapshot log).
+  * map-side GraftExtract ([[ExtractJob.extractDF]], the batch job's own
+  * operator) -> parquet sink with exactly-once file tracking via the
+  * checkpoint (the streaming analog of the snapshot log).
   * AvailableNow drains everything present and stops — a resumable batch with
   * streaming bookkeeping; restarting after new files land processes only the
   * new files (per-file lineage in the checkpoint replaces the url anti-join).
@@ -65,7 +66,7 @@ object StreamingExtract {
       .schema(Schemas.pagesSchema)
       .parquet(pagesDir)
       .as[Schemas.Page]
-    val extracted = ExtractJob.extractDFTyped(pages, numBuckets).drop("ok")
+    val extracted = ExtractJob.extractDF(pages, numBuckets).drop("ok")
     extracted.writeStream
       .format("parquet")
       .option("path", outDir)
@@ -112,7 +113,7 @@ object StreamingExtract {
       .schema(Schemas.pagesSchema)
       .load(sourceTableDir)
       .as[Schemas.Page]
-    val extracted = ExtractJob.extractDFTyped(pages, numBuckets)
+    val extracted = ExtractJob.extractDF(pages, numBuckets)
     extracted.writeStream
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         val destLog = new SnapshotLog(destTableDir)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.classic.ClassicConversions._
 /** Bridge into `private[sql]` Dataset constructors — the standard pattern for
   * Spark extensions that introduce custom logical operators (the public
   * Column/Dataset API in Spark 4 wraps plan nodes, so building a DataFrame
-  * from a LogicalPlan requires this package-private hop).
+  * from a LogicalPlan requires this package-private hop) — and into the
+  * `private[spark]` listener bus.
   */
 object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -14,4 +15,11 @@ object GraftShim {
 
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
+
+  /** Block until every listener event posted so far has been delivered:
+    * the bus is asynchronous, so a listener read right after an action can
+    * miss that action's last stage and task events.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -150,16 +150,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("regime_tag")
     ExtractJob.run(spark, half, dir, numBuckets = 8)
     val log = new SnapshotLog(dir)
-    def regimeOf(confs: (String, String)*)
+    def regimeOf(pages: org.apache.spark.sql.Dataset[Schemas.Page],
+        confs: (String, String)*)
         : (String, org.apache.spark.sql.execution.SparkPlan) = {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        val (df, tag) = ExtractJob.pendingPages(spark, all, log)
+        val (df, tag) = ExtractJob.pendingPages(spark, pages, log)
         (tag, df.queryExecution.sparkPlan)
       } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
     }
-    assert(regimeOf()._1 == "broadcast")
-    val (bloomTag, bloomPlan) = regimeOf("graft.extract.broadcastDoneRows" -> "0")
+    assert(regimeOf(all)._1 == "broadcast")
+    val (bloomTag, bloomPlan) = regimeOf(all, "graft.extract.broadcastDoneRows" -> "0")
     assert(bloomTag == "bloom")
     val union = bloomPlan.collectFirst {
       case u: org.apache.spark.sql.execution.UnionExec => u }
@@ -167,8 +168,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(union.get.children.head.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
     }.isEmpty, "the bloom-negative (proven pending) branch must stay scan-local")
-    assert(regimeOf("graft.extract.broadcastDoneRows" -> "0",
+    assert(regimeOf(all, "graft.extract.broadcastDoneRows" -> "0",
       "graft.extract.bloomDoneRows" -> "0")._1 == "shuffle")
+    // the bloom split evaluates pages once per branch: a rand()-derived
+    // pages plan must take the single-evaluation regime instead
+    val randomized = all.toDF()
+      .withColumn("lang", when(rand(7) < 2.0, col("lang")))
+      .as[Schemas.Page]
+    assert(regimeOf(randomized, "graft.extract.broadcastDoneRows" -> "0")._1 == "shuffle")
   }
 
   test("success gate: <0.9 ok ratio aborts the snapshot (A1)") {
@@ -458,7 +465,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = viaOp.select("url", "bucket", "kind", "text", "n_bytes")
       .collect().map(r => r.getString(0) -> ((r.getInt(1), r.getString(2), r.getString(3), r.getLong(4)))).toMap
     // independent implementation: the typed-Dataset encoder path
-    val expected = ExtractJob.extractDFTyped(spark.createDataset(fixture.take(80)), 16)
+    val expected = ExtractOracle.extractDFTyped(spark.createDataset(fixture.take(80)), 16)
       .select("url", "bucket", "kind", "text", "n_bytes")
       .collect().map(r => r.getString(0) -> ((r.getInt(1), r.getString(2), r.getString(3), r.getLong(4)))).toMap
     assert(got == expected)
@@ -556,7 +563,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(first.count() == 60)
     // land more pages; restart drains only the new files (checkpoint lineage)
     spark.createDataset(fixture.slice(60, 100)).write.mode("append").parquet(inDir)
-    StreamingExtract.start(spark, inDir, outDir, ckDir, 8).awaitTermination()
+    val restarted = StreamingExtract.start(spark, inDir, outDir, ckDir, 8)
+    restarted.awaitTermination()
+    // the stream plans the batch job's operator, not a typed mapPartitions
+    val streamPlan = restarted
+      .asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+    assert(streamPlan.contains("GraftExtract"), streamPlan.take(1500))
     val all = StreamingExtract.readOutput(spark, outDir)
       .select("url", "kind", "text").collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
@@ -565,6 +578,24 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val exp = oracle(url)
       assert(kind == exp.kind && text == exp.text, url)
     }
+    val cols = Seq("url", "bucket", "kind", "pages", "text", "n_bytes", "checksum")
+    val typed = ExtractOracle.extractDFTyped(spark.createDataset(fixture.take(100)), 8)
+      .select(cols.map(col): _*).orderBy("url").collect().toSeq
+    assert(StreamingExtract.readOutput(spark, outDir)
+      .select(cols.map(col): _*).orderBy("url").collect().toSeq == typed)
+  }
+
+  test("probe runner: the drained meter counts one job and its shuffle") {
+    // one RDD job, two stages, one shuffle: read right after the action,
+    // an undrained listener can still be missing the last stage's metrics
+    val (sum, meter) = graft.Probe.metered(spark) {
+      spark.sparkContext.parallelize(1 to 1000, 4)
+        .map(i => (i % 10, i.toLong)).reduceByKey(_ + _).values.reduce(_ + _)
+    }
+    assert(sum == 500500L)
+    assert(meter.jobs.get == 1)
+    assert(meter.shuffleBytes.get > 0L && meter.shuffleRecords.get > 0L)
+    assert(meter.maxRunning >= 1 && meter.maxRunning <= 4, "4 partitions per stage")
   }
 
   test("SparkEntry.entry: flagship pipeline returns matches on sf0.001") {
@@ -594,7 +625,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("Exchange"),
       s"extractDF must stay map-side; raw html in a shuffle is the 100TB bottleneck:\n${plan.take(1500)}")
     assert(plan.contains("GraftExtract"), "extractDF runs through the custom operator")
-    val typedPlan = ExtractJob.extractDFTyped(pages, 16).queryExecution.executedPlan.toString
+    val typedPlan = ExtractOracle.extractDFTyped(pages, 16).queryExecution.executedPlan.toString
     assert(!typedPlan.contains("Exchange"), "typed path must stay map-side too")
     // search reads only url + text-bearing columns; kind/bucket/etc pruned
     val dir = tmpDir("prune")
