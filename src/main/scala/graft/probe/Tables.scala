@@ -85,8 +85,11 @@ object Tables {
         // batch probes, counts zero survivors and commits nothing — it
         // writes no stage either, so turn_new is the probe evaluation plus
         // fixed job overhead
-        val (newT, appended) = Probe.timed()(Pipelines.appendDeduped(spark, batch, dd)._2)
+        val ((newT, appended), meter) = Probe.metered(spark)(
+          Probe.timed()(Pipelines.appendDeduped(spark, batch, dd)._2))
         require(appended == 0L, s"steady-state turn must append nothing, got $appended")
+        // the meter also saw timed's warm-up call; every call runs the same jobs
+        val jobs = meter.jobs.get.toDouble / (newT.secs.size + 1)
         // round-5 shape on the same corpus: anti-join the batch's digest reps
         // against the corpus digest column (the build side of a left-anti can
         // never broadcast -> sort-merge join, full corpus digest shuffle)
@@ -108,7 +111,8 @@ object Tables {
         val (files, planned) = Probe.plannedFiles(dd, fp64s)
         val (_, planned16) = Probe.plannedFiles(dd, Probe.sample16(fp64s))
         println(f"mult=$mult%2d rows=$total%8d files=$files%4d " +
-          f"planned=$planned%4d planned16=$planned16%3d  turn_new $newT  antijoin_old $oldT")
+          f"planned=$planned%4d planned16=$planned16%3d  turn_new $newT jobs=$jobs%.1f  " +
+          s"antijoin_old $oldT")
         batch.unpersist()
       }
     }
@@ -177,8 +181,9 @@ object Tables {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
         try {
           val ((t, tag), m) = Probe.metered(spark)(Probe.timed(runs = 2) {
-            val (df, tag) = ExtractJob.pendingPages(spark, pages, log)
-            df.write.mode("overwrite").format("noop").save()
+            val (df, tag, bloom) = ExtractJob.pendingPages(spark, pages, log)
+            try df.write.mode("overwrite").format("noop").save()
+            finally bloom.foreach(_.destroy())
             tag
           })
           // the meter also saw timed's warm-up pass; every pass moves the same bytes

@@ -1,7 +1,11 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** §3.1 — the flagship extract pipeline, Spark-native:
   *
@@ -9,10 +13,12 @@ import org.apache.spark.sql.functions._
   * read pages snapshot -> left_anti(done urls)            [resume, C2]
   *   -> bucket col = pmod(xxhash64(url), B)               [no shuffle]
   *   -> GraftExtract(extract kernel E1-E8)                [map-side; task = reference batch]
+  *   -> success-ratio gate counters (A1, observe)         [map-side]
   *   -> repartition(B, bucket)                            [the one wide exchange,
   *                                                          carries extracted text only]
-  *   -> write data files; success-ratio gate (A1, via observe — no second scan)
-  *   -> atomic snapshot commit (C1); per-bucket lineage -> metrics (A3)
+  *   -> per-bucket lineage counters (A3, observe)         [write's result stage]
+  *   -> write data files                                  [one Spark action]
+  *   -> atomic snapshot commit (C1); lineage rows -> metrics, one file
   * }}}
   *
   * Correspondences to the reference: a partition is the analog of the 5-file
@@ -24,11 +30,14 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB / 1000 executors): the kernel is map-side, so the raw
   * payload bytes move exactly once (scan). The single wide exchange shuffles
   * extracted rows — typically 3-10x smaller than the input and free of the
-  * html column — keyed on pmod(xxhash64(url), B), which is uniform by
-  * construction (no host skew can reach it). B is a knob (buckets == shuffle
-  * partitions at scale). AQE coalesces the small lineage shuffle. The kernel
-  * is CPU-bound per row and embarrassingly parallel — throughput scales with
-  * cores until the parquet scan saturates.
+  * html column — keyed on the bucket pmod(xxhash64(url), B): no host skew can
+  * reach the bucket sizes. The exchange is NOT uniform over partitions,
+  * though: `repartition(B, bucket)` hash-partitions the bucket ids again, so
+  * several buckets can share a partition while others stay empty (16 buckets
+  * land in 10 write tasks, see ROADMAP item 5). B is a knob (buckets ==
+  * shuffle partitions at scale). Lineage costs no job of its own: the write
+  * pass counts it. The kernel is CPU-bound per row and embarrassingly
+  * parallel — throughput scales with cores until the parquet scan saturates.
   */
 object ExtractJob {
 
@@ -130,52 +139,73 @@ object ExtractJob {
     // the batch payload must co-partition with the done set — so the
     // fallback stays, loudly shaped. All three budgets are confs, not
     // constants tuned to this sandbox.
-    val pending = if (force) pages else pendingPages(spark, pages, log)._1
+    val (pending, _, bloom) =
+      if (force) (pages, "force", None) else pendingPages(spark, pages, log)
+    // the bloom regime's filter broadcast is read by the write pass only:
+    // released once the commit is done, not left to the ContextCleaner's
+    // GC cadence
+    try {
+      val snapshotId = log.nextSnapshotId()
+      val gateObs = Observation(s"gate-$snapshotId")
+      val lineageObs = Observation(s"lineage-$snapshotId")
+      // the one wide exchange co-locates extracted rows (post-kernel, html
+      // already dropped) by bucket for the data-file layout. The gate
+      // counts before it, map-side, so `ok` never rides the exchange. The
+      // lineage counts run after it, in the write's result stage: the
+      // DAGScheduler applies a result task's accumulator updates once per
+      // partition, while a recomputed shuffle-map task's updates would be
+      // applied again (and a doubled bit_xor cancels itself out).
+      val extracted = extractDF(pending, numBuckets)
+        .observe(gateObs, count(lit(1)).as("total"), count(when(col("ok"), 1)).as("ok"))
+        .drop("ok")
+        .repartition(numBuckets, col("bucket"))
+        .observe(lineageObs, udaf(new BucketLineage(numBuckets),
+          Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaLong))(
+          col("bucket"), col("n_bytes"), col("checksum")).as("lineage"))
 
-    val snapshotId = log.nextSnapshotId()
-    val obs = Observation(s"gate-$snapshotId")
-    // the one wide exchange: co-locate extracted rows (post-kernel, html
-    // already dropped) by bucket for the data-file layout
-    val extracted = extractDF(pending, numBuckets)
-      .observe(obs, count(lit(1)).as("total"), count(when(col("ok"), 1)).as("ok"))
-      .drop("ok")
-      .repartition(numBuckets, col("bucket"))
+      val stage = log.stageDataDir(snapshotId)
+      extracted.write.mode("overwrite").parquet(stage)
 
-    val stage = log.stageDataDir(snapshotId)
-    extracted.write.mode("overwrite").parquet(stage)
+      val gate = gateObs.get
+      val total = gate("total").asInstanceOf[Long]
+      if (total == 0L) { log.abort(snapshotId); return None } // nothing pending
+      val ok = gate("ok").asInstanceOf[Long]
+      if (ok.toDouble / total < SuccessRatio) { // A1 gate before commit
+        log.abort(snapshotId)
+        throw GateFailed(ok, total)
+      }
 
-    val gate = obs.get
-    val total = gate("total").asInstanceOf[Long]
-    if (total == 0L) { log.abort(snapshotId); return None } // nothing pending
-    val ok = gate("ok").asInstanceOf[Long]
-    if (ok.toDouble / total < SuccessRatio) { // A1 gate before commit
-      log.abort(snapshotId)
-      throw GateFailed(ok, total)
-    }
+      // bucket min/max ride the manifest: a later `bucket = k` read (resume
+      // repair, per-bucket audit) plans only the files whose range covers k
+      if (force) log.commitReplace(snapshotId, statsColumns = Seq("bucket"))
+      else log.commit(snapshotId, statsColumns = Seq("bucket"))
 
-    // bucket min/max ride the manifest: a later `bucket = k` read (resume
-    // repair, per-bucket audit) plans only the files whose range covers k
-    if (force) log.commitReplace(snapshotId, statsColumns = Seq("bucket"))
-    else log.commit(snapshotId, statsColumns = Seq("bucket"))
-
-    // A3 lineage: per-bucket doc/byte counts + order-insensitive checksum
-    // (bit_xor of per-row xxhash64 — partition-internal order cannot matter)
-    val wallMs = (System.nanoTime() - t0) / 1000000L
-    lineageRows(spark.read.schema(Schemas.extractedSchema).parquet(stage),
-      snapshotId, wallMs)
-      .write.mode("append").parquet(s"$tableDir/metrics")
-    Some(snapshotId)
+      // A3 lineage: per-bucket doc/byte counts + order-insensitive checksum
+      // (bit_xor of per-row xxhash64 — partition-internal order cannot
+      // matter), one metrics file per snapshot
+      val wallMs = (System.nanoTime() - t0) / 1000000L
+      val counts = lineageObs.get("lineage").asInstanceOf[scala.collection.Seq[Long]]
+      val rows = (0 until numBuckets).filter(k => counts(3 * k) > 0L).map { k =>
+        Schemas.MetricsRow(snapshotId, k, counts(3 * k), counts(3 * k + 1),
+          counts(3 * k + 2), wallMs)
+      }
+      spark.createDataset(rows).coalesce(1)
+        .write.mode("append").parquet(s"$tableDir/metrics")
+      Some(snapshotId)
+    } finally bloom.foreach(_.destroy())
   }
 
   /** The resume pending-set derivation (see run()'s regime walkthrough).
-    * Returns the frame plus the regime actually chosen ("broadcast" |
-    * "bloom" | "shuffle") so tests can pin that a forced conf really
-    * selected its branch — a silently-renamed conf key would otherwise turn
-    * the regime tests into three copies of the broadcast test.
+    * Returns the frame, the regime actually chosen ("broadcast" | "bloom" |
+    * "shuffle") so tests can pin that a forced conf really selected its
+    * branch — a silently-renamed conf key would otherwise turn the regime
+    * tests into three copies of the broadcast test — and, in the bloom
+    * regime, the filter's broadcast: the caller destroys it once the frame
+    * has been evaluated for the last time.
     */
   private[graft] def pendingPages(spark: SparkSession,
       pages: Dataset[Schemas.Page], log: SnapshotLog)
-      : (Dataset[Schemas.Page], String) = {
+      : (Dataset[Schemas.Page], String, Option[Broadcast[BloomFilter]]) = {
     import spark.implicits._
     val meta = log.currentSnapshot().map(log.metaAt).getOrElse(Seq.empty)
     val done = log.scanEntries(spark, Schemas.extractedSchema, meta)
@@ -187,26 +217,32 @@ object ExtractJob {
       "graft.extract.bloomDoneRows", "100000000").toLong
     if (doneRows <= budget)
       (pages.join(broadcast(done), Seq("url"), "left_anti").as[Schemas.Page],
-        "broadcast")
+        "broadcast", None)
     // the bloom split evaluates `pages` twice, once per branch: a plan that
     // may yield different rows each time takes the one-evaluation join
     else if (doneRows <= bloomBudget &&
         pages.queryExecution.analyzed.deterministic) {
       val fpp = spark.conf.get("graft.extract.bloomFpp", "0.01").toDouble
-      val bf = buildUrlBloom(spark, log, meta, doneRows, fpp)
-      val bfB = spark.sparkContext.broadcast(bf)
+      val bfB = spark.sparkContext.broadcast(
+        buildUrlBloom(spark, log, meta, doneRows, fpp))
       // null url ⇒ NOT maybe: SQL null matches nothing in an anti-join,
       // so such a row is pending — routing it through the proven-pending
-      // branch preserves that without the UDF touching null. The
-      // broadcast is reclaimed by the ContextCleaner when run() returns.
-      val maybeDone =
-        udf((u: String) => u != null && bfB.value.mightContainString(u))
+      // branch preserves that without the UDF touching null
+      val maybeDone = udf(MaybeDone(bfB))
       val proven = pages.filter(!maybeDone(col("url")))
       val checked = pages.toDF().filter(maybeDone(col("url")))
         .join(done, Seq("url"), "left_anti")
-      (proven.toDF().unionByName(checked).as[Schemas.Page], "bloom")
+      (proven.toDF().unionByName(checked).as[Schemas.Page], "bloom", Some(bfB))
     } else
-      (pages.join(done, Seq("url"), "left_anti").as[Schemas.Page], "shuffle")
+      (pages.join(done, Seq("url"), "left_anti").as[Schemas.Page], "shuffle",
+        None)
+  }
+
+  /** The bloom regime's "maybe done" test on a url; null is never done. */
+  private[graft] final case class MaybeDone(filter: Broadcast[BloomFilter])
+      extends (String => Boolean) {
+    def apply(url: String): Boolean =
+      url != null && filter.value.mightContainString(url)
   }
 
   /** Build the done-url Bloom filter at the REQUESTED capacity. Spark 4's
@@ -228,9 +264,9 @@ object ExtractJob {
     */
   private def buildUrlBloom(spark: SparkSession, log: SnapshotLog,
       meta: Seq[SnapshotLog.FileMeta], doneRows: Long,
-      fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
+      fpp: Double): BloomFilter = {
     val items = math.max(doneRows, 1L)
-    val bits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(items, fpp)
+    val bits = BloomFilter.optimalNumOfBits(items, fpp)
     val s = spark.newSession()
     s.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
       math.max(items, 4000000L).toString)
@@ -240,9 +276,10 @@ object ExtractJob {
       .stat.bloomFilter("url", items, fpp)
   }
 
-  /** The per-bucket lineage aggregation — ONE definition shared by run()'s
-    * organic append and [[backfillMetrics]]' repair, so the two row shapes
-    * can never drift field-by-field.
+  /** The per-bucket lineage aggregation over re-read files, for
+    * [[backfillMetrics]]' repair. run() counts the same three aggregates in
+    * its write pass ([[BucketLineage]]); PipelineSpec's backfill test pins
+    * that the two definitions give equal rows.
     */
   private def lineageRows(extracted: DataFrame, snapshotId: Long,
       wallMs: Long): DataFrame =
@@ -255,6 +292,32 @@ object ExtractJob {
       .select(
         lit(snapshotId).as("snapshot_id"), col("bucket"), col("doc_count"),
         col("byte_count"), col("checksum"), lit(wallMs).as("wall_ms"))
+
+  /** [[lineageRows]]' three aggregates for every bucket in one buffer, for
+    * an `observe` (which takes no grouping) over (bucket, n_bytes,
+    * checksum): slot 3k counts bucket k's rows, 3k+1 sums its `n_bytes`,
+    * 3k+2 XORs its checksums.
+    */
+  private final class BucketLineage(numBuckets: Int)
+      extends Aggregator[(Int, Long, Long), Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](3 * numBuckets)
+    def reduce(b: Array[Long], row: (Int, Long, Long)): Array[Long] = {
+      val k = 3 * row._1
+      b(k) += 1L; b(k + 1) += row._2; b(k + 2) ^= row._3
+      b
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var k = 0
+      while (k < a.length) {
+        a(k) += b(k); a(k + 1) += b(k + 1); a(k + 2) ^= b(k + 2)
+        k += 3
+      }
+      a
+    }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
 
   /** Read the extracted table (current snapshot). */
   def readExtracted(spark: SparkSession, tableDir: String): DataFrame =

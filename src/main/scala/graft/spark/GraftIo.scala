@@ -94,6 +94,7 @@ final class GraftIo(base: String, userConf: Configuration) {
     try fs.getFileStatus(p).isDirectory
     catch { case _: java.io.FileNotFoundException => false }
   def mkdirs(p: HPath): Unit = { fs.mkdirs(p): Unit }
+  def status(p: HPath): FileStatus = fs.getFileStatus(p)
   def len(p: HPath): Long = fs.getFileStatus(p).getLen
   def mtime(p: HPath): Long = fs.getFileStatus(p).getModificationTime
   def delete(p: HPath, recursive: Boolean = false): Boolean =

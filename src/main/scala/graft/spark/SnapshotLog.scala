@@ -505,14 +505,23 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
   /** Write the new segment (parent's legacy inline entries folded in, sizes
     * and optional column stats recorded now, while the writer that produced
     * the staged files holds them) and return the child's full segment list.
+    * On a stats commit the folded legacy entries get their footer stats and
+    * row counts too: one entry without a count would leave every later
+    * snapshot's [[SnapshotLog.rowCountOf]] unknown, and each resume would
+    * pay a count job for it.
     */
   private def writeSegment(segName: String, snapshotId: Long,
       parentSegments: Seq[String], parentInline: Seq[String],
       staged: Seq[FileStatus], statsColumns: Seq[String]): Seq[String] = {
     val fresh = collectEntries(staged, statsColumns)
-    val inlineSized = parentInline.map { f =>
-      val sz = try io.len(io.path(f)) catch { case _: java.io.IOException => -1L }
-      (f, sz, Map.empty[String, ColBounds], None: Option[Long])
+    val inlineSized = parMap(parentInline) { f =>
+      try {
+        val st = io.status(io.path(f))
+        val (stats, rows) = footerMeta(st, statsColumns)
+        (f, st.getLen, stats, rows)
+      } catch {
+        case _: java.io.IOException => (f, -1L, Map.empty[String, ColBounds], None)
+      }
     }
     val segmentFiles = inlineSized ++ fresh
     if (segmentFiles.isEmpty) parentSegments

@@ -155,7 +155,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         : (String, org.apache.spark.sql.execution.SparkPlan) = {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        val (df, tag) = ExtractJob.pendingPages(spark, pages, log)
+        val (df, tag, _) = ExtractJob.pendingPages(spark, pages, log)
         (tag, df.queryExecution.sparkPlan)
       } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
     }
@@ -176,6 +176,48 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("lang", when(rand(7) < 2.0, col("lang")))
       .as[Schemas.Page]
     assert(regimeOf(randomized, "graft.extract.broadcastDoneRows" -> "0")._1 == "shuffle")
+  }
+
+  test("bloom resume: run destroys its filter broadcast before it returns") {
+    val sp = spark; import sp.implicits._
+    val dir = tmpDir("bloom_release")
+    // the bloom regime's filter reaches the plan only inside its url UDF:
+    // catch that UDF in every query the run executes
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.broadcast.Broadcast[_]]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        qe.analyzed.foreach(_.expressions.foreach(_.foreach {
+          case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF =>
+            u.function match {
+              case m: ExtractJob.MaybeDone => seen.add(m.filter): Unit
+              case _ => ()
+            }
+          case _ => ()
+        }))
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    ExtractJob.run(spark, spark.createDataset(fixture.take(corpusSize / 2)), dir, 8)
+    spark.conf.set("graft.extract.broadcastDoneRows", "0")
+    spark.listenerManager.register(listener)
+    try assert(ExtractJob.run(spark, spark.createDataset(fixture), dir, 8).contains(1L))
+    finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.unset("graft.extract.broadcastDoneRows")
+    }
+    org.apache.spark.sql.GraftShim.drainListeners(spark.sparkContext)
+    import scala.jdk.CollectionConverters._
+    val filters = seen.asScala.toSeq.distinct
+    assert(filters.size == 1, s"the bloom regime must plan one filter broadcast, saw ${filters.size}")
+    assert(!org.apache.spark.sql.GraftShim.isValid(filters.head),
+      "run() must destroy the bloom broadcast once its commit is done")
+    assert(ExtractJob.readExtracted(spark, dir).count() == corpusSize.toLong)
+    // the lineage rows of each snapshot land as one metrics file
+    val metricsFiles = new java.io.File(s"$dir/metrics").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(metricsFiles == 2, s"two runs, one lineage file each: $metricsFiles")
   }
 
   test("success gate: <0.9 ok ratio aborts the snapshot (A1)") {
@@ -1091,6 +1133,27 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(legacy.filesAt(1L).toSet.size == legacy.filesAt(1L).size)
   }
 
+  test("a stats commit over a legacy inline entry records its row count") {
+    import java.nio.file.{Files => F, Paths => P}
+    val dir = tmpDir("legacy_rows")
+    val log = new SnapshotLog(dir)
+    val rows = spark.range(200).select(col("id"), (col("id") % 7).as("v"))
+    rows.filter(col("id") < 100).repartition(1)
+      .write.mode("overwrite").parquet(log.stageDataDir(0L))
+    val staged = log.stagedFiles(0L)
+      .map(p => P.get(dir).toAbsolutePath.relativize(P.get(p)).toString)
+    F.createDirectories(P.get(dir, "meta"))
+    F.writeString(P.get(dir, "meta", "snap-0.txt"),
+      ("snapshot\t0\tparent\t-1" +: staged.map(f => s"file\t$f")).mkString("", "\n", "\n"))
+    F.writeString(P.get(dir, "meta", "current"), "0")
+    assert(SnapshotLog.rowCountOf(log.metaAt(0L)).isEmpty, "fixture must look legacy")
+    rows.filter(col("id") >= 100).repartition(2)
+      .write.mode("overwrite").parquet(log.stageDataDir(1L))
+    log.commit(1L, statsColumns = Seq("id"))
+    assert(SnapshotLog.rowCountOf(log.metaAt(1L)).contains(200L),
+      "the folded legacy entry must carry its footer row count")
+  }
+
   test("maintenance trio vs a concurrent writer: committed data never deleted, reads stay consistent") {
     import java.nio.file.{Files => F}
     // two SnapshotLog instances on ONE table dir: writer A runs the normal
@@ -1525,6 +1588,36 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Dataset.unpersist is a no-op for localCheckpoint blocks; the turn must
     // release them explicitly, not leave them to driver GC cadence
     assert(leaked.isEmpty, s"turns leaked persistent RDD blocks: $leaked")
+  }
+
+  test("a steady small-regime pipeline turn runs at most 11 Spark jobs; its files cluster on fp64") {
+    val sp = spark; import sp.implicits._
+    val table = tmpDir("budget_tbl"); val dd = tmpDir("budget_dd")
+    val seed = fixture.take(120)
+    // a batch of the bench's shape: redelivered urls (resume skips them),
+    // known texts under new urls (dedup drops them) and fresh pages
+    def batch(t: Int) = spark.createDataset(seed.slice(t * 10, t * 10 + 40) ++
+      seed.slice(t * 10 + 40, t * 10 + 80).map(p => p.copy(url = s"${p.url}-copy$t")) ++
+      fixture.slice(120 + t * 20, 140 + t * 20))
+    Pipelines.incrementalDedup(spark, spark.createDataset(seed), table, dd, 8)
+    Pipelines.incrementalDedup(spark, batch(0), table, dd, 8) // warm
+    val dlog = new SnapshotLog(dd)
+    val before = dlog.currentSnapshot().get
+    val (r, meter) = graft.Probe.metered(spark)(
+      Pipelines.incrementalDedup(spark, batch(1), table, dd, 8))
+    assert(r.appendedRows > 0L && r.appendedRows <= 20L, s"$r")
+    import scala.jdk.CollectionConverters._
+    assert(meter.jobs.get <= 11,
+      s"${meter.jobs.get} jobs:\n${meter.jobLines.asScala.mkString("\n")}")
+    // the small regime's clustered write: pairwise-disjoint fp64 ranges
+    val added = dlog.metaAddedBetween(before, r.dedupedSnapshot.get)
+    val ranges = added.map(_.stats("fp64") match {
+      case LongBounds(lo, hi, _) => (lo, hi)
+      case b => fail(s"fp64 bounds must be longs: $b")
+    }).sortBy(_._1)
+    assert(ranges.size > 1, s"a ${r.appendedRows}-row append must spread over files: $ranges")
+    assert(ranges.zip(ranges.tail).forall { case (a, b) => a._2 < b._1 },
+      s"per-file fp64 ranges must be disjoint: $ranges")
   }
 
   test("inverted dedup probe: the corpus side never shuffles; fp64 stats prune files") {
