@@ -207,7 +207,7 @@ object Probe {
     val log = new SnapshotLog(dir)
     val meta = log.metaAt(log.currentSnapshot().get)
     val idx = new ManifestFileIndex(dir,
-      meta.map(m => ManifestEntry(m.path, m.size.getOrElse(0L), m.stats)))
+      meta.map(m => ManifestEntry(m.path, m.size, m.stats)))
     val fp64 = AttributeReference("fp64", org.apache.spark.sql.types.LongType)()
     (meta.size, idx.listFiles(Nil, Seq(In(fp64, fp64s.map(Literal(_))))).map(_.files.size).sum)
   }

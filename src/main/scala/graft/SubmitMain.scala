@@ -143,10 +143,9 @@ object SubmitMain {
             println(s"table $tableDir")
             println(s"  snapshots retained: ${snaps.size} " +
               s"(${snaps.head}..${snaps.last}), head = $head")
-            println(s"  live files: ${meta.size}, " +
-              s"bytes: ${meta.flatMap(_.size).sum}" +
-              (if (meta.exists(_.size.isEmpty))
-                s" (+${meta.count(_.size.isEmpty)} legacy size-less files)" else ""))
+            println(s"  live files: ${meta.size}, bytes: ${meta.map(_.size).sum}")
+            println(SnapshotLog.rowCountOf(meta)
+              .fold("  rows: unknown (stats-free commits)")(n => s"  rows: $n"))
             println(s"  stats columns: " +
               (if (statCols.isEmpty) "none" else statCols.mkString(", ")))
             val txns = log.txnWatermarks()

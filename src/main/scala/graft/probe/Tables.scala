@@ -310,12 +310,12 @@ object Tables {
       stage(0L, "big", (0 until 4).map(i => (i * 400000L, (i + 1) * 400000L)))
       stage(1L, "small", (0 until 60).map(i => (1600000L + i * 2000L, 1600000L + (i + 1) * 2000L)))
       val schema = spark.range(1).select(col("id"), (col("id") % 97).as("v")).schema
-      val inSizes = log.metaAt(log.currentSnapshot().get).flatMap(_.size).sorted
+      val inSizes = log.metaAt(log.currentSnapshot().get).map(_.size).sorted
       println(s"input: ${inSizes.size} files, " +
         f"min ${inSizes.head / 1024}%d KB / median ${inSizes(inSizes.size / 2) / 1024}%d KB / " +
         f"max ${inSizes.last / 1024}%d KB")
       val ((wall, id), meter) = Probe.metered(spark)(Probe.clock(log.compact(spark, schema, targetFiles = 8)))
-      val outSizes = log.metaAt(id.get).flatMap(_.size).sorted
+      val outSizes = log.metaAt(id.get).map(_.size).sorted
       val total = log.scan(spark, schema).count()
       require(total == 1720000L, s"row count drifted: $total")
       println(s"compacted -> ${outSizes.size} files in " + f"$wall%.1f s; " +

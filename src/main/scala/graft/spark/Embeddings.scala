@@ -528,48 +528,43 @@ object Embeddings {
       (s"schema\t${dataSchema.json}" +: entries).mkString("", "\n", "\n"))
   }
 
-  /** Read exactly the probed partitions of a published index. With a serving
-    * manifest, the probe values select manifest lines and the scan plans over
-    * a [[ManifestFileIndex]] — zero directory listing, zero per-file stats,
+  /** Read exactly the probed partitions of a published index: the probe
+    * values select serving-manifest lines and the scan plans over a
+    * [[ManifestFileIndex]] — zero directory listing, zero per-file stats,
     * per query (C11 for indexes; round 4 built an InMemoryFileIndex of the
-    * whole index on every call). A pre-manifest index falls back to the
-    * listing read with partition-directory pruning.
+    * whole index on every call). An index without a manifest fails loudly.
     */
   private def readIndexPartitions(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, partCol: String, values: Seq[Int]): DataFrame = {
+      indexPath: String, values: Seq[Int]): DataFrame = {
     val io = indexIo(indexPath)
     // a gate-less directory is NEVER scanned: on an object store an
     // in-flight in-place publish is visible file-by-file, and a silent
-    // directory read would return partial top-k results (round-5 review) —
-    // loud beats wrong, and a complete-but-pre-manifest (round-4) index
-    // still has its gate
+    // directory read would return partial top-k results (round-5 review)
     require(publishComplete(io, io.root),
       s"index at $indexPath is not a completed publish (missing commit gate)" +
         " — build it first (lshBuildIndex / ivfEnsureIndex)")
     val root = indexRoot(io)
     val mf = new HPath(root, "_index_manifest.txt")
-    if (io.exists(mf)) {
-      val lines = io.readString(mf).split('\n')
-      val schema = org.apache.spark.sql.types.DataType.fromJson(
-        lines.find(_.startsWith("schema\t"))
-          .getOrElse(sys.error(s"index manifest at $mf missing schema line"))
-          .split('\t')(1)).asInstanceOf[org.apache.spark.sql.types.StructType]
-      val want = values.map(_.toString).toSet
-      val entries = lines.iterator
-        .filter(_.startsWith("file\t")).map(_.split('\t'))
-        .filter(p => want.contains(p(1)))
-        .map(p => ManifestEntry(io.extern(new HPath(root, p(2))),
-          p(3).toLong, Map.empty))
-        .toSeq
-      if (entries.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else ManifestScan(spark, io.extern(root), schema, entries)
-    } else
-      // complete legacy (pre-manifest) index: listing read, partition pruning
-      spark.read.parquet(io.extern(root))
-        .filter(col(partCol).isin(values: _*))
-        .drop(partCol)
+    if (!io.exists(mf))
+      throw new IllegalStateException(
+        s"index at $indexPath has no serving manifest ($mf) — delete it and " +
+          "rebuild (lshBuildIndex / ivfEnsureIndex skip a gated index)")
+    val lines = io.readString(mf).split('\n')
+    val schema = org.apache.spark.sql.types.DataType.fromJson(
+      lines.find(_.startsWith("schema\t"))
+        .getOrElse(sys.error(s"index manifest at $mf missing schema line"))
+        .split('\t')(1)).asInstanceOf[org.apache.spark.sql.types.StructType]
+    val want = values.map(_.toString).toSet
+    val entries = lines.iterator
+      .filter(_.startsWith("file\t")).map(_.split('\t'))
+      .filter(p => want.contains(p(1)))
+      .map(p => ManifestEntry(io.extern(new HPath(root, p(2))),
+        p(3).toLong, Map.empty))
+      .toSeq
+    if (entries.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else ManifestScan(spark, io.extern(root), schema, entries)
   }
 
   /** Materialize the hyperplane-LSH bucket index: every vector written once
@@ -596,7 +591,7 @@ object Embeddings {
       q: Array[Float], k: Int): DataFrame = {
     val probes = graft.kernel.TextStats.embeddingLshProbes(q)
     bruteForceTopK(
-      readIndexPartitions(spark, indexPath, "bucket", probes.toSeq), q, k)
+      readIndexPartitions(spark, indexPath, probes.toSeq), q, k)
   }
 
   /** GC for materialized index directories: delete every sibling of `keep`
@@ -646,6 +641,6 @@ object Embeddings {
       cents: Array[Array[Float]], q: Array[Float], k: Int, nProbe: Int): DataFrame = {
     val cells = probeCells(cents, q, nProbe)
     bruteForceTopK(
-      readIndexPartitions(spark, indexPath, "cell", cells.toSeq), q, k)
+      readIndexPartitions(spark, indexPath, cells.toSeq), q, k)
   }
 }

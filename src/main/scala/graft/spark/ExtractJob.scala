@@ -117,8 +117,8 @@ object ExtractJob {
     // which is where the cost lives. The done side's true row count comes
     // straight from the manifest (per-file `#n=` counts recorded at commit
     // from the same footer open the stats pay for — zero Spark jobs, round
-    // 7); a table holding any legacy pre-count entry degrades to a
-    // metadata-only count job (column-pruned parquet count = footer row
+    // 7); a table holding any entry without a count (a stats-free commit)
+    // degrades to a metadata-only count job (column-pruned parquet count = footer row
     // counts, no data pages). Below the budget the done urls broadcast and
     // the payload never leaves its scan partitions.
     //
@@ -371,8 +371,11 @@ object ExtractJob {
   def backfillMetrics(spark: SparkSession, tableDir: String): Seq[Long] = {
     val log = new SnapshotLog(tableDir)
     val metricsPath = s"$tableDir/metrics"
+    // through the table's FileSystem: a `file:` or `hdfs:` table dir is no
+    // local path, and a wrong "no metrics yet" re-writes every lineage row
+    val io = new GraftIo(tableDir, SnapshotLog.defaultHadoopConf())
     val have: Set[Long] =
-      if (!new java.io.File(metricsPath).isDirectory) Set.empty
+      if (!io.isDirectory(io.path("metrics"))) Set.empty
       else spark.read.parquet(metricsPath)
         .select("snapshot_id").distinct().collect().map(_.getLong(0)).toSet
     // POINTER-BOUNDED: a residual manifest past the current pointer is a
@@ -395,21 +398,12 @@ object ExtractJob {
         // the path diff would double-count them (round-5 ADVICE). Upsert's
         // live path records its own lineage at run time; a crashed one stays
         // unattributed rather than inflated.
-        else if (log.snapshots().contains(parent)) {
-          // parent manifest still present but the child is not a pure segment
-          // append: either a replace (fresh paths, difference = full content)
-          // or a legacy-inline MIGRATION append, whose segment folds the
-          // parent's carried-over rows in — those rows already have lineage
-          // from the parent's own run, so only the path-set difference is
-          // this snapshot's lineage (full content would double-count them)
-          val carried = log.filesAt(parent).toSet
-          Some(log.filesAt(id).filterNot(carried))
-        } else if (log.isSelfContained(id))
-          // parent expired: only a true replace (references nothing but its
-          // own segment AND staged every file itself) is still decidable —
-          // its full content IS its lineage. A compact is the same shape but
-          // carries the `cp` tag, caught above; pre-round-6 compacts are
-          // untagged and stay ambiguous (documented limitation).
+        else if (log.isSelfContained(id))
+          // a replace (references nothing but its own segment AND staged
+          // every file itself), whether or not its parent survives: its full
+          // content IS its lineage. A compact is the same shape but carries
+          // the `cp` tag, caught above; pre-round-6 compacts are untagged
+          // and stay ambiguous (documented limitation).
           Some(log.filesAt(id))
         else None
         // append snapshot with an EXPIRED parent: its own rows are no longer

@@ -24,13 +24,10 @@ object Functions {
   /** F6 `searchbyany` (search.py:166-169): raw case-sensitive substring. */
   def searchAny(c: Column, value: String): Column = c.contains(lit(value))
 
-  // ---- kernel-faithful UDFs (F2/F3/F4/F5/F7 + extraction + text stats) ----
+  // ---- kernel-faithful UDFs (F2/F3/F4/F5/F7 + text stats) ----
 
   val vinCandidatesUdf = udf((text: String) =>
     if (text == null) Seq.empty[String] else SearchKernels.findVinCandidates(text))
-
-  val numsAfterKeywordUdf = udf((text: String, kw: String) =>
-    if (text == null) Seq.empty[String] else SearchKernels.numsAfterKeyword(text, kw))
 
   val roRatioUdf = udf((a: String, b: String) =>
     if (a == null || b == null) 0.0 else Difflib.ratio(a, b))
@@ -41,9 +38,6 @@ object Functions {
   val dealerHitUdf = udf((text: String, value: String) =>
     text != null && SearchKernels.dealerHit(text, value))
 
-  val dealerCapturesUdf = udf((text: String) =>
-    if (text == null) Seq.empty[String] else SearchKernels.dealerCaptures(text))
-
   val keywordNumberHitUdf = udf((text: String, kw: String, value: String) =>
     text != null && SearchKernels.keywordNumberHit(text, kw, value))
 
@@ -51,17 +45,9 @@ object Functions {
   def docMatchesUdf(params: SearchKernels.SearchParams) =
     udf((text: String) => text != null && SearchKernels.docMatches(text, params))
 
-  // extraction kernels, exposed columnar for ad-hoc use (ExtractJob uses
-  // mapPartitions on the typed Dataset instead — SURVEY.md §2.8)
-  val sniffUdf = udf((html: Array[Byte]) => Extract.sniff(html))
-  val htmlMainTextUdf = udf((html: Array[Byte]) =>
-    if (html == null) "" else HtmlExtract.mainText(html))
-
   // training-data kernels
   val tokenCountWsUdf = udf((text: String) =>
     if (text == null) 0 else TextStats.tokenCountWs(text))
-  val tokenCountBpeUdf = udf((text: String) =>
-    if (text == null) 0 else TextStats.tokenCountBpeIsh(text))
   val langIdUdf = udf((text: String) =>
     if (text == null) "und" else TextStats.langId(text))
   val qualityScoreUdf = udf((text: String) =>
@@ -81,24 +67,19 @@ object Functions {
     */
   val bandsFromSigUdf = udf((sig: Seq[Long]) =>
     if (sig == null) Seq.empty[Long] else TextStats.lshBands(sig.toArray).toSeq)
-  val jaccardUdf = udf((a: String, b: String) =>
-    TextStats.jaccard(TextStats.shingles(if (a == null) "" else a),
-      TextStats.shingles(if (b == null) "" else b)))
-  /** [[jaccardUdf]] factored for pair verification at scale (round 7): the
-    * shingle set is computed ONCE PER DOC and attached to candidate pairs
-    * by the id-joins; the per-pair work is then the set arithmetic alone.
-    * jaccardSets(shinglesOf(a), shinglesOf(b)) == jaccardUdf(a, b) by
-    * construction — same kernel functions, same Double — while the pair-
-    * side UDF no longer re-tokenizes and re-hashes both texts per pair
-    * (measured ~5 s of t12's 15 s at sf0.1: 169k pairs re-shingled 338k
-    * texts where 10k docs suffice).
-    */
   val shinglesUdf = udf((t: String) =>
     TextStats.shingles(if (t == null) "" else t).toSeq)
+  /** Shingle-set Jaccard for pair verification at scale (round 7): the
+    * shingle set is computed ONCE PER DOC by [[shinglesUdf]] and attached
+    * to candidate pairs by the id-joins; the per-pair work is then the set
+    * arithmetic alone — `TextStats.jaccard` over the two shingle sets, the
+    * same Double the kernel gives for the two texts — while the pair-side
+    * UDF never re-tokenizes and re-hashes both texts per pair (measured
+    * ~5 s of t12's 15 s at sf0.1: 169k pairs re-shingled 338k texts where
+    * 10k docs suffice).
+    */
   val jaccardSetsUdf = udf((a: Seq[Long], b: Seq[Long]) =>
     TextStats.jaccard(a.toArray, b.toArray))
-  val cosineUdf = udf((a: Seq[Float], b: Seq[Float]) =>
-    if (a == null || b == null) 0.0 else TextStats.cosine(a.toArray, b.toArray))
   val embedLshUdf = udf((v: Seq[Float]) =>
     if (v == null) 0 else TextStats.embeddingLshBucket(v.toArray))
   /** Own bucket + all Hamming-1 neighbor buckets (multi-probe candidate keys). */

@@ -63,8 +63,11 @@ object Pipelines {
     conv(substring(fp, 1, 15), 16, 10).cast(org.apache.spark.sql.types.LongType)
 
   /** Probe-filter cap: a batch with at most this many distinct `fp64` values
-    * pushes them as an IN filter into the corpus scan (manifest stats prune
-    * files; parquet row-group stats prune below). Bigger batches probe by
+    * pushes them as an IN filter into the corpus scan, where the manifest's
+    * per-file stats prune files. Only they prune: past
+    * `spark.sql.parquet.pushdown.inFilterThreshold` (10 values) Spark pushes
+    * the IN list to parquet as its min..max range alone, which spans the
+    * whole digest domain, so no row group is skipped. Bigger batches probe by
     * broadcast semi-join alone — at that size the batch's uniform digests
     * blanket every file's range anyway, so the filter would prune nothing
     * and only bloat the plan.

@@ -50,9 +50,12 @@ import scala.jdk.CollectionConverters._
   *   meta/snap-<id>.txt      snapshot <id> parent <parentId>
   *                           manifest <meta/seg-....txt relative path>  (per segment)
   *                           txn <appId> <version>                      (idempotent-writer watermark)
-  *                           file <relative/path.parquet>               (legacy inline, tolerated)
-  *   meta/seg-<id>[-tok].txt file <rel/path.parquet> <size> [col=min..max ...]
+  *   meta/seg-<id>[-tok].txt file <rel/path.parquet> <size> [#n=<rows>] [col=min..max ...]
   * }}}
+  *
+  * This is the only layout read: a snapshot list holding an inline `file`
+  * line, or a segment entry without a size, fails loudly with the offending
+  * path instead of being planned.
   *
   * Per-file column STATS (round 5): when a commit is asked to
   * (`statsColumns`), each fresh segment entry also records min/max for the
@@ -115,23 +118,13 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     */
   def filesAt(snapshotId: Long): Seq[String] = metaAt(snapshotId).map(_.path)
 
-  /** Live data files of a snapshot WITH their manifest-recorded sizes (None
-    * for legacy entries written before sizes rode the segments). When every
-    * size is present, [[scan]] plans from the manifest alone — zero
-    * filesystem metadata calls (see [[ManifestFileIndex]]).
-    */
-  def filesWithSizesAt(snapshotId: Long): Seq[(String, Option[Long])] =
-    metaAt(snapshotId).map(m => (m.path, m.size))
-
   /** Full manifest metadata of a snapshot: path, recorded size, per-column
     * min/max stats (empty when the committing writer recorded none).
     */
   def metaAt(snapshotId: Long): Seq[SnapshotLog.FileMeta] = {
     require(io.exists(manifestPath(snapshotId)),
       s"snapshot $snapshotId has no manifest under $metaDir")
-    val (segments, inline) = parseList(snapshotId)
-    inline.map(f => SnapshotLog.FileMeta(io.extern(io.path(f)), None, Map.empty)) ++
-      readSegments(segments)
+    readSegments(segmentsAt(snapshotId))
   }
 
   /** Parallel driver-IO map for independent small-file metadata reads
@@ -151,35 +144,28 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
   private def readSegments(segs: Seq[String]): Seq[SnapshotLog.FileMeta] =
     parMap(segs)(readSegment).flatten
 
-  /** One read of a snapshot's manifest list: (segment relpaths, legacy inline
-    * file relpaths). Every consumer parses through here — the list is the
-    * per-commit metadata hot spot and must be read once per use, not once per
-    * question asked about it.
+  /** ONE read of a snapshot's manifest list: (segment relpaths, txn
+    * watermarks); a missing manifest reads as empty. Every consumer parses
+    * through here — the list is the per-commit metadata hot spot, and a
+    * commit attempt needs both families of its parent's from one read (two
+    * reads of one small file are two metadata RPCs per attempt on an object
+    * store). An inline `file` line fails loudly: it is not this format.
     */
-  private def parseList(snapshotId: Long): (Seq[String], Seq[String]) = {
-    val (segs, inline, _) = parseManifest(snapshotId)
-    (segs, inline)
-  }
-
-  /** ONE read of a snapshot's manifest yielding every line family: (segment
-    * relpaths, legacy inline file relpaths, txn watermarks). Commit paths
-    * need all three of the parent's — they must call THIS once, not
-    * [[parseList]] + [[parseTxns]] (two reads of the same small file is two
-    * metadata RPCs per commit attempt on an object store).
-    */
-  private def parseManifest(snapshotId: Long)
-      : (Seq[String], Seq[String], Map[String, Long]) = {
-    if (!io.exists(manifestPath(snapshotId)))
-      return (Seq.empty, Seq.empty, Map.empty)
-    val lines = io.readString(manifestPath(snapshotId)).split('\n').toSeq
+  private def parseManifest(snapshotId: Long): (Seq[String], Map[String, Long]) = {
+    val mp = manifestPath(snapshotId)
+    if (!io.exists(mp)) return (Seq.empty, Map.empty)
+    val lines = io.readString(mp).split('\n').toSeq
+    if (lines.exists(_.startsWith("file\t")))
+      throw new IllegalStateException(
+        s"snapshot list $mp holds inline file entries — only the segment-list " +
+          "format (manifest pointer lines) is readable")
     (lines.collect { case l if l.startsWith("manifest\t") => l.split('\t')(1) },
-      lines.collect { case l if l.startsWith("file\t") => l.split('\t')(1) },
       lines.collect { case l if l.startsWith("txn\t") =>
         val p = l.split('\t'); p(1) -> p(2).toLong }.toMap)
   }
 
   /** The segment files (relative paths) a snapshot's manifest list references. */
-  private def segmentsAt(snapshotId: Long): Seq[String] = parseList(snapshotId)._1
+  private def segmentsAt(snapshotId: Long): Seq[String] = parseManifest(snapshotId)._1
 
   /** Writer-transaction watermarks recorded in a snapshot's manifest:
     * `txn\t<appId>\t<version>` lines, one per application id, carried forward
@@ -188,7 +174,7 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * table maintenance (Delta's `setTransaction` action, re-derived).
     */
   private def parseTxns(snapshotId: Long): Map[String, Long] =
-    parseManifest(snapshotId)._3
+    parseManifest(snapshotId)._2
 
   /** The last committed version for an idempotent writer (`appId`) as of the
     * CURRENT snapshot — what a replaying `foreachBatch` consults (via
@@ -204,9 +190,10 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
   def txnWatermarks(): Map[String, Long] =
     currentSnapshot().map(parseTxns).getOrElse(Map.empty)
 
-  /** Data files listed by one immutable segment: path, recorded size (absent
-    * or negative = legacy/unknown), optional per-column min/max stats fields
-    * (`col=min..max`).
+  /** Data files listed by one immutable segment: path, recorded size,
+    * optional row count (`#n=`) and per-column min/max stats fields
+    * (`col=min..max`). An entry without a non-negative size fails loudly:
+    * planning it at a guessed length could drop its rows.
     */
   private def readSegment(rel: String): Seq[SnapshotLog.FileMeta] = {
     val p = io.path(rel)
@@ -214,16 +201,17 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     io.readString(p).split('\n').toSeq.collect {
       case line if line.startsWith("file\t") =>
         val parts = line.split('\t')
-        val size = if (parts.length >= 3) parts(2).toLong else -1L
+        val size = parts.lift(2).flatMap(_.toLongOption).filter(_ >= 0L)
+          .getOrElse(throw new IllegalStateException(
+            s"manifest segment $p lists ${parts(1)} without a size — only " +
+              "sized segment entries are readable"))
         // `#n=<rows>`: the file's exact row count (round 7). Parsed before
         // the stats fields ('#' can never start a stats column name this
-        // writer emits); absent, malformed or NEGATIVE reads as None — the
-        // conservative default legacy entries get for free (negative
-        // mirrors the size field's `-1 = unknown` convention: summing a
-        // sentinel into rowCountOf would under-count and mis-pick the
-        // broadcast regime). A pre-round-7 reader drops the field in its
-        // stats parse (no `..` range), so the format stays readable both
-        // ways.
+        // writer emits); absent, malformed or NEGATIVE reads as None (a
+        // stats-free commit records none; summing a bogus value into
+        // rowCountOf would under-count and mis-pick the broadcast regime).
+        // A pre-round-7 reader drops the field in its stats parse (no `..`
+        // range), so the format stays readable both ways.
         val fields = parts.drop(3)
         val rows = fields.collectFirst {
           case f if f.startsWith("#n=") =>
@@ -270,8 +258,7 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
             case _ => None
           }
         }.toMap
-        SnapshotLog.FileMeta(io.extern(io.path(parts(1))),
-          if (size >= 0) Some(size) else None,
+        SnapshotLog.FileMeta(io.extern(io.path(parts(1))), size,
           stats: Map[String, ColBounds], rows)
     }
   }
@@ -323,22 +310,27 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.toString)
 
-  /** Commit: new snapshot = parent's live files + newly staged files.
-    * Single-writer (fails loudly on a concurrent commit of the same id — use
-    * [[commitOptimistic]] for racing appenders). `statsColumns` names int/long
-    * columns whose min/max should ride the segment for file skipping.
+  /** Commit: new snapshot = parent's live files + the files staged under
+    * [[stageDataDir]]`(snapshotId)`. SINGLE-WRITER: the stage directory and
+    * the segment are named by the id alone, so a second writer staging the
+    * same id overwrites the first one's data files — committed ones
+    * included — before its own commit fails. Writers that may race use
+    * [[stageUniqueDataDir]] + [[commitOptimistic]]. `statsColumns` names
+    * int/long columns whose min/max should ride the segment for file
+    * skipping.
     */
   def commit(snapshotId: Long, statsColumns: Seq[String] = Nil): Long =
-    commitImpl(snapshotId, keepParent = true, statsColumns)
+    commitStrict(snapshotId, keepParent = true, statsColumns)
 
   /** Replace-commit: the new snapshot lists ONLY the staged files — the
     * table-truncating analog of the reference's force re-extract
     * (claim.py:34 `extractDocuments=true` overwrites every batch JSON).
     * Old data files stay on disk, unreferenced (time-travel-able, GC-able),
     * so the swap is still atomic: readers see the old table or the new one.
+    * Single-writer, like [[commit]].
     */
   def commitReplace(snapshotId: Long, statsColumns: Seq[String] = Nil): Long =
-    commitImpl(snapshotId, keepParent = false, statsColumns)
+    commitStrict(snapshotId, keepParent = false, statsColumns)
 
   /** [[commitReplace]] for CONTENT-PRESERVING rewrites ([[compact]]): the
     * commit is identical except its segment carries the `cp` tag, so lineage
@@ -348,7 +340,7 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * files). Tags never collide with optimistic-commit tokens: those are hex.
     */
   private def commitCompact(snapshotId: Long, statsColumns: Seq[String]): Long =
-    commitImpl(snapshotId, keepParent = false, statsColumns, segTag = "cp")
+    commitStrict(snapshotId, keepParent = false, statsColumns, tag = "cp")
 
   /** True iff `rel` is the segment a given snapshot wrote itself (strict
     * commits name it `seg-<id>.txt`; optimistic ones `seg-<id>-<token>.txt`).
@@ -358,16 +350,12 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     n == s"seg-$id.txt" || (n.startsWith(s"seg-$id-") && n.endsWith(".txt"))
   }
 
-  /** Commit cost is O(staged files + prior commits), NEVER O(live files):
-    * the parent's file inventory is carried forward by reference (its
-    * `manifest` pointer lines are copied into the child's list verbatim —
-    * segments are immutable), and only the staged files are written out, into
-    * one new segment. Legacy inline `file` lines of a parent (pre-round-4
-    * tables) are the single O(files) carry-over and rewrite themselves into a
-    * segment once, on the first append over them.
+  /** The id-named commits ([[commit]], [[commitReplace]], [[compact]]): one
+    * attempt at `snapshotId`, which must be the head's successor. The stage
+    * was derived for this id, so a lost CAS is not retried but thrown.
     */
-  private def commitImpl(snapshotId: Long, keepParent: Boolean,
-      statsColumns: Seq[String], segTag: String = ""): Long = {
+  private def commitStrict(snapshotId: Long, keepParent: Boolean,
+      statsColumns: Seq[String], tag: String = ""): Long = {
     // under the manifest-CAS protocol an existing FINAL manifest IS a
     // committed snapshot. The one legitimate way to arrive here is our own
     // retry after a crash BETWEEN the CAS and the hint write: the table head
@@ -375,12 +363,9 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     // then the commit already happened; heal the hint and return. Anything
     // else is a foreign writer's commit: fail loudly, never absorb it.
     if (io.exists(manifestPath(snapshotId))) {
-      val healed = currentSnapshot().contains(snapshotId) && {
-        val (segs, inline) = parseList(snapshotId)
-        val ownFiles = readSegments(segs.filter(isOwnSegment(_, snapshotId)))
-          .map(_.path).toSet
-        inline.isEmpty && ownFiles == stagedFiles(snapshotId).toSet
-      }
+      val healed = currentSnapshot().contains(snapshotId) &&
+        readSegments(segmentsAt(snapshotId).filter(isOwnSegment(_, snapshotId)))
+          .map(_.path).toSet == stagedFiles(snapshotId).toSet
       if (healed) { bumpHint(snapshotId); return snapshotId }
       throw new IllegalStateException(
         s"snapshot $snapshotId already has a committed manifest that does not " +
@@ -394,30 +379,15 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     require(snapshotId == parent + 1,
       s"snapshot $snapshotId must be parent+1 (parent $parent): ids are " +
         "contiguous under the manifest-CAS protocol")
-    io.mkdirs(metaDir)
-    val (pSegs, pInline, pTxns) =
-      if (parent >= 0) parseManifest(parent)
-      else (Seq.empty[String], Seq.empty[String], Map.empty[String, Long])
-    val (parentSegments, parentInline) =
-      if (keepParent) (pSegs, pInline) else (Seq.empty[String], Seq.empty[String])
-    val segName =
-      if (segTag.isEmpty) s"seg-$snapshotId.txt" else s"seg-$snapshotId-$segTag.txt"
-    val segments = writeSegment(segName, snapshotId,
-      parentSegments, parentInline, stagedStatuses(dataDirPath(snapshotId)),
-      statsColumns)
-    // txn watermarks survive even a replace commit: they track a WRITER's
-    // progress, not table content — a replace that intentionally discards an
-    // idempotent writer's output requires that writer to restart with a
-    // fresh appId/checkpoint (the position Delta takes)
-    promoteManifest(snapshotId, parent, segments,
-      tmpName = s"snap-$snapshotId.txt.tmp", txns = pTxns) match {
-      case true => bumpHint(snapshotId); snapshotId
-      case false =>
-        throw new IllegalStateException(
-          s"snapshot $snapshotId was committed concurrently while this " +
-            "writer staged — single-writer commit() refuses to race; use " +
-            "commitOptimistic for concurrent appends")
-    }
+    val outcome = attemptCommit(parent, stagedStatuses(dataDirPath(snapshotId)),
+      statsColumns, tag, token = None,
+      carry = if (keepParent) identity else _ => Nil)
+    if (outcome != SnapshotLog.Won)
+      throw new IllegalStateException(
+        s"snapshot $snapshotId was committed concurrently while this " +
+          "writer staged — single-writer commit() refuses to race; use " +
+          "commitOptimistic for concurrent appends")
+    snapshotId
   }
 
   /** Optimistic-concurrency append: stage parquet under [[stageUniqueDataDir]],
@@ -447,9 +417,6 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       requireParent: Option[Long] = None): Option[Long] = {
     require(appId.nonEmpty && !appId.contains('\t') && !appId.contains('\n'),
       "appId must be non-empty and tab/newline-free (it rides the manifest)")
-    // already-applied wins over stale-parent: the txn check runs before the
-    // requireParent check in the loop, so a replay that raced a foreign
-    // append SKIPS (correct) instead of failing the conditional
     val r = commitOptimisticImpl(stagedDir, statsColumns, maxAttempts,
       requireParent, txn = Some((appId, version)))
     if (r.isEmpty) abortStage(stagedDir) // already applied: stage is orphan data
@@ -460,74 +427,92 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       maxAttempts: Int, requireParent: Option[Long],
       txn: Option[(String, Long)]): Option[Long] = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    io.mkdirs(metaDir)
     val staged = stagedStatuses(io.qualify(new HPath(stagedDir)))
     var attempt = 0
     while (attempt < maxAttempts) {
       val parent = currentSnapshot().getOrElse(-1L)
-      val (parentSegments, parentInline, parentTxns) =
-        if (parent >= 0) parseManifest(parent)
-        else (Seq.empty[String], Seq.empty[String], Map.empty[String, Long])
-      txn.foreach { case (app, v) =>
-        if (parentTxns.get(app).exists(_ >= v)) return None
-      }
-      // conditional append: the caller DERIVED its staged content from
-      // `requireParent`'s snapshot (e.g. an anti-join against it) — landing
-      // on any other parent could double-apply or contradict that derivation,
-      // so the conflict must surface loudly for the caller to recompute
-      requireParent.filter(_ != parent).foreach { exp =>
-        throw new IllegalStateException(
-          s"table advanced to snapshot $parent while this append was derived " +
-            s"from $exp — recompute against the current snapshot and retry")
-      }
-      val id = parent + 1
       // token-unique segment name: two racers deriving the same id must not
       // overwrite each other's segment while exactly one of them will win it
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val segments = writeSegment(s"seg-$id-$token.txt", id,
-        parentSegments, parentInline, staged, statsColumns)
-      if (promoteManifest(id, parent, segments,
-          tmpName = s"snap-$id.txt.occ-$token.tmp",
-          txns = parentTxns ++ txn.map { case (app, v) => app -> v })) {
-        bumpHint(id)
-        return Some(id)
+      attemptCommit(parent, staged, statsColumns, tag = "", token = Some(newToken()),
+          carry = identity, txn, requireParent) match {
+        case SnapshotLog.Won => return Some(parent + 1)
+        case SnapshotLog.AlreadyApplied => return None
+        case SnapshotLog.Lost => attempt += 1 // re-derive from the winner's snapshot
       }
-      // lost the CAS: drop our now-unreferenced segment and re-derive from
-      // the winner's snapshot
-      segments.filter(isOwnSegment(_, id)).foreach(sg => io.delete(io.path(sg)))
-      attempt += 1
     }
     throw new IllegalStateException(
       s"append lost the commit CAS $maxAttempts times in a row — pathological " +
         "contention; back off or batch appenders")
   }
 
-  /** Write the new segment (parent's legacy inline entries folded in, sizes
-    * and optional column stats recorded now, while the writer that produced
-    * the staged files holds them) and return the child's full segment list.
-    * On a stats commit the folded legacy entries get their footer stats and
-    * row counts too: one entry without a count would leave every later
-    * snapshot's [[SnapshotLog.rowCountOf]] unknown, and each resume would
-    * pay a count job for it.
+  private def newToken(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** ONE commit attempt — every commit shape runs it, and it is the only
+    * caller of [[promoteManifest]]. It reads `parent`'s manifest once, keeps
+    * `carry(parent's segments)` (all of them for an append, none for a
+    * replace, rewritten survivors for a delete/upsert — whose `carry` may
+    * write segments of its own), writes a fresh segment listing `staged`,
+    * CAS-promotes the child list at `parent + 1`, and bumps the hint.
+    *
+    * Naming makes a lost CAS safe to clean up. A tokened attempt names every
+    * segment it writes `seg-<id>-...-<token>.txt` and deletes exactly those
+    * on a loss. A strict attempt (`token = None`) names its segment by the id
+    * alone, `seg-<id>[-<tag>].txt`; a strict writer that lost the id shares
+    * that name with the winner's segment, so it deletes nothing.
+    *
+    * `txn` (idempotent appends) skips when the parent already records the
+    * version; `requireParent` (conditional appends — the caller DERIVED its
+    * stage from that snapshot, e.g. by an anti-join against it) throws when
+    * the table moved on. The txn check runs first, so a replay that raced a
+    * foreign append skips instead of failing the condition.
     */
-  private def writeSegment(segName: String, snapshotId: Long,
-      parentSegments: Seq[String], parentInline: Seq[String],
-      staged: Seq[FileStatus], statsColumns: Seq[String]): Seq[String] = {
-    val fresh = collectEntries(staged, statsColumns)
-    val inlineSized = parMap(parentInline) { f =>
-      try {
-        val st = io.status(io.path(f))
-        val (stats, rows) = footerMeta(st, statsColumns)
-        (f, st.getLen, stats, rows)
-      } catch {
-        case _: java.io.IOException => (f, -1L, Map.empty[String, ColBounds], None)
-      }
+  private def attemptCommit(parent: Long, staged: Seq[FileStatus],
+      statsColumns: Seq[String], tag: String, token: Option[String],
+      carry: Seq[String] => Seq[String],
+      txn: Option[(String, Long)] = None,
+      requireParent: Option[Long] = None): SnapshotLog.Attempt = {
+    val (parentSegments, parentTxns) = parseManifest(parent)
+    if (txn.exists { case (app, v) => parentTxns.get(app).exists(_ >= v) })
+      return SnapshotLog.AlreadyApplied
+    requireParent.filter(_ != parent).foreach { exp =>
+      throw new IllegalStateException(
+        s"table advanced to snapshot $parent while this append was derived " +
+          s"from $exp — recompute against the current snapshot and retry")
     }
-    val segmentFiles = inlineSized ++ fresh
-    if (segmentFiles.isEmpty) parentSegments
+    val id = parent + 1
+    io.mkdirs(metaDir)
+    val suffix = (if (tag.isEmpty) "" else s"-$tag") + token.fold("")("-" + _)
+    val segments = writeSegment(s"seg-$id$suffix.txt", carry(parentSegments),
+      staged, statsColumns)
+    // txn watermarks survive even a replace commit: they track a WRITER's
+    // progress, not table content — a replace that intentionally discards an
+    // idempotent writer's output requires that writer to restart with a
+    // fresh appId/checkpoint (the position Delta takes)
+    if (promoteManifest(id, parent, segments,
+        tmpName = s"snap-$id.txt" + token.fold("")("." + _) + ".tmp",
+        txns = parentTxns ++ txn)) {
+      bumpHint(id)
+      SnapshotLog.Won
+    } else {
+      token.foreach { t =>
+        segments.filter(_.endsWith(s"-$t.txt")).foreach(sg => io.delete(io.path(sg)))
+      }
+      SnapshotLog.Lost
+    }
+  }
+
+  /** Write the fresh segment (sizes, optional column stats and row counts
+    * recorded now, while the writer that produced the staged files holds
+    * them) and return the child's full segment list: `carried` plus the
+    * fresh segment, or `carried` alone when nothing was staged.
+    */
+  private def writeSegment(segName: String, carried: Seq[String],
+      staged: Seq[FileStatus], statsColumns: Seq[String]): Seq[String] = {
+    val entries = collectEntries(staged, statsColumns)
+    if (entries.isEmpty) carried
     else {
       val seg = segmentPath(segName)
-      io.writeAtomic(seg, segmentFiles.map { case (f, sz, stats, rows) =>
+      io.writeAtomic(seg, entries.map { case (f, sz, stats, rows) =>
         s"file\t$f\t$sz" + rows.map(n => s"\t#n=$n").getOrElse("") +
           stats.toSeq.sortBy(_._1)
           .map {
@@ -537,7 +522,7 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
               s"\t$c=s:$mn..${mx.getOrElse("*")}" + (if (z) "..z" else "")
           }.mkString
       }.mkString("", "\n", "\n"))
-      parentSegments :+ io.relativize(seg)
+      carried :+ io.relativize(seg)
     }
   }
 
@@ -824,41 +809,23 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     // ONE segment sweep yields both the file inventory and the schema-probe
     // set (re-listing via metaAt + a second probe pass would double the
     // O(segments) metadata reads — round-5 review pass 4)
-    val (segs0, inline0) = parseList(current)
-    val segEntries: Seq[(String, Seq[SnapshotLog.FileMeta])] =
-      parMap(segs0)(sg => sg -> readSegment(sg))
-    val meta =
-      inline0.map(f => SnapshotLog.FileMeta(io.extern(io.path(f)), None, Map.empty)) ++
-        segEntries.flatMap(_._2)
+    val segEntries: Seq[Seq[SnapshotLog.FileMeta]] =
+      parMap(segmentsAt(current))(readSegment)
+    val meta = segEntries.flatten
     if (meta.isEmpty) return None
-    // FIRST + LAST file per segment: a segment's files come from one commit
-    // = one writer schema, EXCEPT a legacy-inline migration commit, which
-    // folds pre-round-4 inline entries (head) ahead of its fresh files
-    // (tail) — probing both ends covers the one mixed shape
-    val probePaths = inline0.map(f => io.extern(io.path(f))) ++
-      segEntries.flatMap { case (_, ms) =>
-        (ms.headOption ++ ms.lastOption).map(_.path) }.distinct
+    // FIRST file per segment: a segment's files come from one commit = one
+    // writer schema
+    val probePaths = segEntries.flatMap(_.headOption).map(_.path)
     // a SORTED rewrite runs even at-or-under the file target: clustering is
     // its point, not file count
     if (sortBy.isEmpty && meta.size <= targetFiles) return None
-    // manifest-recorded sizes drive the binning (zero stats for post-r4
-    // commits); a legacy entry without one is stat'ed once here. A FAILED
-    // stat is None, never 0: binning tolerates an unknown (bin shapes only),
-    // but the clustered read below must not plan a file at length 0 — zero
-    // length means zero splits means that file's rows silently vanish from
-    // the replace commit (round-5 review pass 3)
-    val sized: Seq[(String, Option[Long])] = meta.map { m =>
-      (m.path, m.size.orElse(
-        try Some(io.len(new HPath(m.path)))
-        catch { case _: java.io.IOException => None }))
-    }
-    val targetBytes = math.max(1L,
-      (sized.map(_._2.getOrElse(0L)).sum + targetFiles - 1) / targetFiles)
+    // manifest-recorded sizes drive the binning: zero filesystem calls
+    val targetBytes = math.max(1L, (meta.map(_.size).sum + targetFiles - 1) / targetFiles)
     val bins = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
     var bin = scala.collection.mutable.ArrayBuffer.empty[String]
     var acc = 0L
-    sized.foreach { case (p, sz) =>
-      bin += p; acc += sz.getOrElse(0L)
+    meta.foreach { m =>
+      bin += m.path; acc += m.size
       if (acc >= targetBytes) { bins += bin.toSeq; bin = bin.take(0); acc = 0L }
     }
     if (bin.nonEmpty) bins += bin.toSeq
@@ -878,17 +845,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         // stay balanced under skew. The read plans from the manifest
         // (sizes already in hand) — a bare spark.read.parquet would re-stat
         // every live file on the driver, the exact cost C11 exists to kill.
-        // Any file with NO trustworthy size (legacy entry + failed stat)
-        // falls the whole read back to the listing path: planning it at a
-        // guessed length risks dropping its rows (same rule scan() follows)
         import org.apache.spark.sql.functions.col
-        val src =
-          if (sized.forall(_._2.isDefined)) {
-            val entries = meta.zip(sized).map { case (m, (_, sz)) =>
-              ManifestEntry(m.path, sz.get, m.stats) }
-            ManifestScan(spark, io.extern(root), schema, entries)
-          } else spark.read.schema(schema).parquet(sized.map(_._1): _*)
-        src
+        scanEntries(spark, schema, meta)
           .repartitionByRange(math.max(1, bins.size), sortBy.map(col): _*)
           .sortWithinPartitions(sortBy.map(col): _*)
           .write.mode("overwrite").parquet(io.extern(tmp))
@@ -961,11 +919,9 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     val cutoff = System.currentTimeMillis() - minAgeMs
     // one metadata pass yields both the referenced-file set (data sweep) and
     // the referenced-segment set (metadata sweep below)
-    val parsed = snapshots().map(parseList)
-    val referenced = parsed.flatMap { case (segs, inline) =>
-      inline.map(f => io.extern(io.path(f))) ++ readSegments(segs).map(_.path)
-    }.toSet
-    val referencedSegs = parsed.flatMap(_._1).map(sg => io.extern(io.path(sg))).toSet
+    val segs = snapshots().flatMap(segmentsAt).distinct
+    val referenced = readSegments(segs).map(_.path).toSet
+    val referencedSegs = segs.map(sg => io.extern(io.path(sg))).toSet
     val dataRoot = new HPath(root, "data")
     if (!io.isDirectory(dataRoot)) return 0
     var deleted = 0
@@ -998,20 +954,14 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
   }
 
   /** True iff `child` is a pure APPEND over `parent`: both manifests exist
-    * in segment-list form and the child carries every parent segment by
-    * reference. The structural test [[filesAddedBetween]]'s preconditions
-    * reduce to — callers branch on THIS, never on exception types (a replace
-    * commit, a legacy-inline migration, and an expired parent are three
-    * different situations that all make a segment diff meaningless).
+    * and the child carries every parent segment by reference. The structural
+    * test [[filesAddedBetween]]'s preconditions reduce to — callers branch on
+    * THIS, never on exception types (a replace commit and an expired parent
+    * are different situations that both make a segment diff meaningless).
     */
-  def isAppendOf(child: Long, parent: Long): Boolean = {
-    if (!io.exists(manifestPath(child)) ||
-        !io.exists(manifestPath(parent))) return false
-    val (childSegs, childInline) = parseList(child)
-    val (parentSegs, parentInline) = parseList(parent)
-    childInline.isEmpty && parentInline.isEmpty &&
-      parentSegs.toSet.subsetOf(childSegs.toSet)
-  }
+  def isAppendOf(child: Long, parent: Long): Boolean =
+    io.exists(manifestPath(child)) && io.exists(manifestPath(parent)) &&
+      segmentsAt(parent).toSet.subsetOf(segmentsAt(child).toSet)
 
   /** True iff every file the snapshot references was written AT its own
     * commit (its list points only at its own segment): the structural
@@ -1019,8 +969,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * its own lineage even when the parent's manifest has been expired.
     */
   def isSelfContained(snapshotId: Long): Boolean = {
-    val (segs, inline) = parseList(snapshotId)
-    inline.isEmpty && segs.nonEmpty && segs.forall(isOwnSegment(_, snapshotId))
+    val segs = segmentsAt(snapshotId)
+    segs.nonEmpty && segs.forall(isOwnSegment(_, snapshotId))
   }
 
   /** True iff the snapshot's own segments include REWRITE-tagged ones —
@@ -1035,7 +985,7 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * neither `rw` nor `cp` is a hex digit pair).
     */
   def hasRewriteSegments(snapshotId: Long): Boolean =
-    io.exists(manifestPath(snapshotId)) && parseList(snapshotId)._1.exists { s =>
+    io.exists(manifestPath(snapshotId)) && segmentsAt(snapshotId).exists { s =>
       val n = s.substring(s.lastIndexOf('/') + 1)
       n.startsWith(s"seg-$snapshotId-rw") || n.startsWith(s"seg-$snapshotId-cp")
     }
@@ -1044,19 +994,15 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * compact): it carries rewrite-tagged segments of its own, or references
     * SOME but not ALL of the parent's segments — the one commit shape that
     * drops parent segments while still carrying others by reference. A pure
-    * append (carries all), a replace (carries none), and a legacy-inline
-    * migration (parent holds inline entries) all return false.
+    * append (carries all) and a replace (carries none) return false.
     */
   def isRewriteOf(child: Long, parent: Long): Boolean = {
     if (hasRewriteSegments(child)) return true
     if (!io.exists(manifestPath(child)) ||
         !io.exists(manifestPath(parent))) return false
-    val (childSegs, childInline) = parseList(child)
-    val (parentSegs, parentInline) = parseList(parent)
-    val cs = childSegs.toSet
-    val ps = parentSegs.toSet
-    childInline.isEmpty && parentInline.isEmpty &&
-      (ps -- cs).nonEmpty && ps.intersect(cs).nonEmpty
+    val cs = segmentsAt(child).toSet
+    val ps = segmentsAt(parent).toSet
+    (ps -- cs).nonEmpty && ps.intersect(cs).nonEmpty
   }
 
   /** Incremental read: the data files ADDED strictly after `fromSnapshot`,
@@ -1085,19 +1031,10 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     // crossing a replace (a commit whose list drops its parent's segments)
     require(io.exists(manifestPath(toSnapshot)),
       s"snapshot $toSnapshot has no manifest under $metaDir")
-    val (toSegs, toInline) = parseList(toSnapshot)
-    require(toInline.isEmpty,
-      s"snapshot $toSnapshot holds legacy inline entries — incremental " +
-        "diff needs the segment-list format (one append commit migrates it)")
+    val toSegs = segmentsAt(toSnapshot)
     require(io.exists(manifestPath(fromSnapshot)),
       s"snapshot $fromSnapshot has no manifest under $metaDir")
-    val (fromSegs, fromInline) = parseList(fromSnapshot)
-    require(fromInline.isEmpty,
-      s"snapshot $fromSnapshot holds legacy inline entries — its files were " +
-        "folded into the child's segment at migration, so a segment diff " +
-        "would return the whole carried-over corpus as 'added' (re-read the " +
-        "full snapshot instead)")
-    val fromSet = fromSegs.toSet
+    val fromSet = segmentsAt(fromSnapshot).toSet
     require(fromSet.subsetOf(toSegs.toSet),
       s"snapshot $toSnapshot does not carry $fromSnapshot's segments — a " +
         "replace commit intervened; incremental append diff is undefined " +
@@ -1202,11 +1139,14 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * Bounded key sets (≤ `graft.locate.inFilterLimit` distinct values,
     * default 8192) collect to the driver and push `keyCol IN (...)` into
     * the snapshot scan — manifest column stats then prune non-matching
-    * files at PLANNING time ([[ManifestFileIndex]]) and parquet row-group
-    * stats prune below, the dedup probe's fp64-IN machinery applied to
-    * DELETE/MERGE (round-6 VERDICT item 3): a dedup-apply dropping 0.1% of
-    * keys on a clustered table no longer READS 100% of the files to find
-    * them. The returned key frame is then the collected LOCAL relation, so
+    * files at PLANNING time ([[ManifestFileIndex]]), the dedup probe's
+    * fp64-IN machinery applied to DELETE/MERGE (round-6 VERDICT item 3).
+    * Only the manifest's per-file stats prune: past
+    * `spark.sql.parquet.pushdown.inFilterThreshold` (10 values) Spark pushes
+    * the IN list to parquet as its min..max range alone, which spans the
+    * whole domain of a hash key, so no row group is skipped. A dedup-apply
+    * dropping 0.1% of keys on a clustered table no longer READS 100% of the
+    * files to find them. The returned key frame is then the collected LOCAL relation, so
     * locate and rewrite see ONE evaluation of a possibly-nondeterministic
     * `keys` plan (the round-6 shape evaluated it twice).
     *
@@ -1354,17 +1294,14 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     }
     // provenance rides along: (path -> owning segment) lets the rewrite
     // commit carry every unaffected segment without reading it
-    val (segments, inline) = parseList(snapshotId)
-    val segPairs: Seq[(String, String)] =
-      parMap(segments)(sg => readSegment(sg).map(m => m.path -> sg)).flatten
-    val byNorm = (segPairs ++ inline.map(f => (io.extern(io.path(f)), "")))
-      .map { case (p, sg) => norm(p) -> ((p, sg)) }.toMap
+    val byNorm = parMap(segmentsAt(snapshotId))(sg =>
+      readSegment(sg).map(m => norm(m.path) -> ((m.path, sg)))).flatten.toMap
     val hits = fileNames.distinct()
       .collect().map(_.getString(0))
       .map(f => byNorm.getOrElse(norm(f), sys.error(
         s"scan read $f, which snapshot $snapshotId's manifest does not list — " +
           "manifest/scan mismatch")))
-    (hits.map(_._1).toSet, hits.collect { case (_, sg) if sg.nonEmpty => sg }.toSet)
+    (hits.map(_._1).toSet, hits.map(_._2).toSet)
   }
 
   /** Shared rewrite half of the delete operators: stage `survivors(affected
@@ -1397,8 +1334,7 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         throw new IllegalStateException(
           s"snapshot $id was staged at $dest while the delete rewrite ran — " +
             "concurrent writer; recompute the delete against the new head")
-      try commitRewrite(id, parent, affected, statsColumns,
-        affectedSegments = Some(affectedSegs))
+      try commitRewrite(id, parent, affected, affectedSegs, statsColumns)
       catch { case e: Throwable => abort(id); throw e }
     } finally {
       if (io.exists(tmp)) io.delete(tmp, recursive = true): Unit
@@ -1413,8 +1349,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * reclaims history. Probes footers DIRECTLY from manifest paths (parallel
     * driver IO, no listing job — a mergeSchema read would re-list and
     * re-stat every file, the cost this metadata layer exists to avoid); the
-    * caller bounds the probe set (compaction: first + last file per
-    * segment; a delete/upsert: its affected files). A footer that fails to
+    * caller bounds the probe set (compaction: the first file per segment;
+    * a delete/upsert: its affected files). A footer that fails to
     * read fails the GUARD loudly — skipping it would vacuously pass on a
     * transient driver-side IO error while the rewrite's executor-side read
     * succeeds via task retries, silently dropping evolved columns.
@@ -1445,28 +1381,22 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
   }
 
   /** Commit a snapshot whose content is `parent` minus `removed` files plus
-    * whatever is staged under the snapshot's data dir. Parent segments with
-    * no removed file are carried BY REFERENCE — and when the caller names
-    * `affectedSegments` (the locate phase knows exactly which segments hold
-    * removed files — [[affectedFiles]] read them anyway to resolve paths),
-    * an unaffected segment is carried WITHOUT EVEN BEING READ; a segment
-    * that lost files is rewritten minus those entries, its surviving lines
-    * copied VERBATIM (sizes and column stats preserved without re-reading a
-    * single footer) — so metadata cost is O(affected segments), the Iceberg
-    * manifest-rewrite shape, never O(live segments). Parent inline (legacy)
-    * entries fold into the fresh segment exactly as an append commit folds
-    * them. `affectedSegments = None` means "unknown — test every segment"
-    * (the compact path, where every segment IS affected).
+    * whatever is staged under the snapshot's data dir. A parent segment
+    * outside `affectedSegments` (the locate phase knows exactly which
+    * segments hold removed files — [[affectedFiles]] read them anyway to
+    * resolve paths) is carried BY REFERENCE WITHOUT EVEN BEING READ; a
+    * segment that lost files is rewritten minus those entries, its surviving
+    * lines copied VERBATIM (sizes and column stats preserved without
+    * re-reading a single footer) — so metadata cost is O(affected segments),
+    * the Iceberg manifest-rewrite shape, never O(live segments). The attempt
+    * was derived from `parent`, so a lost CAS throws.
     */
   private def commitRewrite(id: Long, parent: Long, removed: Set[String],
-      statsColumns: Seq[String],
-      affectedSegments: Option[Set[String]] = None): Long = {
-    val (parentSegments, parentInline, parentTxns) = parseManifest(parent)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val keptInline = parentInline.filterNot(f => removed.contains(io.extern(io.path(f))))
-    var ownSegs = List.empty[HPath]
-    val carried: Seq[String] = parentSegments.flatMap { sg =>
-      if (affectedSegments.exists(!_.contains(sg))) Some(sg) // untouched: zero IO
+      affectedSegments: Set[String], statsColumns: Seq[String]): Long = {
+    val token = newToken()
+    var rewritten = 0
+    def carry(parentSegments: Seq[String]): Seq[String] = parentSegments.flatMap { sg =>
+      if (!affectedSegments.contains(sg)) Some(sg) // untouched: zero IO
       else {
         val lines = io.readString(io.path(sg)).split('\n').toSeq.filter(_.nonEmpty)
         val (gone, kept) = lines.partition { l =>
@@ -1475,9 +1405,9 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         if (gone.isEmpty) Some(sg)
         else if (!kept.exists(_.startsWith("file\t"))) None // segment fully deleted
         else {
-          val p = segmentPath(s"seg-$id-rw${ownSegs.size}-$token.txt")
+          val p = segmentPath(s"seg-$id-rw$rewritten-$token.txt")
           io.writeAtomic(p, kept.mkString("", "\n", "\n"))
-          ownSegs ::= p
+          rewritten += 1
           Some(io.relativize(p))
         }
       }
@@ -1492,20 +1422,14 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     // appends, and (b) a rewrite covering a single-segment table
     // misclassified as a replace (isRewriteOf false, isSelfContained true),
     // which an expired-parent lineage backfill would then double-count.
-    val segments = writeSegment(s"seg-$id-rw-$token.txt", id, carried, keptInline,
-      stagedStatuses(dataDirPath(id)), statsColumns)
-    if (promoteManifest(id, parent, segments, tmpName = s"snap-$id.txt.rw-$token.tmp",
-        txns = parentTxns)) {
-      bumpHint(id); id
-    } else {
-      // own segments = the fresh one AND every rewritten `-rw` one (both
-      // carry the seg-<id>- prefix); all are unreferenced after a lost CAS
-      segments.filter(isOwnSegment(_, id)).foreach(sg => io.delete(io.path(sg)))
+    val outcome = attemptCommit(parent, stagedStatuses(dataDirPath(id)), statsColumns,
+      tag = "rw", token = Some(token), carry = carry)
+    if (outcome != SnapshotLog.Won)
       throw new IllegalStateException(
         s"snapshot $id was committed concurrently while the delete rewrite " +
           "ran — the rewrite listed stale content; recompute against the new " +
           "head and retry")
-    }
+    id
   }
 
   /** One micro-batch of the streaming tail ([[SnapshotStreamSource]]): the
@@ -1550,11 +1474,9 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
               "from the table while the stream lagged — raise snapshot " +
               "retention (expireSnapshots keepLast) above the stream's " +
               "maximum lag; restart from a fresh checkpoint to reprocess")
-        val (toSegs, toInline) = parseList(toSnapshot)
-        val (fromSegs, fromInline) = parseList(f)
-        val fromSet = fromSegs.toSet
-        if (!(fromInline.isEmpty && toInline.isEmpty &&
-            fromSet.subsetOf(toSegs.toSet)))
+        val toSegs = segmentsAt(toSnapshot)
+        val fromSet = segmentsAt(f).toSet
+        if (!fromSet.subsetOf(toSegs.toSet))
           throw new IllegalStateException(
             s"streaming tail crossed a table rewrite between snapshots $f " +
               s"and $toSnapshot — a rewrite is not an append and must not be " +
@@ -1578,9 +1500,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
               "rewritten table")
         readSegments(added)
     }
-    val entries = meta.map(m => ManifestEntry(m.path,
-      m.size.getOrElse(io.len(new HPath(m.path))), m.stats))
-    ManifestScan(spark, io.extern(root), schema, entries, isStreaming = true)
+    ManifestScan(spark, io.extern(root), schema,
+      meta.map(m => ManifestEntry(m.path, m.size, m.stats)), isStreaming = true)
   }
 
   /** Abort a unique staging dir created by [[stageUniqueDataDir]]. */
@@ -1600,12 +1521,10 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
   /** Scan a snapshot as a DataFrame (empty-but-typed when no commit).
     * `asOf = Some(id)` time-travels to any previously committed snapshot.
     *
-    * When the manifest carries a size for every file (all post-round-4
-    * commits), the plan is built over a [[ManifestFileIndex]] — zero
-    * filesystem metadata calls at planning time, an exact `sizeInBytes` for
-    * the optimizer, and per-file min/max pruning for stats-bearing commits;
-    * a legacy manifest (any size missing) falls back to `spark.read.parquet`,
-    * whose InMemoryFileIndex re-stats each path.
+    * The plan is built over a [[ManifestFileIndex]] from the manifest's
+    * recorded sizes — zero filesystem metadata calls at planning time, an
+    * exact `sizeInBytes` for the optimizer, and per-file min/max pruning for
+    * stats-bearing commits.
     */
   def scan(spark: org.apache.spark.sql.SparkSession,
       schema: org.apache.spark.sql.types.StructType,
@@ -1626,10 +1545,9 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       entries: Seq[SnapshotLog.FileMeta]): org.apache.spark.sql.DataFrame = {
     if (entries.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else if (entries.forall(_.size.isDefined))
+    else
       ManifestScan(spark, io.extern(root), schema,
-        entries.map(m => ManifestEntry(m.path, m.size.get, m.stats)))
-    else spark.read.schema(schema).parquet(entries.map(_.path): _*)
+        entries.map(m => ManifestEntry(m.path, m.size, m.stats)))
   }
 }
 
@@ -1644,19 +1562,25 @@ object SnapshotLog {
   final case class StreamMarker(streamId: String, committed: Long,
       updatedAtMs: Long, info: String)
 
-  /** Path + manifest-recorded size (None for legacy entries) + per-column
-    * min/max bounds of one data file (see [[ColBounds]]) + the file's exact
-    * row count (`#n=` field; None for entries committed before round 7 or
-    * without footer stats). Row counts make per-table counts a pure metadata
-    * question — [[rowCountOf]].
+  /** Path + manifest-recorded size + per-column min/max bounds of one data
+    * file (see [[ColBounds]]) + the file's exact row count (`#n=` field;
+    * None for entries committed without footer stats). Row counts make
+    * per-table counts a pure metadata question — [[rowCountOf]].
     */
-  final case class FileMeta(path: String, size: Option[Long],
+  final case class FileMeta(path: String, size: Long,
       stats: Map[String, ColBounds], rows: Option[Long] = None)
 
+  /** Outcome of one commit attempt (see `SnapshotLog.attemptCommit`). */
+  private sealed trait Attempt
+  private case object Won extends Attempt
+  private case object Lost extends Attempt
+  /** An idempotent append whose version the parent already records. */
+  private case object AlreadyApplied extends Attempt
+
   /** Exact row count of a snapshot from its manifest entries, when EVERY
-    * entry recorded one (a single legacy file degrades to None — the caller
-    * falls back to counting; a sum over a partial inventory would be a wrong
-    * answer, not an estimate). Empty inventory = empty table = 0. What the
+    * entry recorded one (a single count-less file degrades to None — the
+    * caller falls back to counting; a sum over a partial inventory would be
+    * a wrong answer, not an estimate). Empty inventory = empty table = 0. What the
     * resume anti-join's broadcast budget consults instead of running a
     * count job per turn (round 7, "not yet optimized" item 1).
     */

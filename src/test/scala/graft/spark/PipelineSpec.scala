@@ -944,8 +944,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("IsNotNull"),
       s"pushdown must survive the custom index:\n${plan.take(1500)}")
-    // a legacy manifest (inline entries, no sizes) falls back to the listing
-    // path but reads the same rows (covered by the migration test's scans)
     // schema evolution: a scan with an added nullable column reads old files
     // with nulls — the manifest-fed relation honors the declared schema like
     // spark.read.schema does
@@ -983,8 +981,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // wall_ms marks the backfill (-1); originals keep theirs
     assert(spark.read.parquet(s"$dir/metrics")
       .filter(col("snapshot_id") === 1L && col("wall_ms") === -1L).count() > 0)
-    // idempotent: nothing left to repair
+    // idempotent: nothing left to repair — also when the same table is
+    // addressed by a `file:` URI (the metrics dir is probed through the
+    // table's FileSystem, not as a local path)
     assert(ExtractJob.backfillMetrics(spark, dir).isEmpty)
+    assert(ExtractJob.backfillMetrics(spark,
+      "file:" + new java.io.File(dir).getAbsolutePath).isEmpty)
+    assert(spark.read.parquet(s"$dir/metrics").count() == before.size)
   }
 
   test("backfillMetrics skips rewrite commits: delete/upsert survivors and compacts are not re-attributed") {
@@ -1048,7 +1051,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after == (1000L until 1010L).toSet)
   }
 
-  test("manifest-list crash recovery: segment-without-list retries cleanly; legacy inline format migrates") {
+  test("manifest-list crash recovery: segment-without-list retries cleanly; a stale hint heals") {
     import java.nio.file.{Files => F, Paths => P}
     val dir = tmpDir("manifest_crash")
     val log = new SnapshotLog(dir)
@@ -1109,49 +1112,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!F.exists(P.get(dir, "meta", "snap-77.txt.tmp")), "aged crashed tmp reclaimed")
     assert(F.exists(P.get(dir, "meta", "seg-78.txt.tmp")), "fresh in-flight tmp kept")
     F.delete(P.get(dir, "meta", "seg-78.txt.tmp"))
-    // LEGACY migration: a pre-round-4 table whose snapshot file lists data
-    // files INLINE still reads, and one append commit over it converges the
-    // metadata to pure list+segment form with identical content
-    val legacyDir = tmpDir("manifest_legacy")
-    val legacy = new SnapshotLog(legacyDir)
-    rows.filter(col("id") < 100).repartition(4)
-      .write.mode("overwrite").parquet(legacy.stageDataDir(0L))
-    val staged = legacy.stagedFiles(0L)
-      .map(p => P.get(legacyDir).toAbsolutePath.relativize(P.get(p)).toString)
-    F.createDirectories(P.get(legacyDir, "meta"))
-    F.writeString(P.get(legacyDir, "meta", "snap-0.txt"),
-      ("snapshot\t0\tparent\t-1" +: staged.map(f => s"file\t$f")).mkString("", "\n", "\n"))
-    F.writeString(P.get(legacyDir, "meta", "current"), "0")
-    assert(legacy.scan(spark, rows.schema).count() == 100, "legacy inline format must read")
-    rows.filter(col("id") >= 100).repartition(4)
-      .write.mode("overwrite").parquet(legacy.stageDataDir(1L))
-    legacy.commit(1L)
-    assert(legacy.scan(spark, rows.schema).count() == 200)
-    val list1 = F.readAllLines(P.get(legacyDir, "meta", "snap-1.txt"))
-    assert(list1.stream.noneMatch(_.startsWith("file\t")),
-      "one append over a legacy parent must converge to pure segment form")
-    assert(legacy.filesAt(1L).toSet.size == legacy.filesAt(1L).size)
-  }
-
-  test("a stats commit over a legacy inline entry records its row count") {
-    import java.nio.file.{Files => F, Paths => P}
-    val dir = tmpDir("legacy_rows")
-    val log = new SnapshotLog(dir)
-    val rows = spark.range(200).select(col("id"), (col("id") % 7).as("v"))
-    rows.filter(col("id") < 100).repartition(1)
-      .write.mode("overwrite").parquet(log.stageDataDir(0L))
-    val staged = log.stagedFiles(0L)
-      .map(p => P.get(dir).toAbsolutePath.relativize(P.get(p)).toString)
-    F.createDirectories(P.get(dir, "meta"))
-    F.writeString(P.get(dir, "meta", "snap-0.txt"),
-      ("snapshot\t0\tparent\t-1" +: staged.map(f => s"file\t$f")).mkString("", "\n", "\n"))
-    F.writeString(P.get(dir, "meta", "current"), "0")
-    assert(SnapshotLog.rowCountOf(log.metaAt(0L)).isEmpty, "fixture must look legacy")
-    rows.filter(col("id") >= 100).repartition(2)
-      .write.mode("overwrite").parquet(log.stageDataDir(1L))
-    log.commit(1L, statsColumns = Seq("id"))
-    assert(SnapshotLog.rowCountOf(log.metaAt(1L)).contains(200L),
-      "the folded legacy entry must carry its footer row count")
   }
 
   test("maintenance trio vs a concurrent writer: committed data never deleted, reads stay consistent") {
@@ -1428,18 +1388,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.toLowerCase.contains("pythonudf") &&
       !plan.contains("UDF(embedding"),
       "the serving path must not re-hash the corpus with a UDF")
-    // a PRE-MANIFEST index (round-4 layout) still serves identically through
-    // the listing fallback: move the manifest aside and compare
-    val mf = java.nio.file.Paths.get(path, "_index_manifest.txt")
-    val mfAside = java.nio.file.Paths.get(path + ".mf_aside")
-    java.nio.file.Files.move(mf, mfAside)
-    try {
-      val fallback = Embeddings.lshTopKIndexed(spark, path, q0, 10)
-        .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-      val manifested = served
-        .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
-      assert(fallback == manifested, "fallback and manifest serving must agree")
-    } finally java.nio.file.Files.move(mfAside, mf)
   }
 
   test("composed incremental pipeline equals the from-scratch run on the union") {
@@ -1672,7 +1620,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(Pipelines.fp64Of(md5(col("text").cast("binary"))))
       .head().getLong(0)
     val idx = new ManifestFileIndex(dd,
-      meta.map(m => ManifestEntry(m.path, m.size.get, m.stats)))
+      meta.map(m => ManifestEntry(m.path, m.size, m.stats)))
     val probe = In(
       AttributeReference("fp64", org.apache.spark.sql.types.LongType)(),
       Seq(Literal(fp64("probe text body 0")), Literal(fp64("probe text body 399"))))

@@ -223,7 +223,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types.IntegerType
     val idx = new ManifestFileIndex(dir,
-      meta.map(m => ManifestEntry(m.path, m.size.get, m.stats)))
+      meta.map(m => ManifestEntry(m.path, m.size, m.stats)))
     val bucketAttr = AttributeReference("bucket", IntegerType)()
     def files(f: Expression): Seq[String] =
       idx.listFiles(Nil, Seq(f)).flatMap(_.files.map(_.getPath.toString))
@@ -255,7 +255,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(files(IsNull(bucketAttr)).isEmpty,
       "IS NULL on a proven null-free column -> zero files")
     val idxUnproven = new ManifestFileIndex(dir,
-      meta.map(m => ManifestEntry(m.path, m.size.get,
+      meta.map(m => ManifestEntry(m.path, m.size,
         m.stats.map { case (c, LongBounds(mn, mx, _)) => c -> LongBounds(mn, mx)
                       case kv => kv })))
     assert(idxUnproven.listFiles(Nil, Seq(IsNull(bucketAttr)))
@@ -267,7 +267,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a stats-free commit (e.g. the metadata probe's empty part files) keeps
     // every file under any filter
     val idxNoStats = new ManifestFileIndex(dir,
-      meta.map(m => ManifestEntry(m.path, m.size.get, Map.empty)))
+      meta.map(m => ManifestEntry(m.path, m.size, Map.empty)))
     assert(idxNoStats.listFiles(Nil, Seq(EqualTo(bucketAttr, Literal(9))))
       .flatMap(_.files).size == 4)
   }
@@ -552,7 +552,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.unsafe.types.UTF8String
     val idx = new ManifestFileIndex(dir,
-      meta.map(m => ManifestEntry(m.path, m.size.get, m.stats)))
+      meta.map(m => ManifestEntry(m.path, m.size, m.stats)))
     def planned(f: Expression): Int = idx.listFiles(Nil, Seq(f)).map(_.files.size).sum
     def str(s: String) = Literal(UTF8String.fromString(s),
       org.apache.spark.sql.types.StringType)
@@ -633,7 +633,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def planned(id: Long, f: Expression): Int = {
       val meta = log.metaAt(id)
       new ManifestFileIndex(dir,
-        meta.map(m => ManifestEntry(m.path, m.size.get, m.stats)))
+        meta.map(m => ManifestEntry(m.path, m.size, m.stats)))
         .listFiles(Nil, Seq(f)).map(_.files.size).sum
     }
     val before = log.currentSnapshot().get
@@ -745,5 +745,50 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val log2 = new SnapshotLog(dir)
     assert(log2.commitIdempotent(stage(0, 40), "appA", 1L).isEmpty)
     assert(log2.scan(spark, rows.schema).count() == 100)
+  }
+
+  test("old layouts fail loudly: inline list entries, size-less segment entries, manifest-less indexes") {
+    import java.nio.file.{Files => F, Paths => P}
+    val sp = spark; import sp.implicits._
+    val rows = spark.range(100).select(col("id"), (col("id") % 7).as("v"))
+    // a normally committed table whose metadata is then hand-written in an
+    // old layout: every read must name the offending file, never plan it
+    def table(name: String): (String, SnapshotLog) = {
+      val dir = tmpDir(name)
+      val log = new SnapshotLog(dir)
+      rows.repartition(2).write.mode("overwrite").parquet(log.stageDataDir(0L))
+      log.commit(0L)
+      (dir, log)
+    }
+    def fileLines(dir: String, log: SnapshotLog): Seq[String] =
+      log.filesAt(0L).map(f => s"file\t${P.get(dir).relativize(P.get(f))}")
+    def readsLoudly(log: SnapshotLog, offending: java.nio.file.Path): Unit = {
+      val e1 = intercept[IllegalStateException](log.metaAt(0L))
+      assert(e1.getMessage.contains(offending.toString), e1.getMessage)
+      val e2 = intercept[IllegalStateException](log.scan(spark, rows.schema))
+      assert(e2.getMessage.contains(offending.toString), e2.getMessage)
+    }
+    // a snapshot list holding its data files inline (no segments)
+    val (inlineDir, inlineLog) = table("old_inline")
+    val list = P.get(inlineDir, "meta", "snap-0.txt")
+    F.writeString(list, ("snapshot\t0\tparent\t-1" +: fileLines(inlineDir, inlineLog))
+      .mkString("", "\n", "\n"))
+    readsLoudly(inlineLog, list)
+    // a segment whose entries carry no size
+    val (sizelessDir, sizelessLog) = table("old_sizeless")
+    val seg = P.get(sizelessDir, "meta", "seg-0.txt")
+    F.writeString(seg, fileLines(sizelessDir, sizelessLog).mkString("", "\n", "\n"))
+    readsLoudly(sizelessLog, seg)
+    // a gated ANN index without its serving manifest
+    val emb = Seq.tabulate(50)(i =>
+      (i.toLong, Array.tabulate(16)(d => math.sin(i * 0.37 + d * 1.3).toFloat), i % 5))
+      .toDF("vec_id", "embedding", "label")
+    val path = tmpDir("old_index") + "/idx"
+    Embeddings.lshBuildIndex(emb, path)
+    val q = Array.tabulate(16)(d => math.sin(d * 1.3).toFloat)
+    assert(Embeddings.lshTopKIndexed(spark, path, q, 5).collect().nonEmpty)
+    F.move(P.get(path, "_index_manifest.txt"), P.get(path + ".mf_aside"))
+    val e = intercept[IllegalStateException](Embeddings.lshTopKIndexed(spark, path, q, 5))
+    assert(e.getMessage.contains("_index_manifest.txt"), e.getMessage)
   }
 }

@@ -182,11 +182,9 @@ class SnapshotModelSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(scanIds(Some(id)) == expect, s"step $step: asOf($id) != model")
       }
       // metadata sanity: listing matches manifest-recorded sizes exactly
-      for ((p, szOpt) <- log.currentSnapshot().toSeq.flatMap(log.filesWithSizesAt)) {
-        szOpt.foreach { sz =>
-          assert(java.nio.file.Files.size(java.nio.file.Paths.get(p)) == sz,
-            s"step $step: manifest size drift for $p")
-        }
+      for (m <- log.currentSnapshot().toSeq.flatMap(log.metaAt)) {
+        assert(java.nio.file.Files.size(java.nio.file.Paths.get(m.path)) == m.size,
+          s"step $step: manifest size drift for ${m.path}")
       }
     }
     assert(ops == 40 && current.nonEmpty)
