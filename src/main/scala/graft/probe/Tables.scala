@@ -118,15 +118,18 @@ object Tables {
     }
   }
 
-  /** Layout decay: every pipeline turn appends `DedupClusterParts` files
-    * whose fp64 ranges each span ~the full digest domain (survivor digests
-    * are uniform), so the file count — and the membership probe's planned
-    * file set — grows linearly with turns until an operator runs
+  /** Layout decay: every pipeline turn appends [[Pipelines.clusterParts]]
+    * files (one, below `graft.dedup.clusterRowsPerPart` rows) whose fp64
+    * ranges together span ~the full digest domain (survivor digests are
+    * uniform), so the file count — and the membership probe's planned file
+    * set — grows linearly with turns until an operator runs
     * `compact(sortBy = fp64)`. Measures that decay and the compact's effect,
     * so the compact cadence rule rests on numbers instead of a guess:
     * seed a clustered corpus, run append turns of fresh batches, sample
     * (files, probe-planned files, all-dup turn seconds) every 4 turns, then
-    * compact and sample again.
+    * compact and sample again. Each sample also lists the data files each
+    * append turn since the last sample added, so a write-layout regression
+    * shows next to the file count it inflates.
     */
   def decay(args: Seq[String]): Unit = {
     val baseRows = args.lift(0).fold(400000L)(_.toLong)
@@ -140,16 +143,22 @@ object Tables {
         // from append cost
         val probeBatch = dupBatch(spark, baseRows, batchRows).localCheckpoint(true)
         val probe16 = Probe.sample16(Probe.fp64sOf(probeBatch))
+        val added = scala.collection.mutable.ArrayBuffer.empty[Int]
+        def fileCount = new SnapshotLog(dd).currentFiles().size
         def sample(label: String): Unit = {
           val (files, planned16) = Probe.plannedFiles(dd, probe16)
           val (t, n) = Probe.timed(runs = 1)(Pipelines.appendDeduped(spark, probeBatch, dd)._2)
           require(n == 0L)
-          println(f"$label: files=$files%4d planned16=$planned16%4d dup_turn=${t.min}%6.3f s")
+          println(f"$label: files=$files%4d planned16=$planned16%4d " +
+            f"added=${added.mkString("[", ",", "]")} dup_turn=${t.min}%6.3f s")
+          added.clear()
         }
         sample("turn  0")
         (1 to turns).foreach { t =>
           val lo = baseRows + (t - 1).toLong * batchRows
+          val before = fileCount
           Pipelines.appendDeduped(spark, Probe.extractedRange(spark, lo, lo + batchRows), dd)
+          added += fileCount - before
           if (t % 4 == 0) sample(f"turn $t%2d")
         }
         val (compactSec, _) = Probe.clock(new SnapshotLog(dd).compact(spark,
@@ -181,7 +190,7 @@ object Tables {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
         try {
           val ((t, tag), m) = Probe.metered(spark)(Probe.timed(runs = 2) {
-            val (df, tag, bloom) = ExtractJob.pendingPages(spark, pages, log)
+            val (df, tag, bloom) = ExtractJob.pendingPages(spark, pages, log, log.currentSnapshot())
             try df.write.mode("overwrite").format("noop").save()
             finally bloom.foreach(_.destroy())
             tag

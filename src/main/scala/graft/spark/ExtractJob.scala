@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation,
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.util.sketch.BloomFilter
 
 /** §3.1 — the flagship extract pipeline, Spark-native:
@@ -31,13 +32,13 @@ import org.apache.spark.util.sketch.BloomFilter
   * payload bytes move exactly once (scan). The single wide exchange shuffles
   * extracted rows — typically 3-10x smaller than the input and free of the
   * html column — keyed on the bucket pmod(xxhash64(url), B): no host skew can
-  * reach the bucket sizes. The exchange is NOT uniform over partitions,
-  * though: `repartition(B, bucket)` hash-partitions the bucket ids again, so
-  * several buckets can share a partition while others stay empty (16 buckets
-  * land in 10 write tasks, see ROADMAP item 5). B is a knob (buckets ==
-  * shuffle partitions at scale). Lineage costs no job of its own: the write
-  * pass counts it. The kernel is CPU-bound per row and embarrassingly
-  * parallel — throughput scales with cores until the parquet scan saturates.
+  * reach the bucket sizes. The number of write partitions follows the
+  * commit's bytes, not B ([[bucketLayout]]): each file holds one contiguous
+  * bucket range and each bucket lands in exactly one file, so a small turn
+  * writes one file and a large batch writes up to B. Lineage costs no job
+  * of its own: the write pass counts it. The kernel is CPU-bound per row and
+  * embarrassingly parallel — throughput scales with cores until the parquet
+  * scan saturates.
   */
 object ExtractJob {
 
@@ -73,6 +74,45 @@ object ExtractJob {
       .withColumn("checksum", xxhash64(col("url"), col("text")))
   }
 
+  /** The write layout of an extract commit, shared by [[run]] and
+    * [[StreamingExtract.startTableToTable]]: `P` partitions, where partition
+    * `j` holds the buckets `k` with `k * P / B == j` — one contiguous bucket
+    * range per file, every bucket in exactly one file (a hash partitioning of
+    * the bucket ids would collide several buckets into one task and leave
+    * others empty).
+    *
+    * `P` follows the frame's Catalyst size estimate by the rule AQE's
+    * `CoalesceShufflePartitions` applies by default: a target of
+    * `min(advisoryPartitionSizeInBytes, max(coalescePartitions.minPartitionSize,
+    * bytes / defaultParallelism))` bytes per partition, then
+    * `P = ceil(bytes / target)` clamped to `[1, B]`. An unknown or huge
+    * estimate keeps `P = B`. Sizing by bytes matters for small commits: each
+    * parquet write task deserializes a closure that carries the job's Hadoop
+    * `Configuration`, measured at 22–37 ms per task on 4 cores, so a fixed
+    * B = 16 spent more time there than writing a turn's ~60 rows — and left
+    * up to 16 tiny files for every later scan to open.
+    */
+  private[spark] def bucketLayout(df: DataFrame, numBuckets: Int): DataFrame = {
+    val p = writePartitions(df, numBuckets)
+    // long product, then an exact floor: k * P / B is a ratio of small ints
+    df.repartitionById(p, (col("bucket").cast("long") * p / numBuckets).cast("int"))
+  }
+
+  /** [[bucketLayout]]'s partition count for `df`. */
+  private[spark] def writePartitions(df: DataFrame, numBuckets: Int): Int = {
+    val spark = df.sparkSession
+    val conf = spark.sessionState.conf
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes >= BigInt(conf.defaultSizeInBytes)) numBuckets
+    else {
+      val target = BigInt(math.max(1L, math.min(
+        conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+        math.max(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE),
+          (bytes / spark.sparkContext.defaultParallelism).min(Long.MaxValue).toLong))))
+      ((bytes + target - 1) / target).max(1).min(numBuckets).toInt
+    }
+  }
+
   /** Full job against a snapshot-logged table: resume, extract pending, gate,
     * commit, lineage. Returns the committed snapshot id (None = nothing pending).
     *
@@ -91,6 +131,12 @@ object ExtractJob {
     * overwriting the batch JSONs): the resume anti-join is skipped and the
     * commit REPLACES the table contents instead of appending — needed whenever
     * the kernel changes and the corpus must be re-derived.
+    *
+    * An append stages under a unique directory and commits only if the
+    * table is still at the snapshot the resume read, so of two concurrent
+    * runs one commits and the other fails loudly, neither touching the
+    * other's files. `force` stages under the next snapshot id and is
+    * SINGLE-WRITER, like [[SnapshotLog.commitReplace]].
     */
   def run(
       spark: SparkSession,
@@ -139,15 +185,19 @@ object ExtractJob {
     // the batch payload must co-partition with the done set — so the
     // fallback stays, loudly shaped. All three budgets are confs, not
     // constants tuned to this sandbox.
+    //
+    // The append commit is conditional on the snapshot the resume read: a
+    // concurrent run that committed first makes this one fail loudly instead
+    // of landing the same pending urls twice
+    val base = log.currentSnapshot()
     val (pending, _, bloom) =
-      if (force) (pages, "force", None) else pendingPages(spark, pages, log)
+      if (force) (pages, "force", None) else pendingPages(spark, pages, log, base)
     // the bloom regime's filter broadcast is read by the write pass only:
     // released once the commit is done, not left to the ContextCleaner's
     // GC cadence
     try {
-      val snapshotId = log.nextSnapshotId()
-      val gateObs = Observation(s"gate-$snapshotId")
-      val lineageObs = Observation(s"lineage-$snapshotId")
+      val gateObs = Observation()
+      val lineageObs = Observation()
       // the one wide exchange co-locates extracted rows (post-kernel, html
       // already dropped) by bucket for the data-file layout. The gate
       // counts before it, map-side, so `ok` never rides the exchange. The
@@ -155,30 +205,35 @@ object ExtractJob {
       // DAGScheduler applies a result task's accumulator updates once per
       // partition, while a recomputed shuffle-map task's updates would be
       // applied again (and a doubled bit_xor cancels itself out).
-      val extracted = extractDF(pending, numBuckets)
+      val extracted = bucketLayout(extractDF(pending, numBuckets)
         .observe(gateObs, count(lit(1)).as("total"), count(when(col("ok"), 1)).as("ok"))
-        .drop("ok")
-        .repartition(numBuckets, col("bucket"))
+        .drop("ok"), numBuckets)
         .observe(lineageObs, udaf(new BucketLineage(numBuckets),
           Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaLong))(
           col("bucket"), col("n_bytes"), col("checksum")).as("lineage"))
 
-      val stage = log.stageDataDir(snapshotId)
-      extracted.write.mode("overwrite").parquet(stage)
-
-      val gate = gateObs.get
-      val total = gate("total").asInstanceOf[Long]
-      if (total == 0L) { log.abort(snapshotId); return None } // nothing pending
-      val ok = gate("ok").asInstanceOf[Long]
-      if (ok.toDouble / total < SuccessRatio) { // A1 gate before commit
-        log.abort(snapshotId)
-        throw GateFailed(ok, total)
-      }
-
+      // append: a unique stage, so two concurrent runs never share (and
+      // overwrite) one directory. The force replace stays on the id-named
+      // strict path: it is single-writer by design.
+      val replaceId = if (force) Some(log.nextSnapshotId()) else None
+      val stage = replaceId.fold(log.stageUniqueDataDir())(log.stageDataDir)
+      try {
+        extracted.write.mode("overwrite").parquet(stage)
+        val gate = gateObs.get
+        val total = gate("total").asInstanceOf[Long]
+        if (total == 0L) { log.abortStage(stage); return None } // nothing pending
+        val ok = gate("ok").asInstanceOf[Long]
+        if (ok.toDouble / total < SuccessRatio) throw GateFailed(ok, total) // A1
+      } catch { case e: Throwable => log.abortStage(stage); throw e }
       // bucket min/max ride the manifest: a later `bucket = k` read (resume
-      // repair, per-bucket audit) plans only the files whose range covers k
-      if (force) log.commitReplace(snapshotId, statsColumns = Seq("bucket"))
-      else log.commit(snapshotId, statsColumns = Seq("bucket"))
+      // repair, per-bucket audit) plans only the files whose range covers k.
+      // A failed commit keeps its stage (for `removeOrphanFiles`): past the
+      // manifest CAS its files may already be referenced.
+      val snapshotId = replaceId match {
+        case Some(id) => log.commitReplace(id, statsColumns = Seq("bucket"))
+        case None => log.commitOptimistic(stage, statsColumns = Seq("bucket"),
+          requireParent = Some(base.getOrElse(-1L)))
+      }
 
       // A3 lineage: per-bucket doc/byte counts + order-insensitive checksum
       // (bit_xor of per-row xxhash64 — partition-internal order cannot
@@ -201,13 +256,13 @@ object ExtractJob {
     * branch — a silently-renamed conf key would otherwise turn the regime
     * tests into three copies of the broadcast test — and, in the bloom
     * regime, the filter's broadcast: the caller destroys it once the frame
-    * has been evaluated for the last time.
+    * has been evaluated for the last time. `base` is the done snapshot.
     */
   private[graft] def pendingPages(spark: SparkSession,
-      pages: Dataset[Schemas.Page], log: SnapshotLog)
+      pages: Dataset[Schemas.Page], log: SnapshotLog, base: Option[Long])
       : (Dataset[Schemas.Page], String, Option[Broadcast[BloomFilter]]) = {
     import spark.implicits._
-    val meta = log.currentSnapshot().map(log.metaAt).getOrElse(Seq.empty)
+    val meta = base.map(log.metaAt).getOrElse(Seq.empty)
     val done = log.scanEntries(spark, Schemas.extractedSchema, meta)
       .select("url")
     val doneRows = SnapshotLog.rowCountOf(meta).getOrElse(done.count())

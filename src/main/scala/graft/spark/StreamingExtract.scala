@@ -122,14 +122,16 @@ object StreamingExtract {
         if (!destLog.txnVersion(app).exists(_ >= batchId)) {
           val batch = df.persist() // gate + write must not run the kernel twice
           try {
-            val total = batch.count()
+            // the gate in one job: both counts in one aggregation
+            val gate = batch.agg(count(lit(1)), count(when(col("ok"), 1))).head()
+            val (total, ok) = (gate.getLong(0), gate.getLong(1))
             if (total > 0L) {
-              val ok = batch.filter(col("ok")).count()
               if (ok.toDouble / total < ExtractJob.SuccessRatio)
                 throw ExtractJob.GateFailed(ok, total)
               val stage = destLog.stageUniqueDataDir()
               try {
-                batch.drop("ok").repartition(numBuckets, col("bucket"))
+                // sized from the cached batch's measured bytes
+                ExtractJob.bucketLayout(batch.drop("ok"), numBuckets)
                   .write.mode("overwrite").parquet(stage)
                 destLog.commitIdempotent(stage, app, batchId,
                   statsColumns = Seq("bucket")): Unit

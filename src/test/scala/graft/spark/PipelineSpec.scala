@@ -45,6 +45,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = { spark = SparkTestSession.create(8) }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  /** Run `body` with session confs set, then restore their previous values. */
+  private def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** An extract write of this session's small fixtures is one file by
+    * default; this coalesce floor gives it the full bucket spread.
+    */
+  private val OneBytePartitions =
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"
+
   private def extractWith(cores: Int): Map[String, (String, Seq[String], String)] = {
     // fresh session at the requested parallelism (order-independence proof)
     val local = if (cores == 8) spark else {
@@ -155,7 +171,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         : (String, org.apache.spark.sql.execution.SparkPlan) = {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        val (df, tag, _) = ExtractJob.pendingPages(spark, pages, log)
+        val (df, tag, _) = ExtractJob.pendingPages(spark, pages, log, log.currentSnapshot())
         (tag, df.queryExecution.sparkPlan)
       } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
     }
@@ -547,7 +563,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark; import sp.implicits._
     val dir = tmpDir("reextract")
     val pages = spark.createDataset(fixture.take(60))
-    assert(ExtractJob.run(spark, pages, dir, numBuckets = 4).contains(0L))
+    // a multi-file table, so untouched files exist to carry
+    assert(withConf(OneBytePartitions)(
+      ExtractJob.run(spark, pages, dir, numBuckets = 4)).contains(0L))
     val log = new SnapshotLog(dir)
     val before = ExtractJob.readExtracted(spark, dir)
       .select("url", "text").collect().map(r => r.getString(0) -> r.getString(1)).toMap
@@ -719,6 +737,87 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = ExtractJob.readExtracted(spark, cleanDir)
       .select("url", "kind", "text", "checksum").orderBy("url").collect().toSeq
     assert(a == b)
+  }
+
+  private def bucketRanges(meta: Seq[SnapshotLog.FileMeta]): Seq[(Long, Long)] =
+    meta.map(_.stats("bucket") match {
+      case LongBounds(lo, hi, _) => (lo, hi)
+      case b => fail(s"bucket bounds must be longs: $b")
+    }).sorted
+
+  test("extract layout: a mid-size estimate commits P files of contiguous, disjoint bucket ranges") {
+    val sp = spark; import sp.implicits._
+    val dir = tmpDir("layout_mid")
+    val pages = spark.createDataset(fixture)
+    // a coalesce floor of a third of the extracted frame's size estimate:
+    // the rule picks P = 3 write partitions for 16 buckets
+    val frame = ExtractJob.extractDF(pages, 16).drop("ok")
+    val bytes = frame.queryExecution.optimizedPlan.stats.sizeInBytes
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> (bytes / 3 + 1).toString) {
+      assert(ExtractJob.writePartitions(frame, 16) == 3)
+      assert(ExtractJob.run(spark, pages, dir, numBuckets = 16).contains(0L))
+    }
+    val log = new SnapshotLog(dir)
+    val meta = log.metaAt(0L)
+    assert(meta.size == 3, s"P = 3 must commit 3 files: ${meta.map(_.path)}")
+    // partition j holds the buckets k with k * 3 / 16 == j: pairwise
+    // disjoint, contiguous, together covering every bucket once
+    assert(bucketRanges(meta) == Seq((0L, 5L), (6L, 10L), (11L, 15L)))
+    val filesPerBucket = log.scan(spark, Schemas.extractedSchema)
+      .select(col("bucket"), input_file_name().as("file")).distinct()
+      .groupBy("bucket").count().as[(Int, Long)].collect().toMap
+    assert(filesPerBucket.keySet == (0 until 16).toSet && filesPerBucket.values.forall(_ == 1L),
+      s"every bucket must land in exactly one file: $filesPerBucket")
+    assert(log.scan(spark, Schemas.extractedSchema).count() == corpusSize)
+  }
+
+  test("extract layout: a frame with no size estimate keeps one partition per bucket") {
+    val sp = spark; import sp.implicits._
+    val dir = tmpDir("layout_unknown")
+    // an RDD-backed Dataset carries no size statistics
+    val pages = spark.createDataset(spark.sparkContext.parallelize(fixture, 4))
+    assert(ExtractJob.writePartitions(ExtractJob.extractDF(pages, 16).drop("ok"), 16) == 16)
+    assert(ExtractJob.run(spark, pages, dir, numBuckets = 16).contains(0L))
+    assert(bucketRanges(new SnapshotLog(dir).metaAt(0L)) == (0L until 16L).map(k => (k, k)))
+  }
+
+  test("concurrent extract runs: the later commit fails, the earlier one's files stay readable") {
+    val sp = spark; import sp.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dir = tmpDir("extract_race")
+    assert(ExtractJob.run(spark, spark.createDataset(fixture.take(40)), dir, 8).contains(0L))
+    // writer B reads snapshot 0, then pauses in the optimizer before its
+    // stage write; writer A extracts other pages and commits meanwhile
+    val marker = "extract-race-pause"
+    val paused = new java.util.concurrent.CountDownLatch(1)
+    val resume = new java.util.concurrent.CountDownLatch(1)
+    PauseOnUdf.arm(marker, paused, resume)
+    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ PauseOnUdf
+    try {
+      val pass = udf((_: String) => true).withName(marker)
+      // RDD-backed: the optimizer would evaluate a filter over a local
+      // relation, UDF included, before the pause rule could see it
+      val pagesB = spark.createDataset(spark.sparkContext.parallelize(fixture.slice(40, 80)))
+        .filter(pass(col("url")))
+      val b = Future(ExtractJob.run(spark, pagesB, dir, 8))(ExecutionContext.global)
+      assert(paused.await(120, SECONDS), s"writer B never reached planning: ${b.value}")
+      assert(ExtractJob.run(spark, spark.createDataset(fixture.slice(80, 120)), dir, 8)
+        .contains(1L))
+      resume.countDown()
+      val e = intercept[IllegalStateException](Await.result(b, 300.seconds))
+      assert(e.getMessage.contains("advanced"), e.getMessage)
+    } finally {
+      resume.countDown()
+      PauseOnUdf.disarm()
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ eq PauseOnUdf)
+    }
+    // a second SnapshotLog on the same dir: every file of A's snapshot reads
+    val log = new SnapshotLog(dir)
+    assert(log.currentSnapshot().contains(1L))
+    val urls = log.scan(spark, Schemas.extractedSchema).select("url").as[String].collect()
+    assert(urls.sorted.toSeq == (fixture.take(40) ++ fixture.slice(80, 120)).map(_.url).sorted)
   }
 
   test("snapshot time travel: scan(asOf) reads any past snapshot, replace keeps history") {
@@ -993,7 +1092,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("backfillMetrics skips rewrite commits: delete/upsert survivors and compacts are not re-attributed") {
     val sp = spark; import sp.implicits._
     val dir = tmpDir("backfill_rw")
-    ExtractJob.run(spark, spark.createDataset(fixture), dir, 8) // snapshot 0
+    // snapshot 0, over several files so the compact below has work to do
+    withConf(OneBytePartitions)(
+      ExtractJob.run(spark, spark.createDataset(fixture), dir, 8))
     val log = new SnapshotLog(dir)
     val schema = Schemas.extractedSchema
     // snapshot 1: row-level delete — fresh files are survivor rewrites
@@ -1549,21 +1650,30 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       fixture.slice(120 + t * 20, 140 + t * 20))
     Pipelines.incrementalDedup(spark, spark.createDataset(seed), table, dd, 8)
     Pipelines.incrementalDedup(spark, batch(0), table, dd, 8) // warm
-    val dlog = new SnapshotLog(dd)
-    val before = dlog.currentSnapshot().get
+    val elog = new SnapshotLog(table); val dlog = new SnapshotLog(dd)
+    val (eBefore, dBefore) = (elog.currentSnapshot().get, dlog.currentSnapshot().get)
     val (r, meter) = graft.Probe.metered(spark)(
       Pipelines.incrementalDedup(spark, batch(1), table, dd, 8))
     assert(r.appendedRows > 0L && r.appendedRows <= 20L, s"$r")
     import scala.jdk.CollectionConverters._
     assert(meter.jobs.get <= 11,
       s"${meter.jobs.get} jobs:\n${meter.jobLines.asScala.mkString("\n")}")
-    // the small regime's clustered write: pairwise-disjoint fp64 ranges
-    val added = dlog.metaAddedBetween(before, r.dedupedSnapshot.get)
+    // the write layout follows the bytes: a small turn adds one data file
+    // to each table
+    assert(elog.metaAddedBetween(eBefore, r.extractedSnapshot.get).size == 1)
+    assert(dlog.metaAddedBetween(dBefore, r.dedupedSnapshot.get).size == 1)
+    // the small regime's clustered write over several files (4 rows per
+    // file): pairwise-disjoint fp64 ranges
+    val before = dlog.currentSnapshot().get
+    val r2 = withConf("graft.dedup.clusterRowsPerPart" -> "4")(
+      Pipelines.incrementalDedup(spark, batch(2), table, dd, 8))
+    assert(r2.appendedRows > 0L, s"$r2")
+    val added = dlog.metaAddedBetween(before, r2.dedupedSnapshot.get)
     val ranges = added.map(_.stats("fp64") match {
       case LongBounds(lo, hi, _) => (lo, hi)
       case b => fail(s"fp64 bounds must be longs: $b")
     }).sortBy(_._1)
-    assert(ranges.size > 1, s"a ${r.appendedRows}-row append must spread over files: $ranges")
+    assert(ranges.size > 1, s"a ${r2.appendedRows}-row append must spread over files: $ranges")
     assert(ranges.zip(ranges.tail).forall { case (a, b) => a._2 < b._1 },
       s"per-file fp64 ranges must be disjoint: $ranges")
   }
@@ -1575,8 +1685,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.createDataset((lo until hi).map(i => Schemas.Extracted(
         s"https://probe/$i", i % 8, "html",
         Seq(s"probe text body $i"), s"probe text body $i", 10L + i, i.toLong))).toDF()
-    assert(Pipelines.appendDeduped(spark, extractedDF(0, 400), dd)._2 == 400L)
-    assert(Pipelines.appendDeduped(spark, extractedDF(400, 800), dd)._2 == 400L)
+    // 8 fp64-clustered files per append, so the probe has files to skip
+    withConf("graft.dedup.clusterRowsPerPart" -> "50") {
+      assert(Pipelines.appendDeduped(spark, extractedDF(0, 400), dd)._2 == 400L)
+      assert(Pipelines.appendDeduped(spark, extractedDF(400, 800), dd)._2 == 400L)
+    }
     val dlog = new SnapshotLog(dd)
     val meta = dlog.metaAt(dlog.currentSnapshot().get)
     assert(meta.nonEmpty && meta.forall(_.stats.contains("fp64")),
@@ -1768,10 +1881,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("clusterParts scales with staged rows above the fixed floor") {
-    assert(Pipelines.clusterParts(spark, 0L) == Pipelines.DedupClusterParts)
-    assert(Pipelines.clusterParts(spark, 100000L) == Pipelines.DedupClusterParts)
+  test("clusterParts: one file per clusterRowsPerPart staged rows, at least one") {
+    assert(Pipelines.clusterParts(spark, 0L) == 1)
+    assert(Pipelines.clusterParts(spark, 1L) == 1)
+    assert(Pipelines.clusterParts(spark, 100000L) == 1)
     val perPart = 262144L
+    assert(Pipelines.clusterParts(spark, perPart) == 1)
+    assert(Pipelines.clusterParts(spark, perPart + 1L) == 2)
     assert(Pipelines.clusterParts(spark, perPart * 100L) == 100)
     assert(Pipelines.clusterParts(spark, perPart * 100L + 1L) == 101)
     spark.conf.set("graft.dedup.clusterRowsPerPart", "10")
@@ -2084,5 +2200,36 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val got = probe.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == expect)
+  }
+}
+
+/** Test optimizer rule: the first plan that holds a UDF named by [[arm]]
+  * blocks its planning thread until released — a deterministic pause inside
+  * one job between reading a table and writing its stage.
+  */
+object PauseOnUdf extends org.apache.spark.sql.catalyst.rules.Rule[
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+  import java.util.concurrent.{CountDownLatch, TimeUnit}
+  import java.util.concurrent.atomic.AtomicReference
+  private val armed = new AtomicReference[Option[(String, CountDownLatch, CountDownLatch)]](None)
+
+  def arm(marker: String, paused: CountDownLatch, resume: CountDownLatch): Unit =
+    armed.set(Some((marker, paused, resume)))
+  def disarm(): Unit = armed.set(None)
+
+  def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    val cur = armed.get
+    cur.foreach { case (marker, paused, resume) =>
+      val hit = plan.exists(_.expressions.exists(_.exists {
+        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u.udfName.contains(marker)
+        case _ => false
+      }))
+      if (hit && armed.compareAndSet(cur, None)) {
+        paused.countDown()
+        resume.await(300, TimeUnit.SECONDS): Unit
+      }
+    }
+    plan
   }
 }

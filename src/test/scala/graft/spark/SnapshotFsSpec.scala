@@ -591,7 +591,12 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark; import sp.implicits._
     val dir = tmpDir("stats_e2e")
     val pages = spark.createDataset(Synth.corpus(200))
-    ExtractJob.run(spark, pages, dir, numBuckets = 8)
+    // 200 pages are one file by default: a 1-byte coalesce floor spreads
+    // them over all 8 buckets' files
+    val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    spark.conf.set(minSize, "1")
+    try ExtractJob.run(spark, pages, dir, numBuckets = 8)
+    finally spark.conf.unset(minSize)
     val log = new SnapshotLog(dir)
     val meta = log.metaAt(log.currentSnapshot().get)
     val withStats = meta.filter(_.stats.contains("bucket"))
