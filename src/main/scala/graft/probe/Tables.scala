@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Bench, Probe, SubmitMain}
 import graft.spark.{ExtractJob, Pipelines, Schemas, SnapshotLog, Synth}
+import scala.jdk.CollectionConverters._
 
 /** `graft.Probe` scenarios over the snapshot table, the resume and dedup
   * stages of a pipeline turn, and the continuous pipeline CLI.
@@ -274,15 +275,17 @@ object Tables {
     val milestones = Set(1, 2, 5, 10, 20, 50, 75, 100)
     println(f"${"commit#"}%8s ${"tableFiles"}%11s ${"commitMs"}%9s ${"listBytes"}%10s ${"segBytes"}%9s ${"scanListMs"}%11s")
     for (c <- 1 to commits) {
-      val id = c - 1L
-      val stage = Paths.get(log.stageDataDir(id))
-      (0 until filesPerCommit).foreach(i => Files.createFile(stage.resolve(f"part-$i%05d.parquet")))
-      val (commitSec, _) = Probe.clock(log.commit(id))
+      val stage = log.stageUniqueDataDir()
+      (0 until filesPerCommit).foreach(i => Files.createFile(Paths.get(stage, f"part-$i%05d.parquet")))
+      val (commitSec, id) = Probe.clock(log.commitOptimistic(stage))
       if (milestones(c)) {
-        val meta = Paths.get(dir, "meta")
+        val list = Paths.get(dir, "meta", s"snap-$id.txt")
+        // the fresh segment is the list's last manifest line
+        val seg = Files.readAllLines(list).asScala.filter(_.startsWith("manifest\t"))
+          .last.split('\t')(1)
         val (listSec, n) = Probe.clock(log.currentFiles().size)
-        println(f"$c%8d $n%11d ${commitSec * 1e3}%9.1f ${Files.size(meta.resolve(s"snap-$id.txt"))}%10d " +
-          f"${Files.size(meta.resolve(s"seg-$id.txt"))}%9d ${listSec * 1e3}%11.1f")
+        println(f"$c%8d $n%11d ${commitSec * 1e3}%9.1f ${Files.size(list)}%10d " +
+          f"${Files.size(Paths.get(dir, seg))}%9d ${listSec * 1e3}%11.1f")
       }
     }
     // cumulative metadata bytes on disk: with sharding this is O(files +
@@ -309,15 +312,15 @@ object Tables {
       val log = new SnapshotLog(dir)
       // skewed stage: 4 large files (400k rows each) + 60 tiny ones (2k rows)
       // committed across two appends — manifest sizes drive the binning
-      def stage(id: Long, name: String, rows: Seq[(Long, Long)]): Unit = {
-        val d = log.stageDataDir(id)
+      def stage(name: String, rows: Seq[(Long, Long)]): Unit = {
+        val d = log.stageUniqueDataDir()
         for (((lo, hi), i) <- rows.zipWithIndex)
           spark.range(lo, hi).select(col("id"), (col("id") % 97).as("v"))
             .coalesce(1).write.mode("overwrite").parquet(s"$d/$name-$i")
-        log.commit(id): Unit
+        log.commitOptimistic(d): Unit
       }
-      stage(0L, "big", (0 until 4).map(i => (i * 400000L, (i + 1) * 400000L)))
-      stage(1L, "small", (0 until 60).map(i => (1600000L + i * 2000L, 1600000L + (i + 1) * 2000L)))
+      stage("big", (0 until 4).map(i => (i * 400000L, (i + 1) * 400000L)))
+      stage("small", (0 until 60).map(i => (1600000L + i * 2000L, 1600000L + (i + 1) * 2000L)))
       val schema = spark.range(1).select(col("id"), (col("id") % 97).as("v")).schema
       val inSizes = log.metaAt(log.currentSnapshot().get).map(_.size).sorted
       println(s"input: ${inSizes.size} files, " +

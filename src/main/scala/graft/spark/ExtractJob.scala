@@ -132,11 +132,11 @@ object ExtractJob {
     * commit REPLACES the table contents instead of appending — needed whenever
     * the kernel changes and the corpus must be re-derived.
     *
-    * An append stages under a unique directory and commits only if the
-    * table is still at the snapshot the resume read, so of two concurrent
-    * runs one commits and the other fails loudly, neither touching the
-    * other's files. `force` stages under the next snapshot id and is
-    * SINGLE-WRITER, like [[SnapshotLog.commitReplace]].
+    * Both modes stage under a unique directory and commit only if the
+    * table is still at the snapshot the run read (for `force`, through
+    * [[SnapshotLog.commitReplace]]), so of two concurrent runs, forced or
+    * not, one commits and the other fails loudly, neither touching the
+    * other's files.
     */
   def run(
       spark: SparkSession,
@@ -212,11 +212,9 @@ object ExtractJob {
           Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaLong))(
           col("bucket"), col("n_bytes"), col("checksum")).as("lineage"))
 
-      // append: a unique stage, so two concurrent runs never share (and
-      // overwrite) one directory. The force replace stays on the id-named
-      // strict path: it is single-writer by design.
-      val replaceId = if (force) Some(log.nextSnapshotId()) else None
-      val stage = replaceId.fold(log.stageUniqueDataDir())(log.stageDataDir)
+      // a unique stage, so two concurrent runs never share (and overwrite)
+      // one directory
+      val stage = log.stageUniqueDataDir()
       try {
         extracted.write.mode("overwrite").parquet(stage)
         val gate = gateObs.get
@@ -227,13 +225,13 @@ object ExtractJob {
       } catch { case e: Throwable => log.abortStage(stage); throw e }
       // bucket min/max ride the manifest: a later `bucket = k` read (resume
       // repair, per-bucket audit) plans only the files whose range covers k.
-      // A failed commit keeps its stage (for `removeOrphanFiles`): past the
-      // manifest CAS its files may already be referenced.
-      val snapshotId = replaceId match {
-        case Some(id) => log.commitReplace(id, statsColumns = Seq("bucket"))
-        case None => log.commitOptimistic(stage, statsColumns = Seq("bucket"),
-          requireParent = Some(base.getOrElse(-1L)))
-      }
+      // A failed commit cleans its own stage where that is safe
+      // (SnapshotLog.commitStaged).
+      val parent = base.getOrElse(-1L)
+      val snapshotId =
+        if (force) log.commitReplace(stage, parent, statsColumns = Seq("bucket"))
+        else log.commitOptimistic(stage, statsColumns = Seq("bucket"),
+          requireParent = Some(parent))
 
       // A3 lineage: per-bucket doc/byte counts + order-insensitive checksum
       // (bit_xor of per-row xxhash64 — partition-internal order cannot

@@ -110,7 +110,7 @@ final case class ManifestEntry(path: String, size: Long,
   * broadcast decisions see true table size instead of a listing estimate.
   *
   * FILE SKIPPING (round 5; strings/timestamps round 6): manifest entries may
-  * carry per-column bounds (`SnapshotLog.commit(statsColumns = ...)`).
+  * carry per-column bounds (`SnapshotLog.commitOptimistic(statsColumns = ...)`).
   * `listFiles` evaluates the pushed `dataFilters` against those bounds and
   * drops files no row of which can match — e.g. a `bucket = 7` resume read,
   * a `lang = 'en'` language slice, or a `warc_ts` crawl-window range plans

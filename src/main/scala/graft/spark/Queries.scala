@@ -1047,8 +1047,8 @@ object Queries {
       val tblName = dirKey + "_v1_" + corpusStamp(s"$dir/documents.parquet")
       val log = new SnapshotLog(s"$tblBase/$tblName")
       if (log.currentSnapshot().isEmpty) {
-        corpus.repartition(4).write.mode("overwrite").parquet(log.stageDataDir(0L))
-        log.commit(0L)
+        val stage = log.writeStage(corpus.repartition(4).write.mode("overwrite").parquet(_))
+        log.commitOptimistic(stage, requireParent = Some(-1L))
       }
       Embeddings.pruneStaleIndexes(tblBase, dirKey + "_", tblName)
       val cand = base.select(col("doc_id").as("a"), (col("doc_id") + off).as("b"))

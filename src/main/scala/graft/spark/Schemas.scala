@@ -68,17 +68,4 @@ object Schemas {
     StructField("text", StringType, nullable = true),
     StructField("n_bytes", LongType, nullable = false),
     StructField("checksum", LongType, nullable = false)))
-
-  /** Fail fast on schema drift (unlike the tolerant reference read path —
-    * SURVEY.md §1.2 keeps the *semantic* tolerance via the two nullable columns,
-    * not via dynamic typing).
-    */
-  def validatePages(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    for (f <- pagesSchema.fields) {
-      require(have.get(f.name).contains(f.dataType),
-        s"pages schema drift: expected ${f.name}: ${f.dataType}, found ${have.get(f.name)}")
-    }
-    df
-  }
 }

@@ -23,13 +23,22 @@ import scala.jdk.CollectionConverters._
   * the commit — `meta/current` is a best-effort HINT written after it (the
   * version-hint design of Iceberg's HadoopTableOperations, re-derived).
   * Readers start at the hint and probe forward for newer manifests (ids are
-  * contiguous by construction — [[commit]] requires `id == parent+1`), so a
+  * contiguous by construction — every commit CASes `parent + 1`), so a
   * writer that crashed between CAS and hint still published a complete,
   * readable snapshot. Round 4's pointer-swap commit point could not support
   * concurrent writers at all: a second appender was confined to a loud error.
   * With the manifest as the commit point, [[commitOptimistic]] retries a lost
   * CAS by re-reading the parent and re-deriving its segment list — two racing
   * appenders both land, one after retry.
+  *
+  * ONE WAY TO STAGE AND COMMIT: every writer stages its data files under
+  * [[stageUniqueDataDir]] (the files stay there once committed) and commits
+  * through one routine whose attempts write token-named segments, so two
+  * writers never share a stage directory or a segment name. A commit derived
+  * from a snapshot (a resume, a probe, a replace, a rewrite) is conditional
+  * on it (`requireParent`). The routine also owns the stage's cleanup: it
+  * deletes the stage only on an outcome that proves no manifest references
+  * it, and never once the CAS has been tried.
   *
   * FILESYSTEM (round 5): every operation routes through the Hadoop
   * FileSystem API ([[GraftIo]]) so the table can live on `hdfs://` (atomic
@@ -50,12 +59,17 @@ import scala.jdk.CollectionConverters._
   *   meta/snap-<id>.txt      snapshot <id> parent <parentId>
   *                           manifest <meta/seg-....txt relative path>  (per segment)
   *                           txn <appId> <version>                      (idempotent-writer watermark)
-  *   meta/seg-<id>[-tok].txt file <rel/path.parquet> <size> [#n=<rows>] [col=min..max ...]
+  *   meta/seg-<id>[-tag]-<tok>.txt  file <rel/path.parquet> <size> [#n=<rows>] [col=min..max ...]
+  *   data/stage-<uuid>/...   the data files of one commit
   * }}}
   *
-  * This is the only layout read: a snapshot list holding an inline `file`
-  * line, or a segment entry without a size, fails loudly with the offending
-  * path instead of being planned.
+  * Tables written before the one-path layout still read: segments named
+  * `seg-<id>.txt` / `seg-<id>-cp.txt` and data dirs named `snap-<id>` are
+  * valid input to every read, tail, compact, expire and lineage backfill.
+  *
+  * Only this segment-list format is read: a snapshot list holding an
+  * inline `file` line, or a segment entry without a size, fails loudly with
+  * the offending path instead of being planned.
   *
   * Per-file column STATS (round 5): when a commit is asked to
   * (`statsColumns`), each fresh segment entry also records min/max for the
@@ -72,18 +86,13 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
   private val root: HPath = io.root
   private val metaDir: HPath = new HPath(root, "meta")
   private val currentPtr: HPath = new HPath(metaDir, "current")
+  private val dataRoot: HPath = new HPath(root, "data")
 
   /** Fully-qualified table root in its one canonical spelling — the cache /
     * registry key every path-keyed consumer should use (equivalent
     * spellings of `tableDir` all resolve here).
     */
   def tableRoot: String = io.extern(root)
-
-  def dataDir(snapshotId: Long): String =
-    io.extern(new HPath(root, s"data/snap-$snapshotId"))
-
-  private def dataDirPath(snapshotId: Long): HPath =
-    new HPath(root, s"data/snap-$snapshotId")
 
   /** The raw hint value (NOT the commit point — see class doc). */
   private def hint(): Option[Long] =
@@ -285,122 +294,49 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
   private def manifestPath(id: Long): HPath = new HPath(metaDir, s"snap-$id.txt")
   private def segmentPath(name: String): HPath = new HPath(metaDir, name)
 
-  /** Stage a directory for new data files; caller writes parquet beneath it. */
-  def stageDataDir(snapshotId: Long): String = {
-    io.mkdirs(dataDirPath(snapshotId))
-    dataDir(snapshotId)
-  }
-
-  /** Stage under a UNIQUE directory for an optimistic commit ([[commitOptimistic]]):
-    * the final snapshot id is unknown until the CAS wins, and two concurrent
-    * appenders must never interleave part files in one directory.
+  /** Stage a UNIQUE directory for new data files: the caller writes parquet
+    * beneath it and commits it with [[commitOptimistic]],
+    * [[commitIdempotent]] or [[commitReplace]]. The final snapshot id is
+    * unknown until the CAS wins, and two writers must never share a stage.
+    * Committed files stay in their stage directory and every stage is
+    * written in overwrite mode, so a name collision would delete an older
+    * snapshot's files: the name carries a whole random UUID (122 random
+    * bits), not a prefix of one.
     */
   def stageUniqueDataDir(): String = {
-    val d = new HPath(root, s"data/stage-${java.util.UUID.randomUUID().toString.take(8)}")
+    val d = new HPath(root, s"data/stage-${java.util.UUID.randomUUID()}")
     io.mkdirs(d)
     io.extern(d)
   }
 
-  /** List the parquet part files a staged write produced. */
-  def stagedFiles(snapshotId: Long): Seq[String] =
-    stagedStatuses(dataDirPath(snapshotId)).map(st => io.extern(st.getPath))
+  /** [[stageUniqueDataDir]] filled by `write`. A write that throws deletes
+    * the stage (nothing can reference it yet) and rethrows; otherwise the
+    * stage is returned for the commit call.
+    */
+  def writeStage(write: String => Unit): String = {
+    val stage = stageUniqueDataDir()
+    try write(stage) catch { case e: Throwable => abortStage(stage); throw e }
+    stage
+  }
 
   private def stagedStatuses(dir: HPath): Seq[FileStatus] =
     io.walkFiles(dir)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.toString)
 
-  /** Commit: new snapshot = parent's live files + the files staged under
-    * [[stageDataDir]]`(snapshotId)`. SINGLE-WRITER: the stage directory and
-    * the segment are named by the id alone, so a second writer staging the
-    * same id overwrites the first one's data files — committed ones
-    * included — before its own commit fails. Writers that may race use
-    * [[stageUniqueDataDir]] + [[commitOptimistic]]. `statsColumns` names
-    * int/long columns whose min/max should ride the segment for file
-    * skipping.
-    */
-  def commit(snapshotId: Long, statsColumns: Seq[String] = Nil): Long =
-    commitStrict(snapshotId, keepParent = true, statsColumns)
-
-  /** Replace-commit: the new snapshot lists ONLY the staged files — the
-    * table-truncating analog of the reference's force re-extract
-    * (claim.py:34 `extractDocuments=true` overwrites every batch JSON).
-    * Old data files stay on disk, unreferenced (time-travel-able, GC-able),
-    * so the swap is still atomic: readers see the old table or the new one.
-    * Single-writer, like [[commit]].
-    */
-  def commitReplace(snapshotId: Long, statsColumns: Seq[String] = Nil): Long =
-    commitStrict(snapshotId, keepParent = false, statsColumns)
-
-  /** [[commitReplace]] for CONTENT-PRESERVING rewrites ([[compact]]): the
-    * commit is identical except its segment carries the `cp` tag, so lineage
-    * attribution ([[ExtractJob.backfillMetrics]]) can tell "same rows, new
-    * files" apart from a genuine replace whose full content IS new lineage —
-    * structurally indistinguishable otherwise (both list only own staged
-    * files). Tags never collide with optimistic-commit tokens: those are hex.
-    */
-  private def commitCompact(snapshotId: Long, statsColumns: Seq[String]): Long =
-    commitStrict(snapshotId, keepParent = false, statsColumns, tag = "cp")
-
-  /** True iff `rel` is the segment a given snapshot wrote itself (strict
-    * commits name it `seg-<id>.txt`; optimistic ones `seg-<id>-<token>.txt`).
-    */
-  private def isOwnSegment(rel: String, id: Long): Boolean = {
-    val n = rel.substring(rel.lastIndexOf('/') + 1)
-    n == s"seg-$id.txt" || (n.startsWith(s"seg-$id-") && n.endsWith(".txt"))
-  }
-
-  /** The id-named commits ([[commit]], [[commitReplace]], [[compact]]): one
-    * attempt at `snapshotId`, which must be the head's successor. The stage
-    * was derived for this id, so a lost CAS is not retried but thrown.
-    */
-  private def commitStrict(snapshotId: Long, keepParent: Boolean,
-      statsColumns: Seq[String], tag: String = ""): Long = {
-    // under the manifest-CAS protocol an existing FINAL manifest IS a
-    // committed snapshot. The one legitimate way to arrive here is our own
-    // retry after a crash BETWEEN the CAS and the hint write: the table head
-    // is exactly this id and its own segment lists exactly our staged files —
-    // then the commit already happened; heal the hint and return. Anything
-    // else is a foreign writer's commit: fail loudly, never absorb it.
-    if (io.exists(manifestPath(snapshotId))) {
-      val healed = currentSnapshot().contains(snapshotId) &&
-        readSegments(segmentsAt(snapshotId).filter(isOwnSegment(_, snapshotId)))
-          .map(_.path).toSet == stagedFiles(snapshotId).toSet
-      if (healed) { bumpHint(snapshotId); return snapshotId }
-      throw new IllegalStateException(
-        s"snapshot $snapshotId already has a committed manifest that does not " +
-          "match this stage — another writer committed it (the manifest CAS is " +
-          "the commit point); re-derive from the current snapshot or use " +
-          "commitOptimistic for concurrent appends")
-    }
-    val parent = currentSnapshot().getOrElse(-1L)
-    // contiguity makes the hint's forward probe exact (no gaps to jump) and
-    // is what commitOptimistic's parent+1 allocation produces anyway
-    require(snapshotId == parent + 1,
-      s"snapshot $snapshotId must be parent+1 (parent $parent): ids are " +
-        "contiguous under the manifest-CAS protocol")
-    val outcome = attemptCommit(parent, stagedStatuses(dataDirPath(snapshotId)),
-      statsColumns, tag, token = None,
-      carry = if (keepParent) identity else _ => Nil)
-    if (outcome != SnapshotLog.Won)
-      throw new IllegalStateException(
-        s"snapshot $snapshotId was committed concurrently while this " +
-          "writer staged — single-writer commit() refuses to race; use " +
-          "commitOptimistic for concurrent appends")
-    snapshotId
-  }
-
   /** Optimistic-concurrency append: stage parquet under [[stageUniqueDataDir]],
     * then call this. The snapshot id is allocated as parent+1 at CAS time; a
     * lost CAS (another appender won the id) re-reads the new parent,
     * re-derives the segment list, and retries — both racing appenders land,
     * one after retry, and the final snapshot references both segments.
-    * Returns the committed id.
+    * `requireParent` makes the append conditional on the snapshot the caller
+    * derived its stage from (see [[commitStaged]]). `statsColumns` names
+    * columns whose min/max ride the segment for file skipping. Returns the
+    * committed id.
     */
   def commitOptimistic(stagedDir: String, statsColumns: Seq[String] = Nil,
       maxAttempts: Int = 10, requireParent: Option[Long] = None): Long =
-    commitOptimisticImpl(stagedDir, statsColumns, maxAttempts, requireParent,
-      txn = None).get
+    commitStaged(stagedDir, statsColumns, maxAttempts, requireParent).get
 
   /** Idempotent append for replayable writers (a streaming `foreachBatch`
     * sink, a retried job): commit the staged files ONLY if `(appId, version)`
@@ -417,87 +353,151 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       requireParent: Option[Long] = None): Option[Long] = {
     require(appId.nonEmpty && !appId.contains('\t') && !appId.contains('\n'),
       "appId must be non-empty and tab/newline-free (it rides the manifest)")
-    val r = commitOptimisticImpl(stagedDir, statsColumns, maxAttempts,
-      requireParent, txn = Some((appId, version)))
-    if (r.isEmpty) abortStage(stagedDir) // already applied: stage is orphan data
-    r
+    commitStaged(stagedDir, statsColumns, maxAttempts, requireParent,
+      txn = Some((appId, version)))
   }
 
-  private def commitOptimisticImpl(stagedDir: String, statsColumns: Seq[String],
-      maxAttempts: Int, requireParent: Option[Long],
-      txn: Option[(String, Long)]): Option[Long] = {
+  /** Replace-commit: the new snapshot lists ONLY the staged files — the
+    * table-truncating analog of the reference's force re-extract
+    * (claim.py:34 `extractDocuments=true` overwrites every batch JSON).
+    * Old data files stay on disk, unreferenced (time-travel-able, GC-able),
+    * so the swap is still atomic: readers see the old table or the new one.
+    * Conditional on `requireParent`, the snapshot the writer read: of two
+    * concurrent replaces one commits and the other fails loudly, and
+    * neither touches the other's files.
+    */
+  def commitReplace(stagedDir: String, requireParent: Long,
+      statsColumns: Seq[String] = Nil): Long =
+    commitStaged(stagedDir, statsColumns, requireParent = Some(requireParent),
+      carry = (_, _) => Nil).get
+
+  /** True iff `rel` is the segment a given snapshot wrote itself: this
+    * writer names it `seg-<id>[-<tag>]-<token>.txt`, older tables also hold
+    * `seg-<id>.txt` and `seg-<id>-cp.txt`.
+    */
+  private def isOwnSegment(rel: String, id: Long): Boolean = {
+    val n = rel.substring(rel.lastIndexOf('/') + 1)
+    n == s"seg-$id.txt" || (n.startsWith(s"seg-$id-") && n.endsWith(".txt"))
+  }
+
+  /** THE commit routine: every commit shape (append, idempotent append,
+    * replace, compact, delete/upsert rewrite) lands its stage through here.
+    * Each attempt re-reads the head and runs [[attemptCommit]] against it; a
+    * lost CAS is retried up to `maxAttempts` times, so an unconditional
+    * append lands after a racer, while a conditional one (`requireParent`)
+    * fails its check on the retry.
+    *
+    * It owns the stage's cleanup. The stage is deleted only on an outcome
+    * proving that no manifest references it: the `requireParent` check
+    * failed, the CAS was lost (every attempt), the txn was already applied,
+    * or an exception came before the CAS. An exception from the CAS itself
+    * or after it (a commit lock's release, the hint bump) leaves the stage
+    * alone: the new snapshot may already list its files, and if it does not,
+    * [[removeOrphanFiles]] ages them out. Callers abort a stage only when
+    * their own write or gate fails.
+    */
+  private def commitStaged(stagedDir: String, statsColumns: Seq[String],
+      maxAttempts: Int = 10, requireParent: Option[Long] = None,
+      txn: Option[(String, Long)] = None, tag: String = "",
+      carry: (Seq[String], String => HPath) => Seq[String] = (segs, _) => segs)
+      : Option[Long] = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
-    val staged = stagedStatuses(io.qualify(new HPath(stagedDir)))
+    val stage = io.qualify(new HPath(stagedDir))
+    // a failed commit deletes its stage: committing it again must fail
+    // loudly, not land a snapshot without the caller's files
+    require(io.isDirectory(stage),
+      s"no stage at $stagedDir — a failed commit deletes its stage; stage the data again")
+    val staged =
+      try stagedStatuses(stage)
+      catch { case e: Throwable => abortStage(stagedDir); throw e }
     var attempt = 0
     while (attempt < maxAttempts) {
-      val parent = currentSnapshot().getOrElse(-1L)
-      // token-unique segment name: two racers deriving the same id must not
-      // overwrite each other's segment while exactly one of them will win it
-      attemptCommit(parent, staged, statsColumns, tag = "", token = Some(newToken()),
-          carry = identity, txn, requireParent) match {
-        case SnapshotLog.Won => return Some(parent + 1)
+      attemptCommit(stagedDir, staged, statsColumns, tag, carry, txn,
+          requireParent) match {
+        case SnapshotLog.Won(id) => return Some(id)
         case SnapshotLog.AlreadyApplied => return None
         case SnapshotLog.Lost => attempt += 1 // re-derive from the winner's snapshot
       }
     }
+    abortStage(stagedDir)
     throw new IllegalStateException(
-      s"append lost the commit CAS $maxAttempts times in a row — pathological " +
-        "contention; back off or batch appenders")
+      s"commit lost the CAS $maxAttempts times in a row — pathological " +
+        "contention; back off or batch writers")
   }
 
   private def newToken(): String = java.util.UUID.randomUUID().toString.take(8)
 
-  /** ONE commit attempt — every commit shape runs it, and it is the only
-    * caller of [[promoteManifest]]. It reads `parent`'s manifest once, keeps
+  /** ONE commit attempt against the current head — the only writer of
+    * manifest lists. It reads the parent's manifest once, keeps
     * `carry(parent's segments)` (all of them for an append, none for a
-    * replace, rewritten survivors for a delete/upsert — whose `carry` may
-    * write segments of its own), writes a fresh segment listing `staged`,
-    * CAS-promotes the child list at `parent + 1`, and bumps the hint.
+    * replace or compact, rewritten survivors for a delete/upsert — whose
+    * `carry` may write segments of its own through the name function it is
+    * handed), writes a fresh segment listing `staged`, CAS-promotes the
+    * child list at `parent + 1`, and bumps the hint. Its filesystem
+    * mutations, in order: segment writes, the list's tmp write, the CAS, the
+    * hint bump.
     *
-    * Naming makes a lost CAS safe to clean up. A tokened attempt names every
-    * segment it writes `seg-<id>-...-<token>.txt` and deletes exactly those
-    * on a loss. A strict attempt (`token = None`) names its segment by the id
-    * alone, `seg-<id>[-<tag>].txt`; a strict writer that lost the id shares
-    * that name with the winner's segment, so it deletes nothing.
+    * Every segment it writes is named `seg-<id>[-<tag>]-<token>.txt` with a
+    * fresh token, so two writers deriving the same id never share a segment,
+    * and a lost CAS deletes exactly this attempt's segments.
     *
     * `txn` (idempotent appends) skips when the parent already records the
-    * version; `requireParent` (conditional appends — the caller DERIVED its
+    * version; `requireParent` (conditional commits — the caller DERIVED its
     * stage from that snapshot, e.g. by an anti-join against it) throws when
     * the table moved on. The txn check runs first, so a replay that raced a
-    * foreign append skips instead of failing the condition.
+    * foreign append skips instead of failing the condition. Both outcomes,
+    * and any exception before the CAS, delete the stage (see
+    * [[commitStaged]]).
     */
-  private def attemptCommit(parent: Long, staged: Seq[FileStatus],
-      statsColumns: Seq[String], tag: String, token: Option[String],
-      carry: Seq[String] => Seq[String],
-      txn: Option[(String, Long)] = None,
-      requireParent: Option[Long] = None): SnapshotLog.Attempt = {
-    val (parentSegments, parentTxns) = parseManifest(parent)
-    if (txn.exists { case (app, v) => parentTxns.get(app).exists(_ >= v) })
-      return SnapshotLog.AlreadyApplied
-    requireParent.filter(_ != parent).foreach { exp =>
-      throw new IllegalStateException(
-        s"table advanced to snapshot $parent while this append was derived " +
-          s"from $exp — recompute against the current snapshot and retry")
-    }
-    val id = parent + 1
-    io.mkdirs(metaDir)
-    val suffix = (if (tag.isEmpty) "" else s"-$tag") + token.fold("")("-" + _)
-    val segments = writeSegment(s"seg-$id$suffix.txt", carry(parentSegments),
-      staged, statsColumns)
-    // txn watermarks survive even a replace commit: they track a WRITER's
-    // progress, not table content — a replace that intentionally discards an
-    // idempotent writer's output requires that writer to restart with a
-    // fresh appId/checkpoint (the position Delta takes)
-    if (promoteManifest(id, parent, segments,
-        tmpName = s"snap-$id.txt" + token.fold("")("." + _) + ".tmp",
-        txns = parentTxns ++ txn)) {
-      bumpHint(id)
-      SnapshotLog.Won
-    } else {
-      token.foreach { t =>
-        segments.filter(_.endsWith(s"-$t.txt")).foreach(sg => io.delete(io.path(sg)))
-      }
-      SnapshotLog.Lost
+  private def attemptCommit(stagedDir: String, staged: Seq[FileStatus],
+      statsColumns: Seq[String], tag: String,
+      carry: (Seq[String], String => HPath) => Seq[String],
+      txn: Option[(String, Long)],
+      requireParent: Option[Long]): SnapshotLog.Attempt = {
+    val token = newToken()
+    val prepared =
+      try {
+        val parent = currentSnapshot().getOrElse(-1L)
+        val (parentSegments, parentTxns) = parseManifest(parent)
+        if (txn.exists { case (app, v) => parentTxns.get(app).exists(_ >= v) }) None
+        else {
+          requireParent.filter(_ != parent).foreach { exp =>
+            throw new IllegalStateException(
+              s"table advanced to snapshot $parent while this commit was " +
+                s"derived from $exp — recompute against the current snapshot " +
+                "and retry")
+          }
+          val id = parent + 1
+          io.mkdirs(metaDir)
+          def seg(t: String): HPath =
+            segmentPath(s"seg-$id" + (if (t.isEmpty) "" else s"-$t") + s"-$token.txt")
+          val segments = writeSegment(seg(tag), carry(parentSegments, seg),
+            staged, statsColumns)
+          // txn watermarks survive even a replace commit: they track a
+          // WRITER's progress, not table content — a replace that
+          // intentionally discards an idempotent writer's output requires
+          // that writer to restart with a fresh appId/checkpoint (the
+          // position Delta takes)
+          val lines = Seq(s"snapshot\t$id\tparent\t$parent") ++
+            segments.map(sg => s"manifest\t$sg") ++
+            (parentTxns ++ txn).toSeq.sortBy(_._1).map { case (app, v) => s"txn\t$app\t$v" }
+          val tmp = new HPath(metaDir, s"snap-$id.txt.$token.tmp")
+          io.writeDirect(tmp, lines.mkString("\n") + "\n")
+          Some((id, segments, tmp))
+        }
+      } catch { case e: Throwable => abortStage(stagedDir); throw e }
+    prepared match {
+      case None => abortStage(stagedDir); SnapshotLog.AlreadyApplied
+      case Some((id, segments, tmp)) =>
+        // the commit point; from here on the stage is never deleted
+        if (io.casPromoteFile(tmp, manifestPath(id))) {
+          bumpHint(id)
+          SnapshotLog.Won(id)
+        } else {
+          io.delete(tmp)
+          segments.filter(_.endsWith(s"-$token.txt")).foreach(sg => io.delete(io.path(sg)))
+          SnapshotLog.Lost
+        }
     }
   }
 
@@ -506,12 +506,11 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * them) and return the child's full segment list: `carried` plus the
     * fresh segment, or `carried` alone when nothing was staged.
     */
-  private def writeSegment(segName: String, carried: Seq[String],
+  private def writeSegment(seg: HPath, carried: Seq[String],
       staged: Seq[FileStatus], statsColumns: Seq[String]): Seq[String] = {
     val entries = collectEntries(staged, statsColumns)
     if (entries.isEmpty) carried
     else {
-      val seg = segmentPath(segName)
       io.writeAtomic(seg, entries.map { case (f, sz, stats, rows) =>
         s"file\t$f\t$sz" + rows.map(n => s"\t#n=$n").getOrElse("") +
           stats.toSeq.sortBy(_._1)
@@ -601,23 +600,6 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       } finally r.close()
     } catch { case scala.util.control.NonFatal(_) => (Map.empty, None) }
 
-  /** Stage the manifest list and CAS it to its final name — the commit point.
-    * Returns false when another writer committed the id first.
-    */
-  private def promoteManifest(snapshotId: Long, parent: Long,
-      segments: Seq[String], tmpName: String,
-      txns: Map[String, Long]): Boolean = {
-    val lines =
-      Seq(s"snapshot\t$snapshotId\tparent\t$parent") ++
-        segments.map(sg => s"manifest\t$sg") ++
-        txns.toSeq.sortBy(_._1).map { case (app, v) => s"txn\t$app\t$v" }
-    val tmp = new HPath(metaDir, tmpName)
-    io.writeDirect(tmp, lines.mkString("\n") + "\n")
-    val won = io.casPromoteFile(tmp, manifestPath(snapshotId))
-    if (!won) io.delete(tmp)
-    won
-  }
-
   /** Best-effort monotonic hint update (the hint is NOT the commit point —
     * a stale hint only costs readers a few forward probes).
     */
@@ -631,8 +613,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * but still referenced by a newer append-commit is kept — reference-
     * counted, not age-based; a concurrent writer's staged-but-uncommitted
     * files are referenced by no manifest and are never touched — orphan
-    * cleanup after a crash is [[abort]]'s job, per Iceberg's split between
-    * expire_snapshots and remove_orphan_files). This
+    * cleanup after a crash is [[removeOrphanFiles]]' job, per Iceberg's
+    * split between expire_snapshots and remove_orphan_files). This
     * completes the story [[commitReplace]] starts: replace stops REFERENCING
     * old files so the swap stays atomic and time-travel-able; expire is the
     * explicit point where history (and disk) is given up.
@@ -692,19 +674,26 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     val droppedSegments = drop.flatMap(segmentsAt).toSet
     drop.foreach(id => io.delete(manifestPath(id)))
     (droppedSegments -- keptSegments).foreach(sg => io.delete(io.path(sg)))
-    var deleted = 0
-    (dropped -- live).foreach { p =>
-      if (io.delete(new HPath(p))) deleted += 1
-    }
-    // expired snapshots' data dirs left with no parquet drop their write
-    // residue (_SUCCESS, checksum sidecars) and the empty directory itself;
-    // dirs of staged or retained snapshots are never touched
-    drop.map(dataDirPath).filter(io.isDirectory).foreach { d =>
+    val deleted = (dropped -- live).toSeq.map(p => io.qualify(new HPath(p)))
+      .filter(p => io.delete(p))
+    // the data dirs the deleted files lived in (a stage under data/, or an
+    // older table's `snap-<id>` dir) drop their write residue (_SUCCESS,
+    // checksum sidecars) and the directory itself once no parquet is left:
+    // a dir still holding a retained file is never touched, and no
+    // in-flight stage can be among them (stage names are unique)
+    deleted.flatMap(dataDirOf).distinct.filter(io.isDirectory).foreach { d =>
       if (!io.walkFiles(d).exists(st => st.isFile && st.getPath.getName.endsWith(".parquet")))
         io.delete(d, recursive = true): Unit
     }
-    (drop.size, deleted)
+    (drop.size, deleted.size)
   }
+
+  /** The directory directly under `data/` that holds `file` (None for a
+    * file outside `data/`).
+    */
+  private def dataDirOf(file: HPath): Option[HPath] =
+    Iterator.iterate(file)(_.getParent).takeWhile(_ != null)
+      .find(d => d.getParent == dataRoot)
 
   private def streamsDir: HPath = new HPath(metaDir, "streams")
   private def streamMarkerPath(streamId: String): HPath = {
@@ -771,16 +760,13 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * larger than the bin target keeps its own bin — file granularity is the
     * floor. Skew evidence: `graft.Probe compact`.
     *
-    * Crash-safe like any commit: the rewrite is staged under a UNIQUE
-    * `.compact-<uuid>` temp directory (never a predictable snapshot id —
-    * round 3 cleared `dataDir(nextSnapshotId())` first, which would have
-    * deleted a concurrent writer's freshly staged files had it picked the
-    * same id) and renamed into the snapshot's data dir right before the
-    * manifest CAS. A crashed compaction leaves only the aged temp dir, which
-    * [[removeOrphanFiles]] reclaims. If the rename target is already
-    * occupied — some writer staged under the same id — compaction FAILS
-    * rather than deleting that writer's data (the unique staging confines a
-    * collision to a loud error instead of silent data loss). History stays
+    * Crash-safe like any commit: the rewrite is staged under
+    * [[stageUniqueDataDir]] and committed in place, with a `cp`-tagged
+    * segment, conditional on the snapshot it read — a commit that landed
+    * during the rewrite makes compaction fail loudly rather than drop the
+    * racer's rows. A crashed compaction leaves only its aged stage, which
+    * [[removeOrphanFiles]] reclaims; a failed one deletes its stage under the
+    * commit routine's rule ([[commitStaged]]). History stays
     * time-travel-able until [[expireSnapshots]] reclaims the pre-compaction
     * files.
     *
@@ -829,10 +815,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       if (acc >= targetBytes) { bins += bin.toSeq; bin = bin.take(0); acc = 0L }
     }
     if (bin.nonEmpty) bins += bin.toSeq
-    val tmp = new HPath(root,
-      "data/.compact-" + java.util.UUID.randomUUID().toString)
-    try {
-      requireSchemaCovers(schema, probePaths, "compaction")
+    requireSchemaCovers(schema, probePaths, "compaction")
+    val stage = writeStage { dir =>
       if (sortBy.nonEmpty) {
         // CLUSTERED rewrite (Iceberg's rewrite-with-sort-order, re-derived):
         // ONE range exchange moves the bytes once so output files carry
@@ -849,55 +833,38 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         scanEntries(spark, schema, meta)
           .repartitionByRange(math.max(1, bins.size), sortBy.map(col): _*)
           .sortWithinPartitions(sortBy.map(col): _*)
-          .write.mode("overwrite").parquet(io.extern(tmp))
+          .write.mode("overwrite").parquet(dir)
       } else {
-      // one single-output narrow job per bin, all in flight at once: Spark's
-      // scheduler interleaves their tasks, so rewrite parallelism is
-      // min(cores, bins) even though each output file is written by one task
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(bins.size, math.max(2, Runtime.getRuntime.availableProcessors())))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val jobs = bins.toSeq.zipWithIndex.map { case (files, i) =>
-        scala.concurrent.Future {
-          spark.read.schema(schema).parquet(files: _*).coalesce(1)
-            .write.mode("overwrite")
-            .parquet(io.extern(new HPath(tmp, f"bin-$i%05d")))
+        // one single-output narrow job per bin, all in flight at once: Spark's
+        // scheduler interleaves their tasks, so rewrite parallelism is
+        // min(cores, bins) even though each output file is written by one task
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(bins.size, math.max(2, Runtime.getRuntime.availableProcessors())))
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutor(pool)
+        val jobs = bins.toSeq.zipWithIndex.map { case (files, i) =>
+          scala.concurrent.Future {
+            spark.read.schema(schema).parquet(files: _*).coalesce(1)
+              .write.mode("overwrite").parquet(f"$dir/bin-$i%05d")
+          }
         }
+        // await EVERY bin (no fail-fast): a failed write deletes the stage,
+        // and a fail-fast Await would pull it out from under still-running
+        // sibling writes — confusing secondary failures + orphan residue
+        // re-created after the delete (round-5 review)
+        val failures = jobs.flatMap(f =>
+          try { scala.concurrent.Await.result(f,
+            scala.concurrent.duration.Duration.Inf); None }
+          catch { case e: Throwable => Some(e) })
+        pool.shutdown()
+        failures.headOption.foreach(throw _)
       }
-      // await EVERY bin (no fail-fast): the finally below deletes tmp, and a
-      // fail-fast Await would pull it out from under still-running sibling
-      // writes — confusing secondary failures + orphan residue re-created
-      // after the delete (round-5 review)
-      val failures = jobs.flatMap(f =>
-        try { scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf); None }
-        catch { case e: Throwable => Some(e) })
-      pool.shutdown()
-      failures.headOption.foreach(throw _)
-      }
-      // commit at base+1, NOT nextSnapshotId(): the rewrite lists `current`'s
-      // content, so any commit that landed DURING the rewrite must make this
-      // replace lose its manifest CAS and fail loudly — an id allocated after
-      // the race would pass the contiguity check while silently dropping the
-      // racer's rows from the table (round-5 review)
-      val id = current + 1
-      val dest = dataDirPath(id)
-      if (io.exists(dest))
-        throw new IllegalStateException(
-          s"snapshot $id already staged at $dest — concurrent writer or " +
-            "crashed stage; abort it (or let removeOrphanFiles age it out) " +
-            "before compacting")
-      io.mkdirs(dest.getParent)
-      if (!io.promoteDir(tmp, dest))
-        throw new IllegalStateException(
-          s"snapshot $id was staged at $dest while compaction ran — " +
-            "concurrent writer; retry compaction")
-      try Some(commitCompact(id, statsColumns))
-      catch { case e: Throwable => abort(id); throw e }
-    } finally {
-      if (io.exists(tmp)) io.delete(tmp, recursive = true): Unit
     }
+    // the rewrite lists `current`'s content, so any commit that landed
+    // DURING the rewrite must make this replace fail loudly — committing
+    // over the racer would silently drop its rows from the table
+    commitStaged(stage, statsColumns, requireParent = Some(current), tag = "cp",
+      carry = (_, _) => Nil)
   }
 
   /** Orphan-file cleanup — the remove_orphan_files analog completing the
@@ -922,7 +889,6 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     val segs = snapshots().flatMap(segmentsAt).distinct
     val referenced = readSegments(segs).map(_.path).toSet
     val referencedSegs = segs.map(sg => io.extern(io.path(sg))).toSet
-    val dataRoot = new HPath(root, "data")
     if (!io.isDirectory(dataRoot)) return 0
     var deleted = 0
     io.list(dataRoot).filter(_.isDirectory).foreach { d =>
@@ -1238,10 +1204,9 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         // empty table: the whole upsert is an insert — still CONDITIONAL on
         // the table staying empty (a racer's first append could hold the same
         // keys; landing on it unchecked would silently duplicate them)
-        val stage = stageUniqueDataDir()
-        clustered(u, clusterBy, clusterParts).write.mode("overwrite").parquet(stage)
-        return commitOptimistic(stage, statsColumns,
-          requireParent = Some(-1L))
+        val stage = writeStage(
+          clustered(u, clusterBy, clusterParts).write.mode("overwrite").parquet(_))
+        return commitOptimistic(stage, statsColumns, requireParent = Some(-1L))
       }
       val keys = u.select(keyCol)
       // bounded-key IN locate (see keyedLocateFiles); the rewrite keeps
@@ -1252,10 +1217,9 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       if (affected.isEmpty) {
         // no matched key anywhere: a pure append (cheapest possible commit —
         // incremental readers keep tailing straight through it)
-        val stage = stageUniqueDataDir()
-        clustered(u, clusterBy, clusterParts).write.mode("overwrite").parquet(stage)
-        commitOptimistic(stage, statsColumns,
-          requireParent = Some(parent))
+        val stage = writeStage(
+          clustered(u, clusterBy, clusterParts).write.mode("overwrite").parquet(_))
+        commitOptimistic(stage, statsColumns, requireParent = Some(parent))
       } else
         rewriteExcluding(spark, schema, parent, affected, affectedSegs,
           df => clustered(df.join(keys, Seq(keyCol), "left_anti")
@@ -1305,40 +1269,22 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
   }
 
   /** Shared rewrite half of the delete operators: stage `survivors(affected
-    * rows)` under a unique temp dir, promote it to the next snapshot's data
-    * dir, and commit a rewrite manifest. Same unique-staging crash story as
-    * [[compact]]: a crash leaves only an aged temp dir for
-    * [[removeOrphanFiles]]; an occupied destination or lost CAS fails loudly
-    * rather than absorbing a concurrent writer.
+    * rows)` under [[stageUniqueDataDir]] and commit a rewrite manifest in
+    * place, conditional on `parent` — the snapshot the locate phase read.
+    * Same crash story as [[compact]]: a crash leaves only an aged stage for
+    * [[removeOrphanFiles]]; a commit that landed meanwhile fails the rewrite
+    * loudly rather than absorbing the concurrent writer.
     */
   private def rewriteExcluding(spark: org.apache.spark.sql.SparkSession,
       schema: org.apache.spark.sql.types.StructType,
       parent: Long, affected: Set[String], affectedSegs: Set[String],
       survivors: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       statsColumns: Seq[String]): Long = {
-    val id = parent + 1
-    val tmp = new HPath(root,
-      "data/.delete-" + java.util.UUID.randomUUID().toString)
-    try {
-      requireSchemaCovers(schema, affected.toSeq, "the delete rewrite")
-      survivors(spark.read.schema(schema).parquet(affected.toSeq.sorted: _*))
-        .write.mode("overwrite").parquet(io.extern(tmp))
-      val dest = dataDirPath(id)
-      if (io.exists(dest))
-        throw new IllegalStateException(
-          s"snapshot $id already staged at $dest — concurrent writer or " +
-            "crashed stage; abort it (or let removeOrphanFiles age it out) " +
-            "before deleting")
-      io.mkdirs(dest.getParent)
-      if (!io.promoteDir(tmp, dest))
-        throw new IllegalStateException(
-          s"snapshot $id was staged at $dest while the delete rewrite ran — " +
-            "concurrent writer; recompute the delete against the new head")
-      try commitRewrite(id, parent, affected, affectedSegs, statsColumns)
-      catch { case e: Throwable => abort(id); throw e }
-    } finally {
-      if (io.exists(tmp)) io.delete(tmp, recursive = true): Unit
-    }
+    requireSchemaCovers(schema, affected.toSeq, "the delete rewrite")
+    val stage = writeStage(survivors(
+      spark.read.schema(schema).parquet(affected.toSeq.sorted: _*))
+      .write.mode("overwrite").parquet(_))
+    commitRewrite(stage, parent, affected, affectedSegs, statsColumns)
   }
 
   /** Loud guard for every REWRITE that reads files back through a
@@ -1381,34 +1327,35 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
   }
 
   /** Commit a snapshot whose content is `parent` minus `removed` files plus
-    * whatever is staged under the snapshot's data dir. A parent segment
+    * the files staged under `stagedDir`. A parent segment
     * outside `affectedSegments` (the locate phase knows exactly which
     * segments hold removed files — [[affectedFiles]] read them anyway to
     * resolve paths) is carried BY REFERENCE WITHOUT EVEN BEING READ; a
     * segment that lost files is rewritten minus those entries, its surviving
     * lines copied VERBATIM (sizes and column stats preserved without
     * re-reading a single footer) — so metadata cost is O(affected segments),
-    * the Iceberg manifest-rewrite shape, never O(live segments). The attempt
-    * was derived from `parent`, so a lost CAS throws.
+    * the Iceberg manifest-rewrite shape, never O(live segments). The commit
+    * was derived from `parent`, so it is conditional on it.
     */
-  private def commitRewrite(id: Long, parent: Long, removed: Set[String],
+  private def commitRewrite(stagedDir: String, parent: Long, removed: Set[String],
       affectedSegments: Set[String], statsColumns: Seq[String]): Long = {
-    val token = newToken()
-    var rewritten = 0
-    def carry(parentSegments: Seq[String]): Seq[String] = parentSegments.flatMap { sg =>
-      if (!affectedSegments.contains(sg)) Some(sg) // untouched: zero IO
-      else {
-        val lines = io.readString(io.path(sg)).split('\n').toSeq.filter(_.nonEmpty)
-        val (gone, kept) = lines.partition { l =>
-          l.startsWith("file\t") && removed.contains(io.extern(io.path(l.split('\t')(1))))
-        }
-        if (gone.isEmpty) Some(sg)
-        else if (!kept.exists(_.startsWith("file\t"))) None // segment fully deleted
+    def carry(parentSegments: Seq[String], seg: String => HPath): Seq[String] = {
+      var rewritten = 0
+      parentSegments.flatMap { sg =>
+        if (!affectedSegments.contains(sg)) Some(sg) // untouched: zero IO
         else {
-          val p = segmentPath(s"seg-$id-rw$rewritten-$token.txt")
-          io.writeAtomic(p, kept.mkString("", "\n", "\n"))
-          rewritten += 1
-          Some(io.relativize(p))
+          val lines = io.readString(io.path(sg)).split('\n').toSeq.filter(_.nonEmpty)
+          val (gone, kept) = lines.partition { l =>
+            l.startsWith("file\t") && removed.contains(io.extern(io.path(l.split('\t')(1))))
+          }
+          if (gone.isEmpty) Some(sg)
+          else if (!kept.exists(_.startsWith("file\t"))) None // segment fully deleted
+          else {
+            val p = seg(s"rw$rewritten")
+            io.writeAtomic(p, kept.mkString("", "\n", "\n"))
+            rewritten += 1
+            Some(io.relativize(p))
+          }
         }
       }
     }
@@ -1422,14 +1369,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     // appends, and (b) a rewrite covering a single-segment table
     // misclassified as a replace (isRewriteOf false, isSelfContained true),
     // which an expired-parent lineage backfill would then double-count.
-    val outcome = attemptCommit(parent, stagedStatuses(dataDirPath(id)), statsColumns,
-      tag = "rw", token = Some(token), carry = carry)
-    if (outcome != SnapshotLog.Won)
-      throw new IllegalStateException(
-        s"snapshot $id was committed concurrently while the delete rewrite " +
-          "ran — the rewrite listed stale content; recompute against the new " +
-          "head and retry")
-    id
+    commitStaged(stagedDir, statsColumns, requireParent = Some(parent),
+      tag = "rw", carry = carry).get
   }
 
   /** One micro-batch of the streaming tail ([[SnapshotStreamSource]]): the
@@ -1510,14 +1451,6 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     if (io.exists(p)) io.delete(p, recursive = true): Unit
   }
 
-  /** Abort a staged (uncommitted) snapshot: delete its data directory. */
-  def abort(snapshotId: Long): Unit =
-    if (io.exists(dataDirPath(snapshotId)))
-      io.delete(dataDirPath(snapshotId), recursive = true): Unit
-
-  /** Next snapshot id (monotonic; ids are logical, no wall-clock — SURVEY §5). */
-  def nextSnapshotId(): Long = currentSnapshot().getOrElse(-1L) + 1L
-
   /** Scan a snapshot as a DataFrame (empty-but-typed when no commit).
     * `asOf = Some(id)` time-travels to any previously committed snapshot.
     *
@@ -1572,7 +1505,7 @@ object SnapshotLog {
 
   /** Outcome of one commit attempt (see `SnapshotLog.attemptCommit`). */
   private sealed trait Attempt
-  private case object Won extends Attempt
+  private final case class Won(id: Long) extends Attempt
   private case object Lost extends Attempt
   /** An idempotent append whose version the parent already records. */
   private case object AlreadyApplied extends Attempt

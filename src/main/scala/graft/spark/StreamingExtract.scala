@@ -128,16 +128,15 @@ object StreamingExtract {
             if (total > 0L) {
               if (ok.toDouble / total < ExtractJob.SuccessRatio)
                 throw ExtractJob.GateFailed(ok, total)
-              val stage = destLog.stageUniqueDataDir()
-              try {
-                // sized from the cached batch's measured bytes
+              // sized from the cached batch's measured bytes
+              val stage = destLog.writeStage(
                 ExtractJob.bucketLayout(batch.drop("ok"), numBuckets)
-                  .write.mode("overwrite").parquet(stage)
-                destLog.commitIdempotent(stage, app, batchId,
-                  statsColumns = Seq("bucket")): Unit
-              } catch {
-                case e: Throwable => destLog.abortStage(stage); throw e
-              }
+                  .write.mode("overwrite").parquet(_))
+              // the commit cleans its own stage where that is safe: past the
+              // manifest CAS the batch may be committed (and its txn recorded,
+              // so a replay would skip it)
+              destLog.commitIdempotent(stage, app, batchId,
+                statsColumns = Seq("bucket")): Unit
             }
           } finally batch.unpersist(): Unit
         }

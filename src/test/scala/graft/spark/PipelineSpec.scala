@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.kernel.Extract
 import graft.kernel.SearchKernels.SearchParams
+import TestCommits._
 
 object SparkTestSession {
   def create(cores: Int): SparkSession = {
@@ -785,39 +786,102 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark; import sp.implicits._
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
-    val dir = tmpDir("extract_race")
-    assert(ExtractJob.run(spark, spark.createDataset(fixture.take(40)), dir, 8).contains(0L))
-    // writer B reads snapshot 0, then pauses in the optimizer before its
-    // stage write; writer A extracts other pages and commits meanwhile
-    val marker = "extract-race-pause"
-    val paused = new java.util.concurrent.CountDownLatch(1)
-    val resume = new java.util.concurrent.CountDownLatch(1)
-    PauseOnUdf.arm(marker, paused, resume)
-    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ PauseOnUdf
-    try {
-      val pass = udf((_: String) => true).withName(marker)
-      // RDD-backed: the optimizer would evaluate a filter over a local
-      // relation, UDF included, before the pause rule could see it
-      val pagesB = spark.createDataset(spark.sparkContext.parallelize(fixture.slice(40, 80)))
-        .filter(pass(col("url")))
-      val b = Future(ExtractJob.run(spark, pagesB, dir, 8))(ExecutionContext.global)
-      assert(paused.await(120, SECONDS), s"writer B never reached planning: ${b.value}")
-      assert(ExtractJob.run(spark, spark.createDataset(fixture.slice(80, 120)), dir, 8)
-        .contains(1L))
-      resume.countDown()
-      val e = intercept[IllegalStateException](Await.result(b, 300.seconds))
-      assert(e.getMessage.contains("advanced"), e.getMessage)
-    } finally {
-      resume.countDown()
-      PauseOnUdf.disarm()
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq PauseOnUdf)
+    // both writers append, or both force a replace: either way each stages
+    // apart and commits only on the snapshot it read
+    for (force <- Seq(false, true)) {
+      val dir = tmpDir(if (force) "extract_race_force" else "extract_race")
+      assert(ExtractJob.run(spark, spark.createDataset(fixture.take(40)), dir, 8).contains(0L))
+      // writer B reads snapshot 0, then pauses in the optimizer before its
+      // stage write; writer A extracts other pages and commits meanwhile
+      val marker = "extract-race-pause"
+      val paused = new java.util.concurrent.CountDownLatch(1)
+      val resume = new java.util.concurrent.CountDownLatch(1)
+      PauseOnUdf.arm(marker, paused, resume)
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ PauseOnUdf
+      try {
+        val pass = udf((_: String) => true).withName(marker)
+        // RDD-backed: the optimizer would evaluate a filter over a local
+        // relation, UDF included, before the pause rule could see it
+        val pagesB = spark.createDataset(spark.sparkContext.parallelize(fixture.slice(40, 80)))
+          .filter(pass(col("url")))
+        val b = Future(ExtractJob.run(spark, pagesB, dir, 8, force))(ExecutionContext.global)
+        assert(paused.await(120, SECONDS), s"writer B never reached planning: ${b.value}")
+        assert(ExtractJob.run(spark, spark.createDataset(fixture.slice(80, 120)), dir, 8, force)
+          .contains(1L))
+        resume.countDown()
+        val e = intercept[IllegalStateException](Await.result(b, 300.seconds))
+        assert(e.getMessage.contains("advanced"), e.getMessage)
+      } finally {
+        resume.countDown()
+        PauseOnUdf.disarm()
+        spark.experimental.extraOptimizations =
+          spark.experimental.extraOptimizations.filterNot(_ eq PauseOnUdf)
+      }
+      // a second SnapshotLog on the same dir: every file of A's snapshot reads
+      val log = new SnapshotLog(dir)
+      assert(log.currentSnapshot().contains(1L))
+      val urls = log.scan(spark, Schemas.extractedSchema).select("url").as[String].collect()
+      val expected = (if (force) Nil else fixture.take(40)) ++ fixture.slice(80, 120)
+      assert(urls.sorted.toSeq == expected.map(_.url).sorted, s"force=$force")
+      // the failed commit deleted B's stage: data/ holds only committed stages
+      val committedDirs = (log.filesAt(0L) ++ log.filesAt(1L))
+        .map(f => java.nio.file.Paths.get(f).getParent.getFileName.toString).toSet
+      val dataDirs = new java.io.File(dir, "data").list().toSet
+      assert(dataDirs == committedDirs, s"force=$force: $dataDirs vs $committedDirs")
     }
-    // a second SnapshotLog on the same dir: every file of A's snapshot reads
+  }
+
+  test("an old-layout table (seg-<id>.txt, seg-<id>-cp.txt, snap-<id> data dirs) scans, tails, compacts, expires and backfills lineage") {
+    import java.nio.file.{Files => F, Paths => P}
+    val sp = spark; import sp.implicits._
+    val dir = tmpDir("old_layout")
+    val schema = Schemas.extractedSchema
+    def extracted(lo: Int, hi: Int) =
+      ExtractJob.extractDF(spark.createDataset(fixture.slice(lo, hi)), 8).drop("ok")
+    // hand-built in the id-named layout earlier writers produced: 0 is a
+    // first commit, 1 a compaction of it, 2 an append on top
+    def commitOld(id: Long, parent: Long, df: org.apache.spark.sql.DataFrame,
+        seg: String, carried: Seq[String]): Unit = {
+      df.write.parquet(s"$dir/data/snap-$id")
+      val entries = parquetUnder(s"$dir/data/snap-$id").map(f =>
+        s"file\t${P.get(dir).relativize(P.get(f))}\t${F.size(P.get(f))}")
+      F.createDirectories(P.get(dir, "meta"))
+      F.writeString(P.get(dir, "meta", seg), entries.mkString("", "\n", "\n"))
+      F.writeString(P.get(dir, "meta", s"snap-$id.txt"),
+        (s"snapshot\t$id\tparent\t$parent" +: (carried :+ s"meta/$seg")
+          .map(sg => s"manifest\t$sg")).mkString("", "\n", "\n"))
+      F.writeString(P.get(dir, "meta", "current"), id.toString)
+    }
+    commitOld(0L, -1L, extracted(0, 40).repartition(3), "seg-0.txt", Nil)
+    commitOld(1L, 0L, extracted(0, 40).coalesce(1), "seg-1-cp.txt", Nil)
+    commitOld(2L, 1L, extracted(40, 60).repartition(2), "seg-2.txt", Seq("meta/seg-1-cp.txt"))
     val log = new SnapshotLog(dir)
-    assert(log.currentSnapshot().contains(1L))
-    val urls = log.scan(spark, Schemas.extractedSchema).select("url").as[String].collect()
-    assert(urls.sorted.toSeq == (fixture.take(40) ++ fixture.slice(80, 120)).map(_.url).sorted)
+    def urls(df: org.apache.spark.sql.DataFrame) = df.select("url").as[String].collect().toSeq.sorted
+    assert(log.currentSnapshot().contains(2L))
+    assert(urls(log.scan(spark, schema)) == fixture.take(60).map(_.url).sorted)
+    // structural verdicts: 0 and 1 list only their own segment, 1 is a
+    // compaction, 2 an append of 1
+    assert(log.isSelfContained(0L) && log.isSelfContained(1L) && !log.isSelfContained(2L))
+    assert(!log.hasRewriteSegments(0L) && log.hasRewriteSegments(1L) && !log.hasRewriteSegments(2L))
+    assert(log.isRewriteOf(1L, 0L) && log.isAppendOf(2L, 1L) && !log.isRewriteOf(2L, 1L))
+    // tails: the append reads as one, the compaction fails the stream loudly
+    assert(urls(log.scanIncremental(spark, schema, 1L)) == fixture.slice(40, 60).map(_.url).sorted)
+    assert(log.streamingBatch(spark, schema, Some(1L), 2L).isStreaming)
+    val e = intercept[IllegalStateException](log.streamingBatch(spark, schema, Some(0L), 2L))
+    assert(e.getMessage.contains("rewrite"), e.getMessage)
+    // lineage: the first commit and the append are attributed, the
+    // compaction is not
+    assert(ExtractJob.backfillMetrics(spark, dir) == Seq(0L, 2L))
+    val docs = spark.read.parquet(s"$dir/metrics").groupBy("snapshot_id")
+      .agg(sum("doc_count")).as[(Long, Long)].collect().toMap
+    assert(docs == Map(0L -> 40L, 2L -> 20L), s"$docs")
+    // compact and expire: the old data dirs are reclaimed whole
+    assert(log.compact(spark, schema, targetFiles = 1).contains(3L))
+    assert(log.isSelfContained(3L) && log.hasRewriteSegments(3L))
+    assert(log.expireSnapshots(keepLast = 1)._1 == 3)
+    assert(urls(log.scan(spark, schema)) == fixture.take(60).map(_.url).sorted)
+    for (id <- 0 to 2) assert(!F.exists(P.get(dir, "data", s"snap-$id")), s"snap-$id")
+    assert(new java.io.File(dir, "data").list().toSeq.map(_.take(6)) == Seq("stage-"))
   }
 
   test("snapshot time travel: scan(asOf) reads any past snapshot, replace keeps history") {
@@ -859,26 +923,27 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     ExtractJob.run(spark, all, dirB, 8, force = true)
     val logB = new SnapshotLog(dirB)
     val liveBefore = logB.currentFiles().toSet
+    // the stage dirs of snapshots 0 and 1, which hold no live file
+    val expiredDirs = (logB.filesAt(0L) ++ logB.filesAt(1L))
+      .map(f => java.nio.file.Paths.get(f).getParent).toSet
+    assert(expiredDirs.size == 2 && expiredDirs.forall(d => java.nio.file.Files.exists(d)))
     // a concurrent writer's staged-but-uncommitted snapshot must survive the
     // GC (referenced by no manifest != expired): deleting it would corrupt
     // that writer's upcoming commit
-    val stagedId = logB.nextSnapshotId()
-    all.limit(5).toDF().write.mode("overwrite")
-      .parquet(logB.stageDataDir(stagedId))
-    val stagedBefore = logB.stagedFiles(stagedId)
+    val stage = logB.stageUniqueDataDir()
+    all.limit(5).toDF().write.mode("overwrite").parquet(stage)
+    val stagedBefore = parquetUnder(stage)
     assert(stagedBefore.nonEmpty)
     val (droppedB, deletedB) = logB.expireSnapshots(keepLast = 1)
-    assert(logB.stagedFiles(stagedId) == stagedBefore,
+    assert(parquetUnder(stage) == stagedBefore,
       "staged-uncommitted files must survive expireSnapshots")
-    logB.abort(stagedId) // the crashed-writer cleanup path
+    logB.abortStage(stage) // the crashed-writer cleanup path
     assert(droppedB == 2 && deletedB > 0, s"replace lineage ($droppedB, $deletedB)")
     assert(logB.snapshots() == Seq(2L))
     assert(logB.currentFiles().toSet == liveBefore)
     assert(logB.scan(spark, Schemas.extractedSchema).count() == corpusSize)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(logB.dataDir(0L))),
-      "snap-0 dir must be reclaimed")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(logB.dataDir(1L))),
-      "snap-1 dir must be reclaimed")
+    assert(expiredDirs.forall(d => !java.nio.file.Files.exists(d)),
+      s"the expired snapshots' stage dirs must be reclaimed: $expiredDirs")
     // current snapshot is always retained even when keepLast exceeds history
     assert(logB.expireSnapshots(keepLast = 5) == ((0, 0)))
   }
@@ -889,9 +954,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val log = new SnapshotLog(dir)
     // stage a 2048-part write (the 100 TB shape: many data files per snapshot)
     val rows = spark.range(4096).select(col("id"), (col("id") % 7).as("v"))
-    rows.repartition(2048).write.mode("overwrite").parquet(log.stageDataDir(0L))
+    val stage0 = log.stageUniqueDataDir()
+    rows.repartition(2048).write.mode("overwrite").parquet(stage0)
     val t0 = System.nanoTime()
-    log.commit(0L)
+    log.commitOptimistic(stage0)
     val commitSec = (System.nanoTime() - t0) / 1e9
     assert(log.currentFiles().size >= 1900, // AQE may coalesce a few empties
       s"got ${log.currentFiles().size} files")
@@ -903,9 +969,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n == 4096)
     assert(scanSec < 60.0, f"scan over 2k manifest files took $scanSec%.1f s")
     // an append commit re-listing all parent files stays cheap too
-    rows.limit(16).repartition(2).write.mode("overwrite").parquet(log.stageDataDir(1L))
+    val stage1 = log.stageUniqueDataDir()
+    rows.limit(16).repartition(2).write.mode("overwrite").parquet(stage1)
     val t2 = System.nanoTime()
-    log.commit(1L)
+    log.commitOptimistic(stage1)
     assert((System.nanoTime() - t2) / 1e9 < 5.0, "append commit re-listing 2k files")
     assert(log.scan(spark, rows.schema).count() == 4096 + 16)
   }
@@ -914,32 +981,33 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("orphans")
     val log = new SnapshotLog(dir)
     val rows = spark.range(100).select(col("id"), (col("id") % 3).as("v"))
-    rows.repartition(4).write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
-    // crashed stage with unknown id: unreferenced, aged past the window
-    rows.limit(10).repartition(2).write.mode("overwrite").parquet(log.stageDataDir(9L))
+    log.append(rows.repartition(4))
+    // crashed stage: unreferenced, aged past the window
+    val crashed = log.stageUniqueDataDir()
+    rows.limit(10).repartition(2).write.mode("overwrite").parquet(crashed)
     val old = java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis() - 7200000L)
-    java.nio.file.Files.walk(java.nio.file.Paths.get(log.dataDir(9L))).forEach(p =>
+    java.nio.file.Files.walk(java.nio.file.Paths.get(crashed)).forEach(p =>
       java.nio.file.Files.setLastModifiedTime(p, old))
     // a concurrent writer's ACTIVE staged snapshot: unreferenced, and its
     // FIRST part file closed over an hour ago (long-running stage) while a
     // later one is fresh — the gate must be per-directory, not per-file, or
     // the early files of the in-flight stage get deleted (silent data loss
     // at that writer's commit)
-    rows.limit(10).repartition(2).write.mode("overwrite").parquet(log.stageDataDir(1L))
-    val freshBefore = log.stagedFiles(1L)
+    val active = log.stageUniqueDataDir()
+    rows.limit(10).repartition(2).write.mode("overwrite").parquet(active)
+    val freshBefore = parquetUnder(active)
     java.nio.file.Files.setLastModifiedTime(
       java.nio.file.Paths.get(freshBefore.head), old)
     val deleted = log.removeOrphanFiles(minAgeMs = 3600000L)
     assert(deleted >= 2, s"aged orphans must be reclaimed, deleted=$deleted")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(log.dataDir(9L))),
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(crashed)),
       "orphan dir must be removed")
-    assert(log.stagedFiles(1L) == freshBefore, "fresh staged files must survive")
+    assert(parquetUnder(active) == freshBefore, "fresh staged files must survive")
     assert(log.scan(spark, rows.schema).count() == 100, "committed data untouched")
     // a zero/negative age disables the only concurrent-writer protection
     intercept[IllegalArgumentException](log.removeOrphanFiles(minAgeMs = 0L))
-    log.abort(1L)
+    log.abortStage(active)
   }
 
   test("compact: bin-packs small files into a replace snapshot with identical content") {
@@ -948,12 +1016,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // two append commits, each fragmented into 32 part files (the shape that
     // accumulates at 100 TB: per-batch commit cadence x numBuckets files)
     val rows = spark.range(2000).select(col("id"), (col("id") % 7).as("v"))
-    rows.filter(col("id") < 1000).repartition(32)
-      .write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
-    rows.filter(col("id") >= 1000).repartition(32)
-      .write.mode("overwrite").parquet(log.stageDataDir(1L))
-    log.commit(1L)
+    log.append(rows.filter(col("id") < 1000).repartition(32))
+    log.append(rows.filter(col("id") >= 1000).repartition(32))
     assert(log.currentFiles().size > 8)
     val before = log.scan(spark, rows.schema).orderBy("id").collect().toSeq
     assert(log.compact(spark, rows.schema, targetFiles = 8).contains(2L))
@@ -975,27 +1039,24 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("manifest_list")
     val log = new SnapshotLog(dir)
     val rows = spark.range(300).select(col("id"), (col("id") % 7).as("v"))
-    rows.filter(col("id") < 100).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
-    val seg0 = P.get(dir, "meta", "seg-0.txt")
+    log.append(rows.filter(col("id") < 100).repartition(4))
+    val Seq(seg0) = segmentsOf(dir, 0L)
     val seg0Bytes = F.readAllBytes(seg0).toSeq
-    rows.filter(col("id") >= 100 && col("id") < 200).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(1L))
-    log.commit(1L)
+    log.append(rows.filter(col("id") >= 100 && col("id") < 200).repartition(4))
     // the parent's inventory is carried BY REFERENCE: snap-1's list holds two
     // manifest pointers and zero inline file entries, and seg-0 is untouched
     val list1 = F.readAllLines(P.get(dir, "meta", "snap-1.txt"))
     assert(list1.stream.filter(_.startsWith("manifest\t")).count() == 2, s"$list1")
     assert(list1.stream.noneMatch(_.startsWith("file\t")), s"$list1")
     assert(F.readAllBytes(seg0).toSeq == seg0Bytes, "segments must be immutable")
+    val Seq(carried, seg1) = segmentsOf(dir, 1L)
+    assert(carried == seg0)
     // the new segment lists ONLY the staged files (append cost O(staged))
-    val seg1Files = F.readAllLines(P.get(dir, "meta", "seg-1.txt"))
+    val seg1Files = F.readAllLines(seg1)
     assert(seg1Files.size == log.filesAt(1L).size - log.filesAt(0L).size)
     assert(log.scan(spark, rows.schema).count() == 200)
     // a replace commit drops the parent pointers: one segment, fresh lineage
-    rows.repartition(4).write.mode("overwrite").parquet(log.stageDataDir(2L))
-    log.commitReplace(2L)
+    log.replace(rows.repartition(4))
     val list2 = F.readAllLines(P.get(dir, "meta", "snap-2.txt"))
     assert(list2.stream.filter(_.startsWith("manifest\t")).count() == 1, s"$list2")
     assert(log.scan(spark, rows.schema).count() == 300)
@@ -1004,10 +1065,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(log.scan(spark, rows.schema, asOf = Some(1L)).count() == 200)
     // expire down to the replace snapshot: shared segments seg-0/seg-1 are
     // referenced by no retained list and must be reclaimed with their files
+    val Seq(seg2) = segmentsOf(dir, 2L)
     val (dropped, deleted) = log.expireSnapshots(keepLast = 1)
     assert(dropped == 2 && deleted > 0, s"($dropped, $deleted)")
-    assert(!F.exists(seg0) && !F.exists(P.get(dir, "meta", "seg-1.txt")))
-    assert(F.exists(P.get(dir, "meta", "seg-2.txt")), "live segment must survive")
+    assert(!F.exists(seg0) && !F.exists(seg1))
+    assert(F.exists(seg2), "live segment must survive")
     assert(log.scan(spark, rows.schema).count() == 300)
   }
 
@@ -1016,12 +1078,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("manifest_scan")
     val log = new SnapshotLog(dir)
     val rows = spark.range(500).select(col("id"), (col("id") % 7).as("v"))
-    rows.filter(col("id") < 250).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
-    rows.filter(col("id") >= 250).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(1L))
-    log.commit(1L)
+    log.append(rows.filter(col("id") < 250).repartition(4))
+    log.append(rows.filter(col("id") >= 250).repartition(4))
     val df = log.scan(spark, rows.schema)
     // the relation's file index is manifest-fed, and its sizeInBytes equals
     // the exact sum of the committed files (what broadcast decisions see)
@@ -1119,15 +1177,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("incremental")
     val log = new SnapshotLog(dir)
     val rows = spark.range(300).select(col("id"), (col("id") % 7).as("v"))
-    rows.filter(col("id") < 100).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
-    rows.filter(col("id") >= 100 && col("id") < 200).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(1L))
-    log.commit(1L)
-    rows.filter(col("id") >= 200).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(2L))
-    log.commit(2L)
+    log.append(rows.filter(col("id") < 100).repartition(4))
+    log.append(rows.filter(col("id") >= 100 && col("id") < 200).repartition(4))
+    log.append(rows.filter(col("id") >= 200).repartition(4))
     // tail from snapshot 0: exactly the two appended batches, no re-read
     val inc = log.scanIncremental(spark, rows.schema, fromSnapshot = 0L)
       .select("id").collect().map(_.getLong(0)).toSet
@@ -1140,13 +1192,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(log.scanIncremental(spark, rows.schema, 2L).isEmpty)
     // a replace commit breaks append lineage: the diff must FAIL, not
     // silently double-count the rewritten carry-over rows
-    rows.repartition(4).write.mode("overwrite").parquet(log.stageDataDir(3L))
-    log.commitReplace(3L)
+    log.replace(rows.repartition(4))
     intercept[IllegalArgumentException](log.filesAddedBetween(1L, 3L))
     // but tailing PAST the replace works again from the replace snapshot
-    rows.limit(10).select((col("id") + 1000).as("id"), col("v")).repartition(2)
-      .write.mode("overwrite").parquet(log.stageDataDir(4L))
-    log.commit(4L)
+    log.append(rows.limit(10).select((col("id") + 1000).as("id"), col("v")).repartition(2))
     val after = log.scanIncremental(spark, rows.schema, 3L)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(after == (1000L until 1010L).toSet)
@@ -1157,59 +1206,49 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("manifest_crash")
     val log = new SnapshotLog(dir)
     val rows = spark.range(200).select(col("id"), (col("id") % 7).as("v"))
-    rows.filter(col("id") < 100).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
-    // simulate a commit that crashed BETWEEN segment write and list write:
-    // stage snapshot 1, write its segment by hand, no list — the table still
-    // reads as snapshot 0, and retrying commit(1) must succeed (last segment
-    // write wins) with no duplicate file entries
-    rows.filter(col("id") >= 100).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(1L))
-    F.writeString(P.get(dir, "meta", "seg-1.txt"), "file\tgarbage/from/crash.parquet\n")
+    log.append(rows.filter(col("id") < 100).repartition(4))
+    // simulate an attempt that crashed BETWEEN segment write and list write:
+    // its token-named segment sits in meta/ with no list pointing at it — the
+    // table still reads as snapshot 0, and the retried commit lands with a
+    // fresh segment of its own, listing no file twice and nothing of the
+    // crashed attempt's
+    val stage = log.stageUniqueDataDir()
+    rows.filter(col("id") >= 100).repartition(4).write.mode("overwrite").parquet(stage)
+    val crashedSeg = P.get(dir, "meta", "seg-1-deadbeef.txt")
+    F.writeString(crashedSeg, "file\tgarbage/from/crash.parquet\t10\n")
     assert(log.currentSnapshot().contains(0L))
     assert(log.scan(spark, rows.schema).count() == 100)
-    log.commit(1L)
+    assert(log.commitOptimistic(stage) == 1L)
     assert(log.scan(spark, rows.schema).count() == 200)
     assert(log.filesAt(1L).size == log.filesAt(1L).distinct.size)
     assert(!log.filesAt(1L).exists(_.contains("garbage")),
-      "retried commit must overwrite the crashed segment")
+      "the retried commit must not list the crashed attempt's segment")
+    assert(!segmentsOf(dir, 1L).contains(crashedSeg))
     // crash AFTER the manifest CAS but BEFORE the hint write: the CAS is the
     // commit point (round 5), so the table ALREADY reads as the new snapshot —
-    // readers probe forward past the stale hint — and a retry of the same
-    // commit recognizes its own completed manifest (head == id, own segment
-    // lists exactly the staged files) and just heals the hint
-    rows.limit(20).repartition(2)
-      .write.mode("overwrite").parquet(log.stageDataDir(2L))
-    log.commit(2L)
+    // readers probe forward past the stale hint — and the next commit lands
+    // after it and moves the hint on
+    log.append(rows.limit(20).repartition(2))
     assert(log.scan(spark, rows.schema).count() == 220)
     F.writeString(P.get(dir, "meta", "current"), "1") // simulate the stale hint
     assert(log.currentSnapshot().contains(2L),
       "reader must probe past a stale hint — the manifest is the commit point")
-    assert(log.commit(2L) == 2L, "retry of a completed commit is idempotent")
-    assert(F.readString(P.get(dir, "meta", "current")).trim == "2",
-      "the idempotent retry must heal the hint")
-    // a FOREIGN manifest occupying the id we stage for (another writer's
-    // commit) is refused, never absorbed: its own segment does not list our
-    // staged files, so the heal check fails loudly
-    rows.limit(5).repartition(1)
-      .write.mode("overwrite").parquet(log.stageDataDir(3L))
-    F.writeString(P.get(dir, "meta", "snap-3.txt"),
-      "snapshot\t3\tparent\t2\nmanifest\tmeta/seg-1.txt\n")
-    intercept[IllegalStateException](log.commit(3L))
-    F.delete(P.get(dir, "meta", "snap-3.txt"))
-    log.abort(3L)
+    assert(log.append(rows.limit(5).repartition(1)) == 3L)
+    assert(F.readString(P.get(dir, "meta", "current")).trim == "3",
+      "the next commit must heal the hint")
     // an ORPHANED segment (id never retried) ages out via removeOrphanFiles
     F.writeString(P.get(dir, "meta", "seg-99.txt"), "file\tgarbage/stale.parquet\n")
     val old = java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis() - 7200000L)
     F.setLastModifiedTime(P.get(dir, "meta", "seg-99.txt"), old)
+    F.setLastModifiedTime(crashedSeg, old)
     // crashed mid-write .tmp staging files: aged ones reclaimed, fresh kept
     F.writeString(P.get(dir, "meta", "snap-77.txt.tmp"), "snapshot\t77\tparent\t1\n")
     F.setLastModifiedTime(P.get(dir, "meta", "snap-77.txt.tmp"), old)
     F.writeString(P.get(dir, "meta", "seg-78.txt.tmp"), "file\tx.parquet\n")
     log.removeOrphanFiles(minAgeMs = 3600000L)
     assert(!F.exists(P.get(dir, "meta", "seg-99.txt")), "aged orphan segment reclaimed")
+    assert(!F.exists(crashedSeg), "the crashed attempt's aged segment reclaimed")
     assert(!F.exists(P.get(dir, "meta", "snap-77.txt.tmp")), "aged crashed tmp reclaimed")
     assert(F.exists(P.get(dir, "meta", "seg-78.txt.tmp")), "fresh in-flight tmp kept")
     F.delete(P.get(dir, "meta", "seg-78.txt.tmp"))
@@ -1225,36 +1264,33 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a = new SnapshotLog(dir)
     val b = new SnapshotLog(dir)
     val rows = spark.range(400).select(col("id"), (col("id") % 5).as("v"))
-    rows.filter(col("id") < 100).repartition(8)
-      .write.mode("overwrite").parquet(a.stageDataDir(0L))
-    a.commit(0L)
-    // B stages under the NEXT id (the id a second writer would allocate) and
-    // does not commit yet — its files are referenced by no manifest
-    val bId = b.nextSnapshotId()
+    a.append(rows.filter(col("id") < 100).repartition(8))
+    // B stages under its own unique dir and does not commit yet — its files
+    // are referenced by no manifest
+    val bStage = b.stageUniqueDataDir()
     rows.filter(col("id") >= 100 && col("id") < 200).repartition(4)
-      .write.mode("overwrite").parquet(b.stageDataDir(bId))
-    val bStaged = b.stagedFiles(bId)
+      .write.mode("overwrite").parquet(bStage)
+    val bStaged = parquetUnder(bStage)
     assert(bStaged.nonEmpty)
     // A's maintenance sweep runs MID-STAGE: expire must not touch B's files
     // (referenced-from-expired-only semantics), orphan GC must not either
     // (B's stage is fresh — inside the age window)
     a.expireSnapshots(keepLast = 1)
     a.removeOrphanFiles(minAgeMs = 3600000L)
-    assert(b.stagedFiles(bId) == bStaged,
+    assert(parquetUnder(bStage) == bStaged,
       "B's in-flight stage must survive A's expire + orphan sweep")
-    // A's compact must FAIL LOUDLY on the id collision, not delete B's stage
-    // (round-3 compact cleared dataDir(nextSnapshotId()) first — silent loss)
-    val fragmented = a.currentFiles().size
-    if (fragmented > 2) {
-      intercept[IllegalStateException](a.compact(spark, rows.schema, targetFiles = 2))
-      assert(b.stagedFiles(bId) == bStaged,
-        "B's stage must survive A's colliding compact attempt")
-    }
-    // B commits; both writers read the same consistent table
-    b.commit(bId)
+    // A's compact runs mid-stage too: no two writers share a stage, so it
+    // commits without touching B's files (round-3 compact cleared the next
+    // snapshot's stage first — silent loss)
+    assert(a.currentFiles().size > 2)
+    assert(a.compact(spark, rows.schema, targetFiles = 2).isDefined)
+    assert(parquetUnder(bStage) == bStaged,
+      "B's stage must survive A's compaction")
+    // B commits on top; both writers read the same consistent table
+    b.commitOptimistic(bStage)
     assert(a.scan(spark, rows.schema).count() == 200)
     assert(b.scan(spark, rows.schema).count() == 200)
-    // now compact (no collision), then expire: B's committed rows must survive
+    // compact again, then expire: B's committed rows must survive
     // the full sweep and every reader sees one consistent snapshot throughout
     val before = a.scan(spark, rows.schema).orderBy("id").collect().toSeq
     assert(a.compact(spark, rows.schema, targetFiles = 2).isDefined)
@@ -1940,21 +1976,16 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("compact_race")
     val log = new SnapshotLog(dir)
     val rows = spark.range(2000).select(col("id"), (col("id") % 7).as("v"))
-    rows.filter(col("id") < 1000).repartition(40)
-      .write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
-    // compaction plans from the snapshot it read and commits at base+1: any
-    // append landing during the rewrite must WIN the manifest CAS and make
-    // the replace fail loudly — an id allocated after the race passed the
-    // contiguity check while silently dropping the appender's rows
+    log.append(rows.filter(col("id") < 1000).repartition(40))
+    // compaction commits conditionally on the snapshot it read: any append
+    // landing during the rewrite must make the replace fail loudly — a
+    // commit over the racer would silently drop the appender's rows
     val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
     val compactJob = pool.submit(new java.util.concurrent.Callable[Option[Long]] {
       def call(): Option[Long] =
         try new SnapshotLog(dir).compact(spark, rows.schema, targetFiles = 2)
-        // loud failure is the contract under a race; the exact type depends
-        // on which guard fires first (CAS conflict = IllegalState, contiguity
-        // require = IllegalArgument)
-        catch { case _: IllegalStateException | _: IllegalArgumentException => None }
+        // loud failure ("table advanced") is the contract under a race
+        catch { case _: IllegalStateException => None }
     })
     val appender = new SnapshotLog(dir)
     for (i <- 0 until 3) {

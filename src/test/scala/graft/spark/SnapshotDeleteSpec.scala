@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import TestCommits._
 
 /** C19 — copy-on-write row-level delete. The invariants under test: only
   * files holding matching rows are rewritten (every other file carries into
@@ -34,10 +35,10 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = spark.range(50).select(col("id"), (col("id") % 10).as("b"))
     // one commit, two files with disjoint bucket ranges (subdirs under the
     // stage are legal — staging walks recursively), stats recorded on b
-    val stage = log.stageDataDir(0L)
-    rows.filter(col("b") < 5).repartition(1).write.parquet(stage + "/lo")
-    rows.filter(col("b") >= 5).repartition(1).write.parquet(stage + "/hi")
-    log.commit(0L, statsColumns = Seq("b"))
+    log.appendWith(Seq("b")) { stage =>
+      rows.filter(col("b") < 5).repartition(1).write.parquet(stage + "/lo")
+      rows.filter(col("b") >= 5).repartition(1).write.parquet(stage + "/hi")
+    }
     val before = log.filesAt(0L)
     assert(before.size == 2)
 
@@ -52,7 +53,11 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lo.nonEmpty && hi.nonEmpty)
     assert(lo.forall(after.contains), "file with no matching row must carry by reference")
     assert(hi.forall(p => !after.contains(p)), "file holding matches must be rewritten")
-    assert((after -- before).forall(_.contains("snap-1")), "rewrites stage under the new snapshot")
+    // the rewrite stages under one fresh stage dir of its own
+    def dirOf(p: String) = java.nio.file.Paths.get(p).getParent
+    val rewrittenDirs = (after -- before).map(dirOf)
+    assert(rewrittenDirs.size == 1 && rewrittenDirs.head.getFileName.toString.startsWith("stage-") &&
+      !before.map(dirOf).contains(rewrittenDirs.head), s"rewrites stage apart: $rewrittenDirs")
     // rewritten files still carry stats (recorded at rewrite commit)
     assert(log.metaAt(1L).forall(m => m.stats.contains("b")))
 
@@ -71,8 +76,7 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val log = new SnapshotLog(dir)
     val df = Seq((1L, "aaaa"), (2L, null: String), (3L, "bb"))
       .toDF("id", "s")
-    df.repartition(1).write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
+    log.append(df.repartition(1))
     // p = length(s) >= 3 is NULL for id=2 — DELETE removes only TRUE rows
     val r = log.deleteWhere(spark, df.schema, length(col("s")) >= 3)
     assert(r.contains(1L))
@@ -84,8 +88,7 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("del_whole")
     val log = new SnapshotLog(dir)
     val rows = spark.range(20).select(col("id"), (col("id") % 5).as("b"))
-    rows.repartition(2).write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
+    log.append(rows.repartition(2))
     // b === 0 matches rows in both files -> both rewritten -> the parent's
     // only segment is dropped WHOLE and survivors live in the fresh staged
     // segment alone. Untagged (pre-round-7) this shape looked like a
@@ -106,8 +109,7 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("del_noop")
     val log = new SnapshotLog(dir)
     val rows = spark.range(20).select(col("id"), (col("id") % 5).as("b"))
-    rows.repartition(2).write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
+    log.append(rows.repartition(2))
     assert(log.deleteWhere(spark, rows.schema, col("b") === 99).isEmpty)
     assert(log.currentSnapshot().contains(0L))
     assert(log.scan(spark, rows.schema).count() == 20)
@@ -121,12 +123,8 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("del_keys")
     val log = new SnapshotLog(dir)
     val rows = spark.range(100).select(col("id"), (col("id") % 10).as("b"))
-    rows.filter(col("id") < 60).repartition(2)
-      .write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
-    rows.filter(col("id") >= 60).repartition(2)
-      .write.mode("overwrite").parquet(log.stageDataDir(1L))
-    log.commit(1L)
+    log.append(rows.filter(col("id") < 60).repartition(2))
+    log.append(rows.filter(col("id") >= 60).repartition(2))
 
     val drops = Seq(3L, 3L, 7L, 70L, 7L).toDF("id") // dup keys are legal input
     val r = log.deleteMatching(spark, rows.schema, drops, "id")
@@ -142,14 +140,12 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("del_all")
     val log = new SnapshotLog(dir)
     val rows = spark.range(30).select(col("id"), (col("id") % 3).as("b"))
-    rows.repartition(2).write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
+    log.append(rows.repartition(2))
     assert(log.deleteWhere(spark, rows.schema, lit(true)).contains(1L))
     assert(log.scan(spark, rows.schema).count() == 0)
     // the table keeps working: the next append lands on the empty head
-    spark.range(100, 110).select(col("id"), (col("id") % 3).as("b"))
-      .repartition(1).write.mode("overwrite").parquet(log.stageDataDir(2L))
-    log.commit(2L)
+    log.append(spark.range(100, 110).select(col("id"), (col("id") % 3).as("b"))
+      .repartition(1))
     assert(idsOf(log.scan(spark, rows.schema)) == (100L until 110L))
   }
 
@@ -157,10 +153,10 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("del_gc")
     val log = new SnapshotLog(dir)
     val rows = spark.range(40).select(col("id"), (col("id") % 4).as("b"))
-    val stage = log.stageDataDir(0L)
-    rows.filter(col("b") < 2).repartition(1).write.parquet(stage + "/lo")
-    rows.filter(col("b") >= 2).repartition(1).write.parquet(stage + "/hi")
-    log.commit(0L, statsColumns = Seq("b"))
+    log.appendWith(Seq("b")) { stage =>
+      rows.filter(col("b") < 2).repartition(1).write.parquet(stage + "/lo")
+      rows.filter(col("b") >= 2).repartition(1).write.parquet(stage + "/hi")
+    }
     val hi = log.filesAt(0L).filter(_.contains("/hi/"))
     log.deleteWhere(spark, rows.schema, col("b") === 3, statsColumns = Seq("b"))
     // removed files exist while snapshot 0 is retained (time travel)…
@@ -178,8 +174,7 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 30 docs in 10 exact-duplicate groups of 3 (id % 10 keys the content)
     val docs = spark.range(30).select(col("id"),
       concat(lit("document body number "), col("id") % 10).as("text"))
-    docs.repartition(3).write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
+    log.append(docs.repartition(3))
 
     val table = log.scan(spark, docs.schema)
     // P1/P17 shape: group by content, keep the min id, drop the rest
@@ -200,9 +195,7 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     // range-clustered commit with manifest stats on id: 4 files with
     // disjoint id ranges — the layout deleteMatching's locate should prune
     val rows = spark.range(400).select(col("id"), (col("id") % 7).as("b"))
-    rows.repartitionByRange(4, col("id"))
-      .write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L, statsColumns = Seq("id"))
+    log.append(rows.repartitionByRange(4, col("id")), statsColumns = Seq("id"))
     assert(log.metaAt(0L).size == 4 && log.metaAt(0L).forall(_.stats.contains("id")))
 
     val drops = spark.range(2).select((col("id") + 100L).as("id"))
@@ -246,15 +239,16 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = spark.range(40).select(col("id"), (col("id") * 10).as("v"))
     // two commits, two files each — four files with known id ranges
     for (i <- 0 until 2) {
-      val stage = log.stageDataDir(i.toLong)
-      rows.filter(col("id") >= i * 20 && col("id") < i * 20 + 10)
-        .repartition(1).write.parquet(stage + "/a")
-      rows.filter(col("id") >= i * 20 + 10 && col("id") < (i + 1) * 20)
-        .repartition(1).write.parquet(stage + "/b")
-      log.commit(i.toLong)
+      log.appendWith() { stage =>
+        rows.filter(col("id") >= i * 20 && col("id") < i * 20 + 10)
+          .repartition(1).write.parquet(stage + "/a")
+        rows.filter(col("id") >= i * 20 + 10 && col("id") < (i + 1) * 20)
+          .repartition(1).write.parquet(stage + "/b")
+      }
     }
     val before = log.filesAt(1L)
     assert(before.size == 4)
+    val commit1 = before.filterNot(log.filesAt(0L).toSet)
 
     // update ids 5, 15 (files 0/a and 0/b) and insert ids 100, 101
     val updates = Seq((5L, -5L), (15L, -15L), (100L, -100L), (101L, -101L))
@@ -272,10 +266,9 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     // commit-1's files (ids 20-39) held no matched key: carried by path
     // identity, zero bytes moved
     val after = log.filesAt(2L).toSet
-    val untouched = before.filter(p => p.contains("snap-1/"))
-    assert(untouched.forall(after.contains),
+    assert(commit1.size == 2 && commit1.forall(after.contains),
       "files without a matched key must carry by path identity")
-    assert(before.filterNot(p => p.contains("snap-1/")).forall(!after.contains(_)),
+    assert(before.filterNot(commit1.contains).forall(!after.contains(_)),
       "files holding matched keys must be rewritten")
     // history time-travels to the pre-merge table
     assert(log.scan(spark, rows.schema, asOf = Some(1L)).count() == 40)

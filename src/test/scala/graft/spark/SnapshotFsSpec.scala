@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import TestCommits._
 
 /** Round-5 snapshot-protocol coverage: the Hadoop-FileSystem routing (every
   * table operation against an explicit `file:`-scheme URI — the offline stand-
@@ -26,17 +27,13 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val log = new SnapshotLog(dir)
     val rows = spark.range(300).select(col("id"), (col("id") % 7).as("v"))
 
-    rows.filter(col("id") < 100).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
+    log.append(rows.filter(col("id") < 100).repartition(4))
     assert(log.currentSnapshot().contains(0L))
     assert(log.scan(spark, rows.schema).count() == 100)
     // every externalized path keeps the caller's scheme
     assert(log.currentFiles().forall(_.startsWith("file:/")), log.currentFiles().head)
 
-    rows.filter(col("id") >= 100 && col("id") < 200).repartition(4)
-      .write.mode("overwrite").parquet(log.stageDataDir(1L))
-    log.commit(1L)
+    log.append(rows.filter(col("id") >= 100 && col("id") < 200).repartition(4))
     assert(log.scan(spark, rows.schema).count() == 200)
     // time travel + incremental diff across the scheme'd store
     assert(log.scan(spark, rows.schema, asOf = Some(0L)).count() == 100)
@@ -90,9 +87,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("occ")
     val base = new SnapshotLog(dir)
     val rows = spark.range(700).select(col("id"), (col("id") % 5).as("v"))
-    rows.filter(col("id") < 100).repartition(2)
-      .write.mode("overwrite").parquet(base.stageDataDir(0L))
-    base.commit(0L)
+    base.append(rows.filter(col("id") < 100).repartition(2))
 
     // six appenders, each its own SnapshotLog instance and unique staging
     // dir, all data PRE-STAGED so the racing section is metadata-only (the
@@ -134,8 +129,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("occ_seg")
     val log = new SnapshotLog(dir)
     val rows = spark.range(50).select(col("id"), (col("id") % 3).as("v"))
-    rows.limit(10).repartition(1).write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
+    log.append(rows.limit(10).repartition(1))
     val a = new SnapshotLog(dir)
     val b = new SnapshotLog(dir)
     val stageA = a.stageUniqueDataDir()
@@ -174,8 +168,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("occ_guard")
     val log = new SnapshotLog(dir)
     val rows = spark.range(40).select(col("id"), (col("id") % 3).as("v"))
-    rows.limit(10).repartition(1).write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
+    log.append(rows.limit(10).repartition(1))
     // two "turns" both derive from snapshot 0 (the overlapping-pipeline
     // shape: each anti-joined its slice against snapshot 0's digests)
     val s1 = log.stageUniqueDataDir(); val s2 = log.stageUniqueDataDir()
@@ -188,8 +181,13 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       log.commitOptimistic(s2, requireParent = Some(0L)))
     assert(e.getMessage.contains("advanced"), e.getMessage)
     assert(log.scan(spark, rows.schema).count() == 20, "no double append")
+    // the failed conditional commit deleted its stage (no manifest lists
+    // it), so committing it again fails loudly instead of landing nothing
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s2)))
+    intercept[IllegalArgumentException](log.commitOptimistic(s2))
     // a plain (unconditional) append still lands on the new parent
-    assert(log.commitOptimistic(s2) == 2L)
+    assert(log.append(rows.filter(col("id") >= 20 && col("id") < 30).repartition(1)) == 2L)
+    assert(log.scan(spark, rows.schema).count() == 30)
   }
 
   test("manifest column stats: commit records bucket min/max; scan skips files") {
@@ -197,12 +195,12 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("stats")
     val log = new SnapshotLog(dir)
     // four staged files with disjoint, KNOWN bucket ranges (one write each)
-    val stage = log.stageDataDir(0L)
-    for (b <- 0 until 4) {
-      (0 until 25).map(i => (b * 25 + i.toLong, b)).toDF("id", "bucket")
-        .coalesce(1).write.mode("overwrite").parquet(s"$stage/part-b$b")
+    log.appendWith(Seq("bucket")) { stage =>
+      for (b <- 0 until 4) {
+        (0 until 25).map(i => (b * 25 + i.toLong, b)).toDF("id", "bucket")
+          .coalesce(1).write.mode("overwrite").parquet(s"$stage/part-b$b")
+      }
     }
-    log.commit(0L, statsColumns = Seq("bucket"))
     val meta = log.metaAt(0L)
     assert(meta.size == 4)
     assert(meta.forall(_.stats.get("bucket").isDefined),
@@ -281,9 +279,8 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.IntegerType)))
 
     // stats commit: the row count rides the footer open the stats pay for
-    (0L until 120L).map(i => (i, (i % 5).toInt)).toDF("id", "bucket")
-      .repartition(3).write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L, statsColumns = Seq("bucket"))
+    log.append((0L until 120L).map(i => (i, (i % 5).toInt)).toDF("id", "bucket")
+      .repartition(3), statsColumns = Seq("bucket"))
     val m0 = log.metaAt(0L)
     assert(m0.nonEmpty && m0.forall(_.rows.isDefined),
       s"a stats commit must record per-file rows: $m0")
@@ -294,9 +291,8 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stats-free commit: rows deliberately unrecorded (no footer IO), and a
     // partial inventory must degrade to None — a sum over it would be a
     // wrong answer, not an estimate
-    (0L until 30L).map(i => (1000L + i, 9)).toDF("id", "bucket")
-      .repartition(2).write.mode("overwrite").parquet(log.stageDataDir(1L))
-    log.commit(1L)
+    log.append((0L until 30L).map(i => (1000L + i, 9)).toDF("id", "bucket")
+      .repartition(2))
     val m1 = log.metaAt(1L)
     assert(m1.exists(_.rows.isEmpty), s"stats-free entries must not carry rows: $m1")
     assert(m1.exists(_.rows.isDefined), "parent's counted entries are carried")
@@ -408,21 +404,15 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // have no exclusive-create through this API
       val dirStrict = tmpDir("nonatomic_strict")
       val logStrict = new SnapshotLog(dirStrict)
-      rows.limit(10).repartition(1)
-        .write.mode("overwrite").parquet(logStrict.stageDataDir(0L))
-      val e = intercept[RuntimeException](logStrict.commit(0L))
+      val e = intercept[RuntimeException](logStrict.append(rows.limit(10).repartition(1)))
       assert(e.getMessage.contains("graft.fs.cas.unsafe"), e.getMessage)
       // with the documented last-writer-wins opt-in, the single-writer
       // lifecycle works end-to-end on direct-PUT metadata
       hc.setBoolean("graft.fs.cas.unsafe", true)
       val dir = tmpDir("nonatomic_snap")
       val log = new SnapshotLog(dir)
-      rows.filter(col("id") < 60).repartition(3)
-        .write.mode("overwrite").parquet(log.stageDataDir(0L))
-      log.commit(0L)
-      rows.filter(col("id") >= 60).repartition(3)
-        .write.mode("overwrite").parquet(log.stageDataDir(1L))
-      log.commit(1L)
+      log.append(rows.filter(col("id") < 60).repartition(3))
+      log.append(rows.filter(col("id") >= 60).repartition(3))
       assert(log.scan(spark, rows.schema).count() == 120)
       assert(log.scanIncremental(spark, rows.schema, 0L)
         .select("id").collect().map(_.getLong(0)).toSet == (60L until 120L).toSet)
@@ -480,9 +470,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dir = tmpDir("nonatomic_lock")
       val base = new SnapshotLog(dir)
       val rows = spark.range(700).select(col("id"), (col("id") % 5).as("v"))
-      rows.filter(col("id") < 100).repartition(2)
-        .write.mode("overwrite").parquet(base.stageDataDir(0L))
-      base.commit(0L)
+      base.append(rows.filter(col("id") < 100).repartition(2))
       val writers = (0 until 6).map { i =>
         val log = new SnapshotLog(dir)
         val stage = log.stageUniqueDataDir()
@@ -527,15 +515,15 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("stats_str_ts")
     val log = new SnapshotLog(dir)
     val langs = Seq("de", "en", "fr")
-    val stage = log.stageDataDir(0L)
-    for ((lang, i) <- langs.zipWithIndex) {
-      spark.range(20).select(
-        concat(lit(s"https://site-$lang.example/page/padding/"), col("id")).as("url"),
-        (lit(1700000000L + i * 100000L) + col("id")).cast("timestamp").as("warc_ts"),
-        lit(lang).as("lang"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$stage/part-$i")
+    log.appendWith(Seq("lang", "warc_ts", "url")) { stage =>
+      for ((lang, i) <- langs.zipWithIndex) {
+        spark.range(20).select(
+          concat(lit(s"https://site-$lang.example/page/padding/"), col("id")).as("url"),
+          (lit(1700000000L + i * 100000L) + col("id")).cast("timestamp").as("warc_ts"),
+          lit(lang).as("lang"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$stage/part-$i")
+      }
     }
-    log.commit(0L, statsColumns = Seq("lang", "warc_ts", "url"))
     val meta = log.metaAt(0L)
     assert(meta.size == 3)
     assert(meta.forall(_.stats.get("lang").exists(_.isInstanceOf[StrBounds])),
@@ -666,13 +654,11 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir("snap_evo")
     val log = new SnapshotLog(dir)
     val v1 = spark.range(10).select(col("id"), (col("id") % 3).as("v"))
-    v1.repartition(2).write.mode("overwrite").parquet(log.stageDataDir(0L))
-    log.commit(0L)
+    log.append(v1.repartition(2))
     // widen the table: later commits carry an `extra` column (+ its stats)
     val v2 = spark.range(10, 20)
       .select(col("id"), (col("id") % 3).as("v"), (col("id") * 2).as("extra"))
-    v2.repartition(2).write.mode("overwrite").parquet(log.stageDataDir(1L))
-    log.commit(1L, statsColumns = Seq("extra"))
+    log.append(v2.repartition(2), statsColumns = Seq("extra"))
 
     // read at the widened schema: pre-evolution files null-fill the column
     // (parquet read-schema reconciliation — the additive half of Iceberg
@@ -761,8 +747,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def table(name: String): (String, SnapshotLog) = {
       val dir = tmpDir(name)
       val log = new SnapshotLog(dir)
-      rows.repartition(2).write.mode("overwrite").parquet(log.stageDataDir(0L))
-      log.commit(0L)
+      log.append(rows.repartition(2))
       (dir, log)
     }
     def fileLines(dir: String, log: SnapshotLog): Seq[String] =
@@ -781,7 +766,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     readsLoudly(inlineLog, list)
     // a segment whose entries carry no size
     val (sizelessDir, sizelessLog) = table("old_sizeless")
-    val seg = P.get(sizelessDir, "meta", "seg-0.txt")
+    val Seq(seg) = segmentsOf(sizelessDir, 0L)
     F.writeString(seg, fileLines(sizelessDir, sizelessLog).mkString("", "\n", "\n"))
     readsLoudly(sizelessLog, seg)
     // a gated ANN index without its serving manifest
@@ -796,4 +781,94 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = intercept[IllegalStateException](Embeddings.lshTopKIndexed(spark, path, q, 5))
     assert(e.getMessage.contains("_index_manifest.txt"), e.getMessage)
   }
+
+  test("stage names carry a whole random UUID") {
+    val log = new SnapshotLog(tmpDir("stage_name"))
+    val names = Seq.fill(3)(new java.io.File(log.stageUniqueDataDir()).getName)
+    for (n <- names) {
+      assert(n.startsWith("stage-"), n)
+      // only a full canonical UUID round-trips through fromString
+      val u = n.stripPrefix("stage-")
+      assert(scala.util.Try(java.util.UUID.fromString(u).toString).toOption.contains(u), n)
+    }
+    assert(names.distinct.size == names.size)
+  }
+
+  test("a commit that throws after the manifest CAS keeps its files: dedup append, streaming batch, compact, delete") {
+    val sp = spark; import sp.implicits._
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.setBoolean("graft.fs.atomic.rename", false)
+    hc.set("graft.fs.cas.lock", classOf[ReleaseFailsOnceLock].getName)
+    def causes(t: Throwable): Seq[Throwable] =
+      Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
+    // the next commit's lock release throws, AFTER its manifest PUT: the
+    // snapshot is committed, so the files it lists must stay
+    def failsAfterCas(body: => Any): Unit = {
+      ReleaseFailsOnceLock.armed.set(true)
+      val e = intercept[Exception](body)
+      assert(causes(e).exists(_.getMessage == ReleaseFailsOnceLock.Message), e)
+      assert(!ReleaseFailsOnceLock.armed.get, "the armed release never ran")
+    }
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("id").as[Long].collect().toSeq.sorted
+    try {
+      // a dedup append
+      val dd = tmpDir("release_dedup")
+      val batch = spark.createDataset((0 until 30).map(i => Schemas.Extracted(
+        s"https://rel/$i", i % 8, "html", Seq(s"release text $i"), s"release text $i",
+        10L + i, i.toLong))).toDF()
+      failsAfterCas(Pipelines.appendDeduped(spark, batch, dd))
+      val dlog = new SnapshotLog(dd)
+      assert(dlog.currentSnapshot().contains(0L))
+      assert(dlog.scan(spark, Pipelines.dedupedSchema).count() == 30)
+      // a streaming extract batch: its txn is recorded, so the replay skips
+      // it — the rows must be in the committed snapshot. The appId is given:
+      // generating one settles a marker through the same lock
+      val (src, dst, ck) = (tmpDir("release_src"), tmpDir("release_dst"), tmpDir("release_ck"))
+      new SnapshotLog(src).append(spark.createDataset(Synth.corpus(40)).toDF().repartition(2))
+      def stream() = StreamingExtract.startTableToTable(spark, src, dst, ck, 8,
+        appId = Some("release-test")).awaitTermination()
+      failsAfterCas(stream())
+      val dstLog = new SnapshotLog(dst)
+      assert(dstLog.txnVersion("release-test").contains(0L))
+      assert(dstLog.scan(spark, Schemas.extractedSchema).count() == 40)
+      stream()
+      assert(dstLog.currentSnapshot().contains(0L))
+      assert(dstLog.scan(spark, Schemas.extractedSchema).count() == 40)
+      // compact, then a key-set delete
+      val log = new SnapshotLog(tmpDir("release_rewrite"))
+      val rows = spark.range(200).select(col("id"), (col("id") % 7).as("v"))
+      log.append(rows.repartition(8))
+      failsAfterCas(log.compact(spark, rows.schema, targetFiles = 2))
+      assert(log.currentSnapshot().contains(1L))
+      assert(ids(log.scan(spark, rows.schema)) == (0L until 200L))
+      failsAfterCas(log.deleteMatching(spark, rows.schema, Seq(3L, 150L).toDF("id"), "id"))
+      assert(log.currentSnapshot().contains(2L))
+      assert(ids(log.scan(spark, rows.schema)) == (0L until 200L).filterNot(Set(3L, 150L)))
+    } finally {
+      ReleaseFailsOnceLock.armed.set(false)
+      hc.unset("graft.fs.atomic.rename")
+      hc.unset("graft.fs.cas.lock")
+    }
+  }
+}
+
+/** A [[CommitLock.Provider]] for fault injection: no exclusion (its test
+  * commits from one thread), and a lease whose release throws once while
+  * `armed` — a failure after the manifest PUT it guards. Selected with
+  * `graft.fs.cas.lock=graft.spark.ReleaseFailsOnceLock` on a store treated
+  * as non-atomic.
+  */
+final class ReleaseFailsOnceLock extends CommitLock.Provider {
+  def create(io: GraftIo): CommitLock = () => new CommitLock.Lease {
+    def renew(): Unit = ()
+    def release(): Unit =
+      if (ReleaseFailsOnceLock.armed.getAndSet(false))
+        throw new java.io.IOException(ReleaseFailsOnceLock.Message)
+  }
+}
+
+object ReleaseFailsOnceLock {
+  val Message = "injected: commit lock release failed"
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import TestCommits._
 
 /** Model-based fuzz of the full snapshot-table lifecycle: a SEEDED random
   * sequence of operations (append commit, replace commit, compaction,
@@ -48,24 +49,20 @@ class SnapshotModelSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (step <- 1 to 40) {
       val op = rnd.nextInt(15)
       op match {
-        case 0 | 1 | 2 | 3 => // append commit of 1-20 fresh rows; op 3 goes
-          // through the optimistic path (unique staging dir, id allocated at
-          // the manifest CAS) so strict and OCC commits interleave freely
+        case 0 | 1 | 2 | 3 => // append commit of 1-20 fresh rows; op 3 is
+          // conditional on the head it read, so plain and conditional
+          // appends interleave freely
           val n = 1 + rnd.nextInt(20)
           val fresh = (nextId until nextId + n)
           nextId += n
           val id =
             if (op == 3) {
+              val head = log.currentSnapshot().getOrElse(-1L)
               val stage = log.stageUniqueDataDir()
               rows(fresh).repartition(1 + rnd.nextInt(3))
                 .write.mode("overwrite").parquet(stage)
-              log.commitOptimistic(stage)
-            } else {
-              val id0 = log.nextSnapshotId()
-              rows(fresh).repartition(1 + rnd.nextInt(3))
-                .write.mode("overwrite").parquet(log.stageDataDir(id0))
-              log.commit(id0)
-            }
+              log.commitOptimistic(stage, requireParent = Some(head))
+            } else log.append(rows(fresh).repartition(1 + rnd.nextInt(3)))
           current = (current ++ fresh).sorted
           history += id -> current
           // incremental invariant: the appended rows ARE the incremental read
@@ -80,21 +77,12 @@ class SnapshotModelSpec extends AnyFunSuite with BeforeAndAfterAll {
           val n = 1 + rnd.nextInt(15)
           val fresh = (nextId until nextId + n)
           nextId += n
-          val id = log.nextSnapshotId()
-          rows(fresh).repartition(1 + rnd.nextInt(3))
-            .write.mode("overwrite").parquet(log.stageDataDir(id))
-          log.commitReplace(id)
+          val id = log.replace(rows(fresh).repartition(1 + rnd.nextInt(3)))
           current = fresh.sorted
           history += id -> current
         case 5 => // compaction: content must be preserved bit-for-bit
-          try log.compact(spark, schema, targetFiles = 1 + rnd.nextInt(3)).foreach { id =>
+          log.compact(spark, schema, targetFiles = 1 + rnd.nextInt(3)).foreach { id =>
             history += id -> current
-          } catch {
-            case _: IllegalStateException =>
-              // crashed-stage residue occupies the next id (op 9): compact
-              // refuses rather than deleting it — apply the documented
-              // operator remedy (abort the dead stage) and move on
-              log.abort(log.nextSnapshotId())
           }
         case 6 => // expire: drops old history, keeps content; registered
           // stream markers clamp it (C25) — every snapshot at-or-after the
@@ -113,29 +101,22 @@ class SnapshotModelSpec extends AnyFunSuite with BeforeAndAfterAll {
         case 7 => // orphan sweep (age gate keeps everything fresh — no-op on content)
           log.removeOrphanFiles(minAgeMs = 3600000L): Unit
         case 8 => // staged-then-aborted write: invisible throughout
-          val id = log.nextSnapshotId()
-          rows(Seq(9999990L)).write.mode("overwrite").parquet(log.stageDataDir(id))
+          val stage = log.stageUniqueDataDir()
+          rows(Seq(9999990L)).write.mode("overwrite").parquet(stage)
           assert(scanIds() == current, s"step $step: staged write leaked into scan")
-          log.abort(id)
-        case 9 => // crashed stage residue left behind (some future id)
-          val id = log.nextSnapshotId() + 3 + rnd.nextInt(5)
-          rows(Seq(9999991L)).write.mode("overwrite").parquet(log.stageDataDir(id))
-        // (removeOrphanFiles must not reclaim it inside the age window; a
-        // later commit colliding with the id is prevented by monotonic ids
-        // only under single-writer — here ids advance past it eventually)
+          log.abortStage(stage)
+        case 9 => // crashed stage residue left behind
+          rows(Seq(9999991L)).write.mode("overwrite").parquet(log.stageUniqueDataDir())
+        // (removeOrphanFiles must not reclaim it inside the age window, and
+        // no later commit collides with it: every stage name is unique)
         case 10 | 11 => // copy-on-write delete of a random id range (C19)
           if (current.nonEmpty) {
             val lo = current(rnd.nextInt(current.size))
             val hi = lo + 1 + rnd.nextInt(10)
-            try log.deleteWhere(spark, schema,
+            log.deleteWhere(spark, schema,
                 col("id") >= lo && col("id") < hi).foreach { id =>
               current = current.filterNot(i => i >= lo && i < hi)
               history += id -> current
-            } catch {
-              case _: IllegalStateException =>
-                // crashed-stage residue occupies the next id — same remedy
-                // as compact: abort the dead stage, retry next time around
-                log.abort(log.nextSnapshotId())
             }
           }
         case 12 => // copy-on-write upsert: replace existing ids + insert fresh
@@ -148,16 +129,10 @@ class SnapshotModelSpec extends AnyFunSuite with BeforeAndAfterAll {
             val n = rnd.nextInt(5)
             val fresh = (nextId until nextId + n)
             nextId += n
-            try {
-              val id = log.upsertMatching(spark, schema,
-                rows(matched ++ fresh), "id")
-              current = (current ++ fresh).sorted
-              history += id -> current
-            } catch {
-              case _: IllegalStateException =>
-                // crashed-stage residue occupies the next id — same remedy
-                log.abort(log.nextSnapshotId())
-            }
+            val id = log.upsertMatching(spark, schema,
+              rows(matched ++ fresh), "id")
+            current = (current ++ fresh).sorted
+            history += id -> current
           }
         case 13 => // register/refresh a stream marker at a random offset
           // (-1 = registered before any batch committed: pins all history)
