@@ -1,7 +1,7 @@
 package graft.probe
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Bench, Probe, SubmitMain}
 import graft.spark.{ExtractJob, Pipelines, Schemas, SnapshotLog, Synth}
@@ -15,16 +15,18 @@ object Tables {
   private def hasBenchPages: Boolean = new java.io.File(Bench.pagesPath).isDirectory
 
   /** graft.Bench's pages table when a bench run left it behind, else a
-    * 40k-page synthetic stand-in.
+    * 40k-page synthetic stand-in written to parquet under `dir` — a file
+    * scan, as a pipeline reads pages: a local relation would ship its whole
+    * payload inside the task closures of every evaluation.
     */
-  private def benchPages(spark: SparkSession): Dataset[Schemas.Page] = {
+  private def benchPages(spark: SparkSession, dir: String): Dataset[Schemas.Page] = {
     import spark.implicits._
-    if (hasBenchPages)
-      spark.read.schema(Schemas.pagesSchema).parquet(Bench.pagesPath).as[Schemas.Page]
-    else {
+    val path = if (hasBenchPages) Bench.pagesPath else {
       println(s"${Bench.pagesPath} missing: synthesizing a 40k stand-in")
-      spark.createDataset(Synth.corpus(40000))
+      spark.createDataset(Synth.corpus(40000)).write.parquet(s"$dir/pages")
+      s"$dir/pages"
     }
+    spark.read.schema(Schemas.pagesSchema).parquet(path).as[Schemas.Page]
   }
 
   /** Seed `dir` with extracted rows [0, rows) as ONE commit range-clustered
@@ -171,42 +173,55 @@ object Tables {
   }
 
   /** The resume anti-join's three regimes (OPTIMIZATION_r07.md §9): the
-    * pending set evaluated under each FORCED regime over the same fixture,
-    * with wall time AND shuffle write bytes/records — bytes are the claim
-    * that matters (payload exchange O(pages) -> O(pages ∩ done)) and,
-    * unlike seconds, do not depend on the host's load.
+    * pending set evaluated under each FORCED regime, with wall time AND
+    * shuffle write bytes/records — bytes are the claim that matters (which
+    * exchange, if any, carries the pages payload) and, unlike seconds, do
+    * not depend on the host's load. Two shapes, by url-hash slices:
+    *  - "thirds": done = third 0, batch = every page (the 1/3 overlap of
+    *    the round-7 measurement); broadcast and shuffle;
+    *  - "quarters": done = quarters {0,1,2}, batch = quarters {2,3}, so
+    *    |batch| < |done| and a budget between the two selects hits;
+    *    broadcast, hits and shuffle.
     */
   def resume(args: Seq[String]): Unit = Probe.withSession() { spark =>
-    val pages = benchPages(spark)
     Probe.withTempDir("resume") { work =>
-      // done = the first url-hash third extracted; pending ground truth = the
-      // other two thirds, so the maybe-subset is ~1/3 of the pages payload
-      val table = s"$work/extracted"
-      ExtractJob.run(spark, pages.filter(pmod(hash(col("url")), lit(3)) === 0),
-        table, numBuckets = Probe.cpus * 4)
-      val log = new SnapshotLog(table)
-      println(s"fixture: pages=${pages.count()} doneRows=" +
-        s"${SnapshotLog.rowCountOf(log.metaAt(log.currentSnapshot().get))}")
-      def measure(confs: (String, String)*): Unit = {
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        try {
-          val ((t, tag), m) = Probe.metered(spark)(Probe.timed(runs = 2) {
-            val (df, tag, bloom) = ExtractJob.pendingPages(spark, pages, log, log.currentSnapshot())
-            try df.write.mode("overwrite").format("noop").save()
-            finally bloom.foreach(_.destroy())
-            tag
-          })
-          // the meter also saw timed's warm-up pass; every pass moves the same bytes
-          val passes = t.secs.size + 1
-          println(f"regime=$tag%-10s min=${t.min}%6.2f s  " +
-            f"shuffleMB/run=${m.shuffleBytes.get / passes / 1e6}%9.1f  " +
-            f"shuffleRows/run=${m.shuffleRecords.get / passes}%10d  ($t)")
-        } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+      val pages = benchPages(spark, work)
+      def shape(label: String, done: Column, batchRows: Column)(
+          budgets: (Long, Long) => Seq[Option[Long]]): Unit = {
+        val table = s"$work/$label"
+        ExtractJob.run(spark, pages.filter(done), table,
+          numBuckets = Probe.cpus * 4)
+        val log = new SnapshotLog(table)
+        val batch = pages.filter(batchRows)
+        val nBatch = batch.count()
+        val nDone = SnapshotLog.rowCountOf(log.metaAt(log.currentSnapshot().get)).get
+        println(s"shape=$label: batch=$nBatch doneRows=$nDone")
+        budgets(nBatch, nDone).foreach { budget =>
+          // auto-broadcast off: only a regime's own hints broadcast, so the
+          // shuffle regime is a real sort-merge join even on the stand-in
+          val confs = budget.map("graft.extract.broadcastDoneRows" -> _.toString).toSeq :+
+            ("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+          confs.foreach { case (k, v) => spark.conf.set(k, v) }
+          try {
+            val ((t, tag), m) = Probe.metered(spark)(Probe.timed(runs = 5) {
+              val (df, tag) = ExtractJob.pendingPages(spark, batch, log, log.currentSnapshot())
+              df.write.mode("overwrite").format("noop").save()
+              tag
+            })
+            // the meter also saw timed's warm-up pass; every pass moves the same bytes
+            val passes = t.secs.size + 1
+            println(f"  regime=$tag%-10s " +
+              f"shuffleMB/run=${m.shuffleBytes.get / passes / 1e6}%9.1f  " +
+              f"shuffleRows/run=${m.shuffleRecords.get / passes}%10d  ($t)")
+          } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+        }
       }
-      measure() // broadcast (default budgets): reference point, no pages shuffle
-      measure("graft.extract.broadcastDoneRows" -> "0") // bloom middle regime
-      measure("graft.extract.broadcastDoneRows" -> "0", // sort-merge fallback
-        "graft.extract.bloomDoneRows" -> "0")
+      // None = the default budget (broadcast); Some(0) forces shuffle
+      val third = pmod(hash(col("url")), lit(3))
+      shape("thirds", third === 0, lit(true))((_, _) => Seq(None, Some(0L)))
+      val quarter = pmod(hash(col("url")), lit(4))
+      shape("quarters", quarter <= 2, quarter >= 2)((nBatch, nDone) =>
+        Seq(None, Some((nBatch + nDone) / 2), Some(0L)))
     }
   }
 
@@ -222,8 +237,8 @@ object Tables {
   }
 
   private def turnStepsOn(spark: SparkSession): Unit = {
-    val pages = benchPages(spark)
     Probe.withTempDir("turn_steps") { work =>
+      val pages = benchPages(spark, work)
       val table = s"$work/extracted"; val dd = s"$work/deduped"
       val turns = 3
       def step[T](label: String)(body: => T): T = {

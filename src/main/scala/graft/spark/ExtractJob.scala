@@ -1,12 +1,10 @@
 package graft.spark
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.util.sketch.BloomFilter
 
 /** §3.1 — the flagship extract pipeline, Spark-native:
   *
@@ -117,14 +115,15 @@ object ExtractJob {
     * commit, lineage. Returns the committed snapshot id (None = nothing pending).
     *
     * `pages` should be DETERMINISTIC — a committed-file scan or any plan
-    * whose re-evaluation yields the same rows. The bloom resume regime
-    * (round 7) evaluates it once per union branch; a row that flips sides
-    * between evaluations (sampling, rand()-derived columns) would be
-    * extracted twice or never, so [[pendingPages]] sends a plan Catalyst
+    * whose re-evaluation yields the same rows. The hits resume regime
+    * evaluates it three times (its count, the url side of the hit
+    * semi-join, the anti-join's probe side); a url that appeared only in a
+    * later evaluation (sampling, rand()-derived columns) would miss the hit
+    * set and be extracted again, so [[pendingPages]] sends a plan Catalyst
     * marks nondeterministic to the single-evaluation sort-merge regime
     * instead. A source that is nondeterministic without saying so (a fresh
-    * shuffle's order) is not caught. (Same contract as
-    * [[Pipelines.appendDeduped]].)
+    * shuffle's order) is not caught. ([[Pipelines.appendDeduped]] has the
+    * same contract and refuses a plan Catalyst marks nondeterministic.)
     *
     * `force = true` is the reference's `extractDocuments=true` re-extract mode
     * (claim.py:34: unconditionally re-runs extraction over ALL files,
@@ -149,116 +148,102 @@ object ExtractJob {
     val t0 = System.nanoTime()
 
     // C2 resume: pending = pages \ done (per-url, finer than the reference's
-    // all-or-nothing JSON-folder probe at claim.py:17-20).
-    //
-    // The join strategy is chosen DELIBERATELY (round 7). Left alone, the
-    // planner picked a SortMergeJoin here — the ManifestFileIndex's exact
-    // sizeInBytes is the WHOLE table's bytes, so the url projection never
-    // estimated under the broadcast threshold — and a sort-merge LeftAnti
-    // SHUFFLES THE FULL PAGES PAYLOAD (url, html, text) on url before the
-    // kernel ever runs: the exact payload exchange this job's design forbids
-    // (plan-audited; measured as two concurrent ~3 s stages per bench
-    // pipeline turn, growing with the table). AQE could only downgrade the
-    // join AFTER the pages side's shuffle map stage had already materialized,
-    // which is where the cost lives. The done side's true row count comes
-    // straight from the manifest (per-file `#n=` counts recorded at commit
-    // from the same footer open the stats pay for — zero Spark jobs, round
-    // 7); a table holding any entry without a count (a stats-free commit)
-    // degrades to a metadata-only count job (column-pruned parquet count = footer row
-    // counts, no data pages). Below the budget the done urls broadcast and
-    // the payload never leaves its scan partitions.
-    //
-    // MIDDLE REGIME (guide §3.2, round 7): past the broadcast budget but
-    // under `graft.extract.bloomDoneRows`, a Bloom filter over the done urls
-    // (~1.2 GB per billion keys at 1% fpp — `graft.extract.bloomFpp`) splits
-    // the pages scan: bloom-NEGATIVE rows are PROVEN pending (no false
-    // negatives) and flow to the kernel scan-local, only the maybe-subset —
-    // true matches plus fpp — anti-joins the done set, so the payload
-    // exchange shrinks from O(pages) to O(pages ∩ done). The cost is a
-    // second pages scan (one branch each), the §8 trade: scans are local
-    // columnar reads, the shuffle is the network. `pages` must be
-    // deterministic between the two branch evaluations; a plan Catalyst
-    // knows to be nondeterministic falls through to the sort-merge regime.
-    //
-    // Above the bloom budget (a 100 TB resume against billions of done
-    // urls) the sort-merge anti-join IS the correct plan — at that overlap
-    // the batch payload must co-partition with the done set — so the
-    // fallback stays, loudly shaped. All three budgets are confs, not
-    // constants tuned to this sandbox.
+    // all-or-nothing JSON-folder probe at claim.py:17-20), in one of the
+    // three regimes of [[pendingPages]].
     //
     // The append commit is conditional on the snapshot the resume read: a
     // concurrent run that committed first makes this one fail loudly instead
     // of landing the same pending urls twice
     val base = log.currentSnapshot()
-    val (pending, _, bloom) =
-      if (force) (pages, "force", None) else pendingPages(spark, pages, log, base)
-    // the bloom regime's filter broadcast is read by the write pass only:
-    // released once the commit is done, not left to the ContextCleaner's
-    // GC cadence
+    val pending = if (force) pages else pendingPages(spark, pages, log, base)._1
+    val gateObs = Observation()
+    val lineageObs = Observation()
+    // the one wide exchange co-locates extracted rows (post-kernel, html
+    // already dropped) by bucket for the data-file layout. The gate
+    // counts before it, map-side, so `ok` never rides the exchange. The
+    // lineage counts run after it, in the write's result stage: the
+    // DAGScheduler applies a result task's accumulator updates once per
+    // partition, while a recomputed shuffle-map task's updates would be
+    // applied again (and a doubled bit_xor cancels itself out).
+    val extracted = bucketLayout(extractDF(pending, numBuckets)
+      .observe(gateObs, count(lit(1)).as("total"), count(when(col("ok"), 1)).as("ok"))
+      .drop("ok"), numBuckets)
+      .observe(lineageObs, udaf(new BucketLineage(numBuckets),
+        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaLong))(
+        col("bucket"), col("n_bytes"), col("checksum")).as("lineage"))
+
+    // a unique stage, so two concurrent runs never share (and overwrite)
+    // one directory
+    val stage = log.stageUniqueDataDir()
     try {
-      val gateObs = Observation()
-      val lineageObs = Observation()
-      // the one wide exchange co-locates extracted rows (post-kernel, html
-      // already dropped) by bucket for the data-file layout. The gate
-      // counts before it, map-side, so `ok` never rides the exchange. The
-      // lineage counts run after it, in the write's result stage: the
-      // DAGScheduler applies a result task's accumulator updates once per
-      // partition, while a recomputed shuffle-map task's updates would be
-      // applied again (and a doubled bit_xor cancels itself out).
-      val extracted = bucketLayout(extractDF(pending, numBuckets)
-        .observe(gateObs, count(lit(1)).as("total"), count(when(col("ok"), 1)).as("ok"))
-        .drop("ok"), numBuckets)
-        .observe(lineageObs, udaf(new BucketLineage(numBuckets),
-          Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaLong))(
-          col("bucket"), col("n_bytes"), col("checksum")).as("lineage"))
+      extracted.write.mode("overwrite").parquet(stage)
+      val gate = gateObs.get
+      val total = gate("total").asInstanceOf[Long]
+      if (total == 0L) { log.abortStage(stage); return None } // nothing pending
+      val ok = gate("ok").asInstanceOf[Long]
+      if (ok.toDouble / total < SuccessRatio) throw GateFailed(ok, total) // A1
+    } catch { case e: Throwable => log.abortStage(stage); throw e }
+    // bucket min/max ride the manifest: a later `bucket = k` read (resume
+    // repair, per-bucket audit) plans only the files whose range covers k.
+    // A failed commit cleans its own stage where that is safe
+    // (SnapshotLog.commitStaged).
+    val parent = base.getOrElse(-1L)
+    val snapshotId =
+      if (force) log.commitReplace(stage, parent, statsColumns = Seq("bucket"))
+      else log.commitOptimistic(stage, statsColumns = Seq("bucket"),
+        requireParent = Some(parent))
 
-      // a unique stage, so two concurrent runs never share (and overwrite)
-      // one directory
-      val stage = log.stageUniqueDataDir()
-      try {
-        extracted.write.mode("overwrite").parquet(stage)
-        val gate = gateObs.get
-        val total = gate("total").asInstanceOf[Long]
-        if (total == 0L) { log.abortStage(stage); return None } // nothing pending
-        val ok = gate("ok").asInstanceOf[Long]
-        if (ok.toDouble / total < SuccessRatio) throw GateFailed(ok, total) // A1
-      } catch { case e: Throwable => log.abortStage(stage); throw e }
-      // bucket min/max ride the manifest: a later `bucket = k` read (resume
-      // repair, per-bucket audit) plans only the files whose range covers k.
-      // A failed commit cleans its own stage where that is safe
-      // (SnapshotLog.commitStaged).
-      val parent = base.getOrElse(-1L)
-      val snapshotId =
-        if (force) log.commitReplace(stage, parent, statsColumns = Seq("bucket"))
-        else log.commitOptimistic(stage, statsColumns = Seq("bucket"),
-          requireParent = Some(parent))
-
-      // A3 lineage: per-bucket doc/byte counts + order-insensitive checksum
-      // (bit_xor of per-row xxhash64 — partition-internal order cannot
-      // matter), one metrics file per snapshot
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      val counts = lineageObs.get("lineage").asInstanceOf[scala.collection.Seq[Long]]
-      val rows = (0 until numBuckets).filter(k => counts(3 * k) > 0L).map { k =>
-        Schemas.MetricsRow(snapshotId, k, counts(3 * k), counts(3 * k + 1),
-          counts(3 * k + 2), wallMs)
-      }
-      spark.createDataset(rows).coalesce(1)
-        .write.mode("append").parquet(s"$tableDir/metrics")
-      Some(snapshotId)
-    } finally bloom.foreach(_.destroy())
+    // A3 lineage: per-bucket doc/byte counts + order-insensitive checksum
+    // (bit_xor of per-row xxhash64 — partition-internal order cannot
+    // matter), one metrics file per snapshot
+    val wallMs = (System.nanoTime() - t0) / 1000000L
+    val counts = lineageObs.get("lineage").asInstanceOf[scala.collection.Seq[Long]]
+    val rows = (0 until numBuckets).filter(k => counts(3 * k) > 0L).map { k =>
+      Schemas.MetricsRow(snapshotId, k, counts(3 * k), counts(3 * k + 1),
+        counts(3 * k + 2), wallMs)
+    }
+    spark.createDataset(rows).coalesce(1)
+      .write.mode("append").parquet(s"$tableDir/metrics")
+    Some(snapshotId)
   }
 
-  /** The resume pending-set derivation (see run()'s regime walkthrough).
-    * Returns the frame, the regime actually chosen ("broadcast" | "bloom" |
-    * "shuffle") so tests can pin that a forced conf really selected its
-    * branch — a silently-renamed conf key would otherwise turn the regime
-    * tests into three copies of the broadcast test — and, in the bloom
-    * regime, the filter's broadcast: the caller destroys it once the frame
-    * has been evaluated for the last time. `base` is the done snapshot.
+  /** The resume pending set: `pages` anti-joined against the urls of the
+    * done snapshot `base`. Returns the frame and the regime actually chosen
+    * ("broadcast" | "hits" | "shuffle"), so tests can pin that a forced
+    * conf really selected its branch — a silently-renamed conf key would
+    * otherwise turn the regime tests into copies of the broadcast test.
+    *
+    * The join strategy is chosen DELIBERATELY (round 7). Left alone, the
+    * planner picks a SortMergeJoin here — the ManifestFileIndex's exact
+    * sizeInBytes is the WHOLE table's bytes, so the url projection never
+    * estimates under the broadcast threshold — and a sort-merge LeftAnti
+    * SHUFFLES THE FULL PAGES PAYLOAD (url, html, text) on url before the
+    * kernel ever runs: the exact payload exchange this job's design forbids
+    * (measured as two concurrent ~3 s stages per bench pipeline turn,
+    * growing with the table). AQE could only downgrade the join AFTER the
+    * pages side's shuffle map stage had materialized, which is where the
+    * cost lives. The done side's row count comes straight from the
+    * manifest (per-file `#n=` counts, zero Spark jobs); a table holding an
+    * entry without a count degrades to a metadata-only count job.
+    *
+    * One budget, `graft.extract.broadcastDoneRows` (default 4M), bounds
+    * every url set this derivation broadcasts:
+    *  - "broadcast": the done rows fit it. The done urls broadcast and the
+    *    payload never leaves its scan partitions.
+    *  - "hits": the done rows exceed it, but the batch's urls fit it and
+    *    `pages` is deterministic (it is evaluated three times, see [[run]]).
+    *    The batch urls broadcast into a semi-join with the done urls, which
+    *    stay in their scan partitions; its hits (done ∩ batch: no more urls
+    *    than the batch, so within the same budget) broadcast into the
+    *    anti-join. Only urls move.
+    *  - "shuffle": anything else (a batch over the budget against a done
+    *    set over it, or a nondeterministic `pages`). At that overlap the
+    *    batch payload must co-partition with the done set, so the
+    *    sort-merge anti-join IS the correct plan.
     */
   private[graft] def pendingPages(spark: SparkSession,
       pages: Dataset[Schemas.Page], log: SnapshotLog, base: Option[Long])
-      : (Dataset[Schemas.Page], String, Option[Broadcast[BloomFilter]]) = {
+      : (Dataset[Schemas.Page], String) = {
     import spark.implicits._
     val meta = base.map(log.metaAt).getOrElse(Seq.empty)
     val done = log.scanEntries(spark, Schemas.extractedSchema, meta)
@@ -266,67 +251,15 @@ object ExtractJob {
     val doneRows = SnapshotLog.rowCountOf(meta).getOrElse(done.count())
     val budget = spark.conf.get(
       "graft.extract.broadcastDoneRows", "4000000").toLong
-    val bloomBudget = spark.conf.get(
-      "graft.extract.bloomDoneRows", "100000000").toLong
-    if (doneRows <= budget)
-      (pages.join(broadcast(done), Seq("url"), "left_anti").as[Schemas.Page],
-        "broadcast", None)
-    // the bloom split evaluates `pages` twice, once per branch: a plan that
-    // may yield different rows each time takes the one-evaluation join
-    else if (doneRows <= bloomBudget &&
-        pages.queryExecution.analyzed.deterministic) {
-      val fpp = spark.conf.get("graft.extract.bloomFpp", "0.01").toDouble
-      val bfB = spark.sparkContext.broadcast(
-        buildUrlBloom(spark, log, meta, doneRows, fpp))
-      // null url ⇒ NOT maybe: SQL null matches nothing in an anti-join,
-      // so such a row is pending — routing it through the proven-pending
-      // branch preserves that without the UDF touching null
-      val maybeDone = udf(MaybeDone(bfB))
-      val proven = pages.filter(!maybeDone(col("url")))
-      val checked = pages.toDF().filter(maybeDone(col("url")))
-        .join(done, Seq("url"), "left_anti")
-      (proven.toDF().unionByName(checked).as[Schemas.Page], "bloom", Some(bfB))
-    } else
-      (pages.join(done, Seq("url"), "left_anti").as[Schemas.Page], "shuffle",
-        None)
-  }
-
-  /** The bloom regime's "maybe done" test on a url; null is never done. */
-  private[graft] final case class MaybeDone(filter: Broadcast[BloomFilter])
-      extends (String => Boolean) {
-    def apply(url: String): Boolean =
-      url != null && filter.value.mightContainString(url)
-  }
-
-  /** Build the done-url Bloom filter at the REQUESTED capacity. Spark 4's
-    * `stat.bloomFilter` routes through `BloomFilterAggregate`, which
-    * silently clamps the filter to the runtime-filter caps
-    * (`spark.sql.optimizer.runtime.bloomFilter.maxNumItems`/`maxNumBits`,
-    * defaults 4M items / 8 MB) — measured: a 10M-key build came back at
-    * exactly 67,108,864 bits with ~10% fp instead of the requested 1%, and
-    * at the regime's 10^8 top end the filter would saturate toward fp ≈ 1
-    * (every page "maybe done" — the whole payload back in the anti-join
-    * shuffle, plus a wasted scan). The middle regime only ever runs ABOVE
-    * the 4M broadcast budget, so the default caps bind across its entire
-    * range. The caps are raised in an ISOLATED throwaway session
-    * (`newSession` — own SQLConf, shared SparkContext): they also govern
-    * the optimizer's AUTOMATIC runtime-filter injection, and raising them
-    * on the caller's session for the duration of a multi-second build
-    * would let any concurrently planned query (the streaming twin shares
-    * the session) size its own injected blooms with this unbounded budget.
-    */
-  private def buildUrlBloom(spark: SparkSession, log: SnapshotLog,
-      meta: Seq[SnapshotLog.FileMeta], doneRows: Long,
-      fpp: Double): BloomFilter = {
-    val items = math.max(doneRows, 1L)
-    val bits = BloomFilter.optimalNumOfBits(items, fpp)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
-      math.max(items, 4000000L).toString)
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-      math.max(bits, 67108864L).toString)
-    log.scanEntries(s, Schemas.extractedSchema, meta).select("url")
-      .stat.bloomFilter("url", items, fpp)
+    def pendingAgainst(doneUrls: DataFrame, regime: String) =
+      (pages.join(doneUrls, Seq("url"), "left_anti").as[Schemas.Page], regime)
+    if (doneRows <= budget) pendingAgainst(broadcast(done), "broadcast")
+    else if (pages.queryExecution.analyzed.deterministic &&
+        pages.count() <= budget)
+      pendingAgainst(broadcast(
+        done.join(broadcast(pages.select("url")), Seq("url"), "left_semi")),
+        "hits")
+    else pendingAgainst(done, "shuffle")
   }
 
   /** The per-bucket lineage aggregation over re-read files, for
@@ -398,17 +331,34 @@ object ExtractJob {
     val subset = pages.toDF()
       .join(urls.select("url").distinct(), Seq("url"), "left_semi")
       .as[Schemas.Page]
-    val fresh = extractDF(subset, numBuckets).persist()
+    upsertExtracted(spark, extractDF(subset, numBuckets), tableDir, numBuckets)
+  }
+
+  /** [[reextract]] past the kernel: gate the kernel output `extracted`
+    * (with its `ok` column) and merge it into the table. None when it is
+    * empty.
+    */
+  private[spark] def upsertExtracted(spark: SparkSession,
+      extracted: DataFrame, tableDir: String, numBuckets: Int): Option[Long] = {
+    val fresh = extracted.persist()
     try {
-      val total = fresh.count()
-      if (total == 0L) return None
-      val ok = fresh.filter(col("ok")).count()
-      if (ok.toDouble / total < SuccessRatio) throw GateFailed(ok, total)
-      Some(new SnapshotLog(tableDir).upsertMatching(spark,
+      if (checkGate(fresh) == 0L) None
+      else Some(new SnapshotLog(tableDir).upsertMatching(spark,
         Schemas.extractedSchema, fresh.drop("ok"), "url",
         statsColumns = Seq("bucket"), clusterBy = Seq("bucket"),
         clusterParts = numBuckets))
     } finally fresh.unpersist(): Unit
+  }
+
+  /** The A1 success gate over kernel output `batch` (with its `ok`
+    * column), both counts in one job. Returns the row count; throws
+    * [[GateFailed]] when a nonempty batch falls under [[SuccessRatio]].
+    */
+  private[spark] def checkGate(batch: DataFrame): Long = {
+    val gate = batch.agg(count(lit(1)), count(when(col("ok"), 1))).head()
+    val (total, ok) = (gate.getLong(0), gate.getLong(1))
+    if (total > 0L && ok.toDouble / total < SuccessRatio) throw GateFailed(ok, total)
+    total
   }
 
   /** Re-derive lineage rows for committed snapshots MISSING from the metrics

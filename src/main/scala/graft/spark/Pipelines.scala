@@ -139,7 +139,10 @@ object Pipelines {
     * writes survivors from a LATER evaluation; a digest that changes between
     * them is silently dropped from (or duplicated in) the commit. Every
     * in-tree caller hands a snapshot scan, which satisfies this by
-    * construction.
+    * construction. A plan Catalyst marks nondeterministic (sampling,
+    * rand()-derived columns) is refused with an IllegalArgumentException
+    * before anything is staged; one that is nondeterministic without
+    * saying so is not caught.
     */
   def appendDeduped(spark: SparkSession, fresh: DataFrame,
       dedupedDir: String): (Option[Long], Long) = {
@@ -431,6 +434,10 @@ object Pipelines {
   private def appendDedupedWith(spark: SparkSession, fresh: DataFrame,
       dlog: SnapshotLog,
       commitFn: (String, Option[Long]) => Option[Long]): (Option[Long], Long) = {
+    // [[appendDeduped]]'s contract, checked before anything is staged
+    require(fresh.queryExecution.analyzed.deterministic,
+      "dedup append: `fresh` must be deterministic, since the dedup probe " +
+        "and the survivor write evaluate it separately")
     // the probe is derived from THIS snapshot: the commit below is
     // conditional on it still being the parent, so an overlapping pipeline
     // turn deduping the same slice cannot land the same rows twice (one

@@ -1,7 +1,6 @@
 package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming variant of the extract pipeline — an EXTENSION beyond
@@ -122,12 +121,7 @@ object StreamingExtract {
         if (!destLog.txnVersion(app).exists(_ >= batchId)) {
           val batch = df.persist() // gate + write must not run the kernel twice
           try {
-            // the gate in one job: both counts in one aggregation
-            val gate = batch.agg(count(lit(1)), count(when(col("ok"), 1))).head()
-            val (total, ok) = (gate.getLong(0), gate.getLong(1))
-            if (total > 0L) {
-              if (ok.toDouble / total < ExtractJob.SuccessRatio)
-                throw ExtractJob.GateFailed(ok, total)
+            if (ExtractJob.checkGate(batch) > 0L) {
               // sized from the cached batch's measured bytes
               val stage = destLog.writeStage(
                 ExtractJob.bucketLayout(batch.drop("ok"), numBuckets)

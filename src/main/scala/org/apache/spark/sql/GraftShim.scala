@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ClassicConversions._
   * Spark extensions that introduce custom logical operators (the public
   * Column/Dataset API in Spark 4 wraps plan nodes, so building a DataFrame
   * from a LogicalPlan requires this package-private hop) — and into the
-  * `private[spark]` listener bus and broadcast state.
+  * `private[spark]` listener bus.
   */
 object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -22,7 +22,4 @@ object GraftShim {
     */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(60000L)
-
-  /** False once the broadcast has been destroyed on the driver. */
-  def isValid(b: org.apache.spark.broadcast.Broadcast[_]): Boolean = b.isValid
 }

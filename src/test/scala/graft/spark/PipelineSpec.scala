@@ -129,112 +129,82 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val metrics = spark.read.parquet(s"$dir/metrics")
     assert(metrics.select("snapshot_id").distinct().count() == 2)
     assert(metrics.agg(sum("doc_count")).head().getLong(0) == corpusSize)
+    // the lineage rows of each snapshot land as one metrics file
+    val metricsFiles = new java.io.File(s"$dir/metrics").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(metricsFiles == 2, s"two runs, one lineage file each: $metricsFiles")
   }
 
-  test("resume anti-join regimes: broadcast, bloom middle, and sort-merge agree") {
+  test("resume anti-join regimes: broadcast, hits, and sort-merge agree") {
     val sp = spark; import sp.implicits._
-    val all = spark.createDataset(fixture)
-    val half = spark.createDataset(fixture.take(corpusSize / 2))
-    // run the half-then-full resume sequence under forced join regimes and
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    // done = the first 3/4 of the fixture, the batch = its second half, so
+    // they overlap in 1/4. The hits regime needs done > budget >= batch: a
+    // budget of 5/8 sits between |batch| = 120 and |done| = 180
+    val done = spark.createDataset(fixture.take(corpusSize * 3 / 4))
+    val batch = spark.createDataset(fixture.drop(corpusSize / 2))
+    val hitsBudget = "graft.extract.broadcastDoneRows" -> (corpusSize * 5 / 8).toString
+    val shuffleBudget = "graft.extract.broadcastDoneRows" -> "0"
+    // resume the batch onto the done table under a forced regime and
     // compare final table content — the regime must never change the answer
-    def runWith(confs: (String, String)*): Seq[org.apache.spark.sql.Row] = {
-      val dir = tmpDir("regime")
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        ExtractJob.run(spark, half, dir, numBuckets = 8)
-        ExtractJob.run(spark, all, dir, numBuckets = 8)
+    def runWith(confs: (String, String)*): Seq[org.apache.spark.sql.Row] =
+      withConf(confs: _*) {
+        val dir = tmpDir("regime")
+        ExtractJob.run(spark, done, dir, numBuckets = 8)
+        assert(ExtractJob.run(spark, batch, dir, numBuckets = 8).contains(1L))
         // the regime's anti-join must also prove "nothing pending" exactly
-        assert(ExtractJob.run(spark, all, dir, numBuckets = 8).isEmpty)
-        ExtractJob.readExtracted(spark, dir)
-          .select("url", "kind", "text", "checksum").orderBy("url")
-          .collect().toSeq
-      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
-    }
+        assert(ExtractJob.run(spark, batch, dir, numBuckets = 8).isEmpty)
+        ExtractJob.readExtracted(spark, dir).orderBy("url").collect().toSeq
+      }
     val viaBroadcast = runWith() // defaults: done fits the broadcast budget
-    val viaBloom = runWith("graft.extract.broadcastDoneRows" -> "0")
-    val viaSortMerge = runWith(
-      "graft.extract.broadcastDoneRows" -> "0",
-      "graft.extract.bloomDoneRows" -> "0")
-    assert(viaBroadcast.nonEmpty && viaBroadcast.size == corpusSize)
-    assert(viaBloom == viaBroadcast,
-      "bloom middle regime must produce the identical table")
+    val viaHits = runWith(hitsBudget)
+    val viaSortMerge = runWith(shuffleBudget)
+    assert(viaBroadcast.size == corpusSize &&
+      viaBroadcast.map(_.getAs[String]("url")).distinct.size == corpusSize)
+    assert(viaHits == viaBroadcast, "the hits regime must produce the identical table")
     assert(viaSortMerge == viaBroadcast,
       "sort-merge fallback must produce the identical table")
 
     // the forced confs must actually SELECT their regimes — a renamed conf
     // key would silently reduce the equality checks above to three copies
-    // of the broadcast run
+    // of the broadcast run. Plans are read with AQE off, so they show every
+    // exchange, and with auto-broadcast off, so only the regime's hints
+    // broadcast anything
     val dir = tmpDir("regime_tag")
-    ExtractJob.run(spark, half, dir, numBuckets = 8)
+    ExtractJob.run(spark, done, dir, numBuckets = 8)
     val log = new SnapshotLog(dir)
     def regimeOf(pages: org.apache.spark.sql.Dataset[Schemas.Page],
-        confs: (String, String)*)
-        : (String, org.apache.spark.sql.execution.SparkPlan) = {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val (df, tag, _) = ExtractJob.pendingPages(spark, pages, log, log.currentSnapshot())
-        (tag, df.queryExecution.sparkPlan)
-      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+        confs: (String, String)*): (String, SparkPlan) =
+      withConf(confs ++ Seq("spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1"): _*) {
+        val (df, tag) = ExtractJob.pendingPages(spark, pages, log, log.currentSnapshot())
+        (tag, df.queryExecution.executedPlan)
+      }
+    // exchanges that move rows of the batch (a local scan here; the done
+    // side is a file scan)
+    def batchShuffles(plan: SparkPlan) = plan.collect {
+      case e: ShuffleExchangeLike if e.exists(_.isInstanceOf[LocalTableScanExec]) => e
     }
-    assert(regimeOf(all)._1 == "broadcast")
-    val (bloomTag, bloomPlan) = regimeOf(all, "graft.extract.broadcastDoneRows" -> "0")
-    assert(bloomTag == "bloom")
-    val union = bloomPlan.collectFirst {
-      case u: org.apache.spark.sql.execution.UnionExec => u }
-    assert(union.isDefined, s"bloom plan must union proven+checked:\n$bloomPlan")
-    assert(union.get.children.head.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
-    }.isEmpty, "the bloom-negative (proven pending) branch must stay scan-local")
-    assert(regimeOf(all, "graft.extract.broadcastDoneRows" -> "0",
-      "graft.extract.bloomDoneRows" -> "0")._1 == "shuffle")
-    // the bloom split evaluates pages once per branch: a rand()-derived
-    // pages plan must take the single-evaluation regime instead
-    val randomized = all.toDF()
+    assert(regimeOf(batch)._1 == "broadcast")
+    val (hitsTag, hitsPlan) = regimeOf(batch, hitsBudget)
+    assert(hitsTag == "hits")
+    assert(batchShuffles(hitsPlan).isEmpty,
+      s"the hits regime must not shuffle the batch:\n$hitsPlan")
+    assert(hitsPlan.collect { case j: BroadcastHashJoinExec => j }.size == 2,
+      s"the hits regime broadcasts the batch urls, then the hits:\n$hitsPlan")
+    val (shuffleTag, shufflePlan) = regimeOf(batch, shuffleBudget)
+    assert(shuffleTag == "shuffle")
+    // the same check sees the sort-merge regime's batch exchange
+    assert(shufflePlan.exists(_.isInstanceOf[SortMergeJoinExec]) &&
+      batchShuffles(shufflePlan).nonEmpty, s"$shufflePlan")
+    // the hits regime evaluates the batch more than once: a rand()-derived
+    // batch plan must take the single-evaluation regime instead
+    val randomized = batch.toDF()
       .withColumn("lang", when(rand(7) < 2.0, col("lang")))
       .as[Schemas.Page]
-    assert(regimeOf(randomized, "graft.extract.broadcastDoneRows" -> "0")._1 == "shuffle")
-  }
-
-  test("bloom resume: run destroys its filter broadcast before it returns") {
-    val sp = spark; import sp.implicits._
-    val dir = tmpDir("bloom_release")
-    // the bloom regime's filter reaches the plan only inside its url UDF:
-    // catch that UDF in every query the run executes
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.broadcast.Broadcast[_]]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit =
-        qe.analyzed.foreach(_.expressions.foreach(_.foreach {
-          case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF =>
-            u.function match {
-              case m: ExtractJob.MaybeDone => seen.add(m.filter): Unit
-              case _ => ()
-            }
-          case _ => ()
-        }))
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    ExtractJob.run(spark, spark.createDataset(fixture.take(corpusSize / 2)), dir, 8)
-    spark.conf.set("graft.extract.broadcastDoneRows", "0")
-    spark.listenerManager.register(listener)
-    try assert(ExtractJob.run(spark, spark.createDataset(fixture), dir, 8).contains(1L))
-    finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.unset("graft.extract.broadcastDoneRows")
-    }
-    org.apache.spark.sql.GraftShim.drainListeners(spark.sparkContext)
-    import scala.jdk.CollectionConverters._
-    val filters = seen.asScala.toSeq.distinct
-    assert(filters.size == 1, s"the bloom regime must plan one filter broadcast, saw ${filters.size}")
-    assert(!org.apache.spark.sql.GraftShim.isValid(filters.head),
-      "run() must destroy the bloom broadcast once its commit is done")
-    assert(ExtractJob.readExtracted(spark, dir).count() == corpusSize.toLong)
-    // the lineage rows of each snapshot land as one metrics file
-    val metricsFiles = new java.io.File(s"$dir/metrics").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(metricsFiles == 2, s"two runs, one lineage file each: $metricsFiles")
+    assert(regimeOf(randomized, hitsBudget)._1 == "shuffle")
   }
 
   test("success gate: <0.9 ok ratio aborts the snapshot (A1)") {
@@ -611,6 +581,26 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // re-running with no matching url is a no-op
     assert(ExtractJob.reextract(spark, fixed, dir,
       Seq("http://nowhere.example.com/x").toDF("url"), 4).isEmpty)
+  }
+
+  test("partial re-extract: a subset under the 0.9 gate throws GateFailed and commits nothing") {
+    val sp = spark; import sp.implicits._
+    val dir = tmpDir("reextract_gate")
+    assert(ExtractJob.run(spark, spark.createDataset(fixture.take(40)), dir,
+      numBuckets = 4).contains(0L))
+    val log = new SnapshotLog(dir)
+    def onDisk = (parquetUnder(dir), new java.io.File(s"$dir/data").list().toSet)
+    val before = onDisk
+    // the kernel is total (no payload yields ok = false), so the failures
+    // are set on its output: 3 of the 10 re-extracted rows, 0.7 < 0.9
+    val failed = fixture.take(3).map(_.url)
+    val fresh = ExtractJob.extractDF(spark.createDataset(fixture.take(10)), 4)
+      .withColumn("ok", !col("url").isin(failed: _*))
+    val e = intercept[ExtractJob.GateFailed](
+      ExtractJob.upsertExtracted(spark, fresh, dir, numBuckets = 4))
+    assert(e.ok == 7L && e.total == 10L)
+    assert(log.currentSnapshot().contains(0L))
+    assert(onDisk == before, "a failed gate must stage nothing")
   }
 
   test("streaming extract (AvailableNow): same kernel output, incremental restart") {
@@ -1673,6 +1663,29 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Dataset.unpersist is a no-op for localCheckpoint blocks; the turn must
     // release them explicitly, not leave them to driver GC cadence
     assert(leaked.isEmpty, s"turns leaked persistent RDD blocks: $leaked")
+  }
+
+  test("dedup append refuses a nondeterministic fresh plan before staging anything") {
+    val sp = spark; import sp.implicits._
+    val dd = tmpDir("dedup_nondet")
+    def extractedDF(lo: Int, hi: Int) =
+      spark.createDataset((lo until hi).map(i => Schemas.Extracted(
+        s"https://nondet/$i", i % 8, "html",
+        Seq(s"nondet text body $i"), s"nondet text body $i", 10L + i, i.toLong))).toDF()
+    assert(Pipelines.appendDeduped(spark, extractedDF(0, 20), dd)._2 == 20L)
+    val dlog = new SnapshotLog(dd)
+    def onDisk = (parquetUnder(dd), new java.io.File(s"$dd/data").list().toSet)
+    val before = onDisk
+    // rand() < 2.0 keeps every text, but Catalyst marks the plan
+    // nondeterministic: the probe and the survivor write could disagree
+    val randomized = extractedDF(10, 40)
+      .withColumn("text", when(rand(7) < 2.0, col("text")))
+    val e = intercept[IllegalArgumentException](
+      Pipelines.appendDeduped(spark, randomized, dd))
+    assert(e.getMessage.contains("deterministic"))
+    assert(dlog.currentSnapshot().contains(0L))
+    assert(onDisk == before, "a refused append must stage nothing")
+    assert(dlog.scan(spark, Pipelines.dedupedSchema).count() == 20L)
   }
 
   test("a steady small-regime pipeline turn runs at most 11 Spark jobs; its files cluster on fp64") {
