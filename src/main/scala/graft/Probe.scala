@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.spark.{ManifestEntry, ManifestFileIndex, Pipelines, SnapshotLog}
 
 /** Dev measurement runner, outside the driver contract (Bench, Verify,
@@ -161,6 +162,34 @@ object Probe {
       GraftShim.drainListeners(spark.sparkContext)
       (r, meter)
     } finally spark.sparkContext.removeSparkListener(meter)
+  }
+
+  /** The processes this JVM starts while `body` runs (any thread), one
+    * line each: the command and the frames that started it. Counted from a
+    * JFR recording of `jdk.ProcessStart` events, so nothing is patched or
+    * wrapped. The engine's local-disk I/O must start none (see GraftIo).
+    * Spark's one start per JVM of its process-metrics getter is made first,
+    * outside the recording.
+    */
+  def processStarts[A](body: => A): (A, Seq[String]) = {
+    GraftShim.initProcessMetrics()
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      val r = try body finally rec.stop()
+      val f = java.nio.file.Files.createTempFile("process-starts", ".jfr")
+      try {
+        rec.dump(f)
+        (r, jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq.map { e =>
+          val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+            .map(fr => s"${fr.getMethod.getType.getName}.${fr.getMethod.getName}")
+            .filterNot(f => f.startsWith("java.") || f.startsWith("org.apache.hadoop.util.Shell"))
+            .take(4)
+          s"${e.getString("command")} <- ${frames.mkString(" <- ")}"
+        })
+      } finally java.nio.file.Files.deleteIfExists(f): Unit
+    } finally rec.close()
   }
 
   /** A fresh scratch dir under target/probe (CWD-relative, like every sbt

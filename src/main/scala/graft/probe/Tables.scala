@@ -282,24 +282,30 @@ object Tables {
     * stay constant as the table grows from 1k to 100k data files. Stages are
     * empty `.parquet` part files (commit never reads data bytes — only the
     * staging listing matters), so this isolates pure metadata cost.
+    * `spawns` counts the processes each commit starts (its stage's mkdirs
+    * included); on local disk it must read 0 (see GraftIo).
     */
   def manifest(args: Seq[String]): Unit = Probe.withTempDir("manifest") { dir =>
     val log = new SnapshotLog(dir)
     val filesPerCommit = 1000
     val commits = 100
     val milestones = Set(1, 2, 5, 10, 20, 50, 75, 100)
-    println(f"${"commit#"}%8s ${"tableFiles"}%11s ${"commitMs"}%9s ${"listBytes"}%10s ${"segBytes"}%9s ${"scanListMs"}%11s")
+    println(f"${"commit#"}%8s ${"tableFiles"}%11s ${"commitMs"}%9s ${"spawns"}%7s ${"listBytes"}%10s ${"segBytes"}%9s ${"scanListMs"}%11s")
+    var spawnsTotal = 0
     for (c <- 1 to commits) {
-      val stage = log.stageUniqueDataDir()
+      val (stage, stageSpawns) = Probe.processStarts(log.stageUniqueDataDir())
       (0 until filesPerCommit).foreach(i => Files.createFile(Paths.get(stage, f"part-$i%05d.parquet")))
-      val (commitSec, id) = Probe.clock(log.commitOptimistic(stage))
+      val ((commitSec, id), commitSpawns) =
+        Probe.processStarts(Probe.clock(log.commitOptimistic(stage)))
+      val spawns = stageSpawns.size + commitSpawns.size
+      spawnsTotal += spawns
       if (milestones(c)) {
         val list = Paths.get(dir, "meta", s"snap-$id.txt")
         // the fresh segment is the list's last manifest line
         val seg = Files.readAllLines(list).asScala.filter(_.startsWith("manifest\t"))
           .last.split('\t')(1)
         val (listSec, n) = Probe.clock(log.currentFiles().size)
-        println(f"$c%8d $n%11d ${commitSec * 1e3}%9.1f ${Files.size(list)}%10d " +
+        println(f"$c%8d $n%11d ${commitSec * 1e3}%9.1f $spawns%7d ${Files.size(list)}%10d " +
           f"${Files.size(Paths.get(dir, seg))}%9d ${listSec * 1e3}%11.1f")
       }
     }
@@ -311,6 +317,7 @@ object Tables {
     }
     println(f"total meta bytes: $metaBytes%d (${metaBytes / 1e6}%.2f MB) " +
       f"for ${commits * filesPerCommit}%d files across $commits%d commits")
+    println(f"processes started: $spawnsTotal%d (${spawnsTotal.toDouble / commits}%.1f per commit)")
   }
 
   /** Size-binned compaction on a table of SKEWED file sizes (a handful of

@@ -506,8 +506,8 @@ object Embeddings {
     // the exact pathology compact() exists to undo. One shuffle at build time
     // (hash on the key; parallelism = spark.sql.shuffle.partitions, which a
     // cluster sizes to ~2-3x cores) buys exactly one file per bucket.
-    df.repartition(col(partitionCol))
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(io.extern(dir))
+    GraftIo.writer(df.repartition(col(partitionCol)))
+      .mode("overwrite").partitionBy(partitionCol).parquet(io.extern(dir))
     // sidecars + manifest land BEFORE the promote (atomic with the index) or
     // before the gate marker (write-then-marker)
     sidecars.foreach { case (name, body) =>

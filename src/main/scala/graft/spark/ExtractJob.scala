@@ -176,7 +176,7 @@ object ExtractJob {
     // one directory
     val stage = log.stageUniqueDataDir()
     try {
-      extracted.write.mode("overwrite").parquet(stage)
+      GraftIo.writer(extracted).mode("overwrite").parquet(stage)
       val gate = gateObs.get
       val total = gate("total").asInstanceOf[Long]
       if (total == 0L) { log.abortStage(stage); return None } // nothing pending
@@ -202,8 +202,8 @@ object ExtractJob {
       Schemas.MetricsRow(snapshotId, k, counts(3 * k), counts(3 * k + 1),
         counts(3 * k + 2), wallMs)
     }
-    spark.createDataset(rows).coalesce(1)
-      .write.mode("append").parquet(s"$tableDir/metrics")
+    GraftIo.writer(spark.createDataset(rows).coalesce(1))
+      .mode("append").parquet(s"$tableDir/metrics")
     Some(snapshotId)
   }
 
@@ -398,9 +398,10 @@ object ExtractJob {
         // SURVIVORS of parent rows re-filed (plus, for an upsert, merged
         // rows not separable from them at file granularity) — every one of
         // those rows already has lineage under an ancestor, so backfilling
-        // the path diff would double-count them (round-5 ADVICE). Upsert's
-        // live path records its own lineage at run time; a crashed one stays
-        // unattributed rather than inflated.
+        // the path diff would double-count them (round-5 ADVICE). No upsert
+        // writes a metrics row (`upsertExtracted` → `upsertMatching` records
+        // no lineage), so a re-extract's refreshed rows stay unattributed
+        // rather than inflated.
         else if (log.isSelfContained(id))
           // a replace (references nothing but its own segment AND staged
           // every file itself), whether or not its parent survives: its full
@@ -414,10 +415,10 @@ object ExtractJob {
         // write lineage silently inflated with the parent's rows
       files match {
         case Some(fs) if fs.nonEmpty =>
-          lineageRows(
+          GraftIo.writer(lineageRows(
             spark.read.schema(Schemas.extractedSchema).parquet(fs: _*),
-            id, wallMs = -1L)
-            .write.mode("append").parquet(metricsPath)
+            id, wallMs = -1L))
+            .mode("append").parquet(metricsPath)
           Some(id) // only ids actually written count as repaired
         case _ => None
       }

@@ -451,13 +451,13 @@ object Pipelines {
     // digest shares a partition whose key is among `within`.
     def clusteredCommit(clustered: DataFrame, within: Seq[Column],
         n: Long): (Option[Long], Long) = {
-      val stage = dlog.writeStage(clustered
+      val stage = dlog.writeStage(GraftIo.writer(clustered
         .withColumn("rn", row_number().over(
           Window.partitionBy(within :+ col("fp64") :+ col("fp"): _*)
             .orderBy(col("url"))))
         .filter(col("rn") === 1).drop("rn")
-        .select(dedupedSchema.fieldNames.toIndexedSeq.map(col): _*)
-        .write.mode("overwrite").parquet(_))
+        .select(dedupedSchema.fieldNames.toIndexedSeq.map(col): _*))
+        .mode("overwrite").parquet(_))
       // outside the write's failure handling: past the manifest CAS the
       // stage's files may be committed, and the commit routine alone
       // decides when its stage is safe to delete

@@ -1047,7 +1047,8 @@ object Queries {
       val tblName = dirKey + "_v1_" + corpusStamp(s"$dir/documents.parquet")
       val log = new SnapshotLog(s"$tblBase/$tblName")
       if (log.currentSnapshot().isEmpty) {
-        val stage = log.writeStage(corpus.repartition(4).write.mode("overwrite").parquet(_))
+        val stage = log.writeStage(
+          GraftIo.writer(corpus.repartition(4)).mode("overwrite").parquet(_))
         log.commitOptimistic(stage, requireParent = Some(-1L))
       }
       Embeddings.pruneStaleIndexes(tblBase, dirKey + "_", tblName)

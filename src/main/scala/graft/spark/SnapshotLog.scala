@@ -543,6 +543,15 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     if (statsColumns.isEmpty) staged.map(one) else parMap(staged)(one)
   }
 
+  /** A parquet reader whose read options come from the caller's conf:
+    * `ParquetFileReader.open(in)` alone builds a fresh `Configuration` per
+    * file and re-parses core-default.xml (21 of 129 main-thread samples of
+    * a profiled pipeline turn).
+    */
+  private def openFooter(in: org.apache.parquet.io.InputFile) =
+    org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(hadoopConf).build())
+
   /** Min/max of the named columns plus the exact row count from one parquet
     * footer (the count is the sum of block row counts — same open, no extra
     * IO). Stats bounds: int/long columns
@@ -565,8 +574,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       // raw-local pin would poison that global cache for every later
       // file:// consumer in the JVM (Spark's own writers included) — the
       // exact leak GraftIo uses newInstance to prevent
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hadoopConf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = openFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hadoopConf))
       try {
         val blocks = r.getFooter.getBlocks.asScala.toSeq
         val stats = cols.flatMap { c =>
@@ -830,10 +839,10 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         // (sizes already in hand) — a bare spark.read.parquet would re-stat
         // every live file on the driver, the exact cost C11 exists to kill.
         import org.apache.spark.sql.functions.col
-        scanEntries(spark, schema, meta)
+        GraftIo.writer(scanEntries(spark, schema, meta)
           .repartitionByRange(math.max(1, bins.size), sortBy.map(col): _*)
-          .sortWithinPartitions(sortBy.map(col): _*)
-          .write.mode("overwrite").parquet(dir)
+          .sortWithinPartitions(sortBy.map(col): _*))
+          .mode("overwrite").parquet(dir)
       } else {
         // one single-output narrow job per bin, all in flight at once: Spark's
         // scheduler interleaves their tasks, so rewrite parallelism is
@@ -844,8 +853,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
           scala.concurrent.ExecutionContext.fromExecutor(pool)
         val jobs = bins.toSeq.zipWithIndex.map { case (files, i) =>
           scala.concurrent.Future {
-            spark.read.schema(schema).parquet(files: _*).coalesce(1)
-              .write.mode("overwrite").parquet(f"$dir/bin-$i%05d")
+            GraftIo.writer(spark.read.schema(schema).parquet(files: _*).coalesce(1))
+              .mode("overwrite").parquet(f"$dir/bin-$i%05d")
           }
         }
         // await EVERY bin (no fail-fast): a failed write deletes the stage,
@@ -1205,7 +1214,7 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         // the table staying empty (a racer's first append could hold the same
         // keys; landing on it unchecked would silently duplicate them)
         val stage = writeStage(
-          clustered(u, clusterBy, clusterParts).write.mode("overwrite").parquet(_))
+          GraftIo.writer(clustered(u, clusterBy, clusterParts)).mode("overwrite").parquet(_))
         return commitOptimistic(stage, statsColumns, requireParent = Some(-1L))
       }
       val keys = u.select(keyCol)
@@ -1218,7 +1227,7 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         // no matched key anywhere: a pure append (cheapest possible commit —
         // incremental readers keep tailing straight through it)
         val stage = writeStage(
-          clustered(u, clusterBy, clusterParts).write.mode("overwrite").parquet(_))
+          GraftIo.writer(clustered(u, clusterBy, clusterParts)).mode("overwrite").parquet(_))
         commitOptimistic(stage, statsColumns, requireParent = Some(parent))
       } else
         rewriteExcluding(spark, schema, parent, affected, affectedSegs,
@@ -1281,9 +1290,9 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       survivors: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       statsColumns: Seq[String]): Long = {
     requireSchemaCovers(schema, affected.toSeq, "the delete rewrite")
-    val stage = writeStage(survivors(
-      spark.read.schema(schema).parquet(affected.toSeq.sorted: _*))
-      .write.mode("overwrite").parquet(_))
+    val stage = writeStage(GraftIo.writer(survivors(
+      spark.read.schema(schema).parquet(affected.toSeq.sorted: _*)))
+      .mode("overwrite").parquet(_))
     commitRewrite(stage, parent, affected, affectedSegs, statsColumns)
   }
 
@@ -1308,9 +1317,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     val declared = schema.fieldNames.toSet
     def fields(p: String): Seq[String] =
       try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new HPath(p), hadoopConf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = openFooter(org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new HPath(p), hadoopConf))
         try r.getFooter.getFileMetaData.getSchema.getFields.asScala
           .map(_.getName).toSeq
         finally r.close()

@@ -124,8 +124,8 @@ object StreamingExtract {
             if (ExtractJob.checkGate(batch) > 0L) {
               // sized from the cached batch's measured bytes
               val stage = destLog.writeStage(
-                ExtractJob.bucketLayout(batch.drop("ok"), numBuckets)
-                  .write.mode("overwrite").parquet(_))
+                GraftIo.writer(ExtractJob.bucketLayout(batch.drop("ok"), numBuckets))
+                  .mode("overwrite").parquet(_))
               // the commit cleans its own stage where that is safe: past the
               // manifest CAS the batch may be committed (and its txn recorded,
               // so a replay would skip it)

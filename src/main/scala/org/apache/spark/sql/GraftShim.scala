@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ClassicConversions._
   * Spark extensions that introduce custom logical operators (the public
   * Column/Dataset API in Spark 4 wraps plan nodes, so building a DataFrame
   * from a LogicalPlan requires this package-private hop) — and into the
-  * `private[spark]` listener bus.
+  * `private[spark]` listener bus and executor-metrics getter.
   */
 object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -22,4 +22,13 @@ object GraftShim {
     */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** Spark's executor-metrics poller starts one `getconf PAGESIZE` process
+    * per JVM, the first time it runs; running that start now keeps it out of
+    * a later measurement of the processes some work starts. Without a
+    * running SparkContext there is no poller (and the getter cannot start).
+    */
+  def initProcessMetrics(): Unit =
+    if (org.apache.spark.SparkEnv.get != null)
+      org.apache.spark.executor.ProcfsMetricsGetter.pTreeInfo: Unit
 }

@@ -1727,6 +1727,24 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"per-file fp64 ranges must be disjoint: $ranges")
   }
 
+  test("a steady pipeline turn on a local table starts no OS process") {
+    // without the native Hadoop library every local chmod and FileContext
+    // rename forks a process: ~50 per turn before GraftIo's nio paths
+    val sp = spark; import sp.implicits._
+    val table = tmpDir("spawn_tbl"); val dd = tmpDir("spawn_dd")
+    val seed = fixture.take(120)
+    // the budget test's batch shape: redelivered, duplicate-text and fresh
+    def batch(t: Int) = spark.createDataset(seed.slice(t * 10, t * 10 + 40) ++
+      seed.slice(t * 10 + 40, t * 10 + 80).map(p => p.copy(url = s"${p.url}-copy$t")) ++
+      fixture.slice(120 + t * 20, 140 + t * 20))
+    Pipelines.incrementalDedup(spark, spark.createDataset(seed), table, dd, 8)
+    Pipelines.incrementalDedup(spark, batch(0), table, dd, 8) // warm
+    val (r, spawned) = graft.Probe.processStarts(
+      Pipelines.incrementalDedup(spark, batch(1), table, dd, 8))
+    assert(r.appendedRows > 0L, s"$r")
+    assert(spawned.isEmpty, s"${spawned.size} processes:\n${spawned.mkString("\n")}")
+  }
+
   test("inverted dedup probe: the corpus side never shuffles; fp64 stats prune files") {
     val sp = spark; import sp.implicits._
     val dd = tmpDir("probe_dd")

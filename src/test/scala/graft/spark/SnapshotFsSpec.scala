@@ -83,6 +83,85 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "losers keep their staged file for cleanup")
   }
 
+  test("fork-free local I/O keeps Hadoop's mode bits (umask 022 and 077) and data .crc sidecars") {
+    import java.nio.file.{Files, Path => NPath, Paths}
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path => HPath, RawLocalFileSystem}
+    import scala.jdk.CollectionConverters._
+    def perms(p: NPath): String = java.nio.file.attribute.PosixFilePermissions
+      .toString(Files.getPosixFilePermissions(p))
+    // every path under root (root excluded) -> its rwx string
+    def modes(root: String): Map[String, String] = {
+      val r = Paths.get(root)
+      val s = Files.walk(r)
+      try s.iterator.asScala.filter(_ != r)
+        .map(p => r.relativize(p).toString -> perms(p)).toMap
+      finally s.close()
+    }
+    // a stage's file names carry write uuids: compare the modes per kind,
+    // the stage directory itself included
+    def kinds(stage: String): Map[String, Set[String]] =
+      (modes(stage).toSeq.map { case (rel, m) =>
+        val n = Paths.get(rel).getFileName.toString
+        (if (Files.isDirectory(Paths.get(stage, rel))) "dir"
+          else if (n.endsWith(".parquet.crc")) "crc"
+          else if (n.endsWith(".parquet")) "parquet"
+          else n) -> m
+      } :+ ("dir" -> perms(Paths.get(stage))))
+        .groupMap(_._1)(_._2).map { case (k, v) => k -> v.toSet }
+    def sparkLocal = FileSystem.get(java.net.URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    val before = sparkLocal
+    val rows = spark.range(50).select(col("id"), (col("id") % 7).as("v")).repartition(2)
+    for (umask <- Seq("022", "077")) {
+      val conf = SnapshotLog.defaultHadoopConf()
+      conf.set("fs.permissions.umask-mode", umask)
+      val (ours, ref) = (tmpDir("modes_nio"), tmpDir("modes_raw"))
+      // reference first: Hadoop's RawLocalFileSystem (chmod processes)
+      val raw = new RawLocalFileSystem()
+      raw.initialize(java.net.URI.create("file:///"), conf)
+      raw.mkdirs(new HPath(ref, "meta/a/b"))
+      Seq("meta/a/b/f.txt", "meta/g.txt", "meta/c/h.txt")
+        .foreach(f => raw.create(new HPath(ref, f)).close())
+      val refStage = s"$ref/data/stage-ref"
+      rows.write.option("fs.file.impl.disable.cache", "true")
+        .option("fs.permissions.umask-mode", umask).mode("overwrite").parquet(refStage)
+      // the same through GraftIo and an engine stage write, with no process
+      val io = new GraftIo(ours, conf)
+      val log = new SnapshotLog(ours, conf)
+      val (stage, spawned) = graft.Probe.processStarts {
+        io.mkdirs(io.path("meta/a/b"))
+        io.writeDirect(io.path("meta/a/b/f.txt"), "x")
+        io.writeAtomic(io.path("meta/g.txt"), "x")
+        io.writeDirect(io.path("meta/c/h.txt"), "x") // create's own mkdirs
+        log.writeStage(GraftIo.writer(rows).option("fs.permissions.umask-mode", umask)
+          .mode("overwrite").parquet(_))
+      }
+      assert(spawned.isEmpty, spawned.mkString("\n"))
+      val (file, dir) =
+        if (umask == "022") ("rw-r--r--", "rwxr-xr-x") else ("rw-------", "rwx------")
+      val meta = modes(s"$ref/meta")
+      assert(meta.values.toSet == Set(file, dir), s"umask $umask: $meta")
+      assert(modes(s"$ours/meta") == meta, s"umask $umask")
+      val refKinds = kinds(refStage)
+      assert(refKinds("parquet") == Set(file) && refKinds("dir") == Set(dir), s"$refKinds")
+      assert(kinds(stage) == refKinds, s"umask $umask")
+      // the checksummed filesystem: every staged data file has its sidecar
+      val staged = modes(stage).keySet
+      val data = staged.filter(_.endsWith(".parquet"))
+      assert(data.nonEmpty && data.forall { f =>
+        val p = Paths.get(f)
+        staged(Option(p.getParent).fold("")(_.toString + "/") + s".${p.getFileName}.crc")
+      }, s"$staged")
+      assert(log.commitOptimistic(stage) == 0L)
+      assert(log.scan(spark, rows.schema).count() == 50L)
+    }
+    // the engine's options never reached Hadoop's process-wide cache: Spark
+    // still gets its own checksummed LocalFileSystem
+    assert(sparkLocal eq before)
+    assert(before.isInstanceOf[LocalFileSystem] &&
+      !before.isInstanceOf[GraftIo.NioLocalFileSystem], before.getClass)
+  }
+
   test("commitOptimistic: racing appenders all land, one per retry-resolved id") {
     val dir = tmpDir("occ")
     val base = new SnapshotLog(dir)
