@@ -169,7 +169,11 @@ object Probe {
     * JFR recording of `jdk.ProcessStart` events, so nothing is patched or
     * wrapped. The engine's local-disk I/O must start none (see GraftIo).
     * Spark's one start per JVM of its process-metrics getter is made first,
-    * outside the recording.
+    * outside the recording. Left out: the `rm -rf` of a session's artifact
+    * directory that Spark's `ArtifactManager` runs, from a
+    * `java.lang.ref.Cleaner` thread, when an earlier session is
+    * garbage-collected: it can land in any window and is never started on
+    * behalf of `body`.
     */
   def processStarts[A](body: => A): (A, Seq[String]) = {
     GraftShim.initProcessMetrics()
@@ -181,13 +185,18 @@ object Probe {
       val f = java.nio.file.Files.createTempFile("process-starts", ".jfr")
       try {
         rec.dump(f)
-        (r, jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq.map { e =>
-          val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
-            .map(fr => s"${fr.getMethod.getType.getName}.${fr.getMethod.getName}")
-            .filterNot(f => f.startsWith("java.") || f.startsWith("org.apache.hadoop.util.Shell"))
-            .take(4)
-          s"${e.getString("command")} <- ${frames.mkString(" <- ")}"
-        })
+        val starts = jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq.map { e =>
+          (e.getString("command"), Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+            .map(fr => s"${fr.getMethod.getType.getName}.${fr.getMethod.getName}"))
+        }
+        (r, starts.filterNot(_._2.exists(_.startsWith(
+            "org.apache.spark.sql.artifact.ArtifactManager")))
+          .map { case (command, frames) =>
+            val shown = frames
+              .filterNot(f => f.startsWith("java.") || f.startsWith("org.apache.hadoop.util.Shell"))
+              .take(4)
+            s"$command <- ${shown.mkString(" <- ")}"
+          })
       } finally java.nio.file.Files.deleteIfExists(f): Unit
     } finally rec.close()
   }

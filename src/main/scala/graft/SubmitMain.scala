@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.spark.{ExtractJob, SearchJob, Schemas, SnapshotLog}
 import graft.kernel.SearchKernels
 
@@ -15,8 +14,8 @@ import graft.kernel.SearchKernels
   *
   * `extract` reads the pages table, resumes from the last committed snapshot
   * (only pending urls are processed), runs the kernel map-side, gates on the
-  * >= 0.9 success ratio, commits a snapshot, and appends per-bucket lineage
-  * to `<tableDir>/metrics`. Idempotent: re-running after success is a no-op.
+  * >= 0.9 success ratio, and commits a snapshot whose list records the
+  * per-bucket lineage. Idempotent: re-running after success is a no-op.
   *
   * `search` evaluates the reference's disjunctive field predicate over the
   * extracted table and overwrites `matchedDir` with matching rows; field
@@ -44,7 +43,6 @@ object SubmitMain {
         |  streams <tableDir> [drop <streamId>]
         |  lsh-index <embeddingsParquet> <indexDir>
         |  ivf-index <embeddingsParquet> <indexDir> [cells=16] [iters=1]
-        |  repair-metrics <tableDir>
         |  upsert  <tableDir> <updatesParquet> [keyCol=url]
         |  reextract <pagesParquet> <tableDir> <urlsParquet> [numBuckets=32]
         |  tail    <tableDir> <fromSnapshot> <outDir>
@@ -74,8 +72,8 @@ object SubmitMain {
   def main(args: Array[String]): Unit = {
     // compact's targetFiles is optional; tail needs 4 args; the rest 3
     val minArgs = args.headOption match {
-      case Some("compact") | Some("orphans") | Some("repair-metrics") |
-           Some("describe") | Some("streams") => 2
+      case Some("compact") | Some("orphans") | Some("describe") |
+           Some("streams") => 2
       case Some("tail") | Some("pipeline") | Some("reextract") => 4
       case Some("stream") => 5
       case _ => 3
@@ -129,9 +127,9 @@ object SubmitMain {
         return
       case "describe" =>
         // table inspection from metadata alone: snapshots, live files/bytes,
-        // recorded stats columns, idempotent-writer watermarks — everything
-        // an operator needs before expire/compact/stream decisions, with
-        // zero data reads and no SparkSession
+        // recorded stats columns, lineage, idempotent-writer watermarks —
+        // everything an operator needs before expire/compact/stream
+        // decisions, with zero data reads and no SparkSession
         val tableDir = args(1)
         val log = new SnapshotLog(tableDir)
         log.currentSnapshot() match {
@@ -148,6 +146,11 @@ object SubmitMain {
               .fold("  rows: unknown (stats-free commits)")(n => s"  rows: $n"))
             println(s"  stats columns: " +
               (if (statCols.isEmpty) "none" else statCols.mkString(", ")))
+            val lineage = log.lineage()
+            if (lineage.nonEmpty)
+              println(s"  lineage: ${lineage.map(_.doc_count).sum} docs, " +
+                s"${lineage.map(_.byte_count).sum} bytes over " +
+                s"${lineage.map(_.snapshot_id).distinct.size} retained extract commit(s)")
             val txns = log.txnWatermarks()
             if (txns.nonEmpty)
               println("  txn watermarks:" + txns.toSeq.sortBy(_._1)
@@ -185,10 +188,9 @@ object SubmitMain {
             .as[Schemas.Page](org.apache.spark.sql.Encoders.product[Schemas.Page])
           ExtractJob.run(spark, pages, tableDir, buckets, force) match {
             case Some(id) =>
-              val m = spark.read.parquet(s"$tableDir/metrics")
-                .filter(col("snapshot_id") === id)
-                .agg(sum("doc_count"), sum("byte_count")).head()
-              println(s"committed snapshot=$id docs=${m.getLong(0)} bytes=${m.getLong(1)}")
+              val m = new SnapshotLog(tableDir).lineage().filter(_.snapshot_id == id)
+              println(s"committed snapshot=$id docs=${m.map(_.doc_count).sum} " +
+                s"bytes=${m.map(_.byte_count).sum}")
             case None =>
               println("nothing pending (resume found all urls committed)")
           }
@@ -305,13 +307,6 @@ object SubmitMain {
             statsColumns = Seq("bucket"), clusterBy = Seq("bucket"),
             clusterParts = 32)
           println(s"merged updates on $keyCol (snapshot $id)")
-        case "repair-metrics" =>
-          // lineage backfill: a crash between snapshot commit and metrics
-          // append leaves a committed snapshot with no lineage row; re-derive
-          // from table metadata (wall_ms = -1 marks backfilled rows)
-          val repaired = ExtractJob.backfillMetrics(spark, args(1))
-          if (repaired.isEmpty) println("metrics complete; nothing to repair")
-          else println(s"backfilled lineage for snapshots ${repaired.mkString(", ")}")
         case "lsh-index" =>
           // materialize the ANN serving index (P7): bucket-partitioned, so a
           // 13-probe query reads 13 directories, not the corpus. Idempotent

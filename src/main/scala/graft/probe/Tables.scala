@@ -226,9 +226,9 @@ object Tables {
   }
 
   /** graft.Bench's pipeline phase (same pages table, same three url-hash
-    * thirds, same numBuckets), with each SUB-STEP of a turn timed and its
-    * Spark jobs listed, so a turn's cost is attributed to a specific step
-    * instead of guessed at.
+    * thirds, same numBuckets), with each of a turn's two steps (the extract,
+    * then the dedup-append and its commit) timed and its Spark jobs listed,
+    * so a turn's cost is attributed to a specific step instead of guessed at.
     */
   def turnSteps(args: Seq[String]): Unit = {
     // no stand-in: it would print the same fields over a different corpus
@@ -254,22 +254,12 @@ object Tables {
         println(s"turn $t:")
         val (turnSec, _) = Probe.clock {
           val batch = pages.filter(pmod(hash(col("url")), lit(turns)) === t)
-          // --- the incrementalDedup body, step by step ---
-          val log = new SnapshotLog(table)
+          // --- the incrementalDedup body, step by step: the pipeline's own
+          // calls, not a copy (a hand-copied commit would silently de-sync
+          // the probe from the pipeline) ---
           step("extract.run")(ExtractJob.run(spark, batch, table, numBuckets = Probe.cpus * 4))
-          val to = step("currentSnapshot")(log.currentSnapshot())
-          val from = Pipelines.readWatermark(dd)
-          if (to.nonEmpty && from != to) {
-            val fresh = step("scanIncremental")(from match {
-              case Some(f) => log.scanIncremental(spark, Schemas.extractedSchema, f, to)
-              case None => log.scan(spark, Schemas.extractedSchema, asOf = to)
-            })
-            val (_, n) = step("appendDeduped")(Pipelines.appendDeduped(spark, fresh, dd))
-            // THE pipeline's own watermark write, not a copy (a hand-copied
-            // path/protocol would silently de-sync the probe from the pipeline)
-            step("writeWatermark")(Pipelines.writeWatermark(dd, to.get))
-            println(f"  appended=$n")
-          }
+          val (_, n) = step("dedupExtracted")(Pipelines.dedupExtracted(spark, table, dd))
+          println(f"  appended=$n")
         }
         println(f"  turn total $turnSec%7.3f s")
       }

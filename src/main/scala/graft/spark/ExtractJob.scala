@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -17,7 +17,7 @@ import org.apache.spark.sql.internal.SQLConf
   *                                                          carries extracted text only]
   *   -> per-bucket lineage counters (A3, observe)         [write's result stage]
   *   -> write data files                                  [one Spark action]
-  *   -> atomic snapshot commit (C1); lineage rows -> metrics, one file
+  *   -> atomic snapshot commit (C1), lineage rows in its snapshot list
   * }}}
   *
   * Correspondences to the reference: a partition is the analog of the 5-file
@@ -34,9 +34,9 @@ import org.apache.spark.sql.internal.SQLConf
   * commit's bytes, not B ([[bucketLayout]]): each file holds one contiguous
   * bucket range and each bucket lands in exactly one file, so a small turn
   * writes one file and a large batch writes up to B. Lineage costs no job
-  * of its own: the write pass counts it. The kernel is CPU-bound per row and
-  * embarrassingly parallel — throughput scales with cores until the parquet
-  * scan saturates.
+  * of its own: the write pass counts it, and the commit records it. The
+  * kernel is CPU-bound per row and embarrassingly parallel — throughput
+  * scales with cores until the parquet scan saturates.
   */
 object ExtractJob {
 
@@ -112,7 +112,9 @@ object ExtractJob {
   }
 
   /** Full job against a snapshot-logged table: resume, extract pending, gate,
-    * commit, lineage. Returns the committed snapshot id (None = nothing pending).
+    * commit with lineage. Returns the committed snapshot id (None = nothing
+    * pending). The lineage rows ([[SnapshotLog.lineage]]) land in the same
+    * CAS as the data files; their `wall_ms` runs up to the commit call.
     *
     * `pages` should be DETERMINISTIC — a committed-file scan or any plan
     * whose re-evaluation yields the same rows. The hits resume regime
@@ -143,7 +145,6 @@ object ExtractJob {
       tableDir: String,
       numBuckets: Int = 32,
       force: Boolean = false): Option[Long] = {
-    import spark.implicits._
     val log = new SnapshotLog(tableDir)
     val t0 = System.nanoTime()
 
@@ -168,9 +169,7 @@ object ExtractJob {
     val extracted = bucketLayout(extractDF(pending, numBuckets)
       .observe(gateObs, count(lit(1)).as("total"), count(when(col("ok"), 1)).as("ok"))
       .drop("ok"), numBuckets)
-      .observe(lineageObs, udaf(new BucketLineage(numBuckets),
-        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaLong))(
-        col("bucket"), col("n_bytes"), col("checksum")).as("lineage"))
+      .observe(lineageObs, bucketLineage(numBuckets).as("lineage"))
 
     // a unique stage, so two concurrent runs never share (and overwrite)
     // one directory
@@ -188,23 +187,13 @@ object ExtractJob {
     // A failed commit cleans its own stage where that is safe
     // (SnapshotLog.commitStaged).
     val parent = base.getOrElse(-1L)
-    val snapshotId =
-      if (force) log.commitReplace(stage, parent, statsColumns = Seq("bucket"))
+    val lineage = lineageOf(
+      lineageObs.get("lineage").asInstanceOf[scala.collection.Seq[Long]], t0)
+    Some(
+      if (force) log.commitReplace(stage, parent, statsColumns = Seq("bucket"),
+        lineage = lineage)
       else log.commitOptimistic(stage, statsColumns = Seq("bucket"),
-        requireParent = Some(parent))
-
-    // A3 lineage: per-bucket doc/byte counts + order-insensitive checksum
-    // (bit_xor of per-row xxhash64 — partition-internal order cannot
-    // matter), one metrics file per snapshot
-    val wallMs = (System.nanoTime() - t0) / 1000000L
-    val counts = lineageObs.get("lineage").asInstanceOf[scala.collection.Seq[Long]]
-    val rows = (0 until numBuckets).filter(k => counts(3 * k) > 0L).map { k =>
-      Schemas.MetricsRow(snapshotId, k, counts(3 * k), counts(3 * k + 1),
-        counts(3 * k + 2), wallMs)
-    }
-    GraftIo.writer(spark.createDataset(rows).coalesce(1))
-      .mode("append").parquet(s"$tableDir/metrics")
-    Some(snapshotId)
+        requireParent = Some(parent), lineage = lineage))
   }
 
   /** The resume pending set: `pages` anti-joined against the urls of the
@@ -262,27 +251,34 @@ object ExtractJob {
     else pendingAgainst(done, "shuffle")
   }
 
-  /** The per-bucket lineage aggregation over re-read files, for
-    * [[backfillMetrics]]' repair. run() counts the same three aggregates in
-    * its write pass ([[BucketLineage]]); PipelineSpec's backfill test pins
-    * that the two definitions give equal rows.
+  /** The A3 lineage aggregate of extracted rows: per bucket, the row
+    * count, the `n_bytes` sum and the order-insensitive checksum (bit_xor of
+    * the per-row xxhash64, so partition-internal order cannot matter), all
+    * in one [[BucketLineage]] buffer.
     */
-  private def lineageRows(extracted: DataFrame, snapshotId: Long,
-      wallMs: Long): DataFrame =
-    extracted
-      .groupBy(col("bucket"))
-      .agg(
-        count(lit(1)).as("doc_count"),
-        sum(col("n_bytes")).as("byte_count"),
-        expr("bit_xor(checksum)").as("checksum"))
-      .select(
-        lit(snapshotId).as("snapshot_id"), col("bucket"), col("doc_count"),
-        col("byte_count"), col("checksum"), lit(wallMs).as("wall_ms"))
+  private def bucketLineage(numBuckets: Int): Column =
+    udaf(new BucketLineage(numBuckets),
+      Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, Encoders.scalaLong))(
+      col("bucket"), col("n_bytes"), col("checksum"))
 
-  /** [[lineageRows]]' three aggregates for every bucket in one buffer, for
-    * an `observe` (which takes no grouping) over (bucket, n_bytes,
-    * checksum): slot 3k counts bucket k's rows, 3k+1 sums its `n_bytes`,
-    * 3k+2 XORs its checksums.
+  /** A [[BucketLineage]] buffer as lineage rows, one per nonempty bucket,
+    * with `wall_ms` from `t0` to now: a commit cannot record its own
+    * duration. `snapshot_id` is left at -1; the commit that records the rows
+    * gives them its own id.
+    */
+  private def lineageOf(counts: scala.collection.Seq[Long],
+      t0: Long): Seq[Schemas.MetricsRow] = {
+    val wallMs = (System.nanoTime() - t0) / 1000000L
+    (0 until counts.length / 3).filter(k => counts(3 * k) > 0L).map { k =>
+      Schemas.MetricsRow(-1L, k, counts(3 * k), counts(3 * k + 1),
+        counts(3 * k + 2), wallMs)
+    }
+  }
+
+  /** Lineage's three aggregates for every bucket in one buffer, for an
+    * `observe` or a global `agg` (neither takes a grouping) over (bucket,
+    * n_bytes, checksum): slot 3k counts bucket k's rows, 3k+1 sums its
+    * `n_bytes`, 3k+2 XORs its checksums.
     */
   private final class BucketLineage(numBuckets: Int)
       extends Aggregator[(Int, Long, Long), Array[Long], Array[Long]] {
@@ -318,7 +314,8 @@ object ExtractJob {
     * plus one staged update set. Urls absent from the table are inserted
     * (they are new extractions); urls absent from `pages` are simply not in
     * the update set (nothing to re-run). The A1 success gate holds over the
-    * re-extracted subset exactly as over a batch. Returns the committed
+    * re-extracted subset exactly as over a batch, and the merge commit
+    * records the lineage of the re-extracted rows. Returns the committed
     * snapshot, or None when `urls` selects no page.
     */
   def reextract(
@@ -335,93 +332,34 @@ object ExtractJob {
   }
 
   /** [[reextract]] past the kernel: gate the kernel output `extracted`
-    * (with its `ok` column) and merge it into the table. None when it is
-    * empty.
+    * (with its `ok` column) and merge it into the table with its lineage.
+    * None when it is empty.
     */
   private[spark] def upsertExtracted(spark: SparkSession,
       extracted: DataFrame, tableDir: String, numBuckets: Int): Option[Long] = {
+    val t0 = System.nanoTime()
     val fresh = extracted.persist()
     try {
-      if (checkGate(fresh) == 0L) None
+      val lineage = checkGate(fresh, numBuckets, t0)
+      if (lineage.isEmpty) None
       else Some(new SnapshotLog(tableDir).upsertMatching(spark,
         Schemas.extractedSchema, fresh.drop("ok"), "url",
         statsColumns = Seq("bucket"), clusterBy = Seq("bucket"),
-        clusterParts = numBuckets))
+        clusterParts = numBuckets, lineage = lineage))
     } finally fresh.unpersist(): Unit
   }
 
   /** The A1 success gate over kernel output `batch` (with its `ok`
-    * column), both counts in one job. Returns the row count; throws
-    * [[GateFailed]] when a nonempty batch falls under [[SuccessRatio]].
+    * column) and the batch's lineage, in one job. Returns the lineage rows
+    * (none for an empty batch, `wall_ms` from `t0`); throws [[GateFailed]]
+    * when a nonempty batch falls under [[SuccessRatio]].
     */
-  private[spark] def checkGate(batch: DataFrame): Long = {
-    val gate = batch.agg(count(lit(1)), count(when(col("ok"), 1))).head()
+  private[spark] def checkGate(batch: DataFrame, numBuckets: Int,
+      t0: Long): Seq[Schemas.MetricsRow] = {
+    val gate = batch.agg(count(lit(1)), count(when(col("ok"), 1)),
+      bucketLineage(numBuckets)).head()
     val (total, ok) = (gate.getLong(0), gate.getLong(1))
     if (total > 0L && ok.toDouble / total < SuccessRatio) throw GateFailed(ok, total)
-    total
-  }
-
-  /** Re-derive lineage rows for committed snapshots MISSING from the metrics
-    * table — run() commits the snapshot before appending metrics (the commit
-    * must never depend on a second write landing), so a crash in between
-    * leaves a committed snapshot with no lineage row and the resume rerun
-    * (a no-op) never writes it. Everything needed is re-derivable from table
-    * metadata: the snapshot's own rows are its segment-set difference vs its
-    * parent (the incremental scan; a replace commit's lineage is its full
-    * content). Backfilled rows carry wall_ms = -1 (the wall time died with
-    * the crashed driver). Idempotent; returns the snapshots repaired.
-    */
-  def backfillMetrics(spark: SparkSession, tableDir: String): Seq[Long] = {
-    val log = new SnapshotLog(tableDir)
-    val metricsPath = s"$tableDir/metrics"
-    // through the table's FileSystem: a `file:` or `hdfs:` table dir is no
-    // local path, and a wrong "no metrics yet" re-writes every lineage row
-    val io = new GraftIo(tableDir, SnapshotLog.defaultHadoopConf())
-    val have: Set[Long] =
-      if (!io.isDirectory(io.path("metrics"))) Set.empty
-      else spark.read.parquet(metricsPath)
-        .select("snapshot_id").distinct().collect().map(_.getLong(0)).toSet
-    // POINTER-BOUNDED: a residual manifest past the current pointer is a
-    // crashed writer's in-flight attempt (the retryable pre-swap window),
-    // not a committed snapshot — backfilling it would duplicate lineage the
-    // moment that writer's retry commits for real
-    val current = log.currentSnapshot().getOrElse(-1L)
-    val committed = log.snapshots().filter(_ <= current)
-    val missing = committed.filterNot(have)
-    missing.flatMap { id =>
-      val parent = log.parentOf(id)
-      val files: Option[Seq[String]] =
-        if (parent < 0) Some(log.filesAt(id)) // first commit: content = lineage
-        else if (log.isAppendOf(id, parent)) Some(log.filesAddedBetween(parent, id))
-        else if (log.isRewriteOf(id, parent)) None
-        // row-level rewrite (delete / upsert / compact): its fresh files are
-        // SURVIVORS of parent rows re-filed (plus, for an upsert, merged
-        // rows not separable from them at file granularity) — every one of
-        // those rows already has lineage under an ancestor, so backfilling
-        // the path diff would double-count them (round-5 ADVICE). No upsert
-        // writes a metrics row (`upsertExtracted` → `upsertMatching` records
-        // no lineage), so a re-extract's refreshed rows stay unattributed
-        // rather than inflated.
-        else if (log.isSelfContained(id))
-          // a replace (references nothing but its own segment AND staged
-          // every file itself), whether or not its parent survives: its full
-          // content IS its lineage. A compact is the same shape but carries
-          // the `cp` tag, caught above; pre-round-6 compacts are untagged
-          // and stay ambiguous (documented limitation).
-          Some(log.filesAt(id))
-        else None
-        // append snapshot with an EXPIRED parent: its own rows are no longer
-        // attributable (the diff needs the parent's list) — skip rather than
-        // write lineage silently inflated with the parent's rows
-      files match {
-        case Some(fs) if fs.nonEmpty =>
-          GraftIo.writer(lineageRows(
-            spark.read.schema(Schemas.extractedSchema).parquet(fs: _*),
-            id, wallMs = -1L))
-            .mode("append").parquet(metricsPath)
-          Some(id) // only ids actually written count as repaired
-        case _ => None
-      }
-    }
+    lineageOf(gate.getSeq[Long](2), t0)
   }
 }

@@ -290,8 +290,8 @@ object GraftIo {
     }
   }
 
-  /** The writer every engine parquet write of a table stage or of
-    * `metrics/` starts from. Its two Hadoop options reach only this write's
+  /** The writer every engine parquet write of a table stage or of a
+    * search's matched table starts from. Its two Hadoop options reach only this write's
     * job conf and do nothing for non-`file:` paths: `file:` resolves to
     * [[NioLocalFileSystem]], and that instance stays out of Hadoop's
     * process-wide FileSystem cache, whose key ignores the conf (a cached

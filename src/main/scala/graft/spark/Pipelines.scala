@@ -28,10 +28,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * that can hold a batch digest at all.
   *
   * Each Spark job also costs planning and scheduling, which dominates a
-  * small turn. A steady small-batch turn runs 10 jobs: extract write and
-  * lineage file (4), winner checkpoint (2), one bounded winner collect, one
-  * corpus-digest collect and the clustered write (2). PipelineSpec holds it
-  * to at most 11, and to one new file in each table.
+  * small turn. A steady small-batch turn runs 9 jobs: the extract (3, its
+  * lineage counted by the write and recorded by the commit), winner
+  * checkpoint (2), one bounded winner collect, one corpus-digest collect
+  * and the clustered write (2). PipelineSpec holds it to at most 9, and to
+  * one new file in each table.
   *
   * Dedup semantics are FIRST-COMMITTED-WINS per text digest (the only order a
   * stream of batches can honor), with the min-url row as the in-batch
@@ -82,17 +83,19 @@ object Pipelines {
   /** One batch turn of the pipeline. Returns what was committed where (None
     * everywhere = nothing pending: the batch was already fully processed).
     *
-    * CRASH-SAFE BY WATERMARK: the deduped table records the extract snapshot
-    * it has consumed up to (`meta/_extract_watermark`, written only AFTER the
-    * deduped commit). The slice to dedup is watermark→current — NOT "what
-    * this call just extracted": a driver that died between the extract
-    * commit and the deduped commit makes the rerun's extract a no-op, and
-    * anchoring on the extract result would have dropped that slice from the
-    * deduped corpus forever (round-5 review). Re-running an already-deduped
-    * slice (crash between deduped commit and watermark write) is idempotent:
-    * its digests are already in the table, the probe drops every row.
-    * A force re-extract (replace commit) breaks the watermark lineage and
-    * fails loudly — rebuild the deduped table alongside.
+    * CRASH-SAFE BY TXN: each deduped commit records the extract snapshot it
+    * has consumed up to as the txn `extract:<extracted table root>` in its
+    * own snapshot list (Delta's `SetTransaction`), so the rows and that
+    * progress land in one CAS and no crash can separate them. The slice to
+    * dedup is txn→current — NOT "what this call just extracted": a driver
+    * that died between the extract commit and the deduped commit makes the
+    * rerun's extract a no-op, and anchoring on the extract result would have
+    * dropped that slice from the deduped corpus forever (round-5 review). A
+    * slice of duplicates only still advances the txn, through a txn-only
+    * snapshot that adds no file. A force re-extract (replace commit) breaks
+    * the txn's lineage and fails loudly — rebuild the deduped table
+    * alongside. So does a deduped table that holds the
+    * `meta/_extract_watermark` file of earlier writers and no txn.
     */
   def incrementalDedup(
       spark: SparkSession,
@@ -100,34 +103,48 @@ object Pipelines {
       tableDir: String,
       dedupedDir: String,
       numBuckets: Int = 32): IncrementalResult = {
-    val log = new SnapshotLog(tableDir)
     val extracted = ExtractJob.run(spark, pages, tableDir, numBuckets)
+    val (dedupId, n) = dedupExtracted(spark, tableDir, dedupedDir)
+    IncrementalResult(extracted, dedupId, n)
+  }
+
+  /** [[incrementalDedup]] past its extract: dedup-append the extract
+    * snapshots the deduped table has not consumed and advance its txn.
+    * Returns the deduped snapshot (None when no row was appended) and the
+    * appended row count.
+    */
+  private[graft] def dedupExtracted(spark: SparkSession, tableDir: String,
+      dedupedDir: String): (Option[Long], Long) = {
+    val log = new SnapshotLog(tableDir)
+    val dlog = new SnapshotLog(dedupedDir)
+    val app = s"extract:${log.tableRoot}"
     val to = log.currentSnapshot()
-    val from = readWatermark(dedupedDir)
-    if (to.isEmpty || from == to) return IncrementalResult(extracted, None, 0L)
+    val base = dlog.currentSnapshot()
+    val from = base.flatMap(dlog.parseTxns(_).get(app))
+    if (to.isEmpty || from == to) return (None, 0L)
+    if (from.isEmpty) {
+      // only here, so a steady turn makes no extra filesystem call
+      val io = new GraftIo(dedupedDir, SnapshotLog.defaultHadoopConf())
+      val legacy = io.path("meta/_extract_watermark")
+      if (io.exists(legacy))
+        throw new IllegalStateException(
+          s"${io.extern(legacy)} is an extract watermark file, and the table " +
+            s"records no `$app` txn — the deduped table must be rebuilt")
+    }
     val fresh = from match {
       case Some(f) => log.scanIncremental(spark, Schemas.extractedSchema, f, to)
       case None => log.scan(spark, Schemas.extractedSchema, asOf = to)
     }
-    val (dedupId, n) = appendDeduped(spark, fresh, dedupedDir)
-    writeWatermark(dedupedDir, to.get)
-    IncrementalResult(extracted, dedupId, n)
-  }
-
-  private def wmPath(io: GraftIo) =
-    new org.apache.hadoop.fs.Path(io.root, "meta/_extract_watermark")
-
-  /** Highest extract snapshot the deduped table has consumed (None = fresh). */
-  def readWatermark(dedupedDir: String): Option[Long] = {
-    val io = new GraftIo(dedupedDir, SnapshotLog.defaultHadoopConf())
-    val p = wmPath(io)
-    if (io.exists(p)) Some(io.readString(p).trim.toLong) else None
-  }
-
-  private[graft] def writeWatermark(dedupedDir: String, v: Long): Unit = {
-    val io = new GraftIo(dedupedDir, SnapshotLog.defaultHadoopConf())
-    io.mkdirs(new org.apache.hadoop.fs.Path(io.root, "meta"))
-    io.writeAtomic(wmPath(io), v.toString)
+    val commit = (stage: String, b: Option[Long]) =>
+      dlog.commitIdempotent(stage, app, to.get,
+        statsColumns = Seq("bucket", "fp64"), requireParent = Some(b.getOrElse(-1L)))
+    appendDedupedWith(spark, fresh, dlog, base, commit) match {
+      case (None, _) =>
+        // no row appended: an empty stage commits the txn alone
+        commit(dlog.stageUniqueDataDir(), base)
+        (None, 0L)
+      case appended => appended
+    }
   }
 
   /** Exact-dedup `fresh` extracted rows against the deduped table and append
@@ -147,7 +164,7 @@ object Pipelines {
   def appendDeduped(spark: SparkSession, fresh: DataFrame,
       dedupedDir: String): (Option[Long], Long) = {
     val dlog = new SnapshotLog(dedupedDir)
-    appendDedupedWith(spark, fresh, dlog, (stage, base) =>
+    appendDedupedWith(spark, fresh, dlog, dlog.currentSnapshot(), (stage, base) =>
       Some(dlog.commitOptimistic(stage, statsColumns = Seq("bucket", "fp64"),
         requireParent = Some(base.getOrElse(-1L)))))
   }
@@ -159,8 +176,8 @@ object Pipelines {
     * appends exactly once (C21), and the conditional parent pins the commit
     * to the snapshot the probe read (an overlapping writer fails the
     * batch loudly; the stream's retry re-derives — same position as the
-    * batch pipeline). The extract-watermark file is NOT used here: the
-    * stream's checkpoint offsets are the watermark.
+    * batch pipeline). The batch pipeline's `extract:` txn is NOT used here:
+    * the stream's checkpoint offsets are the watermark.
     *
     * The default idempotence appId is GENERATED on first start and persisted
     * as a marker inside the checkpoint dir ([[StreamingExtract.resolveAppId]]):
@@ -185,7 +202,7 @@ object Pipelines {
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         val dlog = new SnapshotLog(dedupedDir)
         if (!dlog.txnVersion(app).exists(_ >= batchId)) {
-          appendDedupedWith(spark, df, dlog, (stage, base) =>
+          appendDedupedWith(spark, df, dlog, dlog.currentSnapshot(), (stage, base) =>
             dlog.commitIdempotent(stage, app, batchId,
               statsColumns = Seq("bucket", "fp64"),
               requireParent = Some(base.getOrElse(-1L)))): Unit
@@ -413,15 +430,16 @@ object Pipelines {
   }
 
   /** Shared body of the batch and streaming dedup-append: probe survivors
-    * against the CURRENT deduped snapshot ([[dedupSurvivors]]), derive the
+    * against the deduped snapshot `base` ([[dedupSurvivors]]), derive the
     * SKINNY surviving-key set (so an all-duplicate turn — every low-rate
     * streaming tick and idle cron pass — costs the probe evaluation and
     * NOTHING else: no text shuffle, no staged files, no footer re-read),
     * re-attach the full survivor rows, stage them CLUSTERED ON fp64
     * (disjoint, ascending per-file digest ranges — the manifest stats the
-    * next turn's probe prunes by), and hand the staged dir plus the
-    * derivation snapshot to `commitFn` (conditional-OCC for the batch path,
-    * conditional-idempotent for the streaming path).
+    * next turn's probe prunes by), and hand the staged dir plus `base` to
+    * `commitFn` (conditional-OCC for [[appendDeduped]],
+    * conditional-idempotent for the pipeline and the streaming path).
+    * Returns (None, 0) without calling `commitFn` when no row survives.
     *
     * The write applies the per-digest winner pick (`row_number` over
     * (fp64, fp) ordered by url) ON TOP of the clustering exchange, which
@@ -432,18 +450,17 @@ object Pipelines {
     * again afterwards.
     */
   private def appendDedupedWith(spark: SparkSession, fresh: DataFrame,
-      dlog: SnapshotLog,
+      dlog: SnapshotLog, base: Option[Long],
       commitFn: (String, Option[Long]) => Option[Long]): (Option[Long], Long) = {
     // [[appendDeduped]]'s contract, checked before anything is staged
     require(fresh.queryExecution.analyzed.deterministic,
       "dedup append: `fresh` must be deterministic, since the dedup probe " +
         "and the survivor write evaluate it separately")
-    // the probe is derived from THIS snapshot: the commit below is
-    // conditional on it still being the parent, so an overlapping pipeline
-    // turn deduping the same slice cannot land the same rows twice (one
-    // loses loudly and its rerun re-derives — round-5 review pass 3; plain
-    // OCC would have happily committed both appends)
-    val base = dlog.currentSnapshot()
+    // the probe is derived from `base`: the commit below is conditional on
+    // it still being the parent, so an overlapping pipeline turn deduping
+    // the same slice cannot land the same rows twice (one loses loudly and
+    // its rerun re-derives — round-5 review pass 3; plain OCC would have
+    // happily committed both appends)
     val probe = dedupSurvivors(spark, fresh, dlog, base)
     // ONE staging/commit protocol for both regimes — two verbatim copies is
     // how a protocol change lands in one branch only (round-6 review, fifth

@@ -41,7 +41,8 @@ object Schemas {
       checksum: Long)
 
   /** Per-bucket lineage row (north_rule: bucket id, doc count, byte count,
-    * checksum; plus snapshot id + wall time).
+    * checksum; plus snapshot id + wall time). Extract commits record these
+    * rows in their own snapshot list; [[SnapshotLog.lineage]] reads them.
     */
   final case class MetricsRow(
       snapshot_id: Long,

@@ -51,7 +51,9 @@ object SearchJob {
     * and the destination copy (search.py:180-187): overwrite `matchedDir` with
     * the pages rows whose url matched (left-semi join; no forced broadcast —
     * AQE broadcasts when the match set is actually small, and falls back to a
-    * shuffled join when a broad keyword matches the whole corpus).
+    * shuffled join when a broad keyword matches the whole corpus). The
+    * write goes through [[GraftIo.writer]], so on local disk it forks no
+    * process.
     */
   def run(
       spark: SparkSession,
@@ -66,8 +68,8 @@ object SearchJob {
       val n = m.count()
       if (n == 0)
         throw NoMatchFound(s"No value matching with the keyword: $params")
-      pages.join(m, Seq("url"), "left_semi")
-        .write.mode("overwrite").parquet(matchedDir)
+      GraftIo.writer(pages.join(m, Seq("url"), "left_semi"))
+        .mode("overwrite").parquet(matchedDir)
       val sample = m.orderBy("url").limit(sampleSize)
         .collect().map(_.getString(0)).toSeq
       SearchResult(n, sample)

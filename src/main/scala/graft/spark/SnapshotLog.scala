@@ -59,13 +59,15 @@ import scala.jdk.CollectionConverters._
   *   meta/snap-<id>.txt      snapshot <id> parent <parentId>
   *                           manifest <meta/seg-....txt relative path>  (per segment)
   *                           txn <appId> <version>                      (idempotent-writer watermark)
+  *                           lineage <bucket> <docs> <bytes> <checksum> <wall_ms>
+  *                                                   (per bucket, the rows an extract commit staged)
   *   meta/seg-<id>[-tag]-<tok>.txt  file <rel/path.parquet> <size> [#n=<rows>] [col=min..max ...]
   *   data/stage-<uuid>/...   the data files of one commit
   * }}}
   *
   * Tables written before the one-path layout still read: segments named
   * `seg-<id>.txt` / `seg-<id>-cp.txt` and data dirs named `snap-<id>` are
-  * valid input to every read, tail, compact, expire and lineage backfill.
+  * valid input to every read, tail, compact and expire.
   *
   * Only this segment-list format is read: a snapshot list holding an
   * inline `file` line, or a segment entry without a size, fails loudly with
@@ -154,15 +156,17 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     parMap(segs)(readSegment).flatten
 
   /** ONE read of a snapshot's manifest list: (segment relpaths, txn
-    * watermarks); a missing manifest reads as empty. Every consumer parses
-    * through here — the list is the per-commit metadata hot spot, and a
-    * commit attempt needs both families of its parent's from one read (two
-    * reads of one small file are two metadata RPCs per attempt on an object
-    * store). An inline `file` line fails loudly: it is not this format.
+    * watermarks, lineage rows); a missing manifest reads as empty. Every
+    * consumer parses through here — the list is the per-commit metadata hot
+    * spot, and a commit attempt needs both of the first families of its
+    * parent's from one read (two reads of one small file are two metadata
+    * RPCs per attempt on an object store). An inline `file` line fails
+    * loudly: it is not this format.
     */
-  private def parseManifest(snapshotId: Long): (Seq[String], Map[String, Long]) = {
+  private def parseManifest(snapshotId: Long)
+      : (Seq[String], Map[String, Long], Seq[Schemas.MetricsRow]) = {
     val mp = manifestPath(snapshotId)
-    if (!io.exists(mp)) return (Seq.empty, Map.empty)
+    if (!io.exists(mp)) return (Seq.empty, Map.empty, Seq.empty)
     val lines = io.readString(mp).split('\n').toSeq
     if (lines.exists(_.startsWith("file\t")))
       throw new IllegalStateException(
@@ -170,7 +174,11 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
           "format (manifest pointer lines) is readable")
     (lines.collect { case l if l.startsWith("manifest\t") => l.split('\t')(1) },
       lines.collect { case l if l.startsWith("txn\t") =>
-        val p = l.split('\t'); p(1) -> p(2).toLong }.toMap)
+        val p = l.split('\t'); p(1) -> p(2).toLong }.toMap,
+      lines.collect { case l if l.startsWith("lineage\t") =>
+        val p = l.split('\t')
+        Schemas.MetricsRow(snapshotId, p(1).toInt, p(2).toLong, p(3).toLong,
+          p(4).toLong, p(5).toLong) })
   }
 
   /** The segment files (relative paths) a snapshot's manifest list references. */
@@ -182,7 +190,7 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * compact, replace alike — so an idempotent writer's progress survives
     * table maintenance (Delta's `setTransaction` action, re-derived).
     */
-  private def parseTxns(snapshotId: Long): Map[String, Long] =
+  private[spark] def parseTxns(snapshotId: Long): Map[String, Long] =
     parseManifest(snapshotId)._2
 
   /** The last committed version for an idempotent writer (`appId`) as of the
@@ -198,6 +206,22 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     */
   def txnWatermarks(): Map[String, Long] =
     currentSnapshot().map(parseTxns).getOrElse(Map.empty)
+
+  /** Per-bucket lineage of every retained snapshot, ascending by snapshot:
+    * the `lineage` lines each extract commit wrote into its own snapshot
+    * list, so lineage lands in the commit's CAS and lives exactly as long as
+    * its snapshot (Iceberg's snapshot summary). Metadata reads only, no
+    * Spark. A table holding the `metrics/` parquet directory earlier writers
+    * appended after their commit fails loudly: that layout is not read.
+    */
+  def lineage(): Seq[Schemas.MetricsRow] = {
+    val legacy = io.path("metrics")
+    if (io.exists(legacy))
+      throw new IllegalStateException(
+        s"${io.extern(legacy)} holds lineage in the retired parquet layout — " +
+          "lineage is read only from the `lineage` lines of snapshot lists")
+    parMap(snapshots())(parseManifest(_)._3).flatten
+  }
 
   /** Data files listed by one immutable segment: path, recorded size,
     * optional row count (`#n=`) and per-column min/max stats fields
@@ -272,18 +296,6 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     }
   }
 
-  /** The parent snapshot id recorded in a snapshot's manifest header
-    * (-1 for the first commit).
-    */
-  def parentOf(snapshotId: Long): Long = {
-    require(io.exists(manifestPath(snapshotId)),
-      s"snapshot $snapshotId has no manifest under $metaDir")
-    val header = io.readString(manifestPath(snapshotId)).split('\n')
-      .find(_.startsWith("snapshot\t"))
-      .getOrElse(sys.error(s"snapshot $snapshotId manifest missing header"))
-    header.split('\t')(3).toLong
-  }
-
   /** All committed snapshot ids, ascending (the table's history). */
   def snapshots(): Seq[Long] =
     io.list(metaDir).map(_.getPath.getName)
@@ -331,12 +343,14 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * one after retry, and the final snapshot references both segments.
     * `requireParent` makes the append conditional on the snapshot the caller
     * derived its stage from (see [[commitStaged]]). `statsColumns` names
-    * columns whose min/max ride the segment for file skipping. Returns the
-    * committed id.
+    * columns whose min/max ride the segment for file skipping; `lineage`
+    * rows ride the snapshot list ([[lineage]]). Returns the committed id.
     */
   def commitOptimistic(stagedDir: String, statsColumns: Seq[String] = Nil,
-      maxAttempts: Int = 10, requireParent: Option[Long] = None): Long =
-    commitStaged(stagedDir, statsColumns, maxAttempts, requireParent).get
+      maxAttempts: Int = 10, requireParent: Option[Long] = None,
+      lineage: Seq[Schemas.MetricsRow] = Nil): Long =
+    commitStaged(stagedDir, statsColumns, maxAttempts, requireParent,
+      lineage = lineage).get
 
   /** Idempotent append for replayable writers (a streaming `foreachBatch`
     * sink, a retried job): commit the staged files ONLY if `(appId, version)`
@@ -346,15 +360,17 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * commit CAS loop against the would-be parent, so two replayers racing the
     * same batch serialize: the loser's retry observes the winner's txn line
     * and skips. Exactly-once appends from an at-least-once replay — Delta's
-    * `txnAppId`/`txnVersion` protocol, re-derived.
+    * `txnAppId`/`txnVersion` protocol, re-derived. An empty stage commits
+    * the txn alone: a snapshot that advances the watermark and adds no file.
     */
   def commitIdempotent(stagedDir: String, appId: String, version: Long,
       statsColumns: Seq[String] = Nil, maxAttempts: Int = 10,
-      requireParent: Option[Long] = None): Option[Long] = {
+      requireParent: Option[Long] = None,
+      lineage: Seq[Schemas.MetricsRow] = Nil): Option[Long] = {
     require(appId.nonEmpty && !appId.contains('\t') && !appId.contains('\n'),
       "appId must be non-empty and tab/newline-free (it rides the manifest)")
     commitStaged(stagedDir, statsColumns, maxAttempts, requireParent,
-      txn = Some((appId, version)))
+      txn = Some((appId, version)), lineage = lineage)
   }
 
   /** Replace-commit: the new snapshot lists ONLY the staged files — the
@@ -367,18 +383,10 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * neither touches the other's files.
     */
   def commitReplace(stagedDir: String, requireParent: Long,
-      statsColumns: Seq[String] = Nil): Long =
+      statsColumns: Seq[String] = Nil,
+      lineage: Seq[Schemas.MetricsRow] = Nil): Long =
     commitStaged(stagedDir, statsColumns, requireParent = Some(requireParent),
-      carry = (_, _) => Nil).get
-
-  /** True iff `rel` is the segment a given snapshot wrote itself: this
-    * writer names it `seg-<id>[-<tag>]-<token>.txt`, older tables also hold
-    * `seg-<id>.txt` and `seg-<id>-cp.txt`.
-    */
-  private def isOwnSegment(rel: String, id: Long): Boolean = {
-    val n = rel.substring(rel.lastIndexOf('/') + 1)
-    n == s"seg-$id.txt" || (n.startsWith(s"seg-$id-") && n.endsWith(".txt"))
-  }
+      carry = (_, _) => Nil, lineage = lineage).get
 
   /** THE commit routine: every commit shape (append, idempotent append,
     * replace, compact, delete/upsert rewrite) lands its stage through here.
@@ -393,13 +401,15 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * or an exception came before the CAS. An exception from the CAS itself
     * or after it (a commit lock's release, the hint bump) leaves the stage
     * alone: the new snapshot may already list its files, and if it does not,
-    * [[removeOrphanFiles]] ages them out. Callers abort a stage only when
-    * their own write or gate fails.
+    * [[removeOrphanFiles]] ages them out. A stage that held no data file is
+    * deleted after a won commit too: no manifest can reference it. Callers
+    * abort a stage only when their own write or gate fails.
     */
   private def commitStaged(stagedDir: String, statsColumns: Seq[String],
       maxAttempts: Int = 10, requireParent: Option[Long] = None,
       txn: Option[(String, Long)] = None, tag: String = "",
-      carry: (Seq[String], String => HPath) => Seq[String] = (segs, _) => segs)
+      carry: (Seq[String], String => HPath) => Seq[String] = (segs, _) => segs,
+      lineage: Seq[Schemas.MetricsRow] = Nil)
       : Option[Long] = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     val stage = io.qualify(new HPath(stagedDir))
@@ -413,8 +423,10 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     var attempt = 0
     while (attempt < maxAttempts) {
       attemptCommit(stagedDir, staged, statsColumns, tag, carry, txn,
-          requireParent) match {
-        case SnapshotLog.Won(id) => return Some(id)
+          requireParent, lineage) match {
+        case SnapshotLog.Won(id) =>
+          if (staged.isEmpty) abortStage(stagedDir)
+          return Some(id)
         case SnapshotLog.AlreadyApplied => return None
         case SnapshotLog.Lost => attempt += 1 // re-derive from the winner's snapshot
       }
@@ -435,7 +447,9 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * handed), writes a fresh segment listing `staged`, CAS-promotes the
     * child list at `parent + 1`, and bumps the hint. Its filesystem
     * mutations, in order: segment writes, the list's tmp write, the CAS, the
-    * hint bump.
+    * hint bump. The list carries the commit's `lineage` rows, so they land
+    * in the same CAS as the files they count, and a lost CAS takes them
+    * with its list.
     *
     * Every segment it writes is named `seg-<id>[-<tag>]-<token>.txt` with a
     * fresh token, so two writers deriving the same id never share a segment,
@@ -453,12 +467,13 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       statsColumns: Seq[String], tag: String,
       carry: (Seq[String], String => HPath) => Seq[String],
       txn: Option[(String, Long)],
-      requireParent: Option[Long]): SnapshotLog.Attempt = {
+      requireParent: Option[Long],
+      lineage: Seq[Schemas.MetricsRow]): SnapshotLog.Attempt = {
     val token = newToken()
     val prepared =
       try {
         val parent = currentSnapshot().getOrElse(-1L)
-        val (parentSegments, parentTxns) = parseManifest(parent)
+        val (parentSegments, parentTxns, _) = parseManifest(parent)
         if (txn.exists { case (app, v) => parentTxns.get(app).exists(_ >= v) }) None
         else {
           requireParent.filter(_ != parent).foreach { exp =>
@@ -480,7 +495,9 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
           // position Delta takes)
           val lines = Seq(s"snapshot\t$id\tparent\t$parent") ++
             segments.map(sg => s"manifest\t$sg") ++
-            (parentTxns ++ txn).toSeq.sortBy(_._1).map { case (app, v) => s"txn\t$app\t$v" }
+            (parentTxns ++ txn).toSeq.sortBy(_._1).map { case (app, v) => s"txn\t$app\t$v" } ++
+            lineage.map(m => Seq("lineage", m.bucket, m.doc_count, m.byte_count,
+              m.checksum, m.wall_ms).mkString("\t"))
           val tmp = new HPath(metaDir, s"snap-$id.txt.$token.tmp")
           io.writeDirect(tmp, lines.mkString("\n") + "\n")
           Some((id, segments, tmp))
@@ -928,58 +945,6 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     deleted
   }
 
-  /** True iff `child` is a pure APPEND over `parent`: both manifests exist
-    * and the child carries every parent segment by reference. The structural
-    * test [[filesAddedBetween]]'s preconditions reduce to — callers branch on
-    * THIS, never on exception types (a replace commit and an expired parent
-    * are different situations that both make a segment diff meaningless).
-    */
-  def isAppendOf(child: Long, parent: Long): Boolean =
-    io.exists(manifestPath(child)) && io.exists(manifestPath(parent)) &&
-      segmentsAt(parent).toSet.subsetOf(segmentsAt(child).toSet)
-
-  /** True iff every file the snapshot references was written AT its own
-    * commit (its list points only at its own segment): the structural
-    * signature of a replace or first commit, whose full content is therefore
-    * its own lineage even when the parent's manifest has been expired.
-    */
-  def isSelfContained(snapshotId: Long): Boolean = {
-    val segs = segmentsAt(snapshotId)
-    segs.nonEmpty && segs.forall(isOwnSegment(_, snapshotId))
-  }
-
-  /** True iff the snapshot's own segments include REWRITE-tagged ones —
-    * `-rw<N>` survivor segments AND the `-rw-` fresh staged segment of a
-    * row-level delete/upsert ([[commitRewrite]]; the fresh tag is round 7 —
-    * without it a rewrite that dropped every affected segment whole carried
-    * no tag at all), or the `-cp` segment of a [[compact]] — i.e. its
-    * commit re-filed rows that already existed rather than (only) staging
-    * fresh content. Lineage attribution branches on this: backfilling such a
-    * commit's files as new lineage would double-count every carried-over
-    * row. Tags cannot collide with optimistic-commit tokens (hex-only:
-    * neither `rw` nor `cp` is a hex digit pair).
-    */
-  def hasRewriteSegments(snapshotId: Long): Boolean =
-    io.exists(manifestPath(snapshotId)) && segmentsAt(snapshotId).exists { s =>
-      val n = s.substring(s.lastIndexOf('/') + 1)
-      n.startsWith(s"seg-$snapshotId-rw") || n.startsWith(s"seg-$snapshotId-cp")
-    }
-
-  /** True iff `child` is a row-level REWRITE of `parent` (delete / upsert /
-    * compact): it carries rewrite-tagged segments of its own, or references
-    * SOME but not ALL of the parent's segments — the one commit shape that
-    * drops parent segments while still carrying others by reference. A pure
-    * append (carries all) and a replace (carries none) return false.
-    */
-  def isRewriteOf(child: Long, parent: Long): Boolean = {
-    if (hasRewriteSegments(child)) return true
-    if (!io.exists(manifestPath(child)) ||
-        !io.exists(manifestPath(parent))) return false
-    val cs = segmentsAt(child).toSet
-    val ps = segmentsAt(parent).toSet
-    (ps -- cs).nonEmpty && ps.intersect(cs).nonEmpty
-  }
-
   /** Incremental read: the data files ADDED strictly after `fromSnapshot`,
     * up to and including `toSnapshot` — the Iceberg incremental-append scan
     * analog, what a downstream pipeline tails instead of re-reading the
@@ -1184,13 +1149,17 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * column range and the `statsColumns` it records keep pruning — without
     * it, update files span the full domain and defeat C16 file skipping on
     * exactly the files this commit writes.
+    *
+    * `lineage` rows (a re-extract's count of its update set) ride whichever
+    * commit lands the merge.
     */
   def upsertMatching(spark: org.apache.spark.sql.SparkSession,
       schema: org.apache.spark.sql.types.StructType,
       updates: org.apache.spark.sql.DataFrame, keyCol: String,
       statsColumns: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil,
-      clusterParts: Int = 0): Long = {
+      clusterParts: Int = 0,
+      lineage: Seq[Schemas.MetricsRow] = Nil): Long = {
     import org.apache.spark.sql.functions.{col, count, count_distinct, input_file_name, lit}
     val cols = schema.fieldNames.map(col).toSeq
     // persist the PROJECTED update set: it is evaluated by the uniqueness
@@ -1215,7 +1184,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         // keys; landing on it unchecked would silently duplicate them)
         val stage = writeStage(
           GraftIo.writer(clustered(u, clusterBy, clusterParts)).mode("overwrite").parquet(_))
-        return commitOptimistic(stage, statsColumns, requireParent = Some(-1L))
+        return commitOptimistic(stage, statsColumns, requireParent = Some(-1L),
+          lineage = lineage)
       }
       val keys = u.select(keyCol)
       // bounded-key IN locate (see keyedLocateFiles); the rewrite keeps
@@ -1228,12 +1198,13 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         // incremental readers keep tailing straight through it)
         val stage = writeStage(
           GraftIo.writer(clustered(u, clusterBy, clusterParts)).mode("overwrite").parquet(_))
-        commitOptimistic(stage, statsColumns, requireParent = Some(parent))
+        commitOptimistic(stage, statsColumns, requireParent = Some(parent),
+          lineage = lineage)
       } else
         rewriteExcluding(spark, schema, parent, affected, affectedSegs,
           df => clustered(df.join(keys, Seq(keyCol), "left_anti")
             .select(cols: _*).unionByName(u), clusterBy, clusterParts),
-          statsColumns)
+          statsColumns, lineage)
     } finally u.unpersist(): Unit
   }
 
@@ -1288,12 +1259,13 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
       schema: org.apache.spark.sql.types.StructType,
       parent: Long, affected: Set[String], affectedSegs: Set[String],
       survivors: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      statsColumns: Seq[String]): Long = {
+      statsColumns: Seq[String],
+      lineage: Seq[Schemas.MetricsRow] = Nil): Long = {
     requireSchemaCovers(schema, affected.toSeq, "the delete rewrite")
     val stage = writeStage(GraftIo.writer(survivors(
       spark.read.schema(schema).parquet(affected.toSeq.sorted: _*)))
       .mode("overwrite").parquet(_))
-    commitRewrite(stage, parent, affected, affectedSegs, statsColumns)
+    commitRewrite(stage, parent, affected, affectedSegs, statsColumns, lineage)
   }
 
   /** Loud guard for every REWRITE that reads files back through a
@@ -1346,7 +1318,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * was derived from `parent`, so it is conditional on it.
     */
   private def commitRewrite(stagedDir: String, parent: Long, removed: Set[String],
-      affectedSegments: Set[String], statsColumns: Seq[String]): Long = {
+      affectedSegments: Set[String], statsColumns: Seq[String],
+      lineage: Seq[Schemas.MetricsRow]): Long = {
     def carry(parentSegments: Seq[String], seg: String => HPath): Seq[String] = {
       var rewritten = 0
       parentSegments.flatMap { sg =>
@@ -1374,11 +1347,10 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     // when uniformly-hashed keys blanket a segment) left no `-rw<N>` segment
     // at all, so (a) a streaming tail whose window contained both the append
     // and the rewrite passed the name guard and replayed rewrite output as
-    // appends, and (b) a rewrite covering a single-segment table
-    // misclassified as a replace (isRewriteOf false, isSelfContained true),
-    // which an expired-parent lineage backfill would then double-count.
+    // appends, and (b) a rewrite covering a single-segment table looked
+    // like a replace.
     commitStaged(stagedDir, statsColumns, requireParent = Some(parent),
-      tag = "rw", carry = carry).get
+      tag = "rw", carry = carry, lineage = lineage).get
   }
 
   /** One micro-batch of the streaming tail ([[SnapshotStreamSource]]): the
@@ -1405,8 +1377,8 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
         // manifest, a rewrite commit, and an offset inversion are three
         // different operator errors with three different fixes. ONE parse of
         // each end manifest serves both the append-lineage verdict and the
-        // segment diff — round 5 routed through isAppendOf + metaAddedBetween,
-        // re-parsing both small files and doubling per-batch metadata RPCs on
+        // segment diff — round 5 routed through a separate append predicate
+        // + metaAddedBetween, re-parsing both small files and doubling per-batch metadata RPCs on
         // an object store (round-5 ADVICE).
         require(f < toSnapshot,
           s"streaming offsets inverted: from $f > end $toSnapshot — " +

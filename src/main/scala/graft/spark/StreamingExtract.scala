@@ -92,7 +92,8 @@ object StreamingExtract {
     * The E9 success-ratio gate holds per micro-batch, mirroring the batch
     * job: a batch under the threshold aborts its stage and fails the stream
     * BEFORE the commit, so the destination table never references a bad
-    * batch.
+    * batch. The gate's job also counts the batch's lineage, which the
+    * commit records ([[SnapshotLog.lineage]]).
     *
     * `appId` must be stable across restarts of the same logical pipeline
     * (default: a generated id persisted inside the checkpoint dir —
@@ -115,13 +116,15 @@ object StreamingExtract {
     val extracted = ExtractJob.extractDF(pages, numBuckets)
     extracted.writeStream
       .foreachBatch { (df: DataFrame, batchId: Long) =>
+        val t0 = System.nanoTime()
         val destLog = new SnapshotLog(destTableDir)
         // cheap pre-check: a replayed batch skips even the stage write (the
         // authoritative check still runs inside the commit CAS loop)
         if (!destLog.txnVersion(app).exists(_ >= batchId)) {
           val batch = df.persist() // gate + write must not run the kernel twice
           try {
-            if (ExtractJob.checkGate(batch) > 0L) {
+            val lineage = ExtractJob.checkGate(batch, numBuckets, t0)
+            if (lineage.nonEmpty) {
               // sized from the cached batch's measured bytes
               val stage = destLog.writeStage(
                 GraftIo.writer(ExtractJob.bucketLayout(batch.drop("ok"), numBuckets))
@@ -130,7 +133,7 @@ object StreamingExtract {
               // manifest CAS the batch may be committed (and its txn recorded,
               // so a replay would skip it)
               destLog.commitIdempotent(stage, app, batchId,
-                statsColumns = Seq("bucket")): Unit
+                statsColumns = Seq("bucket"), lineage = lineage): Unit
             }
           } finally batch.unpersist(): Unit
         }

@@ -125,14 +125,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = ExtractJob.readExtracted(spark, oneShotDir)
       .select("url", "kind", "text", "checksum").orderBy("url").collect().toSeq
     assert(a == b)
-    // lineage rows exist per (snapshot, bucket) with consistent totals
-    val metrics = spark.read.parquet(s"$dir/metrics")
-    assert(metrics.select("snapshot_id").distinct().count() == 2)
-    assert(metrics.agg(sum("doc_count")).head().getLong(0) == corpusSize)
-    // the lineage rows of each snapshot land as one metrics file
-    val metricsFiles = new java.io.File(s"$dir/metrics").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(metricsFiles == 2, s"two runs, one lineage file each: $metricsFiles")
+    // lineage rows exist per (snapshot, bucket) with consistent totals, in
+    // each commit's own snapshot list and nowhere else
+    val lineage = new SnapshotLog(dir).lineage()
+    assert(lineage.map(_.snapshot_id).distinct == Seq(0L, 1L))
+    assert(lineage.map(_.doc_count).sum == corpusSize)
+    assert(lineage.forall(_.wall_ms >= 0L))
+    assert(!new java.io.File(s"$dir/metrics").exists(), "no lineage side write")
+    // the write pass's counters equal a from-scratch count of the rows
+    val oneShotLog = new SnapshotLog(oneShotDir)
+    assert(lineageAt(oneShotLog, 0L) ==
+      lineageCounted(ExtractJob.readExtracted(spark, oneShotDir)))
   }
 
   test("resume anti-join regimes: broadcast, hits, and sort-merge agree") {
@@ -553,6 +556,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val filesBefore = log.currentFiles().toSet
     val r = ExtractJob.reextract(spark, fixed, dir, targets.toDF("url"), numBuckets = 4)
     assert(r.contains(1L))
+    // the merge commit records the lineage of exactly the re-extracted rows
+    assert(lineageAt(log, 1L) == lineageCounted(
+      ExtractJob.readExtracted(spark, dir).filter(col("url").isin(targets: _*))))
 
     val after = ExtractJob.readExtracted(spark, dir)
       .select("url", "text").collect().map(r2 => r2.getString(0) -> r2.getString(1)).toMap
@@ -821,7 +827,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("an old-layout table (seg-<id>.txt, seg-<id>-cp.txt, snap-<id> data dirs) scans, tails, compacts, expires and backfills lineage") {
+  test("an old-layout table (seg-<id>.txt, seg-<id>-cp.txt, snap-<id> data dirs) scans, tails, compacts and expires") {
     import java.nio.file.{Files => F, Paths => P}
     val sp = spark; import sp.implicits._
     val dir = tmpDir("old_layout")
@@ -851,23 +857,20 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(urls(log.scan(spark, schema)) == fixture.take(60).map(_.url).sorted)
     // structural verdicts: 0 and 1 list only their own segment, 1 is a
     // compaction, 2 an append of 1
-    assert(log.isSelfContained(0L) && log.isSelfContained(1L) && !log.isSelfContained(2L))
-    assert(!log.hasRewriteSegments(0L) && log.hasRewriteSegments(1L) && !log.hasRewriteSegments(2L))
-    assert(log.isRewriteOf(1L, 0L) && log.isAppendOf(2L, 1L) && !log.isRewriteOf(2L, 1L))
+    def segNames(id: Long) = segmentsOf(dir, id).map(_.getFileName.toString)
+    assert(segNames(0L) == Seq("seg-0.txt") && segNames(1L) == Seq("seg-1-cp.txt") &&
+      segNames(2L) == Seq("seg-1-cp.txt", "seg-2.txt"))
+    assert(!hasRewriteSegments(dir, 0L) && hasRewriteSegments(dir, 1L) &&
+      !hasRewriteSegments(dir, 2L))
+    assert(!isAppendOf(dir, 1L, 0L) && isAppendOf(dir, 2L, 1L))
     // tails: the append reads as one, the compaction fails the stream loudly
     assert(urls(log.scanIncremental(spark, schema, 1L)) == fixture.slice(40, 60).map(_.url).sorted)
     assert(log.streamingBatch(spark, schema, Some(1L), 2L).isStreaming)
     val e = intercept[IllegalStateException](log.streamingBatch(spark, schema, Some(0L), 2L))
     assert(e.getMessage.contains("rewrite"), e.getMessage)
-    // lineage: the first commit and the append are attributed, the
-    // compaction is not
-    assert(ExtractJob.backfillMetrics(spark, dir) == Seq(0L, 2L))
-    val docs = spark.read.parquet(s"$dir/metrics").groupBy("snapshot_id")
-      .agg(sum("doc_count")).as[(Long, Long)].collect().toMap
-    assert(docs == Map(0L -> 40L, 2L -> 20L), s"$docs")
     // compact and expire: the old data dirs are reclaimed whole
     assert(log.compact(spark, schema, targetFiles = 1).contains(3L))
-    assert(log.isSelfContained(3L) && log.hasRewriteSegments(3L))
+    assert(segmentsOf(dir, 3L).size == 1 && hasRewriteSegments(dir, 3L))
     assert(log.expireSnapshots(keepLast = 1)._1 == 3)
     assert(urls(log.scan(spark, schema)) == fixture.take(60).map(_.url).sorted)
     for (id <- 0 to 2) assert(!F.exists(P.get(dir, "data", s"snap-$id")), s"snap-$id")
@@ -1100,67 +1103,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ev = log.scan(spark, evolved)
     assert(ev.count() == 500)
     assert(ev.filter(col("added").isNull).count() == 500)
-  }
-
-  test("backfillMetrics: re-derives lineage for a snapshot whose metrics append died with the driver") {
-    val sp = spark; import sp.implicits._
-    val dir = tmpDir("backfill")
-    val half = spark.createDataset(fixture.take(corpusSize / 2))
-    val all = spark.createDataset(fixture)
-    ExtractJob.run(spark, half, dir, 8) // snapshot 0
-    ExtractJob.run(spark, all, dir, 8)  // snapshot 1 (append)
-    val before = spark.read.parquet(s"$dir/metrics")
-      .select("snapshot_id", "bucket", "doc_count", "byte_count", "checksum")
-      .orderBy("snapshot_id", "bucket").collect().toSeq
-    // simulate the crash window: commit landed, metrics append did not —
-    // drop snapshot 1's lineage rows entirely
-    val kept = spark.read.parquet(s"$dir/metrics").filter(col("snapshot_id") === 0L)
-      .collect().toSeq
-    val metricsSchema = spark.read.parquet(s"$dir/metrics").schema
-    spark.createDataFrame(spark.sparkContext.parallelize(kept), metricsSchema)
-      .write.mode("overwrite").parquet(s"$dir/metrics")
-    val repaired = ExtractJob.backfillMetrics(spark, dir)
-    assert(repaired == Seq(1L), s"got $repaired")
-    val after = spark.read.parquet(s"$dir/metrics")
-      .select("snapshot_id", "bucket", "doc_count", "byte_count", "checksum")
-      .orderBy("snapshot_id", "bucket").collect().toSeq
-    assert(after == before, "backfilled lineage must equal the original rows")
-    // wall_ms marks the backfill (-1); originals keep theirs
-    assert(spark.read.parquet(s"$dir/metrics")
-      .filter(col("snapshot_id") === 1L && col("wall_ms") === -1L).count() > 0)
-    // idempotent: nothing left to repair — also when the same table is
-    // addressed by a `file:` URI (the metrics dir is probed through the
-    // table's FileSystem, not as a local path)
-    assert(ExtractJob.backfillMetrics(spark, dir).isEmpty)
-    assert(ExtractJob.backfillMetrics(spark,
-      "file:" + new java.io.File(dir).getAbsolutePath).isEmpty)
-    assert(spark.read.parquet(s"$dir/metrics").count() == before.size)
-  }
-
-  test("backfillMetrics skips rewrite commits: delete/upsert survivors and compacts are not re-attributed") {
-    val sp = spark; import sp.implicits._
-    val dir = tmpDir("backfill_rw")
-    // snapshot 0, over several files so the compact below has work to do
-    withConf(OneBytePartitions)(
-      ExtractJob.run(spark, spark.createDataset(fixture), dir, 8))
-    val log = new SnapshotLog(dir)
-    val schema = Schemas.extractedSchema
-    // snapshot 1: row-level delete — fresh files are survivor rewrites
-    val drops = spark.createDataset(fixture.take(3).map(_.url)).toDF("url")
-    assert(log.deleteMatching(spark, schema, drops, "url").contains(1L))
-    assert(log.isRewriteOf(1L, 0L), "delete must be structurally a rewrite")
-    // snapshot 2: compact — same rows, new files, `cp`-tagged segment
-    assert(log.compact(spark, schema, targetFiles = 1).contains(2L))
-    assert(log.hasRewriteSegments(2L), "compact segment must carry the cp tag")
-    assert(!log.hasRewriteSegments(0L) && !log.isRewriteOf(0L, -1L))
-    val before = spark.read.parquet(s"$dir/metrics").count()
-    // neither rewrite id gets lineage backfilled: their rows are carried
-    // content already attributed under snapshot 0 (round-5 ADVICE: the path
-    // diff previously re-counted every survivor-rewrite file)
-    assert(ExtractJob.backfillMetrics(spark, dir).isEmpty)
-    assert(spark.read.parquet(s"$dir/metrics").count() == before)
-    assert(spark.read.parquet(s"$dir/metrics")
-      .filter(col("snapshot_id") > 0L).count() == 0)
   }
 
   test("scanIncremental: reads exactly the rows appended between two snapshots; replace breaks lineage loudly") {
@@ -1588,33 +1530,47 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     def content(dir: String) = new SnapshotLog(dir)
       .scan(spark, Pipelines.dedupedSchema).select("fp", "url")
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+    val txn = s"extract:${new SnapshotLog(table).tableRoot}"
+    val dlog = new SnapshotLog(dd)
     // crash window 1: driver died AFTER the extract commit, BEFORE the dedup
     // commit — simulated by running the extract OUTSIDE the pipeline; the
-    // rerun's extract is a no-op but the watermark lags, so the slice must
-    // still be deduped (anchoring on the extract result lost it forever)
+    // rerun's extract is a no-op but the txn lags, so the slice must still
+    // be deduped (anchoring on the extract result lost it forever)
     ExtractJob.run(spark, spark.createDataset(all.take(40)), table, 8)
     val r = Pipelines.incrementalDedup(
       spark, spark.createDataset(all.take(40)), table, dd, 8)
     assert(r.extractedSnapshot.isEmpty && r.dedupedSnapshot.isDefined
       && r.appendedRows > 0, s"missed slice must be recovered: $r")
     val rows1 = content(dd)
-    assert(Pipelines.readWatermark(dd).contains(0L))
-    // crash window 2: dedup committed but the watermark write died — rerun
-    // re-dedups the whole lineage, the digest anti-join drops every row, the
-    // watermark heals, content unchanged
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(dd, "meta", "_extract_watermark"))
+    // the deduped head records, in its own list, the extract snapshot it
+    // consumed
+    assert(dlog.txnWatermarks() == Map(txn -> 0L))
+    // a rerun is a full no-op
+    assert(Pipelines.incrementalDedup(spark, spark.createDataset(all.take(40)),
+      table, dd, 8) == Pipelines.IncrementalResult(None, None, 0L))
+    assert(dlog.currentSnapshot() == r.dedupedSnapshot)
+    // an all-duplicate turn (known texts under new urls): the extract
+    // commits, the dedup appends no row, and the txn still advances through
+    // a txn-only snapshot that adds no data file
+    val head = dlog.currentSnapshot().get
+    val copies = all.take(10).map(p => p.copy(url = p.url + "-copy"))
     val r2 = Pipelines.incrementalDedup(
-      spark, spark.createDataset(all.take(40)), table, dd, 8)
-    assert(r2.extractedSnapshot.isEmpty && r2.dedupedSnapshot.isEmpty
+      spark, spark.createDataset(copies), table, dd, 8)
+    assert(r2.extractedSnapshot.contains(1L) && r2.dedupedSnapshot.isEmpty
       && r2.appendedRows == 0, s"re-dedup must be a content no-op: $r2")
-    assert(Pipelines.readWatermark(dd).contains(0L), "watermark must heal")
+    assert(dlog.currentSnapshot().contains(head + 1L))
+    assert(dlog.txnWatermarks() == Map(txn -> 1L))
+    assert(segmentsOf(dd, head + 1L) == segmentsOf(dd, head), "a txn-only snapshot")
+    assert(dlog.currentFiles() == dlog.filesAt(head))
+    assert(new java.io.File(s"$dd/data").list().toSet ==
+      dlog.currentFiles().map(f => new java.io.File(f).getParentFile.getName).toSet,
+      "the txn-only commit leaves no stage behind")
     assert(content(dd) == rows1)
     // and the pipeline proceeds normally on the next real batch
     val r3 = Pipelines.incrementalDedup(
       spark, spark.createDataset(all), table, dd, 8)
-    assert(r3.extractedSnapshot.contains(1L) && r3.appendedRows > 0)
-    assert(Pipelines.readWatermark(dd).contains(1L))
+    assert(r3.extractedSnapshot.contains(2L) && r3.appendedRows > 0)
+    assert(dlog.txnWatermarks() == Map(txn -> 2L))
   }
 
   /** (corpus scan present?, count of shuffle exchanges whose subtree holds a
@@ -1688,7 +1644,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dlog.scan(spark, Pipelines.dedupedSchema).count() == 20L)
   }
 
-  test("a steady small-regime pipeline turn runs at most 11 Spark jobs; its files cluster on fp64") {
+  test("a steady small-regime pipeline turn runs at most 9 Spark jobs; its files cluster on fp64") {
     val sp = spark; import sp.implicits._
     val table = tmpDir("budget_tbl"); val dd = tmpDir("budget_dd")
     val seed = fixture.take(120)
@@ -1705,7 +1661,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Pipelines.incrementalDedup(spark, batch(1), table, dd, 8))
     assert(r.appendedRows > 0L && r.appendedRows <= 20L, s"$r")
     import scala.jdk.CollectionConverters._
-    assert(meter.jobs.get <= 11,
+    assert(meter.jobs.get <= 9,
       s"${meter.jobs.get} jobs:\n${meter.jobLines.asScala.mkString("\n")}")
     // the write layout follows the bytes: a small turn adds one data file
     // to each table
@@ -1743,6 +1699,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Pipelines.incrementalDedup(spark, batch(1), table, dd, 8))
     assert(r.appendedRows > 0L, s"$r")
     assert(spawned.isEmpty, s"${spawned.size} processes:\n${spawned.mkString("\n")}")
+    // a search over the same table writes its matched table the same way
+    val extracted = ExtractJob.readExtracted(spark, table)
+    val (found, searchSpawned) = graft.Probe.processStarts(
+      SearchJob.run(spark, extracted, extracted, SearchParams(any = Some("needleTOKEN")),
+        tmpDir("spawn_search") + "/matched"))
+    assert(found.count > 0L, s"$found")
+    assert(searchSpawned.isEmpty,
+      s"${searchSpawned.size} processes:\n${searchSpawned.mkString("\n")}")
   }
 
   test("inverted dedup probe: the corpus side never shuffles; fp64 stats prune files") {

@@ -92,15 +92,12 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     // b === 0 matches rows in both files -> both rewritten -> the parent's
     // only segment is dropped WHOLE and survivors live in the fresh staged
     // segment alone. Untagged (pre-round-7) this shape looked like a
-    // REPLACE: isRewriteOf false (no parent segment carried), and an
-    // expired-parent lineage backfill would have counted the survivors as
-    // new rows.
+    // REPLACE: no parent segment carried, only the snapshot's own.
     val del = log.deleteWhere(spark, rows.schema, col("b") === 0)
     assert(del.contains(1L))
-    assert(log.hasRewriteSegments(1L),
+    assert(hasRewriteSegments(dir, 1L),
       "the fresh staged segment must carry the rw tag")
-    assert(log.isRewriteOf(1L, 0L), "a whole-table rewrite is not a replace")
-    assert(!log.isAppendOf(1L, 0L))
+    assert(!isAppendOf(dir, 1L, 0L))
     assert(idsOf(log.scan(spark, rows.schema)) ==
       (0L until 20L).filterNot(_ % 5 == 0))
   }
@@ -277,7 +274,7 @@ class SnapshotDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     // tailing straight through it)
     val ins = Seq((200L, 1L)).toDF("id", "v")
     val id3 = log.upsertMatching(spark, rows.schema, ins, "id")
-    assert(log.isAppendOf(id3, id2), "a pure-insert upsert must be an append")
+    assert(isAppendOf(dir, id3, id2), "a pure-insert upsert must be an append")
     assert(log.scan(spark, rows.schema).count() == 43)
 
     // ambiguous updates (duplicate keys) are rejected loudly

@@ -194,7 +194,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids.toSet == (1L to 6L).toSet, s"got $ids")
     assert(base.currentSnapshot().contains(6L))
     for (id <- 1L to 6L)
-      assert(base.isAppendOf(id, id - 1), s"snapshot $id must be a pure append")
+      assert(isAppendOf(dir, id, id - 1), s"snapshot $id must be a pure append")
     // union content: nothing lost, nothing duplicated
     assert(base.scan(spark, rows.schema).select("id").collect()
       .map(_.getLong(0)).sorted.toSeq == (0L until 700L).toSeq)
@@ -570,7 +570,7 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(ids.toSet == (1L to 6L).toSet, s"got $ids")
       assert(base.currentSnapshot().contains(6L))
       for (id <- 1L to 6L)
-        assert(base.isAppendOf(id, id - 1), s"snapshot $id must be a pure append")
+        assert(isAppendOf(dir, id, id - 1), s"snapshot $id must be a pure append")
       assert(base.scan(spark, rows.schema).select("id").collect()
         .map(_.getLong(0)).sorted.toSeq == (0L until 700L).toSeq)
       val incCounts = (1L to 6L).map(id =>
@@ -848,6 +848,22 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val Seq(seg) = segmentsOf(sizelessDir, 0L)
     F.writeString(seg, fileLines(sizelessDir, sizelessLog).mkString("", "\n", "\n"))
     readsLoudly(sizelessLog, seg)
+    // lineage in the parquet `metrics/` directory earlier writers appended
+    val (metricsDir, metricsLog) = table("old_metrics")
+    val metrics = P.get(metricsDir, "metrics")
+    F.createDirectories(metrics)
+    val em = intercept[IllegalStateException](metricsLog.lineage())
+    assert(em.getMessage.contains(metrics.toString), em.getMessage)
+    // a deduped table whose extract progress is a watermark file, not a txn
+    val pages = spark.createDataset(Synth.corpus(20))
+    val ext = tmpDir("old_wm_ext"); val dd = tmpDir("old_wm_dd")
+    ExtractJob.run(spark, pages, ext, 4)
+    Pipelines.appendDeduped(spark, ExtractJob.readExtracted(spark, ext), dd)
+    val wm = P.get(dd, "meta", "_extract_watermark")
+    F.writeString(wm, "0")
+    val ew = intercept[IllegalStateException](
+      Pipelines.incrementalDedup(spark, pages, ext, dd, 4))
+    assert(ew.getMessage.contains(wm.toString), ew.getMessage)
     // a gated ANN index without its serving manifest
     val emb = Seq.tabulate(50)(i =>
       (i.toLong, Array.tabulate(16)(d => math.sin(i * 0.37 + d * 1.3).toFloat), i % 5))
@@ -859,6 +875,37 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     F.move(P.get(path, "_index_manifest.txt"), P.get(path + ".mf_aside"))
     val e = intercept[IllegalStateException](Embeddings.lshTopKIndexed(spark, path, q, 5))
     assert(e.getMessage.contains("_index_manifest.txt"), e.getMessage)
+  }
+
+  test("a commit that loses its CAS and retries leaves its lineage only in the winning list") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.setBoolean("graft.fs.atomic.rename", false)
+    hc.set("graft.fs.cas.lock", classOf[RacerOnAcquireLock].getName)
+    try {
+      val dir = tmpDir("lineage_retry")
+      val log = new SnapshotLog(dir)
+      val rows = spark.range(30).select(col("id"), (col("id") % 3).as("v"))
+      log.append(rows.filter(col("id") < 10).repartition(1))
+      val stage = log.writeStage(
+        rows.filter(col("id") >= 20).repartition(1).write.mode("overwrite").parquet(_))
+      val mine = Schemas.MetricsRow(-1L, 2, 10L, 80L, 12345L, 7L)
+      // a racer commits snapshot 1 after this commit wrote its list for id
+      // 1 and before its CAS: the CAS is lost, the retry lands at 2
+      RacerOnAcquireLock.racer.set(() =>
+        new SnapshotLog(dir).append(rows.filter(col("id") >= 10 && col("id") < 20)
+          .repartition(1)): Unit)
+      assert(log.commitOptimistic(stage, lineage = Seq(mine)) == 2L)
+      assert(RacerOnAcquireLock.racer.get == null, "the racer never ran")
+      assert(lineageLinesOf(dir, 1L).isEmpty)
+      assert(lineageLinesOf(dir, 2L) == Seq("lineage\t2\t10\t80\t12345\t7"))
+      assert(log.lineage() == Seq(mine.copy(snapshot_id = 2L)))
+      assert(!new java.io.File(dir, "meta").list().exists(_.endsWith(".tmp")))
+      assert(log.scan(spark, rows.schema).count() == 30L)
+    } finally {
+      RacerOnAcquireLock.racer.set(null)
+      hc.unset("graft.fs.atomic.rename")
+      hc.unset("graft.fs.cas.lock")
+    }
   }
 
   test("stage names carry a whole random UUID") {
@@ -891,6 +938,16 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       df.select("id").as[Long].collect().toSeq.sorted
     try {
+      // an extract run: its lineage rides the list the CAS published, once
+      val ext = tmpDir("release_extract")
+      val pages = spark.createDataset(Synth.corpus(40))
+      failsAfterCas(ExtractJob.run(spark, pages, ext, 8))
+      val elog = new SnapshotLog(ext)
+      assert(elog.currentSnapshot().contains(0L))
+      assert(lineageAt(elog, 0L) == lineageCounted(ExtractJob.readExtracted(spark, ext)))
+      assert(elog.lineage().size == lineageLinesOf(ext, 0L).size)
+      assert(ExtractJob.run(spark, pages, ext, 8).isEmpty)
+      assert(elog.lineage().size == lineageLinesOf(ext, 0L).size)
       // a dedup append
       val dd = tmpDir("release_dedup")
       val batch = spark.createDataset((0 until 30).map(i => Schemas.Extracted(
@@ -914,6 +971,10 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       stream()
       assert(dstLog.currentSnapshot().contains(0L))
       assert(dstLog.scan(spark, Schemas.extractedSchema).count() == 40)
+      // the batch's lineage is listed once, by the commit that threw
+      assert(lineageAt(dstLog, 0L) ==
+        lineageCounted(dstLog.scan(spark, Schemas.extractedSchema)))
+      assert(dstLog.lineage().size == lineageLinesOf(dst, 0L).size)
       // compact, then a key-set delete
       val log = new SnapshotLog(tmpDir("release_rewrite"))
       val rows = spark.range(200).select(col("id"), (col("id") % 7).as("v"))
@@ -930,6 +991,25 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       hc.unset("graft.fs.cas.lock")
     }
   }
+}
+
+/** A [[CommitLock.Provider]] for fault injection: no exclusion (its test
+  * commits from one thread), and an acquire that first runs `racer` once
+  * when one is set — a commit landing between another commit's head read
+  * and its CAS, which that commit then loses.
+  */
+final class RacerOnAcquireLock extends CommitLock.Provider {
+  def create(io: GraftIo): CommitLock = () => {
+    Option(RacerOnAcquireLock.racer.getAndSet(null)).foreach(_.apply())
+    new CommitLock.Lease {
+      def renew(): Unit = ()
+      def release(): Unit = ()
+    }
+  }
+}
+
+object RacerOnAcquireLock {
+  val racer = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
 }
 
 /** A [[CommitLock.Provider]] for fault injection: no exclusion (its test

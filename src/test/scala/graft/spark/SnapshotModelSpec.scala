@@ -66,8 +66,8 @@ class SnapshotModelSpec extends AnyFunSuite with BeforeAndAfterAll {
           current = (current ++ fresh).sorted
           history += id -> current
           // incremental invariant: the appended rows ARE the incremental read
-          val parent = log.parentOf(id)
-          if (parent >= 0 && log.isAppendOf(id, parent)) {
+          val parent = parentOf(dir, id)
+          if (parent >= 0 && isAppendOf(dir, id, parent)) {
             val inc = log.scanIncremental(spark, schema, parent, Some(id))
               .select("id").collect().map(_.getLong(0)).toSeq.sorted
             assert(inc == fresh.toSeq.sorted,

@@ -123,7 +123,7 @@ class SnapshotStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the tail silently delivered rewrite output as appends.
     val del = log.deleteWhere(spark, schema, col("id").between(10L, 12L))
     assert(del.nonEmpty)
-    assert(log.hasRewriteSegments(del.get),
+    assert(TestCommits.hasRewriteSegments(dir, del.get),
       "the rewrite's fresh staged segment must carry the rw tag")
     val e = intercept[IllegalStateException] {
       log.streamingBatch(spark, schema, Some(s0), log.currentSnapshot().get)
@@ -243,6 +243,13 @@ class SnapshotStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     appendPages(60, 100)
     StreamingExtract.startTableToTable(spark, srcDir, dstDir, ckpt, 8)
       .awaitTermination()
+    // that one AvailableNow batch is one commit, and its lineage counts
+    // exactly the rows it committed
+    val batchId = dstLog.currentSnapshot().get
+    assert(batchId == head.get + 1L)
+    val committed = dstLog.scanIncremental(spark, Schemas.extractedSchema, head.get)
+    assert(committed.count() == 40L)
+    assert(TestCommits.lineageAt(dstLog, batchId) == TestCommits.lineageCounted(committed))
     val got = dstLog.scan(spark, Schemas.extractedSchema)
       .select("url", "kind", "text").collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.getString(2))))
