@@ -309,9 +309,10 @@ object SubmitMain {
           println(s"merged updates on $keyCol (snapshot $id)")
         case "lsh-index" =>
           // materialize the ANN serving index (P7): bucket-partitioned, so a
-          // 13-probe query reads 13 directories, not the corpus. Idempotent
-          // (atomic publish + _SUCCESS probe); rebuild after corpus changes
-          // by pointing at a fresh indexDir and GC'ing the old one
+          // 13-probe query reads the 13 probed buckets' files, not the
+          // corpus. The index is a snapshot table committed once, so a
+          // rebuild at the same indexDir does nothing; after corpus changes
+          // point at a fresh indexDir and GC the old one
           val Array(_, embPath, indexDir) = args.take(3)
           graft.spark.Embeddings.lshBuildIndex(spark.read.parquet(embPath), indexDir)
           println(s"LSH bucket index published at $indexDir")

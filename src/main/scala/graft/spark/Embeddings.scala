@@ -3,6 +3,7 @@ package graft.spark
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Similarity search over an embedding column (`embeddings` table:
   * vec_id long, embedding array<float>, label int — FIXTURES.md §3).
@@ -18,11 +19,13 @@ import org.apache.spark.sql.functions._
   */
 object Embeddings {
 
-  /** Bumped whenever an index-affecting kernel changes (hash family, centroid
-    * rounding, assignment tie-break): materialized index paths embed it, so a
-    * stale on-disk index from an older kernel can never satisfy a key hit.
+  /** Bumped whenever an index-affecting kernel or the index layout changes
+    * (hash family, centroid rounding, assignment tie-break, on-disk format):
+    * materialized index paths embed it, so an index from an older kernel or
+    * layout can never satisfy a key hit. 6: each index is a [[SnapshotLog]]
+    * table ([[publishIndex]]).
     */
-  val indexFormatVersion = 5 // r5: +_index_manifest.txt (stat-free serving)
+  val indexFormatVersion = 6
 
   /** Cosine similarity column, pure higher-order functions (codegen-friendly). */
   def cosineCol(vec: org.apache.spark.sql.Column, q: Array[Float]): org.apache.spark.sql.Column = {
@@ -313,40 +316,32 @@ object Embeddings {
   }
 
   /** Materialize the IVF index: cell assignment written `partitionBy("cell")` —
-    * the on-disk layout that turns a probe's cell filter into parquet
-    * PARTITION PRUNING, so a probe reads ~nProbe/k of the corpus instead of
-    * scanning and re-assigning all of it (round 1's e04 plan did the latter).
-    * Idempotent: skipped when the index's _SUCCESS marker already exists.
-    *
-    * Publish is ATOMIC: the index is written to a unique temp sibling and
-    * renamed into place, so a concurrent caller sharing the path (e.g. two
-    * drivers under one java.io.tmpdir) either wins the rename or discards its
-    * temp — a reader can never observe a partially (over)written index.
-    * Routed through the Hadoop FileSystem API (rename where atomic,
-    * write-then-marker on object stores — see [[publishIndex]]).
+    * the on-disk layout that turns a probe's cell filter into a choice of
+    * files, so a probe reads ~nProbe/k of the corpus instead of scanning and
+    * re-assigning all of it (round 1's e04 plan did the latter). The index is
+    * a [[SnapshotLog]] table at `path` with the centroids as a sidecar of its
+    * one commit ([[publishIndex]]); a call on a path that already holds a
+    * committed index does nothing.
     */
   def ivfBuildIndex(embeddings: DataFrame, cents: Array[Array[Float]],
       path: String): Unit =
     publishIndex(ivfAssign(embeddings, cents), "cell", path,
       sidecars = Map("_centroids.txt" -> centroidsToText(cents)))
 
-  /** Serialize centroids for the index sidecar (underscore-prefixed name:
-    * Spark's file index treats `_`/`.` entries as hidden, so the sidecar
-    * rides inside the parquet directory without disturbing scans — published
-    * atomically WITH the index, never drifting from the assignments built
-    * from it). 1e-3-rounded components print exactly; parse is bit-faithful.
+  /** Serialize centroids for the index sidecar. 1e-3-rounded components
+    * print exactly; parse is bit-faithful.
     */
   private def centroidsToText(cents: Array[Array[Float]]): String =
     cents.map(_.mkString(",")).mkString("", "\n", "\n")
 
-  /** Centroids stored beside a published index, if the index is complete. */
+  /** Centroids stored beside a committed index, if any: the head, its
+    * manifest and one sidecar read — never a Spark job.
+    */
   def ivfLoadCentroids(path: String): Option[Array[Array[Float]]] = {
-    val io = indexIo(path)
-    if (!publishComplete(io, io.root)) return None
-    val sidecar = new HPath(indexRoot(io), "_centroids.txt")
-    if (!io.exists(sidecar)) return None
-    Some(io.readString(sidecar).split('\n')
-      .filter(_.nonEmpty).map(_.split(',').map(_.toFloat)))
+    val (log, io) = indexIo(path)
+    log.currentSnapshot()
+      .flatMap(id => sidecar(io, log.metaAt(id), "_centroids.txt"))
+      .map(_.split('\n').filter(_.nonEmpty).map(_.split(',').map(_.toFloat)))
   }
 
   /** The IVF serving entry: load the centroids from an existing index (ZERO
@@ -364,8 +359,7 @@ object Embeddings {
       case Some(cents) =>
         // a hit must actually match the request: an index trained with a
         // different k silently serving here would hand back the wrong
-        // quantizer (and rebuild-in-place could yank it from a concurrent
-        // reader) — fail loudly, the caller picks a fresh path
+        // quantizer — fail loudly, the caller picks a fresh path
         require(cents.length == k,
           s"index at $path was trained with k=${cents.length}, requested k=$k" +
             " — use a different index path (or delete the stale one)")
@@ -373,198 +367,90 @@ object Embeddings {
       case None =>
         val cents = ivfTrain(embeddings, k, iters)
         ivfBuildIndex(embeddings, cents, path)
-        // a concurrent builder may have won the publish race with ITS
-        // centroids; the sidecar is authoritative for the index on disk
+        // a concurrent build may have won the commit with ITS centroids;
+        // the committed sidecar is authoritative for the index on disk
         (ivfLoadCentroids(path).getOrElse(cents), true)
     }
 
-  /** IO handle for an index path: any Hadoop-reachable store (round 4's
-    * protocol was nio-only and rejected scheme'd paths outright — the same
-    * deployability gap the SnapshotLog port closed, closed here too).
-    * Memoized per path: serving calls this per query, and a fresh GraftIo
-    * copies the full Hadoop conf twice — constant-time serving means not
-    * re-doing that. (The conf is captured at a path's first use in this JVM.)
+  /** The table log of an index path and an IO handle on it for sidecars. */
+  private def indexIo(path: String): (SnapshotLog, GraftIo) = {
+    val conf = SnapshotLog.defaultHadoopConf()
+    (new SnapshotLog(path, conf), new GraftIo(path, conf))
+  }
+
+  /** A sidecar of a committed index. It sits in the stage beside the data,
+    * and every data file is `<stage>/<p>=<v>/<file>`. None when the index
+    * lists no file (an empty corpus) or has no such sidecar.
     */
-  private val ioCache =
-    new java.util.concurrent.ConcurrentHashMap[String, GraftIo]()
-  private def indexIo(path: String): GraftIo =
-    ioCache.computeIfAbsent(path,
-      p => new GraftIo(p, SnapshotLog.defaultHadoopConf()))
+  private def sidecar(io: GraftIo, files: Seq[SnapshotLog.FileMeta],
+      name: String): Option[String] =
+    files.headOption.map(f => new HPath(new HPath(f.path).getParent.getParent, name))
+      .filter(io.exists).map(io.readString)
 
-  /** A published index is COMPLETE iff its commit gate exists — rename-atomic
-    * stores: the directory appeared atomically, Spark's own _SUCCESS
-    * suffices; non-atomic stores: the `._current` POINTER object names the
-    * live versioned directory (see [[publishIndex]]).
+  /** Index directories of the format before indexes were snapshot tables
+    * carry a serving manifest at their root: fail loudly, naming it.
     */
-  private def publishComplete(io: GraftIo, dir: HPath): Boolean =
-    if (io.atomicRename) io.exists(new HPath(dir, "_SUCCESS"))
-    // the `_graft_published` probe accepts indexes from the short-lived
-    // in-place marker protocol this round used before versioned pointers —
-    // complete content at the target name, served via indexRoot's no-pointer
-    // fallback rather than refused or silently retrained
-    else io.exists(versionPtr(dir)) ||
-      io.exists(new HPath(dir, "_graft_published"))
+  private def refuseOldLayout(io: GraftIo, path: String): Unit = {
+    val mf = io.path("_index_manifest.txt")
+    if (io.exists(mf))
+      throw new IllegalStateException(
+        s"index at $path holds an old-format index ($mf) — delete it and " +
+          "rebuild, or build at a fresh path")
+  }
 
-  private def versionPtr(target: HPath): HPath =
-    new HPath(target.getParent, target.getName + "._current")
-
-  /** The directory actually holding a published index's bytes: the target
-    * itself on rename-atomic stores; the pointer-named versioned sibling on
-    * object stores.
-    */
-  private def indexRoot(io: GraftIo): HPath =
-    if (io.atomicRename) io.root
-    else {
-      val ptr = versionPtr(io.root)
-      if (io.exists(ptr)) new HPath(io.root.getParent, io.readString(ptr).trim)
-      else io.root
-    }
-
-  /** Atomic materialized-index publish, shared by IVF and hyperplane LSH:
-    * write `df` partitioned by `partitionCol` (plus `sidecars` as hidden
-    * files and the serving manifest) to a unique temp sibling, then rename
-    * into place. A concurrent caller sharing the path either wins the rename
-    * or discards its temp — a reader can never observe a partially
-    * (over)written index. Idempotent: skipped when the target's completeness
-    * gate already exists. A stale PARTIAL occupant (no gate — a crashed
-    * writer) is moved ASIDE and then dropped, never deleted in place: the
-    * in-place delete had a TOCTOU window where a concurrent publisher's
-    * just-landed valid index could be destroyed between the gate probe and
-    * the delete (ADVICE r4). On non-rename-atomic stores the index writes
-    * directly at the target and the gate marker lands last.
+  /** Publish a materialized index, shared by IVF and hyperplane LSH: `df`
+    * written partitioned by `partitionCol` into one [[SnapshotLog]] stage,
+    * with `sidecars` and the data schema beside the data, then committed as
+    * the table's one idempotent append. A stage becomes visible only through
+    * the commit CAS, so the sidecars are atomic with the index, and of two
+    * concurrent builds the losing commit finds the winner's txn and drops
+    * its own stage. Idempotent: a path with a committed snapshot is left as
+    * it is.
     */
   private def publishIndex(df: DataFrame, partitionCol: String, path: String,
       sidecars: Map[String, String] = Map.empty): Unit = {
-    val io = indexIo(path)
-    val target = io.root
-    if (publishComplete(io, target)) return
-    if (io.atomicRename) {
-      val tmp = new HPath(target.getParent,
-        target.getName + ".tmp-" + java.util.UUID.randomUUID().toString)
-      writeIndexTree(df, partitionCol, io, tmp, sidecars)
-      if (!io.promoteDir(tmp, target)) {
-        // re-probe the gate IMMEDIATELY before acting: the occupant that
-        // blocked our rename may be a racer's complete publish by now —
-        // moving THAT aside would make the live index vanish for readers
-        // until our own promote lands (the residual rename-vs-rename window
-        // is unavoidable without a lock, but probing at the last instant
-        // shrinks it from "whole publish" to microseconds)
-        if (publishComplete(io, target)) io.delete(tmp, recursive = true): Unit
-        else {
-          val aside = new HPath(target.getParent,
-            target.getName + ".stale-" + java.util.UUID.randomUUID().toString)
-          val moved =
-            try { io.renameOverwrite(target, aside); true }
-            catch { case _: java.io.IOException => false }
-          if (moved && publishComplete(io, aside)) {
-            // we yanked a racer's COMPLETE index (it landed between our probe
-            // and the rename): put it straight back and discard ours —
-            // equivalent content from the same corpus, readers keep theirs
-            if (io.promoteDir(aside, target)) io.delete(tmp, recursive = true): Unit
-            else { io.delete(aside, recursive = true): Unit; finishPromote(io, tmp, target) }
-          } else {
-            finishPromote(io, tmp, target)
-            if (moved) io.delete(aside, recursive = true): Unit
-          }
-        }
+    val (log, io) = indexIo(path)
+    if (log.currentSnapshot().isDefined) return
+    refuseOldLayout(io, path)
+    val schema = StructType(df.schema.fields.filter(_.name != partitionCol))
+    val stage = log.writeStage { dir =>
+      // cluster rows by the partition key BEFORE the partitioned write:
+      // without it every write task emits one file per partition value it
+      // sees — at 1000 tasks x 4096 LSH buckets that is millions of small
+      // index files. One shuffle at build time buys one file per bucket.
+      GraftIo.writer(df.repartition(col(partitionCol)))
+        .mode("overwrite").partitionBy(partitionCol).parquet(dir)
+      (sidecars + ("_schema.json" -> schema.json)).foreach { case (name, body) =>
+        io.writeDirect(new HPath(dir, name), body)
       }
-    } else {
-      // object store (no atomic dir rename): write into a UNIQUE versioned
-      // sibling, then commit by writing the pointer object — a single PUT,
-      // atomic per object. Round-5 review killed the previous in-place
-      // overwrite: two concurrent publishers deleted each other's files
-      // mid-write and could gate a manifest referencing missing files. With
-      // versioned dirs the racers never touch the same bytes; last pointer
-      // PUT wins, both contents equivalent (same corpus). Superseded
-      // versions age out via [[pruneStaleIndexes]] (they match the same
-      // name prefix).
-      val version = new HPath(target.getParent,
-        target.getName + ".v-" + java.util.UUID.randomUUID().toString.take(8))
-      writeIndexTree(df, partitionCol, io, version, sidecars)
-      io.writeDirect(versionPtr(target), version.getName)
     }
+    log.commitIdempotent(stage, "index", 0L): Unit
   }
 
-  /** Final promote attempt after the stale occupant was cleared: a racer
-    * completing in the window means ours is redundant — drop the tmp.
-    */
-  private def finishPromote(io: GraftIo, tmp: HPath, target: HPath): Unit =
-    if (!io.promoteDir(tmp, target)) io.delete(tmp, recursive = true): Unit
-
-  /** The index bytes at `dir`: partitioned parquet + sidecars + the SERVING
-    * MANIFEST (`_index_manifest.txt`: data schema, then one
-    * `file <partValue> <relPath> <size>` line per data file). Queries plan
-    * from the manifest instead of listing the index directory — the same
-    * stat-free planning the snapshot log does for the main table (round 4
-    * re-listed the whole index per query: VERDICT r4 wrong #2).
-    */
-  private def writeIndexTree(df: DataFrame, partitionCol: String, io: GraftIo,
-      dir: HPath, sidecars: Map[String, String]): Unit = {
-    // cluster rows by the partition key BEFORE the partitioned write: without
-    // it every write task emits one file per partition value it sees — at
-    // 1000 tasks x 4096 LSH buckets that is millions of small index files,
-    // the exact pathology compact() exists to undo. One shuffle at build time
-    // (hash on the key; parallelism = spark.sql.shuffle.partitions, which a
-    // cluster sizes to ~2-3x cores) buys exactly one file per bucket.
-    GraftIo.writer(df.repartition(col(partitionCol)))
-      .mode("overwrite").partitionBy(partitionCol).parquet(io.extern(dir))
-    // sidecars + manifest land BEFORE the promote (atomic with the index) or
-    // before the gate marker (write-then-marker)
-    sidecars.foreach { case (name, body) =>
-      io.writeDirect(new HPath(dir, name), body)
-    }
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields.filter(_.name != partitionCol))
-    val dirQ = io.qualify(dir)
-    val entries = io.walkFiles(dirQ)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.toString)
-      .flatMap { st =>
-        val rel = dirQ.toUri.relativize(st.getPath.toUri).getPath
-        rel.split('/').find(_.startsWith(partitionCol + "="))
-          .map(seg => s"file\t${seg.substring(partitionCol.length + 1)}\t$rel\t${st.getLen}")
-      }
-    io.writeDirect(new HPath(dir, "_index_manifest.txt"),
-      (s"schema\t${dataSchema.json}" +: entries).mkString("", "\n", "\n"))
-  }
-
-  /** Read exactly the probed partitions of a published index: the probe
-    * values select serving-manifest lines and the scan plans over a
-    * [[ManifestFileIndex]] — zero directory listing, zero per-file stats,
-    * per query (C11 for indexes; round 4 built an InMemoryFileIndex of the
-    * whole index on every call). An index without a manifest fails loudly.
+  /** Read exactly the probed partitions of a committed index: the probe
+    * values pick manifest entries by their `<partitionCol>=<v>` directory and
+    * the scan plans over a [[ManifestFileIndex]] — zero directory listing,
+    * zero per-file stats, per query (C11 for indexes; round 4 built an
+    * InMemoryFileIndex of the whole index on every call). A path with no
+    * committed index fails loudly.
     */
   private def readIndexPartitions(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, values: Seq[Int]): DataFrame = {
-    val io = indexIo(indexPath)
-    // a gate-less directory is NEVER scanned: on an object store an
-    // in-flight in-place publish is visible file-by-file, and a silent
-    // directory read would return partial top-k results (round-5 review)
-    require(publishComplete(io, io.root),
-      s"index at $indexPath is not a completed publish (missing commit gate)" +
+      indexPath: String, partitionCol: String, values: Seq[Int]): DataFrame = {
+    val (log, io) = indexIo(indexPath)
+    val id = log.currentSnapshot().getOrElse {
+      refuseOldLayout(io, indexPath)
+      throw new IllegalArgumentException(s"no index committed at $indexPath" +
         " — build it first (lshBuildIndex / ivfEnsureIndex)")
-    val root = indexRoot(io)
-    val mf = new HPath(root, "_index_manifest.txt")
-    if (!io.exists(mf))
-      throw new IllegalStateException(
-        s"index at $indexPath has no serving manifest ($mf) — delete it and " +
-          "rebuild (lshBuildIndex / ivfEnsureIndex skip a gated index)")
-    val lines = io.readString(mf).split('\n')
-    val schema = org.apache.spark.sql.types.DataType.fromJson(
-      lines.find(_.startsWith("schema\t"))
-        .getOrElse(sys.error(s"index manifest at $mf missing schema line"))
-        .split('\t')(1)).asInstanceOf[org.apache.spark.sql.types.StructType]
-    val want = values.map(_.toString).toSet
-    val entries = lines.iterator
-      .filter(_.startsWith("file\t")).map(_.split('\t'))
-      .filter(p => want.contains(p(1)))
-      .map(p => ManifestEntry(io.extern(new HPath(root, p(2))),
-        p(3).toLong, Map.empty))
-      .toSeq
-    if (entries.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else ManifestScan(spark, io.extern(root), schema, entries)
+    }
+    val files = log.metaAt(id)
+    // an empty corpus commits no file: it serves no row, over the two
+    // columns top-k reads
+    val schema = sidecar(io, files, "_schema.json")
+      .fold(StructType.fromDDL("vec_id long, embedding array<float>"))(
+        DataType.fromJson(_).asInstanceOf[StructType])
+    val want = values.map(v => s"$partitionCol=$v").toSet
+    log.scanEntries(spark, schema,
+      files.filter(f => want.contains(new HPath(f.path).getParent.getName)))
   }
 
   /** Materialize the hyperplane-LSH bucket index: every vector written once
@@ -574,8 +460,9 @@ object Embeddings {
     * ANN query. With the bucket as the on-disk partition key, a query's
     * 13-probe filter becomes directory-level partition pruning
     * (`PartitionFilters: bucket IN (...)`), reading ~13/2^12 of the corpus —
-    * the same shape [[ivfBuildIndex]] already proved for IVF. Same atomic
-    * publish + [[pruneStaleIndexes]] GC.
+    * the same shape [[ivfBuildIndex]] already proved for IVF. Same
+    * snapshot-table publish ([[publishIndex]]) + [[pruneStaleIndexes]] GC;
+    * a call on a path that already holds a committed index does nothing.
     */
   def lshBuildIndex(embeddings: DataFrame, path: String): Unit =
     publishIndex(
@@ -583,64 +470,55 @@ object Embeddings {
       "bucket", path)
 
   /** ANN top-k against the materialized LSH index: multi-probe (own bucket +
-    * 12 Hamming-1 flips) satisfied by partition pruning — only the 13 probed
-    * bucket directories are read, and the per-row hash UDF is gone from the
+    * 12 Hamming-1 flips) satisfied by manifest pruning — only the 13 probed
+    * bucket directories' files are read, and the per-row hash UDF is gone from the
     * serving path entirely (it ran once, at build time).
     */
   def lshTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
       q: Array[Float], k: Int): DataFrame = {
     val probes = graft.kernel.TextStats.embeddingLshProbes(q)
     bruteForceTopK(
-      readIndexPartitions(spark, indexPath, probes.toSeq), q, k)
+      readIndexPartitions(spark, indexPath, "bucket", probes.toSeq), q, k)
   }
 
   /** GC for materialized index directories: delete every sibling of `keep`
-    * under `baseDir` whose name starts with `prefix` (older centroid keys
-    * from superseded kernels, orphaned `.tmp-` staging dirs) — repeated
-    * builds must not accumulate dead indexes in the shared tmpdir.
+    * under `baseDir` whose name starts with `prefix` (indexes keyed by
+    * superseded kernels, formats or corpora) — repeated builds must not
+    * accumulate dead indexes in the shared tmpdir. A crashed build's stage
+    * inside a live index is an orphan of that table (`SubmitMain orphans`).
     *
     * AGE-GATED (Iceberg orphan-removal style): only siblings untouched for
-    * `minAgeMs` are deleted, so a CONCURRENT builder's in-flight `.tmp-`
-    * staging dir (recently modified) is never yanked mid-write, and an
-    * older-kernel driver gets a grace window on its live index. A reader
-    * outliving the window can still lose its index — the inherent GC
-    * tradeoff; raise `minAgeMs` to taste.
+    * `minAgeMs` are deleted, so a CONCURRENT build's in-flight index
+    * (recently modified) is never yanked mid-write, and an older-kernel
+    * driver gets a grace window on its live index. A reader outliving the
+    * window can still lose its index — the inherent GC tradeoff; raise
+    * `minAgeMs` to taste.
     */
   def pruneStaleIndexes(baseDir: String, prefix: String, keep: String,
       minAgeMs: Long = 3600000L): Unit = {
-    val io = indexIo(baseDir)
+    val io = new GraftIo(baseDir, SnapshotLog.defaultHadoopConf())
     if (!io.isDirectory(io.root)) return
     val cutoff = System.currentTimeMillis() - minAgeMs
-    // on non-atomic stores the live index is `keep`'s pointer + the
-    // versioned dir it names — both must survive the sweep with `keep`
-    // (pointer name through versionPtr: ONE definition of the commit
-    // pointer, or GC would desynchronize from the publish protocol)
-    val keepSet: Set[String] = {
-      val ptr = versionPtr(new HPath(io.root, keep))
-      val pointed =
-        if (io.exists(ptr)) Some(io.readString(ptr).trim) else None
-      Set(keep, ptr.getName) ++ pointed
-    }
     io.list(io.root).filter { st =>
       val n = st.getPath.getName
       // age by the NEWEST CONTENT, not the top-level dir's mtime: a long
-      // in-flight publish writes into bucket=*/cell=* subdirs without
-      // touching its top dir's mtime — the per-directory-contents gate
-      // removeOrphanFiles uses, for the same concurrent-writer reason
+      // in-flight build writes into its stage's bucket=*/cell=* subdirs
+      // without touching its top dir's mtime — the per-directory-contents
+      // gate removeOrphanFiles uses, for the same concurrent-writer reason
       lazy val newest = io.walkFiles(st.getPath).map(_.getModificationTime)
         .maxOption.getOrElse(st.getModificationTime)
-      n.startsWith(prefix) && !keepSet.contains(n) && newest <= cutoff
+      n.startsWith(prefix) && n != keep && newest <= cutoff
     }.foreach(st => io.delete(st.getPath, recursive = true): Unit)
   }
 
-  /** IVF probe against a materialized index: the cell filter is satisfied by
-    * directory pruning (`PartitionFilters: cell IN (...)` in the scan), never
-    * touching the non-probed cells' files.
+  /** IVF probe against a materialized index: the cell filter picks the
+    * probed cells' files from the index manifest, never touching the
+    * non-probed cells' files.
     */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
       cents: Array[Array[Float]], q: Array[Float], k: Int, nProbe: Int): DataFrame = {
     val cells = probeCells(cents, q, nProbe)
     bruteForceTopK(
-      readIndexPartitions(spark, indexPath, cells.toSeq), q, k)
+      readIndexPartitions(spark, indexPath, "cell", cells.toSeq), q, k)
   }
 }

@@ -9,11 +9,11 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrameWriter, Dataset}
 import scala.jdk.CollectionConverters._
 
-/** Filesystem layer for the snapshot-log / index-publish protocols, routed
-  * through the Hadoop FileSystem API so the metadata layer can deploy on the
-  * store a 100 TB table actually lives on (`hdfs://`, `viewfs://`, object
-  * stores), not just local posix (round-4's `java.nio` protocol rejected any
-  * scheme'd path outright — VERDICT r4 wrong #1).
+/** Filesystem layer for the snapshot log (every table, and every ANN index,
+  * is one), routed through the Hadoop FileSystem API so the metadata layer
+  * can deploy on the store a 100 TB table actually lives on (`hdfs://`,
+  * `viewfs://`, object stores), not just local posix (round-4's `java.nio`
+  * protocol rejected any scheme'd path outright — VERDICT r4 wrong #1).
   *
   * Atomicity, per store class:
   *   - **rename-atomic stores** (file, hdfs, viewfs, ozone): small metadata
@@ -25,15 +25,15 @@ import scala.jdk.CollectionConverters._
   *     check is check-then-act.
   *   - **non-atomic stores** (s3a, gs, ...: rename is copy+delete): metadata
   *     files are written DIRECTLY at their final name — a single object PUT
-  *     is all-or-nothing, so readers still never see a torn file (the
-  *     write-then-marker half of the protocol; directory publishes gate on a
-  *     trailing marker object instead of rename). A commit CAS does not exist
-  *     on these stores without external serialization, so the commit point
-  *     runs under a configured [[CommitLock]] (`graft.fs.cas.lock=lease` for
-  *     the built-in file-lease queue, or a [[CommitLock.Provider]] class for
-  *     a real lock service — the role Iceberg gives its catalog/LockManager);
-  *     with no lock configured it fails loudly unless
-  *     `graft.fs.cas.unsafe=true` opts into last-writer-wins.
+  *     is all-or-nothing, so readers still never see a torn file. A commit
+  *     CAS does not exist on these stores without external serialization, so
+  *     the commit point runs under a configured [[CommitLock]]
+  *     (`graft.fs.cas.lock=lease` for the built-in file-lease queue, or a
+  *     [[CommitLock.Provider]] class for a real lock service — the role
+  *     Iceberg gives its catalog/LockManager); with no lock configured it
+  *     fails loudly unless `graft.fs.cas.unsafe=true` opts into
+  *     last-writer-wins. Index commits are snapshot commits, so this holds
+  *     for them too.
   *
   * The `file:` filesystem is pinned to a raw (checksum-free) local
   * filesystem on a PRIVATE instance (`FileSystem.newInstance`, so the
@@ -79,7 +79,7 @@ final class GraftIo(base: String, userConf: Configuration) {
   /** Stores whose `rename` is an atomic metadata operation. Overridable for
     * stores not on the list (`graft.fs.atomic.rename=true`).
     */
-  val atomicRename: Boolean =
+  private val atomicRename: Boolean =
     conf.getBoolean("graft.fs.atomic.rename",
       Set("file", "hdfs", "viewfs", "webhdfs", "ofs", "o3fs").contains(scheme))
 
@@ -115,9 +115,6 @@ final class GraftIo(base: String, userConf: Configuration) {
     try fs.getFileStatus(p).isDirectory
     catch { case _: java.io.FileNotFoundException => false }
   def mkdirs(p: HPath): Unit = { fs.mkdirs(p): Unit }
-  def status(p: HPath): FileStatus = fs.getFileStatus(p)
-  def len(p: HPath): Long = fs.getFileStatus(p).getLen
-  def mtime(p: HPath): Long = fs.getFileStatus(p).getModificationTime
   def delete(p: HPath, recursive: Boolean = false): Boolean =
     try fs.delete(p, recursive)
     catch { case _: java.io.FileNotFoundException => false }
@@ -182,18 +179,18 @@ final class GraftIo(base: String, userConf: Configuration) {
       Files.move(GraftIo.local(src), GraftIo.local(dst), StandardCopyOption.ATOMIC_MOVE): Unit
     else fc.rename(src, dst, Options.Rename.OVERWRITE)
 
-  /** Compare-and-swap promote of a staged FILE to its final name: succeeds
-    * iff `dst` did not exist; `src` is consumed on success and left in place
-    * on failure (caller cleans up). This is the commit point of the snapshot
-    * protocol — the primitive must be atomically exclusive, which each store
-    * class provides differently (see class doc).
-    */
   /** The configured [[CommitLock]] for this store, if any (resolved once —
     * lock state lives in the filesystem, so one resolver per io handle is
     * enough for cross-process exclusion).
     */
   lazy val commitLock: Option[CommitLock] = CommitLock.forStore(this)
 
+  /** Compare-and-swap promote of a staged FILE to its final name: succeeds
+    * iff `dst` did not exist; `src` is consumed on success and left in place
+    * on failure (caller cleans up). This is the commit point of the snapshot
+    * protocol — the primitive must be atomically exclusive, which each store
+    * class provides differently (see class doc).
+    */
   def casPromoteFile(src: HPath, dst: HPath): Boolean =
     // atomicRename gates FIRST: the conf override ("treat this store as
     // non-atomic") must win over the file: fast path, or the object-store
@@ -235,18 +232,23 @@ final class GraftIo(base: String, userConf: Configuration) {
       }
     }
 
-  /** Promote a staged DIRECTORY to its final name iff absent (no hard-link
-    * trick exists for directories; FileContext's no-overwrite rename is the
-    * strongest portable primitive). Callers treat a false as "lost the race"
-    * and re-probe.
+  /** The value of the small file `p`, created first-writer-wins: when `p`
+    * is absent, `fresh` is staged beside it and promoted with
+    * [[casPromoteFile]]; a creator that loses the CAS drops its stage and
+    * every caller returns the winner's value. `fresh` is evaluated before
+    * anything is written, so a throwing `fresh` leaves no residue.
     */
-  def promoteDir(src: HPath, dst: HPath): Boolean =
-    try { fc.rename(src, dst, Options.Rename.NONE); true }
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-      case _: java.nio.file.FileAlreadyExistsException => false
-      case _: java.io.IOException if exists(dst) => false // posix ENOTEMPTY
+  def readOrCreate(p: HPath, fresh: => String): String = {
+    if (!exists(p)) {
+      val value = fresh
+      mkdirs(p.getParent)
+      val tmp = new HPath(p.getParent,
+        s"${p.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+      writeDirect(tmp, value)
+      if (!casPromoteFile(tmp, p)) delete(tmp): Unit
     }
+    readString(p).trim
+  }
 }
 
 object GraftIo {

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** §7.4.5 — explicit skew handling for host-keyed stages.
@@ -8,46 +8,14 @@ import org.apache.spark.sql.functions._
   * The extract pipeline's own shuffle keys on pmod(xxhash64(url), B), which is
   * uniform regardless of the host distribution. Skew bites when a stage keys on
   * `host` (per-host lineage/politeness stats over a Zipf-ish web corpus:
-  * host1 can hold a double-digit percentage of all pages). The north_rule
-  * demands explicit handling, not just AQE, so two tools:
-  *
-  *   - [[saltedRepartition]]: spread hot keys over `saltFactor` salted
-  *     sub-partitions (hot-key set discovered by a cheap count pre-pass);
-  *   - [[twoPhaseAgg]]: partial aggregation on (key, salt) then final on key —
-  *     the classic skew-proof aggregate; equivalent to a plain groupBy but the
-  *     widest shuffle carries (key, salt) cardinality.
+  * host1 can hold a double-digit percentage of all pages). [[twoPhaseAgg]]
+  * aggregates partially on (key, salt), then finally on key — the classic
+  * skew-proof aggregate; equivalent to a plain groupBy but the widest
+  * shuffle carries (key, salt) cardinality. `a03_host_stats` runs it.
   *
   * AQE skew-join splitting stays enabled on top (spark.sql.adaptive.*).
   */
 object Skew {
-
-  /** Hot keys: keys whose row count exceeds `hotThreshold`. Driver-side collect
-    * is safe — the hot set is small by definition (a key is hot because it owns
-    * a large share of a bounded total).
-    */
-  def hotKeys(df: DataFrame, key: String, hotThreshold: Long): Seq[String] =
-    df.groupBy(col(key)).count()
-      .filter(col("count") > hotThreshold)
-      .select(col(key).cast("string"))
-      .collect().map(_.getString(0)).toSeq
-
-  /** Salt column: rows of hot keys get pmod(xxhash64(row id), saltFactor),
-    * others 0 — so cold keys stay in one partition and hot keys split.
-    */
-  def saltCol(key: String, idCol: String, hot: Seq[String], saltFactor: Int): Column =
-    when(col(key).cast("string").isInCollection(hot),
-      pmod(xxhash64(col(idCol)), lit(saltFactor)).cast("int"))
-      .otherwise(lit(0))
-
-  def saltedRepartition(
-      df: DataFrame, key: String, idCol: String,
-      hotThreshold: Long, saltFactor: Int = 8): DataFrame = {
-    val hot = hotKeys(df, key, hotThreshold)
-    if (hot.isEmpty) df.repartition(col(key))
-    else df.withColumn("_salt", saltCol(key, idCol, hot, saltFactor))
-      .repartition(col(key), col("_salt"))
-      .drop("_salt")
-  }
 
   /** Skew-proof count+sum aggregate by `key`: partial agg on (key, salt), final
     * agg on key. Result is identical to `df.groupBy(key).agg(...)`.

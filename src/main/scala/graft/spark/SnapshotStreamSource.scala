@@ -146,41 +146,16 @@ final class SnapshotStreamProvider extends StreamSourceProvider with DataSourceR
 
   /** Read-or-persist a small value under the stream's `metadataPath`: the
     * persisted value wins (it is a constant of the checkpoint, like every
-    * offset); `fresh` is only evaluated into place on first creation. The
-    * write is tmp + rename so a crash mid-write never leaves a torn marker
-    * (a truncated value would silently shift the stream's start).
+    * offset); `fresh` is only evaluated into place on first creation, and a
+    * concurrent creator of the same checkpoint loses to the first
+    * ([[GraftIo.readOrCreate]]). The value is staged and promoted whole, so
+    * a crash mid-write never leaves a torn marker (a truncated value would
+    * silently shift the stream's start).
     */
   private def marker(sqlContext: SQLContext, metadataPath: String,
       name: String, fresh: => String): String = {
-    val conf = sqlContext.sparkSession.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(metadataPath)
-    val fs = dir.getFileSystem(conf)
-    val file = new org.apache.hadoop.fs.Path(dir, name)
-    def read(): String = {
-      val in = fs.open(file)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-    }
-    if (fs.exists(file)) read()
-    else {
-      // force the value BEFORE creating the tmp file: a failing `fresh`
-      // (bad option value) must not leave .tmp residue in the checkpoint
-      val value = fresh
-      val tmp = new org.apache.hadoop.fs.Path(dir,
-        s".$name.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      fs.mkdirs(dir)
-      val out = fs.create(tmp, false)
-      try out.write(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (fs.rename(tmp, file)) read()
-      else {
-        fs.delete(tmp, false)
-        // lost to a concurrent creator of the same checkpoint: theirs wins
-        if (!fs.exists(file)) throw new java.io.IOException(
-          s"could not persist stream marker at $file")
-        read()
-      }
-    }
+    val io = new GraftIo(metadataPath, sqlContext.sparkSession.sessionState.newHadoopConf())
+    io.readOrCreate(io.path(name), fresh)
   }
 
   /** Resolve the stream's starting point ONCE per checkpoint and persist it

@@ -6,16 +6,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** Structured Streaming variant of the extract pipeline — an EXTENSION beyond
   * the reference's semantics (SURVEY.md §2.7: the reference is incremental
   * batch, which ExtractJob's snapshot-resume covers; this adds the
-  * `Trigger.AvailableNow` file-stream shape for pipelines that land pages
-  * continuously).
+  * `Trigger.AvailableNow` shape for pipelines that land pages continuously).
   *
-  * Same kernel, same narrow plan: `readStream` over the pages directory ->
-  * map-side GraftExtract ([[ExtractJob.extractDF]], the batch job's own
-  * operator) -> parquet sink with exactly-once file tracking via the
-  * checkpoint (the streaming analog of the snapshot log).
-  * AvailableNow drains everything present and stops — a resumable batch with
-  * streaming bookkeeping; restarting after new files land processes only the
-  * new files (per-file lineage in the checkpoint replaces the url anti-join).
+  * Same kernel, same narrow plan: the `graft-snapshots` source tails the
+  * pages table -> map-side GraftExtract ([[ExtractJob.extractDF]], the batch
+  * job's own operator) -> an idempotent commit to the destination snapshot
+  * table per micro-batch ([[startTableToTable]]). AvailableNow drains every
+  * pending commit and stops — a resumable batch with streaming bookkeeping;
+  * a restart after new commits land extracts only them.
   */
 object StreamingExtract {
 
@@ -28,7 +26,7 @@ object StreamingExtract {
     * reached the same Spark checkpoint but a DIFFERENT appId, so a
     * crash-replayed batch missed its txn watermark and appended twice —
     * exactly-once silently broken (round-5 ADVICE, medium). First-start races
-    * settle on the marker's CAS ([[GraftIo.casPromoteFile]]): the loser
+    * settle on the marker's CAS ([[GraftIo.readOrCreate]]): the loser
     * adopts the winner's id.
     *
     * UPGRADE NOTE (round-6 ADVICE, low): a checkpoint created by the
@@ -40,43 +38,8 @@ object StreamingExtract {
     */
   def resolveAppId(checkpointDir: String, kind: String): String = {
     val io = new GraftIo(checkpointDir, SnapshotLog.defaultHadoopConf())
-    val marker = new org.apache.hadoop.fs.Path(io.root, "graft-app-id")
-    if (!io.exists(marker)) {
-      io.mkdirs(io.root)
-      val tmp = new org.apache.hadoop.fs.Path(io.root,
-        s"graft-app-id.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      io.writeDirect(tmp, s"$kind:${java.util.UUID.randomUUID()}")
-      if (!io.casPromoteFile(tmp, marker)) io.delete(tmp): Unit
-    }
-    io.readString(marker).trim
+    io.readOrCreate(io.path("graft-app-id"), s"$kind:${java.util.UUID.randomUUID()}")
   }
-
-  /** Start the stream; caller awaits termination. Deterministic output rows
-    * (same kernel), nondeterministic file layout (as with any sink).
-    */
-  def start(
-      spark: SparkSession,
-      pagesDir: String,
-      outDir: String,
-      checkpointDir: String,
-      numBuckets: Int = 32): StreamingQuery = {
-    import spark.implicits._
-    val pages = spark.readStream
-      .schema(Schemas.pagesSchema)
-      .parquet(pagesDir)
-      .as[Schemas.Page]
-    val extracted = ExtractJob.extractDF(pages, numBuckets).drop("ok")
-    extracted.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Read back the streaming sink output. */
-  def readOutput(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.schema(Schemas.extractedSchema).parquet(outDir)
 
   /** TABLE→TABLE streaming extract — the composed shape a continuously-fed
     * corpus actually runs: tail the pages table's append commits

@@ -402,10 +402,15 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding", "label")
     val base = tmpDir("fs_idx")
     val path = "file:" + base + "/idx"
-    Embeddings.lshBuildIndex(emb, path)
-    Embeddings.lshBuildIndex(emb, path) // idempotent (completeness gate)
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(base, "idx", "_index_manifest.txt")))
+    // building and serving an index on local disk starts no OS process
+    val q3 = Array.tabulate(16)(d => math.sin(3 * 0.37 + d * 1.3).toFloat)
+    val (_, spawned) = graft.Probe.processStarts {
+      Embeddings.lshBuildIndex(emb, path)
+      Embeddings.lshTopKIndexed(spark, path, q3, 5).collect()
+    }
+    assert(spawned.isEmpty, spawned.mkString("\n"))
+    Embeddings.lshBuildIndex(emb, path) // idempotent: the path holds a commit
+    assert(new SnapshotLog(path).snapshots() == Seq(0L))
     for (qi <- Seq(3, 11)) {
       val q = Array.tabulate(16)(d => math.sin(qi * 0.37 + d * 1.3).toFloat)
       val scanned = Embeddings.lshTopK(emb, q, 5)
@@ -423,16 +428,21 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = Array.tabulate(16)(d => math.sin(7 * 0.37 + d * 1.3).toFloat)
     assert(Embeddings.ivfTopKIndexed(spark, ivfPath, cents, q, k = 3, nProbe = 2)
       .collect().nonEmpty)
+    // an empty corpus commits an index with no file, which serves no row
+    val emptyPath = "file:" + base + "/empty"
+    Embeddings.lshBuildIndex(emb.limit(0), emptyPath)
+    assert(new SnapshotLog(emptyPath).currentFiles().isEmpty)
+    assert(Embeddings.lshTopKIndexed(spark, emptyPath, q, 3).collect().isEmpty)
     // GC across the scheme'd base dir
     Embeddings.pruneStaleIndexes("file:" + base, "i", keep = "idx", minAgeMs = 0L)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(base, "ivf")))
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(base, "idx")))
   }
 
-  test("non-atomic store protocol: versioned index publish commits via pointer PUT") {
+  test("non-atomic store protocol: an index commits under the commit lock") {
     val sp = spark; import sp.implicits._
-    // force the object-store branch on local disk: treat rename as
-    // non-atomic, so publishIndex must use write-then-pointer
+    // force the object-store branch on local disk: an index commit is a
+    // snapshot commit, so it needs a commit lock (or the unsafe opt-in)
     val hc = spark.sparkContext.hadoopConfiguration
     hc.setBoolean("graft.fs.atomic.rename", false)
     try {
@@ -440,37 +450,108 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
         (i.toLong, Array.tabulate(16)(d => math.sin(i * 0.37 + d * 1.3).toFloat), i % 5))
         .toDF("vec_id", "embedding", "label")
       val base = tmpDir("nonatomic_idx")
+      val refused = intercept[RuntimeException](Embeddings.lshBuildIndex(emb, base + "/idx_nolock"))
+      assert(refused.getMessage.contains("graft.fs.cas.lock"), refused.getMessage)
+      hc.set("graft.fs.cas.lock", "lease")
+      hc.setLong("graft.fs.cas.lock.settle.ms", 25L)
       val path = base + "/idx"
       Embeddings.lshBuildIndex(emb, path)
-      // publish landed in a UNIQUE versioned sibling; the pointer object is
-      // the commit (a single PUT) — concurrent publishers never share bytes
-      val ptr = java.nio.file.Paths.get(base, "idx._current")
-      assert(java.nio.file.Files.exists(ptr), "pointer object must exist")
-      val version = java.nio.file.Files.readString(ptr).trim
-      assert(version.startsWith("idx.v-"), version)
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(base, version, "_index_manifest.txt")))
-      // serving resolves through the pointer and matches the scan-based path
+      Embeddings.lshBuildIndex(emb, path) // idempotent: the path holds a commit
+      assert(new SnapshotLog(path).snapshots() == Seq(0L))
       val q = Array.tabulate(16)(d => math.sin(11 * 0.37 + d * 1.3).toFloat)
       val scanned = Embeddings.lshTopK(emb, q, 5)
         .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
       val indexed = Embeddings.lshTopKIndexed(spark, path, q, 5)
         .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e9))).toSeq
       assert(indexed == scanned)
-      // idempotent rebuild: the pointer is the completeness gate
-      Embeddings.lshBuildIndex(emb, path)
-      assert(java.nio.file.Files.readString(ptr).trim == version)
-      // GC: a dead superseded version ages out, the live version + pointer stay
-      val dead = java.nio.file.Paths.get(base, "idx.v-dead0000")
+      // metadata was PUT at final names, and every lease was released
+      val metaNames = new java.io.File(path, "meta").listFiles().map(_.getName)
+      assert(!metaNames.exists(_.endsWith(".tmp")), metaNames.mkString(","))
+      val lockDir = new java.io.File(path, "_locks")
+      assert(!lockDir.isDirectory || lockDir.listFiles().isEmpty)
+      // GC: an aged-out sibling goes, the live index stays
+      val dead = java.nio.file.Paths.get(base, "idx_dead")
       java.nio.file.Files.createDirectories(dead)
       Embeddings.pruneStaleIndexes(base, "idx", keep = "idx", minAgeMs = 0L)
-      assert(!java.nio.file.Files.exists(dead), "superseded version reclaimed")
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(base, version)))
-      assert(java.nio.file.Files.exists(ptr))
-      // a gate-less path must fail LOUDLY, never scan a partial publish
+      assert(!java.nio.file.Files.exists(dead), "stale sibling reclaimed")
+      assert(Embeddings.lshTopKIndexed(spark, path, q, 5).collect().nonEmpty)
+      // a path never committed must fail LOUDLY, never scan a directory
       intercept[IllegalArgumentException](
         Embeddings.lshTopKIndexed(spark, base + "/never-published", q, 3).collect())
-    } finally hc.unset("graft.fs.atomic.rename")
+    } finally {
+      hc.unset("graft.fs.atomic.rename")
+      hc.unset("graft.fs.cas.lock")
+      hc.unset("graft.fs.cas.lock.settle.ms")
+    }
+  }
+
+  test("readOrCreate: a concurrent creator's value wins and no stage file remains") {
+    val dir = tmpDir("marker_race")
+    val io = new GraftIo(dir, SnapshotLog.defaultHadoopConf())
+    val marker = io.path("ck/graft-app-id")
+    // the value thunk lands a concurrent creator's marker before this
+    // creator stages and promotes its own
+    val got = io.readOrCreate(marker, { io.writeDirect(marker, "theirs\n"); "mine" })
+    assert(got == "theirs")
+    assert(io.readOrCreate(marker, sys.error("an existing marker is never re-created")) == "theirs")
+    assert(new java.io.File(dir, "ck").list().toSeq == Seq("graft-app-id"))
+    // first creation: the fresh value is persisted and returned
+    assert(io.readOrCreate(io.path("ck/stream-id"), "stream-1") == "stream-1")
+    assert(io.readString(io.path("ck/stream-id")) == "stream-1")
+  }
+
+  test("two concurrent builds of one index path commit one snapshot; both serve the winner") {
+    val sp = spark; import sp.implicits._
+    // two corpora train different centroids, so the winner is visible
+    def corpus(phase: Double) = Seq.tabulate(120)(i =>
+      (i.toLong, Array.tabulate(8)(d => math.sin(i * 0.61 + d + phase).toFloat), i % 4))
+      .toDF("vec_id", "embedding", "label")
+    val (a, b) = (corpus(0.0), corpus(1.7))
+    val trained = Seq(a, b).map(e => Embeddings.ivfTrain(e, k = 4).map(_.toSeq).toSeq)
+    assert(trained(0) != trained(1))
+    val path = tmpDir("ivf_race") + "/idx"
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val got = try {
+      Seq(a, b).map { e =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Seq[Float]]] {
+          def call(): Seq[Seq[Float]] = {
+            start.await()
+            Embeddings.ivfEnsureIndex(e, path, k = 4)._1.map(_.toSeq).toSeq
+          }
+        })
+      }.map { f => start.countDown(); f.get(120, java.util.concurrent.TimeUnit.SECONDS) }
+    } finally pool.shutdown()
+    val log = new SnapshotLog(path)
+    assert(log.snapshots() == Seq(0L), "exactly one build commits")
+    val committed = Embeddings.ivfLoadCentroids(path).get.map(_.toSeq).toSeq
+    assert(trained.contains(committed))
+    assert(got == Seq(committed, committed), "both builds return the winner's centroids")
+    // the loser's stage is gone: one stage, the committed one
+    val stages = new java.io.File(path, "data").listFiles().map(_.getName).toSeq
+    assert(stages.size == 1, stages.mkString(","))
+    assert(log.currentFiles().forall(_.contains(stages.head)))
+  }
+
+  test("an index stage with no commit is never served") {
+    val sp = spark; import sp.implicits._
+    val emb = Seq.tabulate(100)(i =>
+      (i.toLong, Array.tabulate(16)(d => math.sin(i * 0.37 + d * 1.3).toFloat), i % 5))
+      .toDF("vec_id", "embedding", "label")
+    val path = tmpDir("idx_uncommitted") + "/idx"
+    // a crashed build: its bucket-partitioned stage is written, its
+    // commit never ran
+    val crashed = new SnapshotLog(path).writeStage(
+      Embeddings.lshBuckets(emb).join(emb.select("vec_id", "embedding"), "vec_id")
+        .write.mode("overwrite").partitionBy("bucket").parquet(_))
+    val q = Array.tabulate(16)(d => math.sin(5 * 0.37 + d * 1.3).toFloat)
+    intercept[IllegalArgumentException](Embeddings.lshTopKIndexed(spark, path, q, 5))
+    // a later build commits its own stage; the crashed one stays unread
+    Embeddings.lshBuildIndex(emb, path)
+    val served = Embeddings.lshTopKIndexed(spark, path, q, 5)
+    assert(served.collect().nonEmpty)
+    assert(served.inputFiles.nonEmpty && served.inputFiles.forall(!_.contains(crashed)),
+      served.inputFiles.mkString(","))
   }
 
   test("non-atomic store protocol: snapshot commits PUT metadata directly; CAS refused without opt-in") {
@@ -864,17 +945,22 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ew = intercept[IllegalStateException](
       Pipelines.incrementalDedup(spark, pages, ext, dd, 4))
     assert(ew.getMessage.contains(wm.toString), ew.getMessage)
-    // a gated ANN index without its serving manifest
+    // an ANN index directory of the format before indexes were snapshot
+    // tables: a serving manifest at its root, no snapshot log
     val emb = Seq.tabulate(50)(i =>
       (i.toLong, Array.tabulate(16)(d => math.sin(i * 0.37 + d * 1.3).toFloat), i % 5))
       .toDF("vec_id", "embedding", "label")
     val path = tmpDir("old_index") + "/idx"
-    Embeddings.lshBuildIndex(emb, path)
+    Embeddings.lshBuckets(emb).join(emb.select("vec_id", "embedding"), "vec_id")
+      .write.partitionBy("bucket").parquet(path)
+    val oldManifest = P.get(path, "_index_manifest.txt")
+    F.writeString(oldManifest, "schema\t{}\n")
     val q = Array.tabulate(16)(d => math.sin(d * 1.3).toFloat)
-    assert(Embeddings.lshTopKIndexed(spark, path, q, 5).collect().nonEmpty)
-    F.move(P.get(path, "_index_manifest.txt"), P.get(path + ".mf_aside"))
-    val e = intercept[IllegalStateException](Embeddings.lshTopKIndexed(spark, path, q, 5))
-    assert(e.getMessage.contains("_index_manifest.txt"), e.getMessage)
+    val eServe = intercept[IllegalStateException](Embeddings.lshTopKIndexed(spark, path, q, 5))
+    assert(eServe.getMessage.contains(oldManifest.toString), eServe.getMessage)
+    val eBuild = intercept[IllegalStateException](Embeddings.lshBuildIndex(emb, path))
+    assert(eBuild.getMessage.contains(oldManifest.toString), eBuild.getMessage)
+    assert(!F.exists(P.get(path, "meta")), "a refused build commits nothing")
   }
 
   test("a commit that loses its CAS and retries leaves its lineage only in the winning list") {
@@ -958,12 +1044,15 @@ class SnapshotFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(dlog.currentSnapshot().contains(0L))
       assert(dlog.scan(spark, Pipelines.dedupedSchema).count() == 30)
       // a streaming extract batch: its txn is recorded, so the replay skips
-      // it — the rows must be in the committed snapshot. The appId is given:
-      // generating one settles a marker through the same lock
+      // it — the rows must be in the committed snapshot. The appId is given,
+      // and a first run over the still-empty source settles the source's
+      // checkpoint markers: creating a marker takes the same lock
       val (src, dst, ck) = (tmpDir("release_src"), tmpDir("release_dst"), tmpDir("release_ck"))
-      new SnapshotLog(src).append(spark.createDataset(Synth.corpus(40)).toDF().repartition(2))
       def stream() = StreamingExtract.startTableToTable(spark, src, dst, ck, 8,
         appId = Some("release-test")).awaitTermination()
+      stream()
+      assert(new SnapshotLog(dst).currentSnapshot().isEmpty)
+      new SnapshotLog(src).append(spark.createDataset(Synth.corpus(40)).toDF().repartition(2))
       failsAfterCas(stream())
       val dstLog = new SnapshotLog(dst)
       assert(dstLog.txnVersion("release-test").contains(0L))

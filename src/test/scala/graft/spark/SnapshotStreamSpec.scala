@@ -241,8 +241,13 @@ class SnapshotStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dstLog.currentSnapshot() == head)
     // more pages land; the restarted stream extracts ONLY them, once
     appendPages(60, 100)
-    StreamingExtract.startTableToTable(spark, srcDir, dstDir, ckpt, 8)
-      .awaitTermination()
+    val restarted = StreamingExtract.startTableToTable(spark, srcDir, dstDir, ckpt, 8)
+    restarted.awaitTermination()
+    // the stream plans the batch job's operator, not a typed mapPartitions
+    val streamPlan = restarted
+      .asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+    assert(streamPlan.contains("GraftExtract"), streamPlan.take(1500))
     // that one AvailableNow batch is one commit, and its lineage counts
     // exactly the rows it committed
     val batchId = dstLog.currentSnapshot().get
