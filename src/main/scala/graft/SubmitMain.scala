@@ -69,6 +69,25 @@ object SubmitMain {
     matched.coalesce(1).write.mode("overwrite").parquet(bundleDir)
   }
 
+  /** Small-file compaction (C8) as `compact` runs it: bin-pack the current
+    * snapshot into at most `targetFiles` data files as a new replace
+    * snapshot; a non-empty `sortBy` switches to the clustered rewrite
+    * (disjoint per-file ranges -> precise file skipping). The rewrite reads
+    * through the schema of the newest committed file, so a deduped table
+    * keeps its `fp`/`fp64` columns, and records the stats columns the live
+    * files already record, plus `sortBy`. None when the table is empty or
+    * already at or under the target.
+    */
+  def compact(spark: SparkSession, tableDir: String, targetFiles: Int,
+      sortBy: Seq[String]): Option[Long] = {
+    val log = new SnapshotLog(tableDir)
+    log.newestFileSchema(spark).flatMap { schema =>
+      val recorded = log.currentSnapshot().toSeq.flatMap(log.metaAt).flatMap(_.stats.keys)
+      log.compact(spark, schema, targetFiles,
+        statsColumns = (recorded ++ sortBy).distinct, sortBy = sortBy)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     // compact's targetFiles is optional; tail needs 4 args; the rest 3
     val minArgs = args.headOption match {
@@ -213,17 +232,13 @@ object SubmitMain {
           bundle(spark, matchedDir, bundleDir)
           println(s"bundled $matchedDir -> $bundleDir (single artifact)")
         case "compact" =>
-          // small-file compaction (C8): bin-pack the current snapshot into
-          // fewer, larger data files as a new replace snapshot; an optional
-          // comma-separated sort column list switches to the clustered
-          // rewrite (disjoint per-file ranges -> precise file skipping)
+          // an optional comma-separated sort column list clusters the rewrite
           val tableDir = args(1)
           val target = if (args.length > 2) args(2).toInt else 128
           val sortBy = if (args.length > 3)
             args(3).stripPrefix("sortBy=").split(',').toSeq.filter(_.nonEmpty)
           else Seq.empty[String]
-          new SnapshotLog(tableDir).compact(spark, Schemas.extractedSchema, target,
-              statsColumns = (Seq("bucket") ++ sortBy).distinct, sortBy = sortBy) match {
+          compact(spark, tableDir, target, sortBy) match {
             case Some(id) =>
               val how = if (sortBy.isEmpty) "" else s" clustered by ${sortBy.mkString(",")}"
               println(s"compacted $tableDir into <= $target files$how (snapshot $id)")

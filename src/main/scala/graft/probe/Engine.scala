@@ -202,17 +202,16 @@ object Engine {
           "from maxHamming (pigeonhole recall); production calls materialize the " +
           "pair set and unpersist."),
       "pipeline_dedup_turn" ->
-        ("The INVERTED incremental-dedup probe (one pipeline turn against a " +
-          "committed deduped corpus): the corpus scan reads only (fp, fp64) over a " +
-          "ManifestFileIndex with the batch's fp64 digests pushed as an IN filter " +
-          "(PushedFilters + manifest file skipping on the range-clustered layout), " +
-          "and NO Exchange appears anywhere above the corpus scan — the batch side " +
-          "broadcasts instead. Round 7: in-batch winners are derived SKINNY " +
-          "(groupBy(fp64, fp) -> min(url), materialized as an ExistingRDD) and " +
-          "survivors re-attach by a digest semi-join, so the batch TEXT never " +
-          "rides an exchange either — round 6's row_number window shuffled the " +
-          "full batch rows every turn. Round 5 sort-merge-anti-joined the batch " +
-          "against the corpus, shuffling the full accumulated digest column."))
+        ("The small regime's corpus probe, which every steady pipeline turn " +
+          "and streaming-dedup batch runs (a slice of at most 8192 rows): the " +
+          "slice's digests were collected to the driver in one bounded job, and " +
+          "the corpus scan reads only (fp, fp64) over a ManifestFileIndex with " +
+          "them pushed as `fp64 IN ... AND fp IN ...` (PushedFilters + manifest " +
+          "file skipping on the range-clustered layout). NO Exchange appears " +
+          "anywhere: the driver subtracts the collected digests, and the write " +
+          "picks the survivors from the slice by an IN filter. Bigger slices " +
+          "take the big regime (Pipelines.dedupSurvivors: checkpointed skinny " +
+          "winners, broadcast semi/anti joins), not shown here."))
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit (generated by `graft.Probe plans`)\n\n")
@@ -257,9 +256,10 @@ object Engine {
                 Schemas.Extracted(s"https://audit/$i", i % 8, "html", Seq(t), t, 10L + i, i.toLong)
               }).toDF()
             graft.spark.Pipelines.appendDeduped(spark, batch(0, 400), dd)
-            val (survivors, reps) = graft.spark.Pipelines.probeSurvivors(spark, batch(390, 410), dd)
-            caches += reps
-            survivors
+            val dlog = new graft.spark.SnapshotLog(dd)
+            val fps = graft.spark.Pipelines.withDigests(batch(390, 410))
+              .select("fp64", "fp").as[(Long, String)].collect().toSeq
+            graft.spark.Pipelines.corpusDigests(spark, dlog, dlog.currentSnapshot(), fps).get
           })
         for (name <- notes.keys.toSeq.sorted) {
           val df = lazyOverrides.get(name).fold(SparkEntry.queries(name)(spark, sfDir))(_())

@@ -71,10 +71,10 @@ object Tables {
   def turn(args: Seq[String]): Unit = {
     val baseRows = args.lift(0).fold(400000L)(_.toLong)
     val batchRows = args.lift(1).fold(2000)(_.toInt)
-    // past the probe-filter limit a turn takes the big-batch regime, whose
-    // all-dup pass DOES write (and abort) an empty clustered stage — the
-    // turn_new numbers would silently measure a different shape than the
-    // probe-only cost this scenario claims
+    // past the small-regime limit (slice rows) a turn takes the big regime,
+    // checkpointed winners and broadcast joins — the turn_new numbers would
+    // silently measure a different shape than the probe-only cost this
+    // scenario claims
     require(batchRows <= Pipelines.DefaultProbeFilterLimit,
       s"batchRows=$batchRows would leave the small-batch regime " +
         s"(limit ${Pipelines.DefaultProbeFilterLimit}) and change what turn_new measures")

@@ -3,7 +3,6 @@ package graft.spark
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Composed incremental flow — what a 100 TB operator actually runs per
   * arriving page batch, wired end-to-end (round-5 VERDICT item 7; the parts
@@ -23,16 +22,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * round 5's anti-join sort-merge-shuffled the full accumulated digest column
   * every turn, the one O(corpus)-per-batch step left in the pipeline). The
   * probe is INVERTED: the batch's digests drive the corpus read, the corpus
-  * side never exchanges (see [[dedupSurvivors]]), and on a digest-clustered
+  * side never exchanges (see [[appendDedupedWith]]), and on a digest-clustered
   * table the manifest's per-file `fp64` bounds prune the scan to the files
   * that can hold a batch digest at all.
   *
   * Each Spark job also costs planning and scheduling, which dominates a
-  * small turn. A steady small-batch turn runs 9 jobs: the extract (3, its
-  * lineage counted by the write and recorded by the commit), winner
-  * checkpoint (2), one bounded winner collect, one corpus-digest collect
-  * and the clustered write (2). PipelineSpec holds it to at most 9, and to
-  * one new file in each table.
+  * small turn. A steady small-batch turn runs 7 jobs: the extract (3, its
+  * lineage counted by the write and recorded by the commit), one bounded
+  * slice collect, one corpus-digest collect and the clustered write (2).
+  * PipelineSpec holds it to at most 7, and to one new file in each table.
   *
   * Dedup semantics are FIRST-COMMITTED-WINS per text digest (the only order a
   * stream of batches can honor), with the min-url row as the in-batch
@@ -63,15 +61,17 @@ object Pipelines {
   def fp64Of(fp: Column): Column =
     conv(substring(fp, 1, 15), 16, 10).cast(org.apache.spark.sql.types.LongType)
 
-  /** Probe-filter cap: a batch with at most this many distinct `fp64` values
-    * pushes them as an IN filter into the corpus scan, where the manifest's
-    * per-file stats prune files. Only they prune: past
-    * `spark.sql.parquet.pushdown.inFilterThreshold` (10 values) Spark pushes
-    * the IN list to parquet as its min..max range alone, which spans the
-    * whole digest domain, so no row group is skipped. Bigger batches probe by
-    * broadcast semi-join alone — at that size the batch's uniform digests
-    * blanket every file's range anyway, so the filter would prune nothing
-    * and only bloat the plan.
+  /** Small-regime cap, in slice ROWS: a slice of at most this many rows is
+    * deduped on the driver, its digests pushed as IN filters into the
+    * corpus scan, where the manifest's per-file `fp64` stats prune files.
+    * Only they prune: past `spark.sql.parquet.pushdown.inFilterThreshold`
+    * (10 values) Spark pushes the IN list to parquet as its min..max range
+    * alone, which spans the whole digest domain, so no row group is
+    * skipped. Bigger slices probe by broadcast semi-join alone — at that
+    * size the batch's uniform digests blanket every file's range anyway, so
+    * the filter would prune nothing and only bloat the plan. A slice over
+    * the cap with fewer distinct digests takes the big regime too; the
+    * committed rows are the same either way.
     */
   val DefaultProbeFilterLimit = 8192
 
@@ -148,13 +148,13 @@ object Pipelines {
   }
 
   /** Exact-dedup `fresh` extracted rows against the deduped table and append
-    * the survivors (see [[dedupSurvivors]] for the probe's scale shape).
+    * the survivors (see [[appendDedupedWith]] for the two regimes).
     *
     * CONTRACT: `fresh` must be DETERMINISTIC — a committed-file scan or any
-    * plan whose re-evaluation yields the same rows. The skinny probe derives
-    * winners from one evaluation (checkpoint-pinned) but re-attaches and
-    * writes survivors from a LATER evaluation; a digest that changes between
-    * them is silently dropped from (or duplicated in) the commit. Every
+    * plan whose re-evaluation yields the same rows. The probe derives the
+    * surviving digests from one evaluation but writes survivors from a
+    * LATER evaluation; a digest that changes between them is silently
+    * dropped from (or duplicated in) the commit. Every
     * in-tree caller hands a snapshot scan, which satisfies this by
     * construction. A plan Catalyst marks nondeterministic (sampling,
     * rand()-derived columns) is refused with an IllegalArgumentException
@@ -213,201 +213,146 @@ object Pipelines {
       .start()
   }
 
-  /** Derive the batch rows that survive dedup against the corpus at snapshot
-    * `base` — the INVERTED probe (round-6 VERDICT item 1). Returns a
-    * [[ProbeResult]]; its `reps` handle is the one cache to unpersist.
+  /** `fresh` in the deduped schema: each row's text digest `fp` and its
+    * `fp64` prefix appended.
+    */
+  private[graft] def withDigests(fresh: DataFrame): DataFrame =
+    fresh
+      .withColumn("fp", md5(col("text").cast("binary")))
+      .withColumn("fp64", fp64Of(col("fp")))
+      .select(dedupedSchema.fieldNames.toIndexedSeq.map(col): _*)
+
+  /** The small regime's corpus probe: the digests among `fps` (a slice's
+    * non-null `(fp64, fp)` pairs, at most [[DefaultProbeFilterLimit]] of
+    * them, already on the driver) that the corpus at snapshot `base`
+    * already holds. None when nothing can match, so the caller runs no
+    * Spark job.
+    *
+    * The corpus side never exchanges: the digests ride the scan as IN
+    * filters. On a digest-clustered table the manifest's per-file `fp64`
+    * bounds then prune the scan to the files whose range covers some
+    * digest, and the output is at most slice-sized.
+    *
+    * Soundness gate: a null `fp64` row (a pre-fp64 file null-filled by
+    * schema evolution, or such rows CARRIED INTO a fresh stats-bearing file
+    * by compact/delete/upsert rewrites, which never recompute columns)
+    * would be dropped by a row-level `fp64 IN (...)`, silently re-admitting
+    * its text as a duplicate; `fp64 IS NULL OR IN` would be row-correct but
+    * file-skipping-dead. So the `fp64` filter is applied only when every
+    * corpus file carries fp64 bounds WITH the proven-zero-nulls marker
+    * (footer null counts) — bounds presence alone is unsound, since a
+    * rewrite gives a boundary file bounds over its non-null values while
+    * legacy null rows ride along. Otherwise the probe filters on `fp`
+    * alone, which every file generation carries.
+    */
+  private[graft] def corpusDigests(spark: SparkSession, dlog: SnapshotLog,
+      base: Option[Long], fps: Seq[(Long, String)]): Option[DataFrame] = {
+    val meta = base.map(dlog.metaAt).getOrElse(Seq.empty)
+    if (fps.isEmpty || meta.isEmpty) None
+    else {
+      val byFp = col("fp").isin(fps.map(_._2): _*)
+      val fp64Complete = meta.forall(_.stats.get("fp64").exists(_.noNulls))
+      Some(dlog.scanEntries(spark, dedupedSchema, meta)
+        .filter(if (fp64Complete) col("fp64").isin(fps.map(_._1).distinct: _*) && byFp
+                else byFp)
+        .select("fp"))
+    }
+  }
+
+  /** The big regime's probe: the rows of `fresh` that survive dedup against
+    * the corpus at snapshot `base`, for a slice over
+    * [[DefaultProbeFilterLimit]] rows (smaller slices are probed on the
+    * driver, see [[appendDedupedWith]]). Returns a [[ProbeResult]]; its
+    * `reps` handle holds the checkpoint blocks to release.
     *
     * Scale shape — the corpus side NEVER exchanges (except in the loud
-    * seeding fallback below), and since round 7 THE BATCH TEXT NEVER
-    * EXCHANGES EITHER:
+    * seeding fallback below), and the batch text never exchanges either:
     *
     *   1. In-batch winners are derived SKINNY: `groupBy(fp64, fp).agg(
-    *      min(url))` — a partial-aggregated three-thin-column shuffle.
-    *      Round 6's `row_number()` window moved the whole batch INCLUDING
-    *      TEXT PAYLOADS through an exchange every turn: batch-sized on
-    *      ticks, corpus-sized in the seeding regime — the exact shape the
-    *      pipeline's own contract forbids (round-6 VERDICT item 4).
-    *   2. ONE bounded collect of at most `probeFilterLimit + 1` winner rows
-    *      decides the regime. When it comes back within the limit (the
-    *      small regime) the winners are on the driver, and their distinct
-    *      `fp64` prefixes become an IN filter pushed into the corpus scan —
-    *      on a digest-clustered table the manifest's per-file fp64 bounds
-    *      then prune the scan to the files whose range covers some batch
-    *      digest. Only a bigger batch counts its winners.
-    *   3. The corpus's (pruned) digest column is the `present` frame: the
-    *      batch digests the corpus already holds. In the small regime it is
-    *      the IN-filtered scan (≤ batch-sized output), collected by the
-    *      append stage and subtracted from the winners on the driver.
-    *      Otherwise the corpus digest column is semi-probed AGAINST THE
+    *      min(url))` — a partial-aggregated three-thin-column shuffle —
+    *      checkpointed and counted against the broadcast budget.
+    *   2. `present`: the corpus digest column semi-probed AGAINST THE
     *      BROADCAST WINNERS — a broadcast hash join the corpus merely
-    *      streams through: no shuffle, no sort, one columnar scan of two
-    *      thin columns.
-    *   4. `keys`: the winners anti-join `present` (broadcast again — ≤
+    *      streams through: no shuffle, no sort, one columnar scan of the
+    *      `fp` column, which every file generation carries.
+    *   3. `keys`: the winners anti-join `present` (broadcast again — ≤
     *      batch-sized), keeping first-committed-wins semantics; full
     *      survivor rows re-attach by a digest semi-join against the batch
-    *      only when a write needs them ([[ProbeResult.attach]]). The small
-    *      regime's append derives the keys on the driver instead and picks
-    *      the survivor rows by an IN filter on their digests.
+    *      only when a write needs them ([[ProbeResult.attach]]).
     *
-    * SEEDING/BACKFILL FALLBACK (round-6 VERDICT item 1): the broadcast in
-    * step 3 hard-fails at 8 GB / 512M rows, so a first-seed or mass
-    * backfill of a 100 TB corpus died on the round-6 `broadcast()` hint.
-    * Past `graft.dedup.broadcastProbeRows` (default 4M winner rows — a few
-    * hundred MB hashed; conf, not a constant tuned to this sandbox) the
-    * probe plans PLAIN shuffle semi/anti joins instead: at that batch size
-    * an O(batch)-proportional digest shuffle is the correct plan, not a
-    * regression, and the heavy columns still never ride it — both join
-    * sides stay digest-thin.
+    * SEEDING/BACKFILL FALLBACK: a broadcast hard-fails at 8 GB / 512M rows,
+    * so a first-seed or mass backfill of a 100 TB corpus would die on the
+    * `broadcast()` hint. Past `graft.dedup.broadcastProbeRows` (default 4M
+    * winner rows — a few hundred MB hashed; a conf, not a constant tuned to
+    * one host) the probe plans PLAIN shuffle semi/anti joins instead:
+    * at that batch size an O(batch)-proportional digest shuffle is the
+    * correct plan, not a regression, and the heavy columns still never
+    * ride it — both join sides stay digest-thin.
     *
     * `fresh` must be deterministic (a committed-file scan, a staged frame):
     * the skinny probe evaluates it more than once, and a nondeterministic
     * plan could disagree with itself between the winner derivation and the
     * survivor re-attach.
-    *
-    * Round 5 anti-joined batch against corpus directly: a sort-merge join
-    * that SHUFFLED THE FULL ACCUMULATED DIGEST COLUMN every turn —
-    * O(corpus) per batch, the exact shape that dies first at 100 TB.
     */
   private[spark] def dedupSurvivors(spark: SparkSession, fresh: DataFrame,
-      dlog: SnapshotLog, base: Option[Long],
-      probeFilterLimit: Int = DefaultProbeFilterLimit): ProbeResult = {
-    val withFp = fresh
-      .withColumn("fp", md5(col("text").cast("binary")))
-      .withColumn("fp64", fp64Of(col("fp")))
+      dlog: SnapshotLog, base: Option[Long]): ProbeResult = {
+    val withFp = withDigests(fresh)
     // skinny in-batch winners: min url per digest — deterministic under any
-    // partitioning, identical to round 6's rn=1 row CHOICE, but derived
-    // without ever shuffling the text (the winning ROW is re-attached by
-    // digest later). fp64 rides along (it is a function of fp, so the
-    // grouping is unchanged) for the IN-probe filter and the clustered
-    // write.
-    // skinny winners MATERIALIZED EAGERLY (localCheckpoint, the Dedup.scala
-    // pair-operator lifecycle): read by the bounded collect, the anti-join
-    // and (big regime) the count, and each read is a block-store scan of
-    // three thin columns. A persist() here (round 6 kept the windowed reps
-    // cached) was measured re-running the full batch text scan on the
-    // anti-join's evaluation — ~0.4 s/turn of duplicate work on every tick
-    // — because the join's cache substitution missed; an ExistingRDD
-    // cannot miss. Blocks are released EXPLICITLY at turn end
-    // ([[releaseCheckpoint]] — Dataset.unpersist is a no-op for checkpoint
-    // blocks, and waiting for the ContextCleaner ties block lifetime to
-    // driver GC cadence on a long-running streaming driver); external
-    // probeSurvivors callers that only call reps.unpersist() still fall
-    // back to the ContextCleaner.
+    // partitioning, derived without ever shuffling the text (the winning ROW
+    // is picked at the clustered write). fp64 rides along (it is a function
+    // of fp, so the grouping is unchanged) for the clustered write.
+    // MATERIALIZED EAGERLY (localCheckpoint, the Dedup.scala pair-operator
+    // lifecycle): read by the count and the anti-join, each a block-store
+    // scan of three thin columns. A persist() here was measured re-running
+    // the full batch text scan on the anti-join's evaluation, because the
+    // join's cache substitution missed; an ExistingRDD cannot miss. Blocks
+    // are released EXPLICITLY at turn end ([[releaseCheckpoint]] —
+    // Dataset.unpersist is a no-op for checkpoint blocks, and waiting for
+    // the ContextCleaner ties block lifetime to driver GC cadence).
     val winners = withFp
       .groupBy(col("fp64"), col("fp")).agg(min(col("url")).as("url"))
       .localCheckpoint(true)
-    // one bounded read of the checkpoint decides the regime: at most
-    // `probeFilterLimit` rows back means the whole winner set is on the
-    // driver (the small regime); one more means a big batch, which alone
-    // pays a count for the broadcast budget. Gating on the winner-row count
-    // rather than the distinct-fp64 count is equivalent up to 60-bit prefix
-    // collisions and is the bound that actually matters: keys ⊆ winners.
-    val head = winners.limit(probeFilterLimit + 1).collect().toSeq
-    val small = head.length <= probeFilterLimit
-    val broadcastable = small || winners.count() <= spark.conf.get(
+    val broadcastable = winners.count() <= spark.conf.get(
       "graft.dedup.broadcastProbeRows", "4000000").toLong
-    // the IN-probe digest list (small regime only — a bigger batch's
-    // uniform digests blanket every file's range anyway). A null digest
-    // (null text — outside the extract kernel's totality, but this probe is
-    // generic) can never IN-match anyway (its rows always survive: SQL null
-    // joins nothing).
-    val batchFps =
-      if (!small) Seq.empty[Long]
-      else head.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct
-    // ONE metadata sweep feeds both the scan and the gate below (metaAt
-    // twice per turn = O(segments) extra object-store GETs — round-6 review)
-    val corpusMeta = base.map(dlog.metaAt).getOrElse(Seq.empty)
-    val corpus = dlog.scanEntries(spark, dedupedSchema, corpusMeta)
-    // IN-branch soundness gate: a null fp64 row (a pre-fp64 round-5 file
-    // null-filled by schema evolution — or such rows CARRIED INTO a fresh
-    // stats-bearing file by compact/delete/upsert rewrites, which never
-    // recompute columns) would be dropped by a row-level `fp64 IN (...)`,
-    // silently re-admitting its text as a duplicate. `fp64 IS NULL OR IN`
-    // would be row-correct but file-skipping-dead (the Or keeps every file
-    // whose nulls aren't disproven). The gate is pure metadata, from the
-    // sweep above: the IN branch requires every corpus file to carry fp64
-    // bounds WITH the proven-zero-nulls marker (footer null counts, round
-    // 6) — bounds presence alone was unsound, a rewrite gives a boundary
-    // file bounds over its non-null values while legacy null rows ride
-    // along (round-6 review, second pass). Anything unproven degrades the
-    // turn to the semi-join branch, which probes the full `fp` column that
-    // every file generation carries.
-    lazy val fp64Complete = corpusMeta.nonEmpty &&
-      corpusMeta.forall(_.stats.get("fp64").exists(_.noNulls))
-    // the corpus digests this batch could collide with: ≤ batch-sized output
-    // (fp64 is a prefix of fp, so the IN filter over-approximates but never
-    // misses; the join on the full fp is what decides). A local relation
-    // when nothing can match: collecting it runs no Spark job.
-    val present =
-      if (small && (batchFps.isEmpty || corpusMeta.isEmpty))
-        spark.createDataFrame(java.util.Collections.emptyList[Row](),
-          StructType(Seq(StructField("fp", StringType))))
-      else if (small && fp64Complete)
-        corpus.filter(col("fp64").isin(batchFps: _*)).select("fp")
-      else if (broadcastable)
-        corpus.select("fp")
-          .join(broadcast(winners.select("fp")), Seq("fp"), "left_semi")
-      else // seeding fallback: plain digest-thin shuffle, no broadcast cap
-        corpus.select("fp")
-          .join(winners.select("fp"), Seq("fp"), "left_semi")
+    val corpus = dlog.scanEntries(spark, dedupedSchema,
+      base.map(dlog.metaAt).getOrElse(Seq.empty)).select("fp")
     // NO cache on `present`: it feeds the anti-join through an explicit
     // broadcast, and a BroadcastExchange materializes its child exactly once
-    // per execution (memoized relation future). Null-digest winners never
-    // match `present` (its fps are all non-null), so they survive — same as
-    // round 6's window representative.
+    // per execution (memoized relation future)
+    val present =
+      if (broadcastable) corpus.join(broadcast(winners.select("fp")), Seq("fp"), "left_semi")
+      else corpus.join(winners.select("fp"), Seq("fp"), "left_semi")
+    // null-digest winners (null text — outside the extract kernel's
+    // totality, but this probe is generic) never match `present`, whose fps
+    // are all non-null, so they survive
     val keys =
       if (broadcastable) winners.join(broadcast(present), Seq("fp"), "left_anti")
       else winners.join(present, Seq("fp"), "left_anti")
     // re-attach full survivor rows by digest: a semi-join of the batch
-    // against the (bounded) surviving key set — null-safe on fp so a
-    // null-text row still re-attaches. NOTE: per-fp multiplicity is resolved
-    // at the clustered WRITE (one exchange + windowed pick, see
-    // appendDedupedWith), not here — this frame is the probe/audit surface.
+    // against the surviving key set — null-safe on fp so a null-text row
+    // still re-attaches. Per-fp multiplicity is resolved at the clustered
+    // WRITE (see appendDedupedWith), not here.
     val attach = (k: DataFrame, bcast: Boolean) => {
       val kf = k.select(col("fp").as("__graft_probe_fp"))
       withFp.join(if (bcast) broadcast(kf) else kf,
         col("fp") <=> col("__graft_probe_fp"), "left_semi")
-        .select(dedupedSchema.fieldNames.toIndexedSeq.map(col): _*)
     }
-    ProbeResult(attach(keys, broadcastable), winners, small, keys,
-      broadcastable, attach, if (small) Some(head) else None, present,
-      withFp.select(dedupedSchema.fieldNames.toIndexedSeq.map(col): _*))
+    ProbeResult(attach(keys, broadcastable), winners, keys, broadcastable, attach)
   }
 
   /** [[dedupSurvivors]]'s result: the survivor frame (probe/audit surface;
-    * NOTE it carries EVERY batch row whose digest survived — per-digest
-    * multiplicity included, unlike round 6's one-representative frame — the
-    * winner pick happens at the clustered write, so `survivors.count()` can
-    * exceed the committed/appended row count when a batch holds intra-batch
-    * duplicates; count `keys` for the committed cardinality), the persisted
-    * skinny winner frame (unpersist it when done — the ONLY cache the probe
-    * creates), the regime flags, the skinny surviving-key frame
-    * `(fp64, fp, url)` the big regime counts and re-attaches from, the
-    * re-attach constructor (keys frame, broadcast?) => full rows, for the
-    * small regime the winner rows already on the driver plus the `present`
-    * frame (the corpus digests among them) the append stage collects to
-    * derive the keys locally, and the batch in the deduped schema.
+    * it carries EVERY batch row whose digest survived — per-digest
+    * multiplicity included — since the winner pick happens at the
+    * clustered write, so `survivors.count()` can exceed the appended row
+    * count when a batch holds intra-batch duplicates; count `keys` for the
+    * committed cardinality), the checkpointed skinny winner frame
+    * (release it when done), the skinny surviving-key frame
+    * `(fp64, fp, url)`, whether the probe broadcasts, and the re-attach
+    * constructor (keys frame, broadcast?) => full rows.
     */
   private[spark] final case class ProbeResult(survivors: DataFrame,
-      reps: DataFrame, smallBatch: Boolean, keys: DataFrame,
-      broadcastable: Boolean, attach: (DataFrame, Boolean) => DataFrame,
-      localWinners: Option[Seq[Row]], present: DataFrame, batch: DataFrame)
-
-  /** Audit surface: the per-turn survivors DataFrame for `fresh` against the
-    * CURRENT deduped snapshot, without committing — what `graft.Probe plans`
-    * dumps to PLANS.md so the no-corpus-exchange claim is inspectable, not
-    * just test-asserted. Returns (survivors, persisted reps handle — unpersist it
-    * once the plan/result is consumed). Multiplicity caveat: since round 7
-    * the frame keeps every row of a surviving digest (the min-url winner
-    * pick moved to the clustered write), so its row count upper-bounds — and
-    * with intra-batch duplicates exceeds — what a commit would append.
-    */
-  def probeSurvivors(spark: SparkSession, fresh: DataFrame,
-      dedupedDir: String): (DataFrame, DataFrame) = {
-    val dlog = new SnapshotLog(dedupedDir)
-    val r = dedupSurvivors(spark, fresh, dlog, dlog.currentSnapshot())
-    (r.survivors, r.reps)
-  }
+      reps: DataFrame, keys: DataFrame, broadcastable: Boolean,
+      attach: (DataFrame, Boolean) => DataFrame)
 
   /** Partition count (≈ files) of a clustered append of `rows` survivors:
     * one per `graft.dedup.clusterRowsPerPart` rows (default 256k rows/file —
@@ -429,25 +374,30 @@ object Pipelines {
     ((rows + perPart - 1L) / perPart).max(1L).min(1L << 20).toInt
   }
 
-  /** Shared body of the batch and streaming dedup-append: probe survivors
-    * against the deduped snapshot `base` ([[dedupSurvivors]]), derive the
-    * SKINNY surviving-key set (so an all-duplicate turn — every low-rate
-    * streaming tick and idle cron pass — costs the probe evaluation and
-    * NOTHING else: no text shuffle, no staged files, no footer re-read),
-    * re-attach the full survivor rows, stage them CLUSTERED ON fp64
-    * (disjoint, ascending per-file digest ranges — the manifest stats the
-    * next turn's probe prunes by), and hand the staged dir plus `base` to
-    * `commitFn` (conditional-OCC for [[appendDeduped]],
+  /** Shared body of the batch and streaming dedup-append: dedup `fresh`
+    * against the deduped snapshot `base`, stage the survivors CLUSTERED ON
+    * fp64 (disjoint, ascending per-file digest ranges — the manifest stats
+    * the next turn's probe prunes by), and hand the staged dir plus `base`
+    * to `commitFn` (conditional-OCC for [[appendDeduped]],
     * conditional-idempotent for the pipeline and the streaming path).
-    * Returns (None, 0) without calling `commitFn` when no row survives.
+    * Returns (None, 0) without calling `commitFn` when no row survives, so
+    * an all-duplicate turn stages nothing.
     *
-    * The write applies the per-digest winner pick (`row_number` over
-    * (fp64, fp) ordered by url) ON TOP of the clustering exchange, which
-    * already co-locates every row of a digest, so the window needs no
-    * exchange of its own — exactly ONE full-row shuffle per append,
-    * carrying only rows whose digest survived. Round 6 shuffled the whole
-    * batch's text through the window FIRST and range-shuffled the survivors
-    * again afterwards.
+    * ONE bounded collect of the slice's skinny `(fp64, fp)` rows picks the
+    * regime. A slice of at most [[DefaultProbeFilterLimit]] rows (every
+    * steady turn and streaming tick) is deduped on the driver: its distinct
+    * digests, the committed ones among them ([[corpusDigests]], one
+    * collect), and the surviving keys are all local, and the survivors are
+    * picked from the batch by an IN filter on their digests. A bigger slice
+    * probes through [[dedupSurvivors]] and persists its key set SKINNY to
+    * count it. Either way the committed rows are the same: first committed
+    * wins across turns, and the min-url row within a batch.
+    *
+    * The write applies that per-digest pick (`row_number` over (fp64, fp)
+    * ordered by url) ON TOP of the range-clustering exchange, which already
+    * co-locates every row of a digest, so the window needs no exchange of
+    * its own — exactly ONE full-row shuffle per append, carrying only rows
+    * whose digest survived.
     */
   private def appendDedupedWith(spark: SparkSession, fresh: DataFrame,
       dlog: SnapshotLog, base: Option[Long],
@@ -459,101 +409,65 @@ object Pipelines {
     // the probe is derived from `base`: the commit below is conditional on
     // it still being the parent, so an overlapping pipeline turn deduping
     // the same slice cannot land the same rows twice (one loses loudly and
-    // its rerun re-derives — round-5 review pass 3; plain OCC would have
-    // happily committed both appends)
-    val probe = dedupSurvivors(spark, fresh, dlog, base)
-    // ONE staging/commit protocol for both regimes — two verbatim copies is
-    // how a protocol change lands in one branch only (round-6 review, fifth
-    // pass). `clustered` is already partitioned so that every row of a
-    // digest shares a partition whose key is among `within`.
-    def clusteredCommit(clustered: DataFrame, within: Seq[Column],
-        n: Long): (Option[Long], Long) = {
-      val stage = dlog.writeStage(GraftIo.writer(clustered
+    // its rerun re-derives; plain OCC would have happily committed both)
+    val batch = withDigests(fresh)
+    // ONE staging/commit protocol for both regimes. Explicit partition
+    // count: the files follow the row count ([[clusterParts]]), not
+    // whatever AQE coalesces a count-less range repartition into.
+    def clusteredCommit(survivors: DataFrame, n: Long): (Option[Long], Long) = {
+      val stage = dlog.writeStage(GraftIo.writer(survivors
+        .repartitionByRange(clusterParts(spark, n), col("fp64"))
         .withColumn("rn", row_number().over(
-          Window.partitionBy(within :+ col("fp64") :+ col("fp"): _*)
-            .orderBy(col("url"))))
-        .filter(col("rn") === 1).drop("rn")
-        .select(dedupedSchema.fieldNames.toIndexedSeq.map(col): _*))
+          Window.partitionBy(col("fp64"), col("fp")).orderBy(col("url"))))
+        .filter(col("rn") === 1).drop("rn"))
         .mode("overwrite").parquet(_))
       // outside the write's failure handling: past the manifest CAS the
       // stage's files may be committed, and the commit routine alone
       // decides when its stage is safe to delete
       (commitFn(stage, base), n)
     }
-    try probe.localWinners match {
-      case Some(winners) =>
-        // tick regime (≤ probeFilterLimit winners, already on the driver):
-        // collect the corpus digests among them (≤ batch-sized) and subtract
-        // them here — the surviving keys never leave the driver, and the
-        // write below re-attaches from them, touching the corpus zero
-        // further times
-        val present: Set[String] =
-          if (winners.isEmpty) Set.empty
-          else probe.present.collect().map(_.getString(0)).toSet
-        val keys = winners.filter(k => k.isNullAt(1) || !present(k.getString(1)))
-        if (keys.isEmpty) (None, 0L)
-        else {
-          // clustering without a range-sampling pass: the keys are local,
-          // so their sorted distinct fp64 values split into equal-count
-          // ascending partition ids, here as each id's lowest fp64 (a null
-          // digest takes id 0, where a range partitioning puts it too). The
-          // survivors are picked by an IN filter on their digests: no join,
-          // so no broadcast job either.
-          val parts = clusterParts(spark, keys.length.toLong)
-          val fps = keys.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct.sorted
-          // (lowest fp64, id) per id, highest first: the first match wins
-          val lows = fps.indices
-            .groupBy(i => (i.toLong * parts / fps.length).toInt)
-            .map { case (id, is) => (fps(is.min), id) }.toSeq.sorted.reverse
-          val partId = lows match {
-            case (lo, id) +: rest =>
-              rest.foldLeft(when(col("fp64") >= lo, id)) { case (c, (l, i)) =>
-                c.when(col("fp64") >= l, i)
-              }.otherwise(0)
-            case _ => lit(0)
-          }
-          val (nullFp, keyFps) = keys.partition(_.isNullAt(1))
-          val picked = col("fp").isin(keyFps.map(_.getString(1)): _*) ||
-            (if (nullFp.nonEmpty) col("fp").isNull else lit(false))
-          clusteredCommit(
-            probe.batch.filter(picked).withColumn(PartIdCol, partId)
-              .repartitionById(parts, col(PartIdCol)),
-            Seq(col(PartIdCol)), keys.length.toLong)
-        }
-      case None =>
-        // seeding/backfill regime: the key set can be corpus-sized — persist
-        // it SKINNY (fp64, fp, url — never the text), count it, and stream
-        // the attached full rows straight into a RANGE-clustered write (a
-        // full-row persist would double-materialize the whole slice —
-        // round-6 review, fourth pass). An all-duplicate big batch writes
-        // (and aborts) nothing at all — round 6 staged an empty clustered
-        // dir just to count zero from its footers. Explicit partition
-        // count: the files follow the row count ([[clusterParts]]), not
-        // whatever AQE coalesces a count-less range repartition into.
+    val slice = batch.select("fp64", "fp")
+      .limit(DefaultProbeFilterLimit + 1).collect()
+    if (slice.length <= DefaultProbeFilterLimit) {
+      // the small regime: a null digest (null text) never matches the
+      // corpus, so it always survives
+      val digests = slice.map(r => Option(r.getString(1)) -> r).toMap
+      val fps = digests.values.toSeq.collect { case Row(fp64: Long, fp: String) => (fp64, fp) }
+      val present = corpusDigests(spark, dlog, base, fps)
+        .fold(Set.empty[String])(_.collect().map(_.getString(0)).toSet)
+      val keys = digests.keys.filter(_.forall(fp => !present(fp))).toSeq
+      if (keys.isEmpty) (None, 0L)
+      else {
+        val picked = col("fp").isin(keys.flatten: _*) ||
+          (if (keys.contains(None)) col("fp").isNull else lit(false))
+        clusteredCommit(batch.filter(picked), keys.length.toLong)
+      }
+    } else {
+      // seeding/backfill regime: the key set can be corpus-sized — persist
+      // it SKINNY (fp64, fp, url — never the text), count it, and stream
+      // the attached full rows straight into the write (a full-row persist
+      // would double-materialize the whole slice)
+      val probe = dedupSurvivors(spark, fresh, dlog, base)
+      try {
         val keys = probe.keys.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val n = keys.count()
           if (n == 0L) (None, 0L)
-          else clusteredCommit(
-            probe.attach(keys, probe.broadcastable)
-              .repartitionByRange(clusterParts(spark, n), col("fp64")),
-            Nil, n)
+          else clusteredCommit(probe.attach(keys, probe.broadcastable), n)
         } finally keys.unpersist()
-    } finally releaseCheckpoint(probe.reps)
+      } finally releaseCheckpoint(probe.reps)
+    }
   }
 
-  /** The small regime's write partition id column. */
-  private val PartIdCol = "__graft_part"
-
-  /** Release the winners' localCheckpoint blocks NOW. `Dataset.unpersist`
-    * consults only the CacheManager and is a NO-OP for checkpoint blocks, so
-    * without this their lifetime is tied to driver GC cadence (the
-    * ContextCleaner reclaims them only once the RDD object is collected) —
-    * a long-running streaming dedup would carry many ticks' worth of
-    * MEMORY_AND_DISK blocks between GC cycles (round-7 review). Safe only at
-    * the END of a turn: the checkpoint truncated lineage, so the frame must
-    * never be evaluated after release.
+  /** Release the big regime's winner localCheckpoint blocks NOW.
+    * `Dataset.unpersist` consults only the CacheManager and is a NO-OP for
+    * checkpoint blocks, so without this their lifetime is tied to driver
+    * GC cadence (the ContextCleaner reclaims them only once the RDD object
+    * is collected) — a long-running streaming dedup would carry many
+    * batches' worth of MEMORY_AND_DISK blocks between GC cycles. Safe only
+    * at the END of a turn: the checkpoint truncated lineage, so the frame
+    * must never be evaluated after release.
     */
   private def releaseCheckpoint(df: DataFrame): Unit = {
     df.queryExecution.analyzed.foreach {

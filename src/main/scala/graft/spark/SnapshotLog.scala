@@ -122,6 +122,15 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     case Some(id) => filesAt(id)
   }
 
+  /** Schema of the table's most recently committed file (the current
+    * snapshot's newest segment's last entry): the widest schema under
+    * additive evolution (C22). One footer read; None for an empty table.
+    */
+  def newestFileSchema(spark: org.apache.spark.sql.SparkSession)
+      : Option[org.apache.spark.sql.types.StructType] =
+    currentSnapshot().flatMap(id => metaAt(id).lastOption)
+      .map(newest => spark.read.parquet(newest.path).schema)
+
   /** Live data files of a specific committed snapshot (time travel: every
     * manifest list and segment is immutable and kept, so any past snapshot
     * stays readable — replace-commits only stop REFERENCING old files, never

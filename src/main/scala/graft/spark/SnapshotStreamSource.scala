@@ -49,9 +49,8 @@ final class SnapshotStreamProvider extends StreamSourceProvider with DataSourceR
     StructType(s.fields.map(_.copy(nullable = true)))
 
   /** The caller's schema, or — absent one — the schema of the table's most
-    * recently committed file (the newest segment's last entry: the widest
-    * schema under additive evolution, C22). One footer read; an empty table
-    * with no explicit schema fails loudly (nothing to infer from).
+    * recently committed file ([[SnapshotLog.newestFileSchema]]). An empty
+    * table with no explicit schema fails loudly (nothing to infer from).
     *
     * Resolved identically at `load()` (sourceSchema) and at query start
     * (createSource) and deliberately NOT pinned to the checkpoint: the V1
@@ -76,14 +75,11 @@ final class SnapshotStreamProvider extends StreamSourceProvider with DataSourceR
     */
   private def resolveSchema(sqlContext: SQLContext,
       schema: Option[StructType], log: => SnapshotLog): StructType =
-    normalized(schema.getOrElse {
-      val newest = log.currentSnapshot()
-        .flatMap(id => log.metaAt(id).lastOption)
-        .getOrElse(throw new IllegalArgumentException(
+    normalized(schema.getOrElse(
+      log.newestFileSchema(sqlContext.sparkSession).getOrElse(
+        throw new IllegalArgumentException(
           "graft-snapshots cannot infer a schema from an empty table — " +
-            "pass an explicit .schema(...)"))
-      sqlContext.sparkSession.read.parquet(newest.path).schema
-    })
+            "pass an explicit .schema(...)"))))
 
   override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
       providerName: String, parameters: Map[String, String]): (String, StructType) = {

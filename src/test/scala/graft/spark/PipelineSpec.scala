@@ -1568,17 +1568,41 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     (corpusScans(unwrap(df.queryExecution.executedPlan)).nonEmpty, shuffled.size)
   }
 
+  /** `body`'s result and the names of the RDDs its stages computed with a
+    * storage level: a persist or a checkpoint shows up here.
+    */
+  private def persisting[A](body: => A): (A, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.filter(_.storageLevel.isValid).foreach(r => seen.add(r.name))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.GraftShim.drainListeners(spark.sparkContext)
+      (r, seen.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("a dedup turn releases its checkpointed winner blocks (no RDD leak)") {
-    val sp = spark; import sp.implicits._
     val dd = tmpDir("release_dd")
-    def extractedDF(lo: Int, hi: Int) =
-      spark.createDataset((lo until hi).map(i => Schemas.Extracted(
-        s"https://rel/$i", i % 8, "html",
-        Seq(s"rel text body $i"), s"rel text body $i", 10L + i, i.toLong))).toDF()
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    // a writing turn AND an all-duplicate turn (both probe paths)
-    assert(Pipelines.appendDeduped(spark, extractedDF(0, 50), dd)._2 == 50L)
-    assert(Pipelines.appendDeduped(spark, extractedDF(0, 50), dd)._2 == 0L)
+    // small turns, a writing one AND an all-duplicate one, persist nothing
+    for (expected <- Seq(50L, 0L)) {
+      val ((_, n), persisted) = persisting(
+        Pipelines.appendDeduped(spark, graft.Probe.extractedRange(spark, 0, 50), dd))
+      assert(n == expected)
+      assert(persisted.isEmpty, s"a small turn persisted $persisted")
+    }
+    // a big-regime turn checkpoints its winners and persists its keys
+    val big = Pipelines.DefaultProbeFilterLimit + 100L
+    val ((_, n), persisted) = persisting(
+      Pipelines.appendDeduped(spark, graft.Probe.extractedRange(spark, 0, big), dd))
+    assert(n == big - 50L)
+    assert(persisted.nonEmpty, "the big regime must checkpoint its winners")
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     // Dataset.unpersist is a no-op for localCheckpoint blocks; the turn must
     // release them explicitly, not leave them to driver GC cadence
@@ -1608,7 +1632,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dlog.scan(spark, Pipelines.dedupedSchema).count() == 20L)
   }
 
-  test("a steady small-regime pipeline turn runs at most 9 Spark jobs; its files cluster on fp64") {
+  test("a steady small-regime pipeline turn runs at most 7 Spark jobs; its files cluster on fp64") {
     val sp = spark; import sp.implicits._
     val table = tmpDir("budget_tbl"); val dd = tmpDir("budget_dd")
     val seed = fixture.take(120)
@@ -1625,14 +1649,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Pipelines.incrementalDedup(spark, batch(1), table, dd, 8))
     assert(r.appendedRows > 0L && r.appendedRows <= 20L, s"$r")
     import scala.jdk.CollectionConverters._
-    assert(meter.jobs.get <= 9,
+    assert(meter.jobs.get <= 7,
       s"${meter.jobs.get} jobs:\n${meter.jobLines.asScala.mkString("\n")}")
     // the write layout follows the bytes: a small turn adds one data file
     // to each table
     assert(elog.metaAddedBetween(eBefore, r.extractedSnapshot.get).size == 1)
     assert(dlog.metaAddedBetween(dBefore, r.dedupedSnapshot.get).size == 1)
-    // the small regime's clustered write over several files (4 rows per
-    // file): pairwise-disjoint fp64 ranges
+    // the small regime's range-clustered write over several files (4 rows
+    // per file): pairwise-disjoint fp64 ranges
     val before = dlog.currentSnapshot().get
     val r2 = withConf("graft.dedup.clusterRowsPerPart" -> "4")(
       Pipelines.incrementalDedup(spark, batch(2), table, dd, 8))
@@ -1680,8 +1704,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.createDataset((lo until hi).map(i => Schemas.Extracted(
         s"https://probe/$i", i % 8, "html",
         Seq(s"probe text body $i"), s"probe text body $i", 10L + i, i.toLong))).toDF()
-    // 8 fp64-clustered files per append, so the probe has files to skip
-    withConf("graft.dedup.clusterRowsPerPart" -> "50") {
+    // 16 fp64-clustered files per append, so the probe has files to skip
+    withConf("graft.dedup.clusterRowsPerPart" -> "25") {
       assert(Pipelines.appendDeduped(spark, extractedDF(0, 400), dd)._2 == 400L)
       assert(Pipelines.appendDeduped(spark, extractedDF(400, 800), dd)._2 == 400L)
     }
@@ -1691,50 +1715,85 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "every deduped file must carry fp64 bounds")
     // fresh batch: 10 already-committed texts + 10 new ones
     val batch = extractedDF(790, 810)
-    val probe0 =
-      Pipelines.dedupSurvivors(spark, batch, dlog, dlog.currentSnapshot())
-    val (survivors, reps, small) =
-      (probe0.survivors, probe0.reps, probe0.smallBatch)
-    assert(small, "a 20-digest batch must report the small-batch regime")
-    try {
-      // plan shape FIRST (static): corpus scanned, but inside no shuffle
-      val (scanned, shuffles) = corpusScanShape(survivors)
-      assert(scanned, "the probe must plan a manifest-fed corpus scan")
-      assert(shuffles == 0,
-        "round-6 contract: the accumulated corpus digest column must never " +
-          "ride a shuffle exchange — the batch broadcasts instead")
-      val urls = survivors.collect().map(_.getString(0)).sorted.toSeq
-      assert(urls == (800 until 810).map(i => s"https://probe/$i"),
-        s"only the 10 fresh texts survive, got $urls")
-      // the big-batch branch (probe filter disabled) agrees and also plans
-      // zero corpus-side shuffles (broadcast semi-probe)
-      val probe2 = Pipelines.dedupSurvivors(
-        spark, batch, dlog, dlog.currentSnapshot(), probeFilterLimit = 0)
-      try {
-        assert(!probe2.smallBatch,
-          "probeFilterLimit = 0 must report the big-batch regime")
-        val (scanned2, shuffles2) = corpusScanShape(probe2.survivors)
-        assert(scanned2 && shuffles2 == 0)
-        assert(probe2.survivors.collect().map(_.getString(0)).sorted.toSeq == urls)
-      } finally probe2.reps.unpersist()
-    } finally reps.unpersist()
-    // file skipping: a small batch's fp64 membership plans a strict subset
-    // of the range-clustered files (C16 applied to the dedup probe)
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, Literal}
-    // derive probe digests through the SAME fp64Of the writer/prober share —
-    // a hand-rolled MD5 copy here would track neither if the definition ever
-    // moved (round-6 review, third pass)
-    def fp64(t: String): Long = Seq(t).toDF("text")
-      .select(Pipelines.fp64Of(md5(col("text").cast("binary"))))
-      .head().getLong(0)
-    val idx = new ManifestFileIndex(dd,
-      meta.map(m => ManifestEntry(m.path, m.size, m.stats)))
-    val probe = In(
-      AttributeReference("fp64", org.apache.spark.sql.types.LongType)(),
-      Seq(Literal(fp64("probe text body 0")), Literal(fp64("probe text body 399"))))
-    val kept = idx.listFiles(Nil, Seq(probe)).map(_.files.size).sum
+    def fpsOf(df: org.apache.spark.sql.DataFrame) =
+      Pipelines.withDigests(df).select("fp64", "fp").as[(Long, String)].collect().toSeq
+    // the small regime's corpus probe, fed the batch digests the append
+    // collects
+    val present = Pipelines.corpusDigests(spark, dlog, dlog.currentSnapshot(), fpsOf(batch))
+      .getOrElse(fail("a batch holding committed texts must probe the corpus"))
+    // plan shape FIRST (static): corpus scanned, but inside no shuffle
+    val (scanned, shuffles) = corpusScanShape(present)
+    assert(scanned, "the probe must plan a manifest-fed corpus scan")
+    assert(shuffles == 0,
+      "the accumulated corpus digest column must never ride a shuffle " +
+        "exchange — the batch digests filter the scan instead")
+    assert(present.as[String].collect().toSet == fpsOf(extractedDF(790, 800)).map(_._2).toSet,
+      "the probe must return exactly the 10 committed digests")
+    // file skipping (C16 applied to the dedup probe): the probe's own
+    // filters plan a strict subset of the range-clustered files
+    val scan = (present.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }).collectFirst { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }.get
+    val kept = scan.relation.location.listFiles(Nil, scan.dataFilters).map(_.files.size).sum
     assert(kept >= 1 && kept < meta.size,
-      s"2 digests must plan a strict subset of the ${meta.size} clustered files, got $kept")
+      s"20 digests must plan a strict subset of the ${meta.size} clustered files, got $kept")
+    // the big regime's probe agrees and also plans zero corpus-side
+    // shuffles (broadcast semi-probe)
+    val urls = (800 until 810).map(i => s"https://probe/$i")
+    val probe = Pipelines.dedupSurvivors(spark, batch, dlog, dlog.currentSnapshot())
+    try {
+      val (scanned2, shuffles2) = corpusScanShape(probe.survivors)
+      assert(scanned2 && shuffles2 == 0)
+      assert(probe.survivors.collect().map(_.getString(0)).sorted.toSeq == urls)
+    } finally probe.reps.unpersist()
+    // and the small-regime append commits only the 10 fresh texts
+    assert(Pipelines.appendDeduped(spark, batch, dd)._2 == 10L)
+    val all = dlog.scan(spark, Pipelines.dedupedSchema).select("url").as[String].collect().toSet
+    assert(all.size == 810 && urls.forall(all))
+  }
+
+  test("small and big dedup regimes commit the same rows: intra-batch duplicates, a null text") {
+    val sp = spark; import sp.implicits._
+    def page(url: String, text: String) =
+      Schemas.Extracted(url, 0, "html", Option(text).toSeq, text, 10L, 0L)
+    def eq(i: Int) = s"eq text body $i"
+    val seed = (0 until 100).map(i => page(s"https://eq/$i", eq(i)))
+    // 10 committed texts under new urls, 20 fresh texts, intra-batch
+    // copies of 5 of them (sorting after the originals) and one copy that
+    // sorts BEFORE its original, and two null texts
+    val slice = (90 until 100).map(i => page(s"https://eq/$i-x", eq(i))) ++
+      (100 until 120).map(i => page(s"https://eq/$i", eq(i))) ++
+      (100 until 105).map(i => page(s"https://eq/$i-dup", eq(i))) ++
+      Seq(page("https://eq/0-early", eq(110)),
+        page("https://eq/null-b", null), page("https://eq/null-a", null))
+    val pad = Pipelines.DefaultProbeFilterLimit + 8
+    val padding = spark.range(pad).select(
+      concat(lit("https://eq/pad-"), col("id")).as("url"), lit(0).as("bucket"),
+      lit("html").as("kind"), array(concat(lit("eq pad "), col("id"))).as("pages"),
+      concat(lit("eq pad "), col("id")).as("text"), lit(10L).as("n_bytes"),
+      lit(0L).as("checksum"))
+    def committed(fresh: org.apache.spark.sql.DataFrame) = {
+      val dd = tmpDir("regimes_dd")
+      assert(Pipelines.appendDeduped(spark, spark.createDataset(seed).toDF(), dd)._2 == 100L)
+      val n = Pipelines.appendDeduped(spark, fresh, dd)._2
+      val rows = new SnapshotLog(dd).scan(spark, Pipelines.dedupedSchema)
+        .select("url", "text", "fp", "fp64").collect()
+        .map(r => (r.getString(0), Option(r.getString(1)), Option(r.getString(2)),
+          if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        .filterNot(_._1.startsWith("https://eq/pad-")).toSeq.sorted
+      (n, rows)
+    }
+    val (nSmall, small) = committed(spark.createDataset(slice).toDF())
+    val (nBig, big) = committed(spark.createDataset(slice).toDF().unionByName(padding))
+    assert(nSmall == 21L, s"20 fresh texts and one null text land, got $nSmall")
+    assert(nBig == nSmall + pad)
+    assert(small == big)
+    val kept = small.map(_._1).toSet
+    assert(kept("https://eq/0-early") && !kept("https://eq/110"),
+      "the min-url row of a digest wins")
+    assert(kept("https://eq/null-a") && !kept("https://eq/null-b"))
+    assert(!kept.exists(_.endsWith("-x")) && !kept.exists(_.endsWith("-dup")))
   }
 
   test("dedup probe on a pre-fp64 (legacy) corpus never re-admits duplicates") {
@@ -1811,10 +1870,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dlog = new SnapshotLog(dd)
     val batch = extractedDF(290, 320) // 10 dups + 30 fresh
     // broadcast path (reference): big-batch regime, under the budget
-    val bProbe = Pipelines.dedupSurvivors(
-      spark, batch, dlog, dlog.currentSnapshot(), probeFilterLimit = 0)
+    val bProbe = Pipelines.dedupSurvivors(spark, batch, dlog, dlog.currentSnapshot())
     val expected = try {
-      assert(!bProbe.smallBatch && bProbe.broadcastable)
+      assert(bProbe.broadcastable)
       bProbe.survivors.select("url").as[String].collect().sorted.toSeq
     } finally bProbe.reps.unpersist()
     spark.conf.set("graft.dedup.broadcastProbeRows", "0")
@@ -1825,10 +1883,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val probe = Pipelines.dedupSurvivors(
-        spark, batch, dlog, dlog.currentSnapshot(), probeFilterLimit = 0)
+      val probe = Pipelines.dedupSurvivors(spark, batch, dlog, dlog.currentSnapshot())
       try {
-        assert(!probe.smallBatch && !probe.broadcastable,
+        assert(!probe.broadcastable,
           "a zero budget must force the shuffle fallback")
         // inputPlan predates AQE's exchange insertion, so assert on the join
         // STRATEGY: every probe join must be shuffle-based (sort-merge),
@@ -1852,8 +1909,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
           == expected, "fallback regime must keep the same survivors")
       } finally probe.reps.unpersist()
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      // the append path through the fallback regime (> probeFilterLimit
-      // digests, zero budget) lands the right rows and a replay no-ops —
+      // the append path through the fallback regime (> DefaultProbeFilterLimit
+      // rows, zero budget) lands the right rows and a replay no-ops —
       // the count strategy holds without any broadcast anywhere
       val dd2 = tmpDir("probe_fallback_append")
       val big = Pipelines.DefaultProbeFilterLimit + 300
@@ -1928,6 +1985,31 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(all.count() == 210L)
     assert(all.select("fp").distinct().count() == 210L,
       "every digest must appear exactly once after the post-compact append")
+  }
+
+  test("compact CLI on a deduped table: sortBy=fp64 keeps every row, digest and fp64 bound") {
+    val sp = spark; import sp.implicits._
+    val table = tmpDir("cli_compact_tbl"); val dd = tmpDir("cli_compact_dd")
+    for (t <- 0 until 3) Pipelines.incrementalDedup(
+      spark, spark.createDataset(fixture.slice(t * 30, t * 30 + 30)), table, dd, 8)
+    val dlog = new SnapshotLog(dd)
+    def rows = dlog.scan(spark, Pipelines.dedupedSchema)
+      .select("url", "text", "fp", "fp64").as[(String, String, String, Long)]
+      .collect().toSeq.sorted
+    val before = rows
+    assert(dlog.currentFiles().size == 3)
+    // the function `compact <dedupedDir> 8 sortBy=fp64` runs
+    val id = graft.SubmitMain.compact(spark, dd, 8, Seq("fp64"))
+    assert(id.isDefined && dlog.currentSnapshot() == id)
+    assert(rows == before, "the rewrite must keep every row and digest")
+    val meta = dlog.metaAt(id.get)
+    assert(meta.nonEmpty && meta.forall(m => m.stats.contains("bucket") &&
+      m.stats.get("fp64").exists(_.isInstanceOf[LongBounds])),
+      s"every output file must keep its bucket and fp64 bounds: $meta")
+    // the extracted table still compacts through its own schema
+    val extracted = ExtractJob.readExtracted(spark, table).count()
+    assert(graft.SubmitMain.compact(spark, table, 1, Nil).isDefined)
+    assert(ExtractJob.readExtracted(spark, table).count() == extracted)
   }
 
   test("compact racing a concurrent optimistic appender never drops committed rows") {
