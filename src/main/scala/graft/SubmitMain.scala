@@ -88,6 +88,25 @@ object SubmitMain {
     }
   }
 
+  /** Incremental read (C12) as `tail` runs it: write the rows appended
+    * after snapshot `from` to `outDir` and return their count. Like
+    * [[compact]], it reads through the schema of the newest committed file,
+    * so a deduped table keeps its `fp`/`fp64` columns; each row carries its
+    * full page list ([[Schemas.fullPages]]).
+    */
+  def tail(spark: SparkSession, tableDir: String, from: Long, outDir: String): Long = {
+    val log = new SnapshotLog(tableDir)
+    val schema = log.newestFileSchema(spark).getOrElse(Schemas.extractedSchema)
+    val inc = log.scanIncremental(spark, schema, from)
+    val rows = if (Seq("pages", "text").forall(schema.fieldNames.contains))
+      inc.withColumn("pages", Schemas.fullPages) else inc
+    rows.write.mode("overwrite").parquet(outDir)
+    // count the OUTPUT (parquet footer stats — near-free), not the input: a
+    // pre-write count() would scan the appended slice twice, defeating the
+    // command's whole cheap-incremental purpose
+    spark.read.parquet(outDir).count()
+  }
+
   def main(args: Array[String]): Unit = {
     // compact's targetFiles is optional; tail needs 4 args; the rest 3
     val minArgs = args.headOption match {
@@ -250,13 +269,7 @@ object SubmitMain {
           // re-reading the table because one batch landed; fails loudly
           // across a replace commit (append diff undefined over a rewrite)
           val Array(_, tableDir, fromStr, outDir) = args.take(4)
-          val log = new SnapshotLog(tableDir)
-          val inc = log.scanIncremental(spark, Schemas.extractedSchema, fromStr.toLong)
-          inc.write.mode("overwrite").parquet(outDir)
-          // count the OUTPUT (parquet footer stats — near-free), not the
-          // input: a pre-write count() would scan the appended slice twice,
-          // defeating the command's whole cheap-incremental purpose
-          val n = spark.read.parquet(outDir).count()
+          val n = tail(spark, tableDir, fromStr.toLong, outDir)
           println(s"tailed $n rows appended after snapshot $fromStr -> $outDir")
         case "pipeline" =>
           // the composed per-batch flow (C12 + P1 end-to-end): extract only

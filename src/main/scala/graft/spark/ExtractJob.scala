@@ -13,6 +13,7 @@ import org.apache.spark.sql.internal.SQLConf
   *   -> bucket col = pmod(xxhash64(url), B)               [no shuffle]
   *   -> GraftExtract(extract kernel E1-E8)                [map-side; task = reference batch]
   *   -> success-ratio gate counters (A1, observe)         [map-side]
+  *   -> pages = null for one-page rows                    [map-side, at-rest form]
   *   -> repartition(B, bucket)                            [the one wide exchange,
   *                                                          carries extracted text only]
   *   -> per-bucket lineage counters (A3, observe)         [write's result stage]
@@ -73,18 +74,23 @@ object ExtractJob {
   }
 
   /** The write layout of an extract commit, shared by [[run]] and
-    * [[StreamingExtract.startTableToTable]]: `P` partitions, where partition
-    * `j` holds the buckets `k` with `k * P / B == j` — one contiguous bucket
-    * range per file, every bucket in exactly one file (a hash partitioning of
-    * the bucket ids would collide several buckets into one task and leave
-    * others empty).
+    * [[StreamingExtract.startTableToTable]]: kernel rows `df` in their
+    * at-rest form ([[Schemas.storedPages]], applied below the exchange, so
+    * the shuffle carries a one-page document's text once), in `P`
+    * partitions, where partition `j` holds the buckets `k` with
+    * `k * P / B == j` — one contiguous bucket range per file, every bucket
+    * in exactly one file (a hash partitioning of the bucket ids would
+    * collide several buckets into one task and leave others empty).
     *
     * `P` follows the frame's Catalyst size estimate by the rule AQE's
     * `CoalesceShufflePartitions` applies by default: a target of
     * `min(advisoryPartitionSizeInBytes, max(coalescePartitions.minPartitionSize,
-    * bytes / defaultParallelism))` bytes per partition, then
-    * `P = ceil(bytes / target)` clamped to `[1, B]`. An unknown or huge
-    * estimate keeps `P = B`. Sizing by bytes matters for small commits: each
+    * ceil(bytes / defaultParallelism)))` bytes per partition, then
+    * `P = ceil(bytes / target)` clamped to `[1, B]`. The target rounds up so
+    * that `P` stays at or under the core count, one wave of write tasks: a
+    * floored target gives `P = cores + 1` whenever the estimate is not a
+    * multiple of the core count. An unknown or huge estimate keeps
+    * `P = B`. Sizing by bytes matters for small commits: each
     * parquet write task deserializes a closure that carries the job's Hadoop
     * `Configuration`, measured at 22–37 ms per task on 4 cores, so a fixed
     * B = 16 spent more time there than writing a turn's ~60 rows — and left
@@ -93,7 +99,8 @@ object ExtractJob {
   private[spark] def bucketLayout(df: DataFrame, numBuckets: Int): DataFrame = {
     val p = writePartitions(df, numBuckets)
     // long product, then an exact floor: k * P / B is a ratio of small ints
-    df.repartitionById(p, (col("bucket").cast("long") * p / numBuckets).cast("int"))
+    df.withColumn("pages", Schemas.storedPages)
+      .repartitionById(p, (col("bucket").cast("long") * p / numBuckets).cast("int"))
   }
 
   /** [[bucketLayout]]'s partition count for `df`. */
@@ -103,10 +110,11 @@ object ExtractJob {
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bytes >= BigInt(conf.defaultSizeInBytes)) numBuckets
     else {
+      val par = spark.sparkContext.defaultParallelism
       val target = BigInt(math.max(1L, math.min(
         conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
         math.max(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE),
-          (bytes / spark.sparkContext.defaultParallelism).min(Long.MaxValue).toLong))))
+          ((bytes + par - 1) / par).min(Long.MaxValue).toLong))))
       ((bytes + target - 1) / target).max(1).min(numBuckets).toInt
     }
   }
@@ -301,9 +309,12 @@ object ExtractJob {
     def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
-  /** Read the extracted table (current snapshot). */
+  /** Read the extracted table (current snapshot), every row with its full
+    * page list ([[Schemas.fullPages]]).
+    */
   def readExtracted(spark: SparkSession, tableDir: String): DataFrame =
     new SnapshotLog(tableDir).scan(spark, Schemas.extractedSchema)
+      .withColumn("pages", Schemas.fullPages)
 
   /** PARTIAL re-extract: re-run the kernel over only the pages whose url is
     * in `urls` and MERGE the fresh rows into the table
@@ -332,8 +343,8 @@ object ExtractJob {
   }
 
   /** [[reextract]] past the kernel: gate the kernel output `extracted`
-    * (with its `ok` column) and merge it into the table with its lineage.
-    * None when it is empty.
+    * (with its `ok` column) and merge it into the table, in its at-rest
+    * form ([[Schemas.storedPages]]), with its lineage. None when it is empty.
     */
   private[spark] def upsertExtracted(spark: SparkSession,
       extracted: DataFrame, tableDir: String, numBuckets: Int): Option[Long] = {
@@ -343,7 +354,8 @@ object ExtractJob {
       val lineage = checkGate(fresh, numBuckets, t0)
       if (lineage.isEmpty) None
       else Some(new SnapshotLog(tableDir).upsertMatching(spark,
-        Schemas.extractedSchema, fresh.drop("ok"), "url",
+        Schemas.extractedSchema,
+        fresh.drop("ok").withColumn("pages", Schemas.storedPages), "url",
         statsColumns = Seq("bucket"), clusterBy = Seq("bucket"),
         clusterParts = numBuckets, lineage = lineage))
     } finally fresh.unpersist(): Unit

@@ -52,6 +52,8 @@ object Schemas {
       checksum: Long,
       wall_ms: Long)
 
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions.{array, coalesce, col, size, when}
   import org.apache.spark.sql.types._
 
   val pagesSchema: StructType = StructType(Seq(
@@ -61,6 +63,14 @@ object Schemas {
     StructField("text", StringType, nullable = true),
     StructField("lang", StringType, nullable = true)))
 
+  /** The extracted table. `text` is the kernel's pages joined with "\n"
+    * (search.py:129), so a one-page document's text IS its page: at rest,
+    * `pages` is null for such a row ([[storedPages]]) and the text crosses
+    * the write's exchange and lands on disk once. Every other row keeps its
+    * array, the 0-page `[]` and multi-page PDFs alike. Readers get the page
+    * list back from [[fullPages]]; files written with full arrays read
+    * through the same expression.
+    */
   val extractedSchema: StructType = StructType(Seq(
     StructField("url", StringType, nullable = false),
     StructField("bucket", IntegerType, nullable = false),
@@ -69,4 +79,16 @@ object Schemas {
     StructField("text", StringType, nullable = true),
     StructField("n_bytes", LongType, nullable = false),
     StructField("checksum", LongType, nullable = false)))
+
+  /** `pages` in its at-rest form: null when the row has exactly one page
+    * (see [[extractedSchema]]). Applied only to kernel output, whose one
+    * page equals its `text`.
+    */
+  def storedPages: Column = when(size(col("pages")) =!= 1, col("pages"))
+
+  /** The full page list of a stored extracted row: `pages`, else its `text`
+    * as the one page, else null (a row with neither).
+    */
+  def fullPages: Column =
+    coalesce(col("pages"), when(col("text").isNotNull, array(col("text"))))
 }

@@ -743,6 +743,161 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bucketRanges(new SnapshotLog(dir).metaAt(0L)) == (0L until 16L).map(k => (k, k)))
   }
 
+  test("extract layout: write tasks fit the cores when the estimate is not a multiple of them") {
+    val sp = spark; import sp.implicits._
+    val frame = ExtractJob.extractDF(spark.createDataset(fixture), 16).drop("ok")
+    val bytes = frame.queryExecution.optimizedPlan.stats.sizeInBytes
+    val par = spark.sparkContext.defaultParallelism
+    assert(bytes % par != 0 && bytes > BigInt(par) * par, s"estimate $bytes")
+    // a floored target (bytes / par) would give par + 1 partitions: a
+    // second wave of write tasks
+    withConf(OneBytePartitions) {
+      assert(ExtractJob.writePartitions(frame, 16) == par)
+    }
+  }
+
+  /** Checks the at-rest rule on stored extracted rows against the fixture
+    * oracle: `pages` is null exactly for the one-page rows. Returns the
+    * row count.
+    */
+  private def assertAtRest(stored: org.apache.spark.sql.DataFrame): Int = {
+    val rows = stored.select("url", "pages").collect()
+    for (r <- rows) {
+      val n = oracle(r.getString(0)).pages.size
+      assert(r.isNullAt(1) == (n == 1), s"${r.getString(0)}: stored ${r.get(1)} for $n page(s)")
+    }
+    rows.length
+  }
+
+  /** [[ExtractJob.readExtracted]] on `dir` gives the oracle's pages and
+    * text for each of `expectedRows` rows.
+    */
+  private def assertReadsOracle(dir: String, expectedRows: Int): Unit = {
+    val read = ExtractJob.readExtracted(spark, dir).select("url", "pages", "text").collect()
+    assert(read.length == expectedRows)
+    for (r <- read) {
+      val exp = oracle(r.getString(0))
+      assert(r.getSeq[String](1) == exp.pages, s"${r.getString(0)} pages")
+      assert(r.getString(2) == exp.text, s"${r.getString(0)} text")
+    }
+  }
+
+  /** Both checks on the whole extracted table at `dir`. */
+  private def assertStoredForm(dir: String, expectedRows: Int): Unit = {
+    assert(assertAtRest(new SnapshotLog(dir).scan(spark, Schemas.extractedSchema)) ==
+      expectedRows)
+    assertReadsOracle(dir, expectedRows)
+  }
+
+  test("stored form: one-page rows store null pages; readExtracted gives the oracle's pages") {
+    val sp = spark; import sp.implicits._
+    // the fixture holds 0-page, one-page and multi-page documents
+    val counts = oracle.values.map(_.pages.size).toSet
+    assert(counts.contains(0) && counts.contains(1) && counts.exists(_ > 1), s"$counts")
+    val dir = tmpDir("stored_form")
+    withConf(OneBytePartitions)(
+      ExtractJob.run(spark, spark.createDataset(fixture), dir, numBuckets = 16))
+    assertStoredForm(dir, corpusSize)
+  }
+
+  test("stored form: a full-array file and an at-rest commit read the same") {
+    val sp = spark; import sp.implicits._
+    val dir = tmpDir("stored_mixed")
+    val log = new SnapshotLog(dir)
+    // the first half committed in the full-array form of earlier writers
+    val old = fixture.take(corpusSize / 2)
+    log.append(ExtractJob.extractDF(spark.createDataset(old), 8).drop("ok"), Seq("bucket"))
+    val oldPages = log.scan(spark, Schemas.extractedSchema).select("pages").as[Seq[String]]
+      .collect()
+    assert(oldPages.forall(_ != null), "the first commit stores every array")
+    assert(ExtractJob.run(spark, spark.createDataset(fixture), dir, 8).contains(1L))
+    assertReadsOracle(dir, corpusSize)
+    // the second commit is in the at-rest form
+    assert(assertAtRest(log.scanIncremental(spark, Schemas.extractedSchema, 0L)) ==
+      corpusSize - old.size)
+  }
+
+  test("stored form: streaming extract and reextract commit the same form") {
+    val sp = spark; import sp.implicits._
+    val src = tmpDir("stored_stream_src"); val dst = tmpDir("stored_stream_dst")
+    val srcLog = new SnapshotLog(src)
+    val d = srcLog.stageUniqueDataDir()
+    spark.createDataset(fixture).repartition(2).write.mode("overwrite").parquet(d)
+    srcLog.commitOptimistic(d)
+    StreamingExtract.startTableToTable(spark, src, dst, tmpDir("stored_stream_ck"), 8)
+      .awaitTermination()
+    assertStoredForm(dst, corpusSize)
+    // re-extract a third of the urls, every payload kind among them, into a
+    // multi-file table: merged and carried rows alike keep the form
+    val dir = tmpDir("stored_reextract")
+    withConf(OneBytePartitions)(
+      ExtractJob.run(spark, spark.createDataset(fixture), dir, numBuckets = 8))
+    val urls = fixture.map(_.url).filter(_.hashCode % 3 == 0)
+    assert(urls.map(oracle(_).pages.size.min(2)).toSet == Set(0, 1, 2))
+    assert(ExtractJob.reextract(spark, spark.createDataset(fixture), dir, urls.toDF("url"),
+      numBuckets = 8).contains(1L))
+    assert(hasRewriteSegments(dir, 1L))
+    assertStoredForm(dir, corpusSize)
+  }
+
+  test("stored form: a row with null text and null pages reads back with null pages") {
+    val sp = spark; import sp.implicits._
+    val dir = tmpDir("stored_nulls")
+    // rows as `SubmitMain upsert` can land them: no text, no pages; a
+    // one-page row at rest; an empty page list
+    val rows = Seq(
+      Schemas.Extracted("u:none", 0, "empty", null, null, 0L, 1L),
+      Schemas.Extracted("u:one", 1, "html", null, "one page", 8L, 2L),
+      Schemas.Extracted("u:zero", 2, "empty", Seq.empty, "", 0L, 3L))
+    new SnapshotLog(dir).upsertMatching(spark, Schemas.extractedSchema,
+      rows.toDF(), "url", statsColumns = Seq("bucket"))
+    val read = ExtractJob.readExtracted(spark, dir).select("url", "pages").collect()
+      .map(r => r.getString(0) -> Option(r.getSeq[String](1))).toMap
+    assert(read == Map("u:none" -> None, "u:one" -> Some(Seq("one page")),
+      "u:zero" -> Some(Seq.empty)))
+  }
+
+  test("extract plan: the pages elision sits below the write's exchange; 3 jobs per extract") {
+    val sp = spark; import sp.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Size}
+    import org.apache.spark.sql.execution.{ProjectExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val dir = tmpDir("elision_plan")
+    spark.listenerManager.register(listener)
+    val (id, meter) = try graft.Probe.metered(spark)(
+      ExtractJob.run(spark, spark.createDataset(fixture), dir, numBuckets = 8))
+    finally spark.listenerManager.unregister(listener)
+    assert(id.contains(0L))
+    import scala.jdk.CollectionConverters._
+    assert(meter.jobs.get <= 3,
+      s"${meter.jobs.get} jobs:\n${meter.jobLines.asScala.mkString("\n")}")
+    // the executed plan, through AQE's final plan and its query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def elisions(p: SparkPlan) = nodes(p).collect {
+      case proj: ProjectExec if proj.projectList.exists {
+        case a: Alias => a.name == "pages" && a.child.exists(_.isInstanceOf[Size])
+        case _ => false
+      } => proj
+    }
+    val write = plans.asScala.find(p => nodes(p).exists(_.isInstanceOf[ShuffleExchangeExec]))
+      .getOrElse(fail(s"no exchange in the run's plans:\n${plans.asScala.mkString("\n")}"))
+    val exchanges = nodes(write).collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, s"one exchange:\n$write")
+    assert(elisions(exchanges.head.child).size == 1 && elisions(write).size == 1,
+      s"the elision must sit below the exchange, once:\n$write")
+  }
+
   test("concurrent extract runs: the later commit fails, the earlier one's files stay readable") {
     val sp = spark; import sp.implicits._
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -2010,6 +2165,29 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val extracted = ExtractJob.readExtracted(spark, table).count()
     assert(graft.SubmitMain.compact(spark, table, 1, Nil).isDefined)
     assert(ExtractJob.readExtracted(spark, table).count() == extracted)
+  }
+
+  test("tail CLI on a deduped table: every column and the full page lists come out") {
+    val sp = spark; import sp.implicits._
+    val table = tmpDir("cli_tail_tbl"); val dd = tmpDir("cli_tail_dd")
+    for (t <- 0 until 2) Pipelines.incrementalDedup(
+      spark, spark.createDataset(fixture.slice(t * 120, t * 120 + 120)), table, dd, 8)
+    val dlog = new SnapshotLog(dd)
+    assert(dlog.currentSnapshot().contains(1L))
+    val out = tmpDir("cli_tail_out") + "/rows"
+    // the function `tail <dedupedDir> 0 <out>` runs
+    val n = graft.SubmitMain.tail(spark, dd, 0L, out)
+    val tailed = spark.read.parquet(out)
+    assert(tailed.columns.toSeq == Pipelines.dedupedSchema.fieldNames.toSeq)
+    val expected = dlog.scanIncremental(spark, Pipelines.dedupedSchema, 0L)
+      .select("url", "fp", "fp64").as[(String, String, Long)].collect().toSeq.sorted
+    assert(n == expected.size.toLong && n > 0L)
+    assert(tailed.select("url", "fp", "fp64").as[(String, String, Long)]
+      .collect().toSeq.sorted == expected)
+    val pages = tailed.select("url", "pages").collect()
+      .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+    for ((url, ps) <- pages) assert(ps == oracle(url).pages, url)
+    assert(pages.values.exists(_.size == 1), "one-page rows come out as one-page lists")
   }
 
   test("compact racing a concurrent optimistic appender never drops committed rows") {
