@@ -28,8 +28,10 @@ object Extract {
   final val KindEmpty = "empty"   // null/corrupt/unrecognized payload
 
   final case class Result(kind: String, pages: Vector[String], ok: Boolean) {
-    /** pages joined with "\n" — the search-side concatenation (search.py:129). */
-    def text: String = pages.mkString("\n")
+    /** pages joined with "\n" — the search-side concatenation (search.py:129);
+      * a single page is returned as is.
+      */
+    def text: String = if (pages.length == 1) pages.head else pages.mkString("\n")
   }
 
   /** Payload-kind sniff on magic bytes (never throws; parse errors surface later

@@ -12,11 +12,13 @@ import java.nio.charset.StandardCharsets
   * the single-threaded oracle calls this same function, making extracted text
   * byte-identical per url by construction.
   *
-  * Pipeline: tokenize (tags / text / comments / raw-text elements) → accumulate
-  * text into blocks delimited by block-level tags → score each block
-  * (length >= MinBlockChars and link-char density <= MaxLinkDensity, outside
-  * boilerplate zones like nav/header/footer/aside/form) → emit kept blocks
-  * joined with "\n", whitespace-collapsed within each block.
+  * Pipeline: tokenize (tags / text / comments / raw-text elements) → collapse
+  * each text run's whitespace straight into the output as it arrives → at each
+  * block-level tag, judge the block just written (collapsed length >=
+  * MinBlockChars and link-char density <= MaxLinkDensity, outside boilerplate
+  * zones like nav/header/footer/aside/form) and cut it back off the output
+  * when it fails. Kept blocks are joined with "\n". No block is buffered or
+  * copied: a kept block's text is written once.
   */
 object HtmlExtract {
 
@@ -67,42 +69,48 @@ object HtmlExtract {
 
   def mainText(html: String): String = {
     val n = html.length
-    val out = new StringBuilder
-    val block = new StringBuilder
+    val out = new java.lang.StringBuilder(n)
+    val ws = new Collapser(out)
+    var mark = 0           // out's length where the current block starts
+    var blockChars = 0     // the current block's text length before collapsing
     var blockLinkChars = 0
     var ignoreDepth = 0 // nested IgnoreZones elements currently open
     var linkDepth = 0   // nested <a> elements currently open
 
+    // the block is already collapsed into out[mark, length): keep it or cut it
     def flushBlock(): Unit = {
-      if (block.nonEmpty) {
-        val collapsed = collapseWs(block.toString)
-        if (collapsed.length >= MinBlockChars &&
-          blockLinkChars.toDouble <= MaxLinkDensity * block.length) {
-          if (out.nonEmpty) out.append('\n')
-          out.append(collapsed)
-        }
-        block.clear()
+      if (blockChars > 0) {
+        val collapsed = if (ws.started) out.length - mark - (if (mark > 0) 1 else 0) else 0
+        if (!(collapsed >= MinBlockChars &&
+            blockLinkChars.toDouble <= MaxLinkDensity * blockChars))
+          out.setLength(mark)
       }
+      blockChars = 0
       blockLinkChars = 0
+      mark = out.length
+      ws.start(if (mark > 0) '\n' else 0)
     }
 
-    def appendText(s: String): Unit =
-      if (ignoreDepth == 0 && s.nonEmpty) {
-        block.append(s)
-        if (linkDepth > 0) blockLinkChars += s.length
-      }
+    val htmlWs = new OddWsIndex(html)
+    def appendText(ix: OddWsIndex, start: Int, end: Int): Unit = {
+      ws.append(ix, start, end)
+      blockChars += end - start
+      if (linkDepth > 0) blockLinkChars += end - start
+    }
 
-    // text-run append without the substring allocation: decode only when an
-    // entity is actually present in [start, end)
+    // decode only when an entity is actually present in [start, end); the
+    // next '&' is searched once per '&', not once per run
+    var nextAmp = -1
     def appendRun(start: Int, end: Int): Unit =
       if (ignoreDepth == 0 && end > start) {
-        val amp = html.indexOf('&', start)
-        if (amp >= 0 && amp < end)
-          appendText(decodeEntities(html.substring(start, end)))
-        else {
-          block.underlying.append(html, start, end)
-          if (linkDepth > 0) blockLinkChars += end - start
+        if (nextAmp < start) {
+          nextAmp = html.indexOf('&', start)
+          if (nextAmp < 0) nextAmp = Int.MaxValue
         }
+        if (nextAmp < end) {
+          val decoded = decodeEntities(html.substring(start, end))
+          appendText(new OddWsIndex(decoded), 0, decoded.length)
+        } else appendText(htmlWs, start, end)
       }
 
     // jump between tags with String.indexOf (JVM SIMD intrinsic) instead of a
@@ -226,68 +234,127 @@ object HtmlExtract {
   }
 
   /** Collapse ASCII whitespace runs to single spaces and trim. The collapse set
-    * is exactly [\t\n\f\r ] so it agrees with the regex class `\s` in both
-    * Java (default) and RE2 — the DuckDB oracle for the SQL-checked extraction
-    * query relies on this equivalence.
+    * is exactly the six chars of Java's regex class `\s`, [ \t\n\u000b\f\r],
+    * so the result equals `s.replaceAll("\\s+", " ").trim` for any `s` whose
+    * only chars at or below U+0020 are those six — the DuckDB oracle for the
+    * SQL-checked extraction query relies on this equivalence.
     */
   def collapseWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var inWs = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      val ws = c == ' ' || (c >= '\u0009' && c <= '\u000d')
-      if (ws) inWs = true
-      else {
-        if (inWs && sb.nonEmpty) sb.append(' ')
-        inWs = false
-        sb.append(c)
+    val out = new java.lang.StringBuilder(s.length)
+    new Collapser(out).append(new OddWsIndex(s), 0, s.length)
+    out.toString
+  }
+
+  private def isWs(c: Char): Boolean = c == ' ' || (c >= '\u0009' && c <= '\u000d')
+
+  /** The whitespace that is not a single space between two other chars:
+    * a double space (pattern 0) or one of [\t\n\u000b\f\r] (patterns 1-5).
+    */
+  private final val OddWs = "\t\n\u000b\f\r"
+
+  /** Where the irregular whitespace of `src` is: [[from]] answers with the
+    * intrinsified `String.indexOf` and remembers each pattern's next index,
+    * so over nondecreasing queries each pattern scans `src` once.
+    */
+  private final class OddWsIndex(val src: String) {
+    // per pattern: -1 not searched yet, Int.MaxValue none left
+    private val next = Array.fill(1 + OddWs.length)(-1)
+
+    /** The first index >= `i` where irregular whitespace starts. */
+    def from(i: Int): Int = {
+      var min = Int.MaxValue
+      var k = 0
+      while (k < next.length) {
+        var p = next(k)
+        if (p < i) {
+          p = if (k == 0) src.indexOf("  ", i) else src.indexOf(OddWs.charAt(k - 1), i)
+          if (p < 0) p = Int.MaxValue
+          next(k) = p
+        }
+        if (p < min) min = p
+        k += 1
       }
-      i += 1
+      min
     }
+  }
+
+  /** Appends whitespace-collapsed text to `out`, one block at a time: a block
+    * is every run [[append]]ed since the last [[start]], collapsed as if it
+    * were one string. A stretch of text whose only whitespace is single
+    * spaces is bulk-copied; only irregular whitespace ([[OddWs]]), or a space
+    * at either edge of a stretch, is handled char by char.
+    */
+  private final class Collapser(out: java.lang.StringBuilder) {
+    /** A non-whitespace char of the current block has been appended. */
+    var started = false
+    /** Char owed before the block's next non-whitespace char (0: none). */
+    private var owed: Char = 0
+
+    /** Begin a block; `lead` (0 for none) precedes its first char, if any. */
+    def start(lead: Char): Unit = { started = false; owed = lead }
+
+    /** Append `ix.src`'s chars [from, to). */
+    def append(ix: OddWsIndex, from: Int, to: Int): Unit = {
+      val s = ix.src
+      var i = from
+      while (i < to) {
+        if (isWs(s.charAt(i))) {
+          if (started) owed = ' '
+          i += 1
+        } else {
+          // [i, e) holds only single spaces between non-whitespace chars,
+          // and maybe one trailing space
+          val e = math.min(ix.from(i), to)
+          val end = if (s.charAt(e - 1) == ' ') e - 1 else e
+          if (owed != 0) out.append(owed)
+          out.append(s, i, end)
+          started = true
+          owed = if (end < e) ' ' else 0
+          i = e
+        }
+      }
+    }
+  }
+
+  /** Decode &amp; &lt; &gt; &quot; &apos; &nbsp; (to U+00A0) and numeric
+    * &#NN; / &#xHH;. Unknown/unterminated entities pass through literally.
+    * The text between entities is bulk-copied.
+    */
+  def decodeEntities(s: String): String = {
+    var amp = s.indexOf('&')
+    if (amp < 0) return s
+    val n = s.length
+    val sb = new java.lang.StringBuilder(n)
+    var i = 0
+    while (amp >= 0) {
+      sb.append(s, i, amp)
+      val semi = s.indexOf(';', amp + 1)
+      val decoded = if (semi > amp && semi - amp <= 12) entity(s.substring(amp + 1, semi)) else null
+      if (decoded != null) { sb.append(decoded); i = semi + 1 }
+      else { sb.append('&'); i = amp + 1 }
+      amp = s.indexOf('&', i)
+    }
+    sb.append(s, i, n)
     sb.toString
   }
 
-  /** Decode &amp; &lt; &gt; &quot; &apos; &nbsp; and numeric &#NN; / &#xHH;.
-    * Unknown/unterminated entities pass through literally.
-    */
-  def decodeEntities(s: String): String = {
-    if (s.indexOf('&') < 0) return s
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val semi = s.indexOf(';', i + 1)
-        if (semi > i && semi - i <= 12) {
-          val name = s.substring(i + 1, semi)
-          val decoded: Option[String] = name match {
-            case "amp"  => Some("&")
-            case "lt"   => Some("<")
-            case "gt"   => Some(">")
-            case "quot" => Some("\"")
-            case "apos" => Some("'")
-            case "nbsp" => Some(" ")
-            case _ if name.length > 1 && name.charAt(0) == '#' =>
-              try {
-                val cp =
-                  if (name.charAt(1) == 'x' || name.charAt(1) == 'X')
-                    Integer.parseInt(name.substring(2), 16)
-                  else Integer.parseInt(name.substring(1))
-                if (Character.isValidCodePoint(cp) && cp > 0)
-                  Some(new String(Character.toChars(cp)))
-                else None
-              } catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-          decoded match {
-            case Some(d) => sb.append(d); i = semi + 1
-            case None    => sb.append(c); i += 1
-          }
-        } else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
+  /** The text of entity `name` (between '&' and ';'), or null if unknown. */
+  private def entity(name: String): String = name match {
+    case "amp"  => "&"
+    case "lt"   => "<"
+    case "gt"   => ">"
+    case "quot" => "\""
+    case "apos" => "'"
+    case "nbsp" => "\u00a0"
+    case _ if name.length > 1 && name.charAt(0) == '#' =>
+      try {
+        val cp =
+          if (name.charAt(1) == 'x' || name.charAt(1) == 'X')
+            Integer.parseInt(name.substring(2), 16)
+          else Integer.parseInt(name.substring(1))
+        if (Character.isValidCodePoint(cp) && cp > 0) new String(Character.toChars(cp))
+        else null
+      } catch { case _: NumberFormatException => null }
+    case _ => null
   }
 }

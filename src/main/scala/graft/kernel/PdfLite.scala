@@ -81,28 +81,26 @@ object PdfLite {
   /** Layout text for one page: stable sort runs by (y, x), join same-y runs with
     * a single space, lines joined by "\n", plus a trailing "\n" when nonempty —
     * the shape `page.get_text()` produces for simple text pages.
+    *
+    * When every coordinate and the run count fit in 21 unsigned bits (every
+    * page `Synth` lays out does), the sort is a primitive
+    * `Arrays.sort(long[])` over keys `y << 42 | x << 21 | index`; the index
+    * makes every key distinct, so the order is the stable one. Other pages
+    * sort the runs with a stable comparator sort.
     */
-  private val runOrder: java.util.Comparator[Run] = new java.util.Comparator[Run] {
-    def compare(a: Run, b: Run): Int = {
-      val c = Integer.compare(a.y, b.y)
-      if (c != 0) c else Integer.compare(a.x, b.x)
-    }
-  }
-
   def pageText(page: Page): String = {
-    if (page.runs.isEmpty) return ""
-    // stable TimSort over a flat array + presized builder (one sort per page)
-    val arr = page.runs.toArray
-    java.util.Arrays.sort(arr, runOrder)
+    val n = page.runs.length
+    if (n == 0) return ""
+    val runs = sortedRuns(page.runs.toArray)
     var total = 1
     var i = 0
-    while (i < arr.length) { total += arr(i).text.length + 1; i += 1 }
+    while (i < n) { total += runs(i).text.length + 1; i += 1 }
     val sb = new java.lang.StringBuilder(total)
-    var curY = arr(0).y
-    sb.append(arr(0).text)
+    var curY = runs(0).y
+    sb.append(runs(0).text)
     i = 1
-    while (i < arr.length) {
-      val r = arr(i)
+    while (i < n) {
+      val r = runs(i)
       if (r.y != curY) { sb.append('\n'); curY = r.y }
       else sb.append(' ')
       sb.append(r.text)
@@ -110,6 +108,41 @@ object PdfLite {
     }
     sb.append('\n')
     sb.toString
+  }
+
+  private final val KeyBits = 21
+  private final val KeyMask = (1L << KeyBits) - 1
+
+  private val runOrder: java.util.Comparator[Run] = new java.util.Comparator[Run] {
+    def compare(a: Run, b: Run): Int = {
+      val c = Integer.compare(a.y, b.y)
+      if (c != 0) c else Integer.compare(a.x, b.x)
+    }
+  }
+
+  /** `runs` stably sorted by (y, x) — in place, or as a new array. */
+  private def sortedRuns(runs: Array[Run]): Array[Run] = {
+    val n = runs.length
+    val keys = new Array[Long](n)
+    var fits = n <= KeyMask
+    var i = 0
+    while (fits && i < n) {
+      val r = runs(i)
+      // a negative or >= 2^21 coordinate sets a bit at or above 21
+      if (((r.x | r.y) >>> KeyBits) != 0) fits = false
+      else keys(i) = r.y.toLong << (2 * KeyBits) | r.x.toLong << KeyBits | i
+      i += 1
+    }
+    if (!fits) {
+      java.util.Arrays.sort(runs, runOrder)
+      runs
+    } else {
+      java.util.Arrays.sort(keys)
+      val sorted = new Array[Run](n)
+      i = 0
+      while (i < n) { sorted(i) = runs((keys(i) & KeyMask).toInt); i += 1 }
+      sorted
+    }
   }
 
   /** Total embedded text length, early-exiting past `limit` — the digital-vs-

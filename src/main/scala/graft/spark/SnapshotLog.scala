@@ -1461,12 +1461,16 @@ final class SnapshotLog(tableDir: String, hadoopConf: Configuration) {
     * snapshot: one metadata sweep feeds both instead of metaAt running twice
     * per use (round-6 review; on an object store the second sweep is
     * O(segments) extra GETs per call).
+    *
+    * No entries scan as an empty local relation, which the optimizer can
+    * see is empty: a join or union against it folds away
+    * (`PropagateEmptyRelation`), so no job runs for it.
     */
   def scanEntries(spark: org.apache.spark.sql.SparkSession,
       schema: org.apache.spark.sql.types.StructType,
       entries: Seq[SnapshotLog.FileMeta]): org.apache.spark.sql.DataFrame = {
     if (entries.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     else
       ManifestScan(spark, io.extern(root), schema,
         entries.map(m => ManifestEntry(m.path, m.size, m.stats)))

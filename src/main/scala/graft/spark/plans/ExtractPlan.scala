@@ -4,10 +4,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -92,6 +92,11 @@ object ExtractPlan {
       }
     }
 
+    /** One kernel call per input row. A row is built in one reused
+      * [[GenericInternalRow]] and copied out by the unsafe projection; a
+      * one-page document's text is encoded to UTF-8 once and serves as both
+      * `pages(0)` and `text` (the kernel's text is then that page).
+      */
     override protected def doExecute(): RDD[InternalRow] = {
       val childOutput = child.output
       val urlIdx = childOutput.indexWhere(_.name == "url")
@@ -103,6 +108,7 @@ object ExtractPlan {
       val attrs = output
       child.execute().mapPartitions { iter =>
         val proj = GenerateUnsafeProjection.generate(attrs, attrs)
+        val out = new GenericInternalRow(attrs.length)
         iter.map { row =>
           val url = row.getUTF8String(urlIdx)
           val html = if (row.isNullAt(htmlIdx)) null else row.getBinary(htmlIdx)
@@ -115,15 +121,18 @@ object ExtractPlan {
             val m = (h % buckets).toInt
             if (m < 0) m + buckets else m
           }
-          val values = new Array[Any](7)
-          values(0) = url.copy()
-          values(1) = bucket
-          values(2) = UTF8String.fromString(r.kind)
-          values(3) = ArrayData.toArrayData(r.pages.map(UTF8String.fromString).toArray)
-          values(4) = UTF8String.fromString(r.text)
-          values(5) = if (html == null) 0L else html.length.toLong
-          values(6) = r.ok
-          proj(InternalRow.fromSeq(values.toSeq))
+          val pages = new Array[Any](r.pages.length)
+          var i = 0
+          while (i < pages.length) { pages(i) = UTF8String.fromString(r.pages(i)); i += 1 }
+          // the projection copies `url` out before the input row moves on
+          out.update(0, url)
+          out.setInt(1, bucket)
+          out.update(2, UTF8String.fromString(r.kind))
+          out.update(3, new GenericArrayData(pages))
+          out.update(4, if (pages.length == 1) pages(0) else UTF8String.fromString(r.text))
+          out.setLong(5, if (html == null) 0L else html.length.toLong)
+          out.setBoolean(6, r.ok)
+          proj(out)
         }
       }
     }

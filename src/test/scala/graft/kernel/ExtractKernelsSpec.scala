@@ -83,6 +83,69 @@ class HtmlExtractSpec extends AnyFunSuite {
     val s = "<p>unicode content: café naïve 中文 long enough to keep</p>"
     assert(mainText(s.getBytes(UTF_8)) == mainText(s))
   }
+
+  /** A string of `pieces` drawn from `alphabet`, up to `maxLen` of them. */
+  private def soup(r: java.util.SplittableRandom, alphabet: IndexedSeq[String],
+      maxLen: Int): String = {
+    val sb = new StringBuilder
+    for (_ <- 0 until r.nextInt(maxLen + 1)) sb.append(alphabet(r.nextInt(alphabet.length)))
+    sb.toString
+  }
+
+  test("&nbsp; decodes to U+00A0, which no whitespace collapse touches") {
+    assert(decodeEntities("a&nbsp;b") == "a\u00a0b")
+    assert(decodeEntities("&nbsp;").charAt(0).toInt == 0xA0)
+    assert(collapseWs(" \u00a0 x\u00a0\u00a0y ") == "\u00a0 x\u00a0\u00a0y")
+    val body = "kept paragraph long enough to stay"
+    assert(mainText(s"<p>$body&nbsp;&nbsp;end</p>") == s"$body\u00a0\u00a0end")
+  }
+
+  test("differential: collapseWs equals the \\s+ regex form on random whitespace mixes") {
+    // all six chars of \s, plus non-Latin-1 chars and U+00A0 (not in \s)
+    val alphabet = Vector(" ", " ", "  ", "\t", "\n", "\u000b", "\f", "\r", "a", "bc",
+      "é", "中文", "\u00a0", "\ud83d\ude00", "word ", " word")
+    val ws = java.util.regex.Pattern.compile("\\s+")
+    val r = new java.util.SplittableRandom(1807L)
+    for (k <- 0 until 30000) {
+      val s = soup(r, alphabet, if (k % 10 == 0) 400 else 40)
+      val expected = ws.matcher(s).replaceAll(" ").trim
+      assert(collapseWs(s) == expected, s"input ${s.map(_.toInt)}")
+      assert(collapseWs(s) == KernelReference.collapseWs(s))
+    }
+  }
+
+  test("differential: decodeEntities equals the char-loop reference") {
+    val alphabet = Vector("&", "&", ";", "amp", "lt", "gt", "quot", "apos", "nbsp",
+      "#", "x", "X", "6", "5", "4", "1", "0", "f", "D8", "-", "+", "a", " ", "中",
+      "&amp;", "&#x1F600;", "&#0;", "&#55296;", "&#x110000;", "99999999999", "&&",
+      "&nbsp;", "&#32;", "&#x9;")
+    val r = new java.util.SplittableRandom(1808L)
+    for (_ <- 0 until 30000) {
+      val s = soup(r, alphabet, 30)
+      assert(decodeEntities(s) == KernelReference.decodeEntities(s), s"input '$s'")
+    }
+  }
+
+  test("differential: mainText equals the block-buffer reference on tag and entity soups") {
+    val alphabet = Vector("<p>", "</p>", "<div class=\"a>b\">", "</div>", "<a href=\"x\">",
+      "</a>", "<A>", "<nav>", "</nav>", "<script>var s = '</p>';", "</script>",
+      "<Style>", "</STYLE>", "<title>", "</title>", "<br/>", "<br>", "<hr >", "<img/>",
+      "<!-- c -->", "<!--", "<!x>", "<?pi?>", "<", ">", "</", "'", "\"", "<span>",
+      "</span>", "<h1>", "<li>", "&amp;", "&nbsp;", "&#32;", "&#9;", "&#x3c;p&#x3e;",
+      "&lt;", "&bogus;", "&", " ", "  ", "\n", "\t", "\r\n", "\u000b", "\f",
+      "word", "é", "中文", "a considerably longer run of plain prose text ",
+      "another sentence that is long enough to keep a block alive. ")
+    val r = new java.util.SplittableRandom(1809L)
+    var nonEmpty = 0
+    for (_ <- 0 until 20000) {
+      val s = soup(r, alphabet, 60)
+      val got = mainText(s)
+      assert(got == KernelReference.mainText(s), s"input '$s'")
+      if (got.nonEmpty) nonEmpty += 1
+    }
+    // the soups keep blocks often enough for the comparison to mean something
+    assert(nonEmpty > 4000, s"$nonEmpty soups kept a block")
+  }
 }
 
 class PdfLiteSpec extends AnyFunSuite {
@@ -119,6 +182,31 @@ class PdfLiteSpec extends AnyFunSuite {
       assert(Extract.sniff(bytes) ==
         (if (text.length >= 50) Extract.KindPdfDigital else Extract.KindPdfScanned), s"n=$n")
     }
+  }
+
+  test("differential: pageText equals the comparator sort, in and out of 21-bit keys") {
+    // small coordinates collide on (y, x) often: order among equal keys is
+    // the runs' order (a stable sort)
+    val small = (r: java.util.SplittableRandom) => r.nextInt(6) * 12
+    val edge = Vector(-1, -12, Int.MinValue, Int.MaxValue, (1 << 21) - 1, 1 << 21,
+      (1 << 21) + 1, 1 << 30)
+    val r = new java.util.SplittableRandom(1810L)
+    var packed = 0
+    for (k <- 0 until 20000) {
+      val outside = k % 3 == 0 // some coordinate outside [0, 2^21) on this page
+      val n = r.nextInt(60)
+      val runs = Vector.tabulate(n) { i =>
+        def coord() =
+          if (outside && r.nextInt(8) == 0) edge(r.nextInt(edge.length))
+          else if (r.nextBoolean()) small(r) else r.nextInt(1 << 21)
+        Run(coord(), coord(), s"r$i")
+      }
+      val page = Page(runs, None)
+      if (runs.forall(run => run.x >= 0 && run.y >= 0 && run.x < (1 << 21) && run.y < (1 << 21)))
+        packed += 1
+      assert(pageText(page) == KernelReference.pageText(page), s"runs $runs")
+    }
+    assert(packed > 10000 && packed < 20000, s"$packed packed-key pages")
   }
 
   test("truncated payloads throw (and are treated as corrupt upstream)") {

@@ -640,6 +640,26 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("golden: the kernel's (url, kind, pages) over both fixture corpora is pinned") {
+    // perfbench's oracle calls this same kernel, so only a fixed digest
+    // catches a change in what the kernel extracts
+    def digest(pages: Seq[Schemas.Page]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      def int(v: Int): Unit = md.update(java.nio.ByteBuffer.allocate(4).putInt(v).array())
+      def str(s: String): Unit = {
+        val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        int(b.length); md.update(b)
+      }
+      for ((url, r) <- Synth.oracleExtract(pages).toSeq.sortBy(_._1)) {
+        str(url); str(r.kind); int(r.pages.length); r.pages.foreach(str)
+      }
+      md.digest().map(b => f"${b & 0xff}%02x").mkString
+    }
+    assert(digest(Synth.corpus(2000)) == "c78f607fcbebbfe31deb226926c146a93140421795affca0d1b3b3ab29ba60f7")
+    assert(digest(Synth.pagesFromDocuments(spark, graft.Probe.testData("sf0.01")).collect().toSeq) ==
+      "f9ae7b2b0e98cc5838feb10ded8d0a834daeedb1256abce075a052ac31df7f9d")
+  }
+
   test("explain: extract transform is narrow (raw payloads never shuffle); search prunes columns") {
     val sp = spark; import sp.implicits._
     val pages = spark.createDataset(fixture)
@@ -896,6 +916,43 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(exchanges.size == 1, s"one exchange:\n$write")
     assert(elisions(exchanges.head.child).size == 1 && elisions(write).size == 1,
       s"the elision must sit below the exchange, once:\n$write")
+  }
+
+  test("fresh-table extract: the empty done set folds the resume join away; 2 jobs") {
+    val sp = spark; import sp.implicits._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    // pages read from parquet, as a batch arrives: over a local relation of
+    // pages the join would fold away whatever the done side is
+    val input = tmpDir("fresh_pages")
+    spark.createDataset(fixture).write.mode("overwrite").parquet(input)
+    val pages = spark.read.parquet(input).as[Schemas.Page]
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val dir = tmpDir("fresh_table")
+    spark.listenerManager.register(listener)
+    val (id, meter) = try graft.Probe.metered(spark)(
+      ExtractJob.run(spark, pages, dir, numBuckets = 8))
+    finally spark.listenerManager.unregister(listener)
+    assert(id.contains(0L))
+    import scala.jdk.CollectionConverters._
+    assert(meter.jobs.get <= 2,
+      s"${meter.jobs.get} jobs:\n${meter.jobLines.asScala.mkString("\n")}")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    assert(plans.asScala.nonEmpty)
+    for (p <- plans.asScala)
+      assert(!nodes(p).exists(_.isInstanceOf[BroadcastExchangeExec]),
+        s"a fresh table broadcasts no done set:\n$p")
+    assert(ExtractJob.readExtracted(spark, dir).count() == corpusSize)
   }
 
   test("concurrent extract runs: the later commit fails, the earlier one's files stay readable") {
